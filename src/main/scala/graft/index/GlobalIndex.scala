@@ -104,7 +104,7 @@ object GlobalIndex {
 
   /** Rebuild the global index from a stored table's PERSISTED per-file
     * summaries — zero Spark jobs, no re-clustering: the leaf slabs were
-    * computed by the write-time stats pass and ride next to the manifest
+    * computed inside the write tasks and ride next to the manifest
     * (SURVEY §1.5's "summaries ride in the snapshot manifest", the
     * distributed analog of the reference persisting its tree pages in
     * IndexFile.java:37-95 instead of rebuilding per process). Each live

@@ -14,11 +14,11 @@ package graft.table
   * keeps the store's superset-then-refine shape. False positives only
   * cost an extra file read (~1% at the chosen sizing).
   *
-  * Sizing: ~10 bits/row, k=7 probes → ≈0.8% false-positive rate. Bits are
-  * capped at 2²⁵ (512 KB of longs) per file; past that the fpp degrades
-  * gracefully rather than the manifest sidecar growing unboundedly — at
-  * the design point files are Z-clustered ~100 MB units (≪ 3M rows), well
-  * under the cap.
+  * Sizing: ~10 bits/row of the FILE the filter covers, k=7 probes →
+  * ≈0.8% false-positive rate. Bits are capped at 2²⁵ (4 MiB) per file;
+  * past that the fpp degrades gracefully rather than the manifest sidecar
+  * growing unboundedly — at the design point files are Z-clustered
+  * ~100 MB units (≪ 3M rows), well under the cap.
   *
   * Hashing: the ROW side is hashed with Spark's `xxhash64` (codegen'd,
   * computed inside the write-time scan); probe positions derive from that
@@ -81,9 +81,37 @@ object Bloom {
     import org.apache.spark.sql.catalyst.expressions.{Literal, XxHash64}
     XxHash64(Seq(Literal(v)), 42L).eval(null).asInstanceOf[Long]
   }
-}
 
-// The distributed per-file Bloom build lives in [[UnitStatsAgg]] since
-// round 4: bitsets are accumulated in the SAME one-job stats pass that
-// produces the histogram and index sidecars (only compact partial buffers
-// cross the exchange, never keys).
+  /** One file's bitset, built in one pass over its key hashes while the
+    * row count is still unknown, and sized `bitsFor(rows of the file)`.
+    * Hashes are buffered while `bitsFor(n) < MaxBits` (at most
+    * ≈ MaxBits / BitsPerKey longs, ~27 MB in a doubling array of at most
+    * 32 MB); once the size reaches `MaxBits` it can grow no further, so
+    * the buffer is folded into a `MaxBits` bitset and later hashes go
+    * straight into it. The result is bit-identical to adding every hash to
+    * a `bitsFor(n)` bitset. Lives inside one write task ([[UnitTaskStats]]);
+    * not thread-safe. */
+  final class Builder {
+    private var buf = new Array[Long](1024)
+    private var n = 0
+    private var full: Array[Long] = null
+
+    def add(hash: Long): Unit =
+      if (full != null) Bloom.add(full, hash)
+      else {
+        if (n == buf.length) buf = java.util.Arrays.copyOf(buf, 2 * n)
+        buf(n) = hash
+        n += 1
+        if (bitsFor(n) == MaxBits) { full = fold(MaxBits); buf = null }
+      }
+
+    def result(): Array[Long] = if (full != null) full else fold(bitsFor(n))
+
+    private def fold(bits: Int): Array[Long] = {
+      val b = new Array[Long](bits / 64)
+      var i = 0
+      while (i < n) { Bloom.add(b, buf(i)); i += 1 }
+      b
+    }
+  }
+}

@@ -195,78 +195,6 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
   def currentSnapshotId: Long =
     if (Files.exists(currentPtr)) Files.readString(currentPtr).trim.toLong else 0L
 
-  /** Per-file manifest stats from parquet FOOTERS — a driver-side
-    * metadata read (KBs per file), NOT a second scan of the data just
-    * written. This is the Iceberg stats contract: the writer's row-group
-    * min/max aggregates become the manifest entry.
-    *
-    * Stats FAIL OPEN: if ANY chunk of a column lacks min/max (parquet
-    * omits double stats when a page holds NaN; a column can be absent
-    * entirely), the entry records the full domain range so the file is
-    * never pruned — a narrowed range would silently drop rows from
-    * read(box), violating the superset contract. */
-  /** `only`: the file names a direct write ([[org.apache.spark.sql.GraftParquetDirect]])
-    * reported from its SUCCESSFUL tasks — a failed or speculatively re-run
-    * attempt may orphan a partial file in the unit dir, and filtering the
-    * listing to the reported names keeps such orphans out of the manifest
-    * (readers never list dirs; they open manifest paths). */
-  private def footerStats(unitDir: String, lineageId: String, wallMs: Long,
-                          withZ: Boolean, kind: String = "data",
-                          only: Option[Set[String]] = None): Seq[FileEntry] = {
-    import org.apache.parquet.hadoop.ParquetFileReader
-    import org.apache.parquet.hadoop.util.HadoopInputFile
-    val conf = spark.sessionState.newHadoopConf()
-    val dir = new org.apache.hadoop.fs.Path(unitDir)
-    val fs = dir.getFileSystem(conf)
-    fs.listStatus(dir).filter(f => f.getPath.getName.startsWith("part-"))
-      .filter(f => only.forall(_.contains(f.getPath.getName)))
-      .sortBy(_.getPath.getName).toSeq.map { f =>
-        val reader = ParquetFileReader.open(HadoopInputFile.fromPath(f.getPath, conf))
-        try {
-          val blocks = reader.getFooter.getBlocks
-          import scala.jdk.CollectionConverters._
-          val rows = blocks.asScala.map(_.getRowCount).sum
-          // (failLo, failHi) is the fail-open full range, returned unless
-          // EVERY chunk of the column carried usable stats
-          def minMax[T](col: String, failLo: T, failHi: T)(
-              cmp: Ordering[T])(get: org.apache.parquet.column.statistics.Statistics[_] => (T, T)): (T, T) = {
-            var mn = failHi; var mx = failLo
-            var matched = 0; var withStats = 0
-            blocks.asScala.foreach(_.getColumns.asScala.foreach { c =>
-              if (c.getPath.toDotString == col) {
-                matched += 1
-                if (c.getStatistics != null && !c.getStatistics.isEmpty &&
-                    c.getStatistics.hasNonNullValue) {
-                  val (a, b) = get(c.getStatistics)
-                  if (withStats == 0 || cmp.lt(a, mn)) mn = a
-                  if (withStats == 0 || cmp.gt(b, mx)) mx = b
-                  withStats += 1
-                }
-              }
-            })
-            if (matched > 0 && withStats == matched) (mn, mx) else (failLo, failHi)
-          }
-          def dbl(col: String): (Double, Double) =
-            minMax(col, -Double.MaxValue, Double.MaxValue)(Ordering.Double.TotalOrdering)(s =>
-              (s.genericGetMin.asInstanceOf[Number].doubleValue(),
-               s.genericGetMax.asInstanceOf[Number].doubleValue()))
-          val (zLo, zHi) =
-            if (withZ) minMax("__z", Long.MinValue, Long.MaxValue)(Ordering.Long)(s =>
-              (s.genericGetMin.asInstanceOf[Number].longValue(),
-               s.genericGetMax.asInstanceOf[Number].longValue()))
-            else (0L, 0L)
-          val (latLo, latHi) = dbl("lat")
-          val (lonLo, lonHi) = dbl("lon")
-          FileEntry(f.getPath.toString, rows, zLo, zHi,
-            latLo, latHi, lonLo, lonHi, lineageId, wallMs, kind)
-        } finally reader.close()
-      }
-      // range-partitioning can leave empty part files: no stats, no rows —
-      // keep them out of the manifest (the old scan-based stats pass
-      // skipped them implicitly)
-      .filter(_.rows > 0)
-  }
-
   /** Manifest read. Current format: a driver-written JSON FILE — KBs of
     * metadata, zero Spark jobs (a parquet manifest cost one job to write
     * and one per read, and commits run once per micro-batch under
@@ -386,14 +314,13 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
 
   /** Append a (lat, lon, …) DataFrame as one lineage unit: Z-cluster it
     * (repartitionByRange + sortWithinPartitions — the bulk-load pack),
-    * write immutable parquet, derive per-file stats from the written files
-    * themselves, and commit parent-manifest + new entries atomically.
-    * Exactly TWO Spark queries: the clustered write and ONE stats pass
-    * ([[writeSidecars]]) that yields the per-cell histogram, the per-file
-    * Bloom filters, and the persisted index summaries together (the
-    * round-3 protocol re-read the unit once per sidecar, and every
-    * commit/manifest op was itself a Spark job; AQE may split each query
-    * into a few stage-jobs — the budget is pinned in spec). */
+    * write immutable parquet, and commit parent-manifest + new entries
+    * atomically. ONE Spark query, whatever the key or coordinate types:
+    * the clustered write, whose tasks also compute every file's manifest
+    * stats, index leaves, histogram cells and Bloom bitset
+    * ([[writeUnitFiles]]); the sidecars and the commit are driver IO
+    * (AQE may split the query into a few stage-jobs — the budget is
+    * pinned in spec). */
   def append(df: DataFrame, lineageId: String, numPartitions: Int = 0): Long = {
     val t0 = System.nanoTime()
     val parts = if (numPartitions > 0) numPartitions
@@ -406,125 +333,54 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     // storage query ~1.5 s/append (the columnar cache encode/decode costs
     // far more than the cheap scan+derive it saves) — the double scan is
     // the right trade at every scale, exactly as Spark's own sort pays it.
-    // Committer-free direct write (same ParquetWriteSupport bits) with
-    // the unit stats computed IN the write tasks — one job where the
-    // round-5 protocol ran write + footer read + a relational stats
-    // pass. The manifest commit below is the atomicity point, so the
-    // Hadoop commit protocol's ~0.2 s/invocation driver floor buys
-    // nothing here.
-    val uw = writeUnitFiles(
+    // Committer-free direct write (same ParquetWriteSupport bits): the
+    // manifest commit below is the atomicity point, so the Hadoop commit
+    // protocol's ~0.2 s/invocation driver floor buys nothing here.
+    val files = writeUnitFiles(
       keyed
         .repartitionByRange(parts, col("__z"))
         .sortWithinPartitions(col("__z")),
-      unitDir, lineageId, t0, parts)
+      unitDir, lineageId, t0)
     val t2 = System.nanoTime()
-    writeUnitSidecars(uw, unitDir, lineageId)
+    writeSidecarJson(lineageId, files)
     SnapshotStore.trace("append.sidecars", t2)
     val t3 = System.nanoTime()
-    val snap = commitAppend(uw.entries)
+    val snap = commitAppend(files.map(_._1))
     SnapshotStore.trace("append.commit", t3)
     snap
   }
 
-  /** One clustered-unit write: the direct parquet job with
-    * [[UnitTaskStats]] observers threaded through each task, yielding
-    * manifest entries (exact per-file `__z`/lat/lon bounds, fail-open on
-    * NaN or all-null like the footer-stats contract) and the sidecar
-    * inputs with ZERO further passes over the unit. Schemas outside the
-    * observer's preconditions (non-double coords, non-long `__z` or Bloom
-    * key) and Bloom units past [[SnapshotStore.BloomCollectRowsCutoff]]
-    * fall back to the round-5 two-pass protocol (footer read + relational
-    * stats aggregate — `byFile = None` routes [[writeUnitSidecars]]
-    * there), so the scale path for huge Bloom-keyed units is unchanged. */
-  private case class UnitWrite(entries: Seq[FileEntry],
-                               byFile: Option[Seq[(String, FileStats)]],
-                               bloomCol: Option[String],
-                               schema: org.apache.spark.sql.types.StructType)
-
+  /** One clustered-unit write: the direct parquet job with a
+    * [[UnitTaskStats]] observer threaded through each task, yielding every
+    * non-empty file's manifest entry (exact `__z`/lat/lon bounds,
+    * fail-open on NaN or all-null) with its leaves and Bloom bitset — zero
+    * further passes over the unit. */
   private def writeUnitFiles(clustered: DataFrame, unitDir: String,
-                             lineageId: String, t0: Long,
-                             parts: Int): UnitWrite = {
-    import org.apache.spark.sql.types.{DoubleType, LongType}
-    val schema = clustered.schema
-    val names = schema.fieldNames
-    val latOrd = names.indexOf("lat")
-    val lonOrd = names.indexOf("lon")
-    val zOrd = names.indexOf("__z")
-    val keyOrd = bloomKey.map(names.indexOf(_)).getOrElse(-1)
-    val fastOk =
-      latOrd >= 0 && schema(latOrd).dataType == DoubleType &&
-      lonOrd >= 0 && schema(lonOrd).dataType == DoubleType &&
-      zOrd >= 0 && schema(zOrd).dataType == LongType &&
-      (keyOrd < 0 || schema(keyOrd).dataType == LongType)
-    if (!fastOk) {
-      val written = org.apache.spark.sql.GraftParquetDirect.write(clustered, unitDir)
-      val wallMs = (System.nanoTime() - t0) / 1000000
-      SnapshotStore.trace("append.write", t0)
-      val entries = footerStats(unitDir, lineageId, wallMs, withZ = true,
-        only = Some(written.map(_._1).toSet))
-      return UnitWrite(entries, None, None, schema)
-    }
-    // per-task share of the unit-level cutoff: every task under its
-    // share ⇒ the unit is under the cutoff, and the driver receives at
-    // most cutoff × 8 B of hashes TOTAL — the same bound the round-5
-    // collect_list path documented. A task past its share overflows and
-    // the Bloom work degrades to the distributed UnitStatsAgg pass
-    // (correct either way; a skewed small unit merely loses the
-    // single-pass shortcut).
-    val hashCap =
-      if (keyOrd >= 0)
-        math.max(1L, SnapshotStore.BloomCollectRowsCutoff / math.max(1, parts)).toInt
-      else 0
-    val res = org.apache.spark.sql.GraftParquetDirect.writeStats(clustered,
-      unitDir, UnitTaskStats.observer(latOrd, lonOrd, zOrd, keyOrd,
-        histRes, hashCap))
+                             lineageId: String, t0: Long)
+      : Seq[(FileEntry, UnitFileStats)] =
+    writeObserved(clustered, unitDir, lineageId, t0, "data",
+      bloomKey.filter(clustered.columns.contains), Some(histRes))
+
+  /** Direct write of `df` into `unitDir` with in-task stats; one manifest
+    * entry of `kind` per non-empty written file. Entries name only the
+    * files of SUCCESSFUL tasks, so a failed attempt's orphan never reaches
+    * the manifest. */
+  private def writeObserved(df: DataFrame, unitDir: String, lineageId: String,
+                            t0: Long, kind: String, key: Option[String],
+                            leavesRes: Option[Int]): Seq[(FileEntry, UnitFileStats)] = {
+    val res = org.apache.spark.sql.GraftParquetDirect.writeStats(df, unitDir,
+      UnitTaskStats.observer(df.schema, key, leavesRes))
     val wallMs = (System.nanoTime() - t0) / 1000000
-    SnapshotStore.trace("append.write", t0)
-    val conf = spark.sessionState.newHadoopConf()
+    SnapshotStore.trace(s"$kind.write", t0)
     val dirPath = new org.apache.hadoop.fs.Path(unitDir)
-    val fs = dirPath.getFileSystem(conf)
-    val nonEmpty = res.filter(_._2 > 0)
-    val entries = nonEmpty.map { case (name, rows, s) =>
-      FileEntry(
+    val fs = dirPath.getFileSystem(spark.sessionState.newHadoopConf())
+    res.filter(_._2 > 0).map { case (name, rows, s) =>
+      (FileEntry(
         fs.makeQualified(new org.apache.hadoop.fs.Path(dirPath, name)).toString,
         rows, s.minZ, s.maxZ, s.minLat, s.maxLat, s.minLon, s.maxLon,
-        lineageId, wallMs)
+        lineageId, wallMs, kind), s)
     }
-    val totalRows = nonEmpty.map(_._2).sum
-    val taskHashesOk = keyOrd < 0 ||
-      (totalRows <= SnapshotStore.BloomCollectRowsCutoff &&
-        nonEmpty.forall(!_._3.hashOverflow))
-    val byFile =
-      if (!taskHashesOk) None // relational UnitStatsAgg pass sizes the unit's bitsets
-      else Some {
-        val bits =
-          if (keyOrd >= 0 && nonEmpty.nonEmpty)
-            Bloom.bitsFor(nonEmpty.map(_._2).max)
-          else 0
-        nonEmpty.zip(entries).map { case ((_, _, s), e) =>
-          val bs =
-            if (keyOrd < 0) Array.emptyLongArray
-            else {
-              val b = new Array[Long](bits / 64)
-              s.hashes.foreach(Bloom.add(b, _))
-              b
-            }
-          (SnapshotStore.normalizePath(e.path), FileStats(bs, s.leaves))
-        }.sortBy(_._1)
-      }
-    UnitWrite(entries, byFile,
-      if (keyOrd >= 0) bloomKey else None, schema)
   }
-
-  /** Sidecar JSON for a just-written unit: from the in-task stats when
-    * available, else the round-5 relational pass over the written files. */
-  private def writeUnitSidecars(uw: UnitWrite, unitDir: String,
-                                lineageId: String): Seq[java.nio.file.Path] =
-    if (uw.entries.isEmpty) Seq.empty
-    else uw.byFile match {
-      case Some(bf) => writeSidecarJson(lineageId, bf, uw.bloomCol)
-      case None => writeSidecars(unitDir, lineageId, uw.entries, uw.schema)
-    }
 
   /** Appends COMMUTE: the unit's data files and sidecars are already on
     * disk under unique names and the manifest merge is purely additive, so
@@ -556,8 +412,8 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     }
   }
 
-  /** ONE stats pass over the unit just written → three driver-written JSON
-    * sidecars (hist / bloom / index), via [[UnitStatsAgg]] grouped by file:
+  /** Three driver-written JSON sidecars for a just-written unit, from the
+    * in-task stats of its files (none for an empty unit):
     *
     *  - `meta/hist/<lineage>-<uuid>.json` — the unit's per-cell histogram
     *    at `histRes` ([[hotCells]]'s write-time skew hint);
@@ -574,115 +430,12 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     * repeated lineage id leaves orphan sidecars, which only OVERCOUNT the
     * histogram hint (safe direction) and are never consulted by
     * path-keyed readers (lookups/index key by manifest paths). */
-  private def writeSidecars(unitDir: String, lineageId: String,
-                            entries: Seq[FileEntry],
-                            schema: org.apache.spark.sql.types.StructType): Seq[java.nio.file.Path] = {
-    if (entries.isEmpty) return Seq.empty
-    import spark.implicits._
-    val tSc = System.nanoTime()
-    // the writer's schema is passed in — inferring it would cost a
-    // footer-sampling Spark job per append; the read targets the ENTRIES'
-    // paths, not the dir listing, so an orphan partial file from a failed
-    // direct-write attempt can never leak into the stats
-    val raw = spark.read.schema(schema).parquet(entries.map(_.path): _*)
-    val key = bloomKey.filter(raw.columns.contains)
-    val byFile: Seq[(String, FileStats)] = key match {
-      case Some(kc) if entries.map(_.rows).sum <= SnapshotStore.BloomCollectRowsCutoff =>
-        // Small-unit Bloom path (micro-batch commits, bench-scale units):
-        // ONE relational pass — the per-(file, cell) leaf aggregate also
-        // collects the group's key hashes, and the driver folds them into
-        // per-file bitsets (bounded: ≤ cutoff × 8 B of hashes total). The
-        // cell is NULLed for NaN/null coords so those rows' hashes still
-        // reach the filter (dropping one would be a false negative) while
-        // their group is excluded from the leaf stats, exactly the typed
-        // aggregator's semantics.
-        val bits = Bloom.bitsFor(entries.map(_.rows).max)
-        val cellOrNull = when(col("lat").isNull || col("lon").isNull ||
-            isnan(col("lat")) || isnan(col("lon")), lit(null))
-          .otherwise(coalesce(GeoCols.cellCol(col("lat"), col("lon"), histRes), lit(0L)))
-        val grouped = raw.select(
-            input_file_name().as("f"), cellOrNull.as("cell"),
-            col("lat"), col("lon"), xxhash64(col(kc)).as("h"))
-          .groupBy(col("f"), col("cell"))
-          .agg(count(lit(1)).as("cnt"),
-            min(col("lat")).as("la0"), max(col("lat")).as("la1"),
-            min(col("lon")).as("lo0"), max(col("lon")).as("lo1"),
-            collect_list(col("h")).as("hs"))
-          .collect()
-        grouped.groupBy(r => SnapshotStore.normalizePath(r.getString(0)))
-          .view.mapValues { rows =>
-            val bs = new Array[Long](bits / 64)
-            rows.foreach(_.getSeq[Long](7).foreach(Bloom.add(bs, _)))
-            FileStats(bs,
-              rows.filter(!_.isNullAt(1))
-                .map(r => (r.getLong(1), r.getLong(2), r.getDouble(3),
-                  r.getDouble(4), r.getDouble(5), r.getDouble(6)))
-                .sortBy(_._1))
-          }
-          .toSeq.sortBy(_._1)
-      case Some(_) =>
-        // Large-unit Bloom path: the per-file bitsets need a distributed
-        // bitwise-OR aggregation whose buffers (512 KB bitsets, never row
-        // keys) cross the exchange — [[UnitStatsAgg]] is the scale-right
-        // shape for that and stays.
-        val bits = Bloom.bitsFor(entries.map(_.rows).max)
-        val agg = new UnitStatsAgg(bits)
-        // nulls → NaN: the typed encoder would throw on a null primitive,
-        // and the aggregator must still Bloom the row's key (skipping it
-        // would be a false negative); NaN coords excluded from cell stats
-        val latN = coalesce(col("lat"), lit(Double.NaN))
-        val lonN = coalesce(col("lon"), lit(Double.NaN))
-        raw.select(
-            input_file_name().as("f"),
-            coalesce(GeoCols.cellCol(col("lat"), col("lon"), histRes), lit(0L)).as("cell"),
-            latN.as("lat"), lonN.as("lon"),
-            xxhash64(col(key.get)).as("h"))
-          .as[(String, Long, Double, Double, Long)]
-          .groupByKey(_._1)
-          .mapValues(t => (t._2, t._3, t._4, t._5))
-          .agg(agg.toColumn.name("stats"))
-          .collect()
-          .sortBy(_._1)
-          .map { case (f, fs) => (SnapshotStore.normalizePath(f), fs) }.toSeq
-      case None =>
-        // No Bloom key (the common case): the stats are a plain per-(file,
-        // cell) count + min/max — a relational hash aggregate with
-        // map-side partial aggregation and whole-stage codegen, ~2× the
-        // typed groupByKey kernel's speed (every row previously crossed
-        // the Dataset encoder). NaN/null coords are excluded from leaf
-        // stats exactly as the typed path excluded them.
-        val grouped = raw.select(
-            input_file_name().as("f"),
-            coalesce(GeoCols.cellCol(col("lat"), col("lon"), histRes), lit(0L)).as("cell"),
-            col("lat"), col("lon"))
-          .filter(col("lat").isNotNull && col("lon").isNotNull &&
-            !isnan(col("lat")) && !isnan(col("lon")))
-          .groupBy(col("f"), col("cell"))
-          .agg(count(lit(1)).as("cnt"),
-            min(col("lat")).as("la0"), max(col("lat")).as("la1"),
-            min(col("lon")).as("lo0"), max(col("lon")).as("lo1"))
-          .collect()
-        grouped.groupBy(r => SnapshotStore.normalizePath(r.getString(0)))
-          .view.mapValues { rows =>
-            FileStats(Array.emptyLongArray,
-              rows.map(r => (r.getLong(1), r.getLong(2), r.getDouble(3),
-                r.getDouble(4), r.getDouble(5), r.getDouble(6)))
-                .sortBy(_._1))
-          }
-          .toSeq.sortBy(_._1)
-    }
-    SnapshotStore.trace("sidecars.stats", tSc)
-    writeSidecarJson(lineageId, byFile, key)
-  }
-
-  /** Driver-side sidecar JSON from assembled per-file stats (shared by
-    * the relational pass above and the in-task [[UnitTaskStats]] path —
-    * same documents either way). */
   private def writeSidecarJson(lineageId: String,
-                               byFile: Seq[(String, FileStats)],
-                               bloomCol: Option[String])
+                            files: Seq[(FileEntry, UnitFileStats)])
       : Seq[java.nio.file.Path] = {
+    if (files.isEmpty) return Seq.empty
     val tJson = System.nanoTime()
+    val byFile = files.map { case (e, s) => (normPath(e.path), s) }.sortBy(_._1)
     val uuid = java.util.UUID.randomUUID().toString.take(8)
     val written = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
     def put(dir: java.nio.file.Path, json: String): Unit = {
@@ -697,7 +450,8 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     put(histDir, MetaJson.histJson(cellTotals.toSeq.sortBy(_._1)))
     put(indexDir, MetaJson.indexJson(histRes,
       byFile.map { case (f, fs) => (f, fs.leaves.toSeq) }))
-    bloomCol.foreach { kc =>
+    // the unit's files share one schema: either all carry bitsets or none
+    bloomKey.filter(_ => byFile.head._2.bits.nonEmpty).foreach { kc =>
       put(bloomDir, MetaJson.bloomJson(kc, Bloom.K,
         byFile.map { case (f, fs) => (f, fs.bits) }))
     }
@@ -771,7 +525,7 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
   def statsRes: Int = histRes
 
   /** Persisted per-file index summaries (leaf slabs keyed by normalized
-    * file path) — written by [[writeSidecars]], consumed by
+    * file path) — written by [[writeSidecarJson]], consumed by
     * [[graft.index.GlobalIndex.fromStore]] with zero Spark jobs. Orphan
     * sidecars from crashed appends are harmless: consumers key by the
     * manifest's file paths, which never reference them. */
@@ -1316,12 +1070,13 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
         .map(_.name).toSeq
     require(keys.nonEmpty, "equality delete needs at least one non-binary key column")
     val unitDir = s"$root/data/$lineageId-${java.util.UUID.randomUUID().toString.take(8)}"
-    val written = org.apache.spark.sql.GraftParquetDirect.write(
+    // same in-task stats as a data unit, minus leaves and Bloom: tombstone
+    // entries keep lat/lon bounds (fail open when the keys lack them) and
+    // carry no Z range — they are never Z-pruned
+    val files = writeObserved(
       df.filter(cond).select(keys.map(col): _*).coalesce(1),
-      unitDir)
-    val wallMs = (System.nanoTime() - t0) / 1000000
-    commit(footerStats(unitDir, lineageId, wallMs, withZ = false, kind = "delete",
-      only = Some(written.map(_._1).toSet)))
+      unitDir, lineageId, t0, "delete", key = None, leavesRes = None)
+    commit(files.map(_._1.copy(minZ = 0L, maxZ = 0L)))
   }
 
   /** Compaction — the distributed analog of the reference's forced-
@@ -1356,12 +1111,11 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
       java.util.UUID.randomUUID().toString.take(8)
     val keyed = withCurveKey(df)
     val lineage = s"compact-${base + 1}"
-    val uw = writeUnitFiles(
+    val files = writeUnitFiles(
       keyed
         .repartitionByRange(parts, col("__z"))
         .sortWithinPartitions(col("__z")),
-      unitDir, lineage, t0, parts)
-    val stats = uw.entries
+      unitDir, lineage, t0)
     // replacing commit: new manifest = compacted entries + the BASE
     // manifest's lineage ids as zero-file markers so resumableRun still
     // skips them (read from `base`, not the live pointer — a racer's
@@ -1371,7 +1125,7 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
         minLat = 0.0, maxLat = 0.0, minLon = 0.0, maxLon = 0.0,
         lineageId = l, wallMs = 0L))
     beforeCommit()
-    val next = commit(stats ++ lineageMarkers, replaceParent = true,
+    val next = commit(files.map(_._1) ++ lineageMarkers, replaceParent = true,
       expectedParent = base)
     // refresh the write-time histograms only AFTER the commit is durable,
     // write-then-delete, so EVERY crash window leaves hotCells an upper
@@ -1384,7 +1138,7 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     // append's freshly written histogram (its unit is not in `base`) must
     // survive or its hot cells vanish from the hint.
     val folded = lineageMarkers.map(_.lineageId).toSet + lineage
-    val fresh = writeUnitSidecars(uw, unitDir, lineage).toSet
+    val fresh = writeSidecarJson(lineage, files).toSet
     Seq(histDir, bloomDir, indexDir).foreach { dir =>
       if (Files.exists(dir))
         listDir(dir).filterNot(fresh.contains).foreach { d =>
@@ -1564,13 +1318,6 @@ object SnapshotStore {
     * pin a finer grid per store — the ctor parameter is the knob and the
     * value is validated against meta/table.json like every layout field. */
   val DefaultHistRes: Int = 6
-
-  /** Unit-size ceiling (total rows) for the single-pass relational Bloom
-    * build in [[SnapshotStore.writeSidecars]]: under it, collecting the
-    * raw key hashes to the driver (≤ 16 MB at the cutoff) beats a typed
-    * bitset aggregation per measured append; over it, the distributed
-    * [[UnitStatsAgg]] bitwise-OR keeps driver traffic at 512 KB/file. */
-  val BloomCollectRowsCutoff: Long = 1L << 21
 
   /** Opt-in phase tracing for the write path (guide §1 instrumentation):
     * SPARK_GRAFT_TRACE=1 prints per-phase wall times to stderr. Zero cost

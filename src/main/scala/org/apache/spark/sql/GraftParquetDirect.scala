@@ -33,12 +33,14 @@ import scala.reflect.ClassTag
   * `WriteSupport` class `ParquetFileFormat.prepareWrite` installs) and the
   * driver gets back the (name, rows) of every SUCCESSFUL task's file. A
   * failed or speculatively re-run attempt may orphan a partial file in the
-  * unit dir; callers pass the returned names to `footerStats(only = …)` so
-  * such orphans never reach the manifest, and readers never list dirs.
+  * unit dir; such files are deleted after the job, and callers build
+  * manifest entries from the returned names only, so orphans never reach
+  * the manifest (readers never list dirs). A job that fails deletes the
+  * whole target dir, best effort, before the error propagates.
   *
   * [[writeStats]] additionally threads every row through a caller-supplied
   * per-task observer while it is being written — the write task sees each
-  * row anyway, so unit-level statistics (per-cell slabs, Bloom hashes,
+  * row anyway, so unit-level statistics (per-cell slabs, Bloom bitsets,
   * file min/max) cost no second pass over the data
   * ([[graft.table.UnitTaskStats]]).
   *
@@ -111,17 +113,27 @@ object GraftParquetDirect {
     val rdd = df.asInstanceOf[classic.Dataset[Row]].queryExecution.toRdd
     implicit val ct: ClassTag[Option[(String, Long, S)]] =
       ClassTag(classOf[Option[_]]).asInstanceOf[ClassTag[Option[(String, Long, S)]]]
-    val written: Seq[(String, Long, S)] =
-      if (rdd.getNumPartitions == 0) Seq.empty
-      else spark.sparkContext
-        .runJob(rdd, (tc: TaskContext, it: Iterator[InternalRow]) =>
-          writeOne(ser, dir, uuid, ext, tc.partitionId(), tc.taskAttemptId(),
-            it, force = false, observer))
-        .flatten.toSeq
     val out =
-      if (written.nonEmpty) written
-      else writeOne(ser, dir, uuid, ext, 0, 0L,
-        Iterator.empty, force = true, observer).toSeq
+      try {
+        val written: Seq[(String, Long, S)] =
+          if (rdd.getNumPartitions == 0) Seq.empty
+          else spark.sparkContext
+            .runJob(rdd, (tc: TaskContext, it: Iterator[InternalRow]) =>
+              writeOne(ser, dir, uuid, ext, tc.partitionId(), tc.taskAttemptId(),
+                it, force = false, observer))
+            .flatten.toSeq
+        if (written.nonEmpty) written
+        else writeOne(ser, dir, uuid, ext, 0, 0L,
+          Iterator.empty, force = true, observer).toSeq
+      } catch {
+        case e: Throwable =>
+          // nothing references a failed write's files: drop the dir so a
+          // failed append/compact/delete leaves no debris behind (a zombie
+          // task of the failed job may still re-create it — vacuum's case)
+          try fs.delete(fsPath, true)
+          catch { case scala.util.control.NonFatal(_) => () }
+          throw e
+      }
     dropUnreported(fs, fsPath, out.map(_._1).toSet)
     out
   }

@@ -43,6 +43,21 @@ class BloomSpec extends AnyFunSuite {
     val probes = (100000 until 200000).map(i => Bloom.hashLiteral(i.toLong))
     val fp = probes.count(Bloom.mightContain(set, _))
     assert(fp < probes.size * 0.03, s"fpp ${fp.toDouble / probes.size}") // ~0.8% design
+    // the in-task builder crosses the MaxBits threshold mid-stream (buffer
+    // folded into a MaxBits bitset) and still equals bitsFor(n) over all
+    val n = Bloom.MaxBits / Bloom.BitsPerKey + 1000
+    val hashes = (0 until n).map(i =>
+      org.apache.spark.sql.catalyst.expressions.XXH64.hashLong(i.toLong, 42L))
+    val b = new Bloom.Builder
+    hashes.foreach(b.add)
+    val exp = new Array[Long](Bloom.bitsFor(n) / 64)
+    hashes.foreach(Bloom.add(exp, _))
+    assert(Bloom.bitsFor(n) == Bloom.MaxBits)
+    assert(java.util.Arrays.equals(b.result(), exp))
+    // and below the threshold it sizes from its own count
+    val small = new Bloom.Builder
+    planted.foreach(small.add)
+    assert(java.util.Arrays.equals(small.result(), set))
   }
 
   test("lookup == read+filter for every sampled key; files pruned") {

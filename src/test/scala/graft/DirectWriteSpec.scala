@@ -89,6 +89,19 @@ class DirectWriteSpec extends AnyFunSuite {
     graft.ops.OpUtil.deleteTree(base)
   }
 
+  test("a failed write job leaves no unit dir behind") {
+    val base = tmp()
+    // one task that fails at row 500, after the part file was opened
+    val boom = spark.range(0, 1000).coalesce(1)
+      .select(when(col("id") === 500L, raise_error(lit("boom at row 500")))
+        .otherwise(col("id")).as("id"))
+    val err = intercept[Exception](GraftParquetDirect.write(boom, s"$base/u"))
+    assert(err.toString.contains("boom at row 500") ||
+      Option(err.getCause).exists(_.toString.contains("boom at row 500")), err.toString)
+    assert(!java.nio.file.Files.exists(base.resolve("u")))
+    graft.ops.OpUtil.deleteTree(base)
+  }
+
   test("overwrite replaces the previous target completely") {
     val base = tmp()
     val df1 = Seq((1L, 2.0), (2L, 3.0)).toDF("id", "v").repartition(2)

@@ -920,23 +920,29 @@ class SnapshotStoreSpec extends AnyFunSuite {
   }
 
   test("append job budget: clustered write + one stats pass; metadata reads cost zero jobs") {
-    // the round-4 commit-protocol claim, pinned: an append runs TWO Spark
-    // queries — the clustered write (range sampling + shuffle + write
-    // stage-jobs under AQE) and ONE sidecar stats pass (map + final
-    // stage-jobs) — totalling <= 8 stage-jobs, with the schema passed to
-    // the stats read (no footer-inference job); and manifest / lineage /
+    // the commit-protocol claim, pinned: an append runs ONE Spark query —
+    // the clustered write (range sampling + shuffle + write stage-jobs
+    // under AQE), whose tasks also compute every stat and Bloom bitset —
+    // for a long and a string Bloom key alike; and manifest / lineage /
     // hotCells / index reads are pure driver IO — ZERO Spark jobs
     def jobsOf(group: String)(body: => Unit): Int = {
       spark.sparkContext.setJobGroup(group, group)
       try body finally spark.sparkContext.clearJobGroup()
       spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
     }
+    pts.count() // fill the cached fixture: count only the append's own jobs
     val st = new SnapshotStore(spark, tmp())
     val appendJobs = jobsOf("r4-append") {
       st.append(pts.limit(300), "u-0", numPartitions = 2)
     }
-    assert(appendJobs >= 2 && appendJobs <= 8,
-      s"append ran $appendJobs jobs — the two-query commit contract is broken")
+    val strSt = new SnapshotStore(spark, tmp(), bloomKey = Some("sid"))
+    val strAppendJobs = jobsOf("r4-append-str") {
+      strSt.append(pts.limit(300).withColumn("sid", concat(lit("p"), col("id"))),
+        "u-0", numPartitions = 2)
+    }
+    for (jobs <- Seq(appendJobs, strAppendJobs))
+      assert(jobs >= 2 && jobs <= 4,
+        s"append ran $jobs jobs — the one-query commit contract is broken")
     val metaJobs = jobsOf("r4-meta") {
       st.manifest(); st.committedLineage; st.totalRows
       st.hotCells(graft.data.Fixtures.JoinRes)

@@ -6,12 +6,15 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** The in-task unit stats (UnitTaskStats, computed inside the direct
-  * write's tasks) must be INDISTINGUISHABLE from the round-5 protocol
-  * they replace: the relational per-(file, cell) sidecar aggregate and
-  * the parquet-footer min/max read. This spec recomputes both with the
-  * original expressions over the files the store actually committed —
-  * including planted null coordinates, a NaN latitude and a null Bloom
-  * key — and compares documents bit-for-bit. */
+  * write's tasks) are the only source of a unit's manifest entries and
+  * sidecars. This spec recomputes them with independent relational
+  * expressions over the files the store actually committed — the
+  * per-(file, cell) aggregate, `xxhash64` of every key folded into a
+  * `Bloom.bitsFor(rows of that file)` bitset, and SQL min/max — including
+  * planted null coordinates, a NaN latitude and a null Bloom key, and
+  * compares documents bit-for-bit. It runs over a long key, a string key,
+  * and a skewed unit whose rows all share one `__z` (one file holds
+  * everything). */
 class UnitTaskStatsSpec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -22,28 +25,43 @@ class UnitTaskStatsSpec extends AnyFunSuite {
 
   import spark.implicits._
 
-  test("in-task stats equal the relational sidecar pass and exact bounds") {
-    val base = java.nio.file.Files.createTempDirectory("graft_utstats_")
+  private def sidecar(base: java.nio.file.Path, kind: String): String = {
+    import scala.jdk.CollectionConverters._
+    val files = java.nio.file.Files.list(base.resolve(s"store/meta/$kind"))
+      .iterator().asScala.toArray
+    assert(files.length == 1, s"expected one $kind sidecar")
+    java.nio.file.Files.readString(files.head)
+  }
+
+  /** `df` with planted rows: null lat, NaN lat, null key. */
+  private def planted(): org.apache.spark.sql.DataFrame = {
     val clean = (1L to 4000L).map(i => (java.lang.Long.valueOf(i),
       java.lang.Double.valueOf((i % 173).toDouble / 2 - 43),
       java.lang.Double.valueOf((i % 361).toDouble - 180)))
-    val planted = Seq(
+    val odd = Seq(
       (java.lang.Long.valueOf(9001L), null.asInstanceOf[java.lang.Double],
         java.lang.Double.valueOf(10.0)),                         // null lat
       (java.lang.Long.valueOf(9002L), java.lang.Double.valueOf(Double.NaN),
         java.lang.Double.valueOf(11.0)),                         // NaN lat
       (null.asInstanceOf[java.lang.Long], java.lang.Double.valueOf(12.0),
         java.lang.Double.valueOf(12.0)))                         // null key
-    val df = (clean ++ planted).toDF("id", "lat", "lon")
+    (clean ++ odd).toDF("id", "lat", "lon")
+  }
+
+  /** Append `df` (Bloom key `id`) as one unit and check every document
+    * the write produced; returns the store for follow-up checks. */
+  private def checkUnit(base: java.nio.file.Path, df: org.apache.spark.sql.DataFrame,
+                        expectFiles: Option[Int] = None): SnapshotStore = {
     val store = new SnapshotStore(spark, s"$base/store", bloomKey = Some("id"))
     store.append(df, "unit-all", numPartitions = 4)
 
     val entries = store.manifest().filter(e => e.kind == "data" && e.path.nonEmpty)
-    assert(entries.map(_.rows).sum == 4003L)
+    assert(entries.map(_.rows).sum == df.count())
+    expectFiles.foreach(n => assert(entries.size == n, s"${entries.size} files"))
     val raw = spark.read.parquet(entries.map(_.path): _*)
     val res = store.statsRes
 
-    // 1. leaves: the ORIGINAL relational expressions over the committed files
+    // 1. leaves: relational per-(file, cell) aggregate over the committed files
     val expLeaves = raw.select(
         input_file_name().as("f"),
         coalesce(graft.geo.GeoCols.cellCol(col("lat"), col("lon"), res), lit(0L)).as("cell"),
@@ -58,32 +76,27 @@ class UnitTaskStatsSpec extends AnyFunSuite {
       .view.mapValues(_.map(r => (r.getLong(1), r.getLong(2), r.getDouble(3),
         r.getDouble(4), r.getDouble(5), r.getDouble(6))).sortBy(_._1).toSeq)
       .toMap
-    val idxFile = java.nio.file.Files.list(
-      java.nio.file.Path.of(s"$base/store/meta/index")).iterator().next()
-    val (idxRes, gotLeaves) = MetaJson.parseIndex(java.nio.file.Files.readString(idxFile))
+    val (idxRes, gotLeaves) = MetaJson.parseIndex(sidecar(base, "index"))
     assert(idxRes == res)
     assert(gotLeaves.toMap.view.mapValues(_.toList).toMap ==
       expLeaves.view.mapValues(_.toList).toMap)
 
     // 2. hist: sum of leaves across files
-    val histFile = java.nio.file.Files.list(
-      java.nio.file.Path.of(s"$base/store/meta/hist")).iterator().next()
-    val gotHist = MetaJson.parseHist(java.nio.file.Files.readString(histFile))
+    val gotHist = MetaJson.parseHist(sidecar(base, "hist"))
     val expHist = expLeaves.values.flatten
       .groupBy(_._1).view.mapValues(_.map(_._2).sum).toSeq.sortBy(_._1)
     assert(gotHist == expHist)
 
-    // 3. bloom: xxhash64 of EVERY row (null key → seed), folded per file
+    // 3. bloom: xxhash64 of EVERY row (null key → seed), folded into a
+    //    bitset sized from the rows of THAT file
     val expHashes = raw.select(input_file_name().as("f"), xxhash64(col("id")).as("h"))
       .collect().groupBy(r => SnapshotStore.normalizePath(r.getString(0)))
       .view.mapValues(_.map(_.getLong(1)).toSeq).toMap
-    val bloomFile = java.nio.file.Files.list(
-      java.nio.file.Path.of(s"$base/store/meta/bloom")).iterator().next()
-    val (kc, k, gotBits) = MetaJson.parseBloom(java.nio.file.Files.readString(bloomFile))
+    val (kc, k, gotBits) = MetaJson.parseBloom(sidecar(base, "bloom"))
     assert(kc == "id" && k == Bloom.K)
-    val bits = Bloom.bitsFor(entries.map(_.rows).max)
+    assert(gotBits.map(_._1).toSet == expHashes.keySet)
     for ((f, hs) <- expHashes) {
-      val exp = new Array[Long](bits / 64)
+      val exp = new Array[Long](Bloom.bitsFor(hs.size) / 64)
       hs.foreach(Bloom.add(exp, _))
       assert(gotBits.toMap.apply(f).toSeq == exp.toSeq, s"bloom bits differ for $f")
     }
@@ -107,6 +120,54 @@ class UnitTaskStatsSpec extends AnyFunSuite {
       }
       assert(e.minLon == r.getDouble(5) && e.maxLon == r.getDouble(6))
     }
+    store
+  }
+
+  test("in-task stats equal the relational sidecar pass and exact bounds") {
+    val base = java.nio.file.Files.createTempDirectory("graft_utstats_")
+    val store = checkUnit(base, planted())
+
+    // delete files take their entry from the same observer: no Z range,
+    // lat/lon bounds equal to the tombstone file's SQL min/max ...
+    store.deleteWhere(col("lat") > 0 && col("lon") < 0, "del-box")
+    val withCoords = store.manifest().filter(_.kind == "delete")
+    assert(withCoords.size == 1)
+    val d = withCoords.head
+    val tomb = spark.read.parquet(d.path)
+    assert(tomb.columns.toSeq == Seq("id", "lat", "lon"))
+    val m = tomb.agg(count(lit(1)), min("lat"), max("lat"), min("lon"), max("lon")).head()
+    assert(d.rows == m.getLong(0) && d.minZ == 0L && d.maxZ == 0L)
+    assert(d.minLat == m.getDouble(1) && d.maxLat == m.getDouble(2) &&
+      d.minLon == m.getDouble(3) && d.maxLon == m.getDouble(4))
+    // ... and the full range when the keys carry no coordinates (fail open)
+    store.deleteWhere(col("id") === 7L, "del-id", keyCols = Seq("id"))
+    val idOnly = store.manifest().filter(e => e.kind == "delete" && e.lineageId == "del-id")
+    assert(idOnly.map(e => (e.rows, e.minZ, e.maxZ, e.minLat, e.maxLat, e.minLon, e.maxLon)) ==
+      Seq((1L, 0L, 0L, -Double.MaxValue, Double.MaxValue, -Double.MaxValue, Double.MaxValue)))
+    // no sidecar was written for either delete
+    assert(java.nio.file.Files.list(base.resolve("store/meta/bloom")).count() == 1)
+    graft.ops.OpUtil.deleteTree(base)
+  }
+
+  test("in-task stats: a string Bloom key hashes exactly like xxhash64") {
+    val base = java.nio.file.Files.createTempDirectory("graft_utstats_")
+    val df = planted().withColumn("id", concat(lit("k"), col("id")))
+    assert(df.schema("id").dataType == org.apache.spark.sql.types.StringType)
+    val store = checkUnit(base, df)
+    // the driver-side literal hash probes the same bits
+    val (hit, _, _) = store.lookupByKey(Seq("k1234"))
+    assert(hit.select("id").as[String].collect().toSeq == Seq("k1234"))
+    graft.ops.OpUtil.deleteTree(base)
+  }
+
+  test("in-task stats: a skewed unit (one shared __z) lands in one exact file") {
+    val base = java.nio.file.Files.createTempDirectory("graft_utstats_")
+    val df = (1L to 20000L).map(i =>
+      (i, 10.0 + (i % 50) * 1e-7, 20.0 + (i % 37) * 1e-7)).toDF("id", "lat", "lon")
+    val store = checkUnit(base, df, expectFiles = Some(1))
+    val zs = spark.read.parquet(store.manifest().map(_.path): _*)
+      .select("__z").distinct().count()
+    assert(zs == 1, s"$zs distinct __z values — the unit is not skewed")
     graft.ops.OpUtil.deleteTree(base)
   }
 }
