@@ -735,24 +735,6 @@ object SpatialOps {
       .select(col("cell")).collect().map(_.getLong(0)).toSet
   }
 
-  /** kNN join (op #10 batched): small query set broadcast against the point
-    * cloud; per-query top-k via window. The cross join is map-side only
-    * (broadcast nested loop); the window shuffles |Q|·N candidate rows —
-    * acceptable for small Q. Scale path for large Q: cell-ring candidate
-    * pruning before the window (see KnnJoinPruned below). */
-  def knnJoin(points: DataFrame, queries: Seq[(Int, Double, Double)],
-              k: Int): DataFrame = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    val q = queries.toDF("q_id", "qlat", "qlon")
-    val w = Window.partitionBy(col("q_id"))
-      .orderBy(GeoCols.d2Cols(col("lat"), col("lon"), col("qlat"), col("qlon")), col("id"))
-    points.crossJoin(broadcast(q))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("rank"), col("id"))
-  }
-
   /** Many-polygon PIP join (the scale path when polygons number in the
     * thousands and per-polygon literal plans stop making sense): polygons
     * as DATA — (poly_id, ring array<struct<lat,lon>>) exploded to covering
@@ -860,8 +842,9 @@ object SpatialOps {
     * falls within `rings` Chebyshev rings of the query's cell, then takes
     * per-query top-k. EXACT when every query finds >= k candidates whose
     * kth distance is below the probed-region guarantee — the operator
-    * verifies that invariant and falls back to the dense join for the few
-    * queries that fail it (none, on non-degenerate data at sane `rings`). */
+    * verifies that invariant and answers the few queries that fail it
+    * (none, on non-degenerate data at sane `rings`) with the dense
+    * [[knnJoinAgg]]. */
   def knnJoinPruned(points: DataFrame, queries: Seq[(Int, Double, Double)],
                     k: Int, rOverride: Int = AutoRes, rings: Int = 2): DataFrame = {
     val spark = points.sparkSession
@@ -900,7 +883,7 @@ object SpatialOps {
     val out =
       if (bad.isEmpty) exactPart
       else exactPart.unionAll(
-        knnJoin(points, queries.filter(q => bad.contains(q._1)), k))
+        knnJoinAgg(points, queries.filter(q => bad.contains(q._1)), k))
     // materialize the ≤|Q|·k output, then release the pruned cache —
     // repeated invocations in a long session must not accrue storage
     OpUtil.finish(out, pruned)

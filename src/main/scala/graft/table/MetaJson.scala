@@ -59,8 +59,7 @@ object MetaJson {
 
   /** Additive schema evolution: every field except the identity pair
     * (path, rows) reads through a default, so manifests written BEFORE a
-    * field existed still parse after it's added — the same contract the
-    * legacy parquet manifest path gives kind/seq. Geometric stats default
+    * field existed still parse after it's added. Geometric stats default
     * to the fail-open full range (a pruner may only skip a file it can
     * PROVE disjoint; unknown stats must never skip). */
   def parseManifest(json: String): Seq[FileEntry] =
@@ -117,7 +116,7 @@ object MetaJson {
   def parseManifestRoot(json: String): (Seq[ShardMeta], Seq[FileEntry]) = {
     // ONE readTree for both halves — a second parse of the same document
     // doubled driver-side cost on every snapshot read (flat manifests can
-    // be MBs before the sharding threshold, and legacy tables stay flat)
+    // be MBs before the sharding threshold)
     val root = mapper.readTree(json)
     val entries = entriesFrom(root)
     val shardsNode = Option(root.get("shards")).map(_.asInstanceOf[ArrayNode])

@@ -18,9 +18,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
   *
   * `seq` is the Iceberg-style sequence number: the snapshot id of the
   * commit that introduced the entry, PERSISTED so delete scoping never
-  * depends on the physical row order of the manifest (manifests written
-  * before the field existed get their row index as the sequence — the
-  * exact ordering semantics they were written under). */
+  * depends on the physical row order of the manifest. */
 final case class FileEntry(path: String, rows: Long, minZ: Long, maxZ: Long,
                            minLat: Double, maxLat: Double,
                            minLon: Double, maxLon: Double,
@@ -33,8 +31,7 @@ final case class FileEntry(path: String, rows: Long, minZ: Long, maxZ: Long,
   *
   * {{{
   * <root>/data/<lineage>-<uuid>/part-*.parquet        immutable data files
-  * <root>/meta/snap-<n>                               manifest (JSON of FileEntry;
-  *                                                    legacy parquet DIRS still read)
+  * <root>/meta/snap-<n>                               manifest (JSON of FileEntry)
   * <root>/meta/current                                atomic pointer "n"
   * <root>/meta/table.json                             pinned layout (curve, zRes)
   * <root>/meta/{hist,bloom,index}/<lineage>-<id>.json write-time sidecars
@@ -54,8 +51,8 @@ final case class FileEntry(path: String, rows: Long, minZ: Long, maxZ: Long,
   * commit therefore writes Iceberg's TWO-LEVEL shape — a manifest LIST
   * whose rows carry per-shard Z/lat-lon union bounds, data entries
   * chunked into shard files — and box reads download only the shards
-  * overlapping the query ([[manifestPartial]]); flat and legacy
-  * manifests still read through the same parser. Commits onto a sharded
+  * overlapping the query ([[manifestPartial]]); flat manifests read
+  * through the same parser. Commits onto a sharded
   * parent REUSE its shard files by reference and write only their own
   * entries as a new shard, so the commit path is O(commit size), not
   * O(table) ([[writeManifestFile]]); [[compact]] re-chunks globally
@@ -160,21 +157,17 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
 
   validateTableMeta()
 
-  // Legacy-open hazard (round-4 ADVICE): a table written by the pre-pin
-  // format has committed snapshots but no meta/table.json. Auto-pinning at
-  // the next commit would enshrine the OPENER's possibly-wrong curve as
+  // A table with committed snapshots but no meta/table.json (written
+  // before layouts were pinned, or damaged): auto-pinning at the next
+  // commit would enshrine the OPENER's possibly-wrong curve as
   // authoritative — after which the CORRECT spelling fails validation
-  // forever, and reads meanwhile silently drop rows. Refuse the implicit
-  // migration: the owner must assert the written layout explicitly via
-  // SnapshotStore.pinLegacyLayout before this table is usable again.
+  // forever, and reads meanwhile silently drop rows. Refuse to open it.
   if (currentSnapshotId > 0 && tableMetaIfExists().isEmpty)
     throw new IllegalStateException(
-      s"table at $root has committed snapshots but no meta/table.json " +
-        "(pre-pin legacy format). Opening it would pin THIS session's " +
-        s"layout (curve=$curve zRes=$zRes histRes=$histRes) as " +
-        "authoritative even if the data was written differently. Run " +
-        "SnapshotStore.pinLegacyLayout(root, curve, zRes, histRes) with " +
-        "the layout the table was WRITTEN with, then reopen.")
+      s"table at $root has committed snapshots but no meta/table.json, so " +
+        "nothing on disk records the layout its data was written with. " +
+        s"Opening it would pin THIS session's layout (curve=$curve " +
+        s"zRes=$zRes histRes=$histRes) as authoritative; refusing to open.")
 
   /** Pin-or-validate, called from EVERY commit (not just the constructor):
     * two stores constructed on the same empty root both pass the ctor
@@ -195,12 +188,12 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
   def currentSnapshotId: Long =
     if (Files.exists(currentPtr)) Files.readString(currentPtr).trim.toLong else 0L
 
-  /** Manifest read. Current format: a driver-written JSON FILE — KBs of
-    * metadata, zero Spark jobs (a parquet manifest cost one job to write
-    * and one per read, and commits run once per micro-batch under
-    * streaming ingestion; real Iceberg's manifests are likewise
-    * driver-readable, never a cluster job). Snapshots written by the old
-    * parquet-dataset format still read through the legacy path below. */
+  /** Manifest read: a driver-written JSON FILE — KBs of metadata, zero
+    * Spark jobs (a parquet manifest cost one job to write and one per
+    * read, and commits run once per micro-batch under streaming
+    * ingestion; real Iceberg's manifests are likewise driver-readable,
+    * never a cluster job). A `snap-N` that is not a regular file fails
+    * the read ([[readRoot]]). */
   def manifest(snapshotId: Long = currentSnapshotId): Seq[FileEntry] =
     manifestPartial(snapshotId, None)._1
 
@@ -221,84 +214,66 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
       es.count(e => e.kind == "data" && e.path.nonEmpty)
     if (snapshotId == 0) (Seq.empty, 0)
     else {
-      val p = metaDir.resolve(s"snap-$snapshotId")
-      if (!Files.exists(p))
+      if (!Files.exists(metaDir.resolve(s"snap-$snapshotId")))
         throw new IllegalStateException(
           s"snapshot $snapshotId is expired or was never committed")
-      if (Files.isRegularFile(p)) {
-        val (shards, inline) = MetaJson.parseManifestRoot(Files.readString(p))
-        if (shards.isEmpty) (inline, dataCount(inline))
-        else {
-          // all three prunes are fail-open: a shard with unknown bounds or
-          // an unknown lineage summary always loads — a pruner may only
-          // skip what it can PROVE irrelevant. The curve-range test rides
-          // the query's own merged covering (rangesHint — shards are
-          // chunked by minZ, so their [minZ, maxZ] intervals partition the
-          // key axis after compaction): a shard whose interval meets no
-          // covering range holds no row of any query box, even when its
-          // lat/lon union still overlaps one (per-append shards span wide
-          // boxes). Sound because shards carry ONLY data entries —
-          // tombstones and markers stay inline in the root.
-          val wanted = shards.filter { sm =>
-            boxes.forall(bs => bs.exists(b =>
-              MBR(sm.minLat, sm.minLon, sm.maxLat, sm.maxLon).overlaps(b))) &&
-            rangesHint.forall(_.exists(r =>
-              r._1 <= sm.maxZ && sm.minZ <= r._2)) &&
-            lineageHint.forall(want => sm.lineages.forall(_.exists(want)))
-          }
-          val loaded = inline ++ wanted.flatMap(sm =>
-            MetaJson.parseManifest(Files.readString(metaDir.resolve(sm.path))))
-          (loaded, shards.map(_.entries).sum + dataCount(inline))
+      val (shards, inline) = readRoot(snapshotId)
+      if (shards.isEmpty) (inline, dataCount(inline))
+      else {
+        // all three prunes are fail-open: a shard with unknown bounds or
+        // an unknown lineage summary always loads — a pruner may only
+        // skip what it can PROVE irrelevant. The curve-range test rides
+        // the query's own merged covering (rangesHint — shards are
+        // chunked by minZ, so their [minZ, maxZ] intervals partition the
+        // key axis after compaction): a shard whose interval meets no
+        // covering range holds no row of any query box, even when its
+        // lat/lon union still overlaps one (per-append shards span wide
+        // boxes). Sound because shards carry ONLY data entries —
+        // tombstones and markers stay inline in the root.
+        val wanted = shards.filter { sm =>
+          boxes.forall(bs => bs.exists(b =>
+            MBR(sm.minLat, sm.minLon, sm.maxLat, sm.maxLon).overlaps(b))) &&
+          rangesHint.forall(_.exists(r =>
+            r._1 <= sm.maxZ && sm.minZ <= r._2)) &&
+          lineageHint.forall(want => sm.lineages.forall(_.exists(want)))
         }
-      } else {
-        val es = legacyManifest(p.toString)
-        (es, dataCount(es))
+        val loaded = inline ++ wanted.flatMap(sm =>
+          MetaJson.parseManifest(Files.readString(metaDir.resolve(sm.path))))
+        (loaded, shards.map(_.entries).sum + dataCount(inline))
       }
     }
   }
 
-  /** Legacy parquet-dataset manifest decode with ADDITIVE schema evolution
-    * (the Iceberg manifest contract): columns added to FileEntry after a
-    * snapshot was written are defaulted, not AnalysisException'd — Spark
-    * does not apply Scala default parameters for a column missing from
-    * parquet, so snapshots written before `kind` existed must be patched
-    * before `.as[FileEntry]`. */
-  private def legacyManifest(dir: String): Seq[FileEntry] = {
-    import spark.implicits._
-    val raw = spark.read.parquet(dir)
-    val hasSeq = raw.columns.contains("seq")
-    var patched = raw
-    if (!patched.columns.contains("kind"))
-      patched = patched.withColumn("kind", lit("data"))
-    if (!hasSeq) patched = patched.withColumn("seq", lit(0L))
-    val rows = patched.as[FileEntry].collect().toSeq
-    // pre-seq manifests: row order WAS the sequence (single coalesced
-    // file) — materialize it so scoping semantics carry over unchanged
-    if (hasSeq) rows
-    else rows.zipWithIndex.map { case (e, i) => e.copy(seq = i.toLong) }
+  /** Parse the root of snapshot `snapshotId`: (shards, inline entries).
+    * The root is a JSON FILE; anything else under the `snap-N` name (a
+    * directory, say) fails naming the path, so no reader guesses at its
+    * contents and no reference scan treats it as "references nothing". */
+  private def readRoot(snapshotId: Long): (Seq[ShardMeta], Seq[FileEntry]) = {
+    val p = metaDir.resolve(s"snap-$snapshotId")
+    if (!Files.isRegularFile(p))
+      throw new IllegalStateException(
+        s"snapshot root $p is not a regular file; it cannot be read as a manifest")
+    MetaJson.parseManifestRoot(Files.readString(p))
   }
 
   /** Lineage ids present in the current snapshot — the idempotence check
     * streaming ingestion runs per MICRO-BATCH ([[resumableRun]] /
-    * StreamIngest). On a two-level manifest whose shard rows all carry
-    * the `lineages` summary this reads the ROOT alone (KBs at the
-    * 10⁶-file design point); a root with any pre-summary shard row, a
-    * flat manifest, or a legacy table falls back to the full parse —
+    * StreamIngest). A flat manifest's root holds every entry; on a
+    * two-level manifest whose shard rows all carry the `lineages` summary
+    * this reads the ROOT alone (KBs at the 10⁶-file design point); a root
+    * with any shard row lacking the summary falls back to the full parse —
     * an UNKNOWN summary must widen the read, never shrink the set (a
     * missed lineage would re-append a committed unit: duplicate rows). */
   def committedLineage: Set[String] = {
     val cur = currentSnapshotId
     if (cur == 0) Set.empty
     else {
-      val p = metaDir.resolve(s"snap-$cur")
-      if (Files.isRegularFile(p)) {
-        val (shards, inline) = MetaJson.parseManifestRoot(Files.readString(p))
-        if (shards.nonEmpty && shards.forall(_.lineages.isDefined))
-          inline.map(_.lineageId).toSet ++ shards.flatMap(_.lineages.get)
-        else inline.map(_.lineageId).toSet ++
-          (if (shards.isEmpty) Set.empty[String]
-           else manifest(cur).map(_.lineageId).toSet)
-      } else manifest(cur).map(_.lineageId).toSet
+      val (shards, inline) = readRoot(cur)
+      if (shards.nonEmpty && shards.forall(_.lineages.isDefined))
+        inline.map(_.lineageId).toSet ++ shards.flatMap(_.lineages.get)
+      else inline.map(_.lineageId).toSet ++
+        (if (shards.isEmpty) Set.empty[String]
+         else manifest(cur).map(_.lineageId).toSet)
     }
   }
 
@@ -470,10 +445,6 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     * `read()._1.filter(key IN vs)` always — the Bloom only changes how
     * many files the plan opens. Returns (rows, files read, total files).
     * Sidecars are driver-read JSON (KBs) — planning costs no Spark job.
-    * Sidecars written by the pre-JSON format (parquet dirs) are NOT
-    * consulted: they carried pruning hints only, so reads stay correct
-    * (fail open, every unhinted file opens); one compact() regenerates
-    * current-format sidecars for the whole table.
     *
     * On a two-level manifest the Bloom verdict also prunes SHARDS: a
     * sidecar is per-unit (lineage), shard rows carry their lineage
@@ -539,10 +510,7 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     * persisted per-unit histograms (kept at `histRes`): rolled up through
     * parent cells for coarser r, expanded to descendants for finer r.
     * Both directions yield a SUPERSET of the truly-hot set (deletes are
-    * not subtracted either) — exactly the safe side for a salting hint.
-    * Histograms from the pre-JSON sidecar format are not consulted (the
-    * hint weakens to empty — joins stay correct, just unsalted); one
-    * compact() regenerates them in the current format. */
+    * not subtracted either) — exactly the safe side for a salting hint. */
   def hotCells(r: Int, hotThreshold: Double = 0.05): Set[Long] = {
     val files = sidecarFiles(histDir)
     if (files.isEmpty) return Set.empty
@@ -687,11 +655,7 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     val rootPath = metaDir.resolve(s"snap-$next")
     val (pShards, pInline) =
       if (replaceParent || parent == 0) (Seq.empty[ShardMeta], Seq.empty[FileEntry])
-      else {
-        val p = metaDir.resolve(s"snap-$parent")
-        if (Files.isRegularFile(p)) MetaJson.parseManifestRoot(Files.readString(p))
-        else (Seq.empty[ShardMeta], legacyManifest(p.toString))
-      }
+      else readRoot(parent)
     val newData = stamped.filter(isData)
     val uid = java.util.UUID.randomUUID().toString.take(8)
     val written = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
@@ -773,17 +737,17 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     * deletion must check the whole root set, not just the snapshot being
     * dropped. Roots of sharded tables are KBs (shard list + inline
     * non-data rows), so this scan is cheap even at the 10⁶-file design
-    * point. Returns None if ANY root is unreadable: an unknown reference
-    * set must FAIL CLOSED — callers delete nothing rather than treat
-    * "couldn't read the root" as "references nothing" and destroy live
-    * shards on a transient IO error. */
+    * point. Returns None if ANY root is unreadable — an IO error, or a
+    * `snap-N` that is not a regular file: an unknown reference set must
+    * FAIL CLOSED — callers delete nothing rather than treat "couldn't
+    * read the root" as "references nothing" and destroy live shards. */
   private def referencedShardPaths(excludeIds: Set[Long]): Option[Set[String]] = {
     val acc = Set.newBuilder[String]
     val allReadable = listDir(metaDir).forall { p =>
       snapRootId(p.getFileName.toString) match {
-        case Some(id) if !excludeIds.contains(id) && Files.isRegularFile(p) =>
+        case Some(id) if !excludeIds.contains(id) =>
           try {
-            acc ++= MetaJson.parseManifestRoot(Files.readString(p))._1.map(_.path)
+            acc ++= readRoot(id)._1.map(_.path)
             true
           } catch { case _: Throwable => false }
         case _ => true
@@ -806,23 +770,20 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     * reclaim the debris once the roots read cleanly again). */
   private def deleteSnapshotArtifacts(k: Long,
                                       keep: Option[Set[String]]): Unit = {
-    val p = metaDir.resolve(s"snap-$k")
-    if (Files.isRegularFile(p)) {
-      try {
-        val (shards, _) = MetaJson.parseManifestRoot(Files.readString(p))
-        keep match {
-          case Some(ks) if shards.nonEmpty =>
-            shards.filterNot(sm => ks.contains(sm.path))
-              .foreach(sm => try Files.deleteIfExists(metaDir.resolve(sm.path))
-                catch { case _: Throwable => () })
-          case _ => () // unknown reference set: leave every shard in place
-        }
-      } catch { case _: Throwable => () }
-    }
-    deleteRecursive(p)
+    try {
+      val (shards, _) = readRoot(k)
+      keep match {
+        case Some(ks) if shards.nonEmpty =>
+          shards.filterNot(sm => ks.contains(sm.path))
+            .foreach(sm => try Files.deleteIfExists(metaDir.resolve(sm.path))
+              catch { case _: Throwable => () })
+        case _ => () // unknown reference set: leave every shard in place
+      }
+    } catch { case _: Throwable => () }
+    deleteRecursive(metaDir.resolve(s"snap-$k"))
   }
 
-  /** Remove unreferenced commit leftovers: snap-k directories past the
+  /** Remove unreferenced commit leftovers: snap-k roots past the
     * current pointer and stale current.tmp.* files. Nothing past the
     * pointer is readable, BUT a fresh snap-(cur+1) may belong to a
     * concurrent committer that has not swung the pointer yet — deleting it
@@ -837,14 +798,13 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
   private def anyDataPath(snapshotId: Long): Option[String] = {
     def firstData(es: Seq[FileEntry]): Option[String] =
       es.find(e => e.kind == "data" && e.path.nonEmpty).map(_.path)
-    val p = metaDir.resolve(s"snap-$snapshotId")
-    if (!Files.exists(p)) None
-    else if (Files.isRegularFile(p)) {
-      val (shards, inline) = MetaJson.parseManifestRoot(Files.readString(p))
+    if (!Files.exists(metaDir.resolve(s"snap-$snapshotId"))) None
+    else {
+      val (shards, inline) = readRoot(snapshotId)
       firstData(inline).orElse(shards.headOption.flatMap(sm =>
         firstData(MetaJson.parseManifest(
           Files.readString(metaDir.resolve(sm.path))))))
-    } else firstData(legacyManifest(p.toString))
+    }
   }
 
   private def sweepOrphans(): Unit = {
@@ -1140,21 +1100,16 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     val folded = lineageMarkers.map(_.lineageId).toSet + lineage
     val fresh = writeSidecarJson(lineage, files).toSet
     Seq(histDir, bloomDir, indexDir).foreach { dir =>
-      if (Files.exists(dir))
-        listDir(dir).filterNot(fresh.contains).foreach { d =>
-          if (folded.contains(sidecarLineage(d))) deleteRecursive(d)
-        }
+      sidecarFiles(dir).filterNot(fresh.contains).foreach { f =>
+        if (folded.contains(sidecarLineage(f))) deleteRecursive(f)
+      }
     }
     next
   }
 
-  /** Lineage id encoded in a sidecar file/dir name
-    * (`<lineage>-<uuid8>[.json]`). */
-  private def sidecarLineage(p: java.nio.file.Path): String = {
-    val name = p.getFileName.toString
-    val base = if (name.endsWith(".json")) name.dropRight(5) else name
-    base.dropRight(9) // strip "-<uuid8>"
-  }
+  /** Lineage id encoded in a sidecar file name (`<lineage>-<uuid8>.json`). */
+  private def sidecarLineage(p: java.nio.file.Path): String =
+    p.getFileName.toString.stripSuffix(".json").dropRight(9) // strip "-<uuid8>"
 
   /** Incremental consumption (the CDC primitive a downstream pipeline
     * uses to process ONLY data that arrived since its last checkpointed
@@ -1189,7 +1144,9 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     * append's freshly written unit safe. Also reclaims manifest-shard
     * JSONs no root references (crashed-commit debris the per-commit
     * sweep's id rule cannot distinguish from live carried shards).
-    * Returns the dirs and shard files removed. */
+    * Returns the dirs and shard files removed. A retained root that is
+    * not a regular file makes the reference set unknown: vacuum then
+    * throws ([[readRoot]]) before deleting anything. */
   def vacuum(olderThanMs: Long = 3600000L): Seq[String] = {
     // manifest paths are Hadoop URIs (file:/tmp/...); the filesystem walk
     // yields plain (possibly relative/symlinked) paths — canonicalize BOTH
@@ -1211,14 +1168,11 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
       // of expireSnapshots; their dirs become reclaimable here
       .filter(k => Files.exists(metaDir.resolve(s"snap-$k")))
       .flatMap { k =>
-        val p = metaDir.resolve(s"snap-$k")
-        if (Files.isRegularFile(p)) {
-          val (shards, inline) = MetaJson.parseManifestRoot(Files.readString(p))
-          inline.filter(_.path.nonEmpty).map(dirOf) ++
-            shards.flatMap(sm => shardDirs.getOrElseUpdate(sm.path,
-              MetaJson.parseManifest(Files.readString(metaDir.resolve(sm.path)))
-                .filter(_.path.nonEmpty).map(dirOf)))
-        } else manifest(k).filter(_.path.nonEmpty).map(dirOf) // legacy dir
+        val (shards, inline) = readRoot(k)
+        inline.filter(_.path.nonEmpty).map(dirOf) ++
+          shards.flatMap(sm => shardDirs.getOrElseUpdate(sm.path,
+            MetaJson.parseManifest(Files.readString(metaDir.resolve(sm.path)))
+              .filter(_.path.nonEmpty).map(dirOf)))
       }
       .toSet
     val dirs = listDir(Paths.get(root, "data"))
@@ -1293,10 +1247,7 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
 
 object SnapshotStore {
 
-  /** The clustering curves this store can write and read — the ONE list
-    * both the constructor's layout require and [[pinLegacyLayout]]'s
-    * pre-write validation check against (a drift between the two
-    * re-opens the bricked-legacy-table hazard). */
+  /** The clustering curves this store can write and read. */
   val ValidCurves: Set[String] = Set("z", "hilbert", "str")
 
   /** Data entries per manifest shard / the flat-manifest ceiling: at the
@@ -1334,30 +1285,4 @@ object SnapshotStore {
   def normalizePath(p: String): String =
     if (p.startsWith("file:")) "/" + p.stripPrefix("file:").dropWhile(_ == '/')
     else p
-
-  /** Explicit migration for a pre-pin legacy table (committed snapshots,
-    * no meta/table.json): the OWNER asserts the layout the data was
-    * written with, and only then does the table open again. This is the
-    * only path that pins a layout onto existing data — the constructor
-    * refuses to, because auto-pinning the opener's possibly-wrong curve
-    * would make the correct spelling fail validation forever while reads
-    * silently drop rows. Refuses to overwrite an existing pin. */
-  def pinLegacyLayout(root: String, curve: String, zRes: Int = 12,
-                      histRes: Int = SnapshotStore.DefaultHistRes): Unit = {
-    // validate BEFORE writing: pinning a typo'd curve would brick the
-    // table (every open fails layout validation, and this method refuses
-    // to overwrite) with no API-level recovery path
-    require(ValidCurves(curve),
-      s"unknown curve '$curve' (expected ${ValidCurves.mkString(" | ")}); " +
-        "refusing to pin a layout no reader can open")
-    val metaPath = Paths.get(root, "meta", "table.json")
-    require(!Files.exists(metaPath),
-      s"table at $root already has a pinned layout; refusing to overwrite")
-    require(Files.exists(Paths.get(root, "meta", "current")),
-      s"table at $root has no committed snapshots; just open it normally " +
-        "and the first commit will pin the layout")
-    Files.createDirectories(metaPath.getParent)
-    Files.writeString(metaPath, MetaJson.tableMetaJson(curve, zRes, histRes),
-      StandardOpenOption.CREATE_NEW)
-  }
 }

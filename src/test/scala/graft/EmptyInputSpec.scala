@@ -34,7 +34,7 @@ class EmptyInputSpec extends AnyFunSuite {
     assert(SpatialOps.boxJoinSalted(noPts, Fixtures.boxes).count() == 0)
     assert(SpatialOps.pipJoin(noPts, Fixtures.polys).count() == 0)
     assert(SpatialOps.distanceJoin(noPts, 1.0, 2).count() == 0)
-    assert(SpatialOps.knnJoin(noPts, Fixtures.knnQueries.take(2), 3).count() == 0)
+    assert(SpatialOps.knnJoinAgg(noPts, Fixtures.knnQueries.take(2), 3).count() == 0)
     assert(SpatialOps.knnJoinPruned(noPts, Fixtures.knnQueries.take(2), 3).count() == 0)
   }
 

@@ -83,9 +83,8 @@ class MetaJsonSpec extends AnyFunSuite {
 
   test("manifest JSON is additively evolvable: old manifests missing new fields parse with safe defaults") {
     // round-4 ADVICE: a manifest written BEFORE a FileEntry field existed
-    // must still parse after the field is added — same contract the legacy
-    // parquet path gives kind/seq. Geometric stats default to the
-    // fail-open full range (a pruner may only skip a file it can PROVE
+    // must still parse after the field is added. Geometric stats default
+    // to the fail-open full range (a pruner may only skip a file it can PROVE
     // disjoint; unknown stats must never skip).
     val minimal =
       """{"entries":[{"path":"data/u-0/part-0.parquet","rows":42}]}"""

@@ -235,27 +235,34 @@ class SnapshotStoreSpec extends AnyFunSuite {
     assert(!Files.exists(java.nio.file.Paths.get(root, "meta", "current.tmp.2")))
   }
 
-  test("legacy parquet-dataset manifests (incl. pre-`kind` schema) still read") {
-    // snapshots written by the old format were parquet DATASETS under the
-    // snap-N path (and the oldest lacked the kind/seq columns) — the JSON
-    // manifest reader must fall back to the legacy decoder with additive
-    // schema evolution, not AnalysisException
+  test("a snapshot root that is not a JSON file fails closed on read and vacuum") {
+    // the only manifest format is a JSON file at meta/snap-N; a directory
+    // under that name (e.g. a parquet dataset) must not be decoded, and
+    // vacuum must not treat the unreadable root as "references nothing"
+    // and reclaim the live unit it points at
     val root = tmp()
     val st = new SnapshotStore(spark, root)
     st.append(pts.limit(100), "u-0", numPartitions = 2)
     val entries = st.manifest()
+    val unitFiles = entries.map(e => java.nio.file.Paths.get(e.path.stripPrefix("file:")))
+    assert(unitFiles.nonEmpty && unitFiles.forall(Files.exists(_)))
     val snapPath = java.nio.file.Paths.get(root, "meta", "snap-1")
-    Files.delete(snapPath) // replace the JSON file with a legacy parquet dir
+    Files.delete(snapPath)
     import spark.implicits._
-    spark.createDataset(entries).toDF().drop("kind", "seq")
-      .coalesce(1).write.parquet(snapPath.toString)
+    spark.createDataset(entries).toDF().coalesce(1).write.parquet(snapPath.toString)
     val st2 = new SnapshotStore(spark, root)
-    assert(st2.manifest().forall(_.kind == "data"))
-    assert(st2.read()._1.count() == 100)
-    assert(st2.totalRows == 100)
-    // a commit on top of the legacy snapshot carries its entries forward
-    st2.append(pts.limit(20), "u-1", numPartitions = 1)
-    assert(st2.read()._1.count() == 120)
+    val onManifest = intercept[IllegalStateException](st2.manifest())
+    assert(onManifest.getMessage.contains("snap-1"))
+    val onRead = intercept[IllegalStateException](st2.read())
+    assert(onRead.getMessage.contains("snap-1"))
+    def dataDirs(): Set[String] = {
+      val ls = Files.list(java.nio.file.Paths.get(root, "data"))
+      try ls.toArray.map(_.toString).toSet finally ls.close()
+    }
+    val before = dataDirs()
+    intercept[IllegalStateException](st2.vacuum(0L))
+    assert(dataDirs() == before)
+    assert(unitFiles.forall(Files.exists(_)))
   }
 
   test("table meta pins curve + zRes: mismatched open fails fast") {
@@ -283,12 +290,11 @@ class SnapshotStoreSpec extends AnyFunSuite {
     }
   }
 
-  test("legacy table (snapshots, no table.json): open refuses; pinLegacyLayout migrates explicitly") {
+  test("table with snapshots but no table.json: any open refuses") {
     // round-4 ADVICE: auto-pinning at the next commit would enshrine the
     // OPENER's possibly-wrong curve as authoritative — after which the
     // CORRECT spelling fails validation forever, and reads meanwhile
-    // silently drop rows. The constructor must refuse; only an explicit
-    // owner-asserted migration reopens the table.
+    // silently drop rows. The constructor must refuse.
     val root = tmp()
     val st = new SnapshotStore(spark, root, curve = "hilbert")
     st.append(pts.limit(50), "u-0", numPartitions = 2)
@@ -298,24 +304,8 @@ class SnapshotStoreSpec extends AnyFunSuite {
     val e = intercept[IllegalStateException] {
       new SnapshotStore(spark, root, curve = "hilbert")
     }
-    assert(e.getMessage.contains("pinLegacyLayout"))
+    assert(e.getMessage.contains("no meta/table.json"))
     intercept[IllegalStateException] { new SnapshotStore(spark, root) }
-    // a typo'd curve must be rejected BEFORE it is written: pinning it
-    // would brick the table (every spelling fails validation and the pin
-    // refuses overwrite) with no API recovery path
-    intercept[IllegalArgumentException] {
-      SnapshotStore.pinLegacyLayout(root, "hilbet")
-    }
-    // the owner asserts the WRITTEN layout; the table reopens and reads
-    SnapshotStore.pinLegacyLayout(root, "hilbert")
-    val ok = new SnapshotStore(spark, root, curve = "hilbert")
-    assert(ok.read()._1.count() == 50)
-    // the pin is now authoritative: wrong spellings fail the normal way
-    intercept[IllegalArgumentException] { new SnapshotStore(spark, root) }
-    // and the migration path refuses to overwrite an existing pin
-    intercept[IllegalArgumentException] {
-      SnapshotStore.pinLegacyLayout(root, "z")
-    }
   }
 
   test("two stores on one empty root: the second committer's mismatched curve fails loudly") {

@@ -3,7 +3,8 @@ package graft
 import graft.data.{Fixtures, Points}
 import graft.geo.{GeoCols, MBR}
 import graft.ops.SpatialOps
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -23,6 +24,22 @@ class SpatialOpsSpec extends AnyFunSuite {
   lazy val pts = Points(spark, dir).cache()
   lazy val rows: Array[(Long, Double, Double)] =
     pts.collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2)))
+
+  /** Window-form dense kNN join — the reference the production kernels
+    * ([[SpatialOps.knnJoinAgg]], [[SpatialOps.knnJoinPruned]]) are
+    * compared against: the query set broadcast-crossed with every point,
+    * per-query top-k by a (d², id)-ordered row_number window. */
+  private def knnJoin(points: DataFrame, queries: Seq[(Int, Double, Double)],
+                      k: Int): DataFrame = {
+    import points.sparkSession.implicits._
+    val q = queries.toDF("q_id", "qlat", "qlon")
+    val w = Window.partitionBy(col("q_id"))
+      .orderBy(GeoCols.d2Cols(col("lat"), col("lon"), col("qlat"), col("qlon")), col("id"))
+    points.crossJoin(broadcast(q))
+      .withColumn("rank", row_number().over(w).cast("long"))
+      .filter(col("rank") <= k)
+      .select(col("q_id"), col("rank"), col("id"))
+  }
 
   test("rangeBox (pruned) == brute-force inclusive filter") {
     for ((_, b) <- Fixtures.boxes) {
@@ -290,7 +307,7 @@ class SpatialOpsSpec extends AnyFunSuite {
   }
 
   test("knnJoin == per-query in-memory top-k") {
-    val got = SpatialOps.knnJoin(pts, Fixtures.knnQueries, Fixtures.knnJoinK)
+    val got = knnJoin(pts, Fixtures.knnQueries, Fixtures.knnJoinK)
       .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
     val exp = (for {
       (qid, qla, qlo) <- Fixtures.knnQueries
@@ -313,20 +330,20 @@ class SpatialOpsSpec extends AnyFunSuite {
     def norm(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).sortBy(t => t).toSeq
     assert(norm(SpatialOps.knnJoinAgg(pts, Fixtures.knnQueries, Fixtures.knnJoinK)) ==
-           norm(SpatialOps.knnJoin(pts, Fixtures.knnQueries, Fixtures.knnJoinK)))
+           norm(knnJoin(pts, Fixtures.knnQueries, Fixtures.knnJoinK)))
     // k larger than some partitions' candidate counts (buffer underfill path)
     assert(norm(SpatialOps.knnJoinAgg(pts, Fixtures.knnQueries.take(2), 137)) ==
-           norm(SpatialOps.knnJoin(pts, Fixtures.knnQueries.take(2), 137)))
+           norm(knnJoin(pts, Fixtures.knnQueries.take(2), 137)))
   }
 
   test("knnJoinPruned == knnJoin (with fallback exactness guarantee)") {
     def norm(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).sortBy(t => t).toSeq
     assert(norm(SpatialOps.knnJoinPruned(pts, Fixtures.knnQueries, Fixtures.knnJoinK)) ==
-           norm(SpatialOps.knnJoin(pts, Fixtures.knnQueries, Fixtures.knnJoinK)))
+           norm(knnJoin(pts, Fixtures.knnQueries, Fixtures.knnJoinK)))
     // force the fallback path: k large enough that 2 rings can't satisfy it
     assert(norm(SpatialOps.knnJoinPruned(pts, Fixtures.knnQueries.take(3), 200)) ==
-           norm(SpatialOps.knnJoin(pts, Fixtures.knnQueries.take(3), 200)))
+           norm(knnJoin(pts, Fixtures.knnQueries.take(3), 200)))
   }
 
   test("knnJoinPruned falls back for queries with ZERO ring candidates") {
@@ -339,7 +356,7 @@ class SpatialOpsSpec extends AnyFunSuite {
     def norm(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).sortBy(t => t).toSeq
     val got = norm(SpatialOps.knnJoinPruned(corner, queries, 3, rOverride = 10, rings = 1))
-    val exp = norm(SpatialOps.knnJoin(corner, queries, 3))
+    val exp = norm(knnJoin(corner, queries, 3))
     assert(got == exp)
     assert(got.count(_._1 == 1) == 3, "outlier query must still return k rows")
   }
