@@ -25,7 +25,7 @@ object PlanDump {
       }
     dump("boxJoin", "Broadcast hash join on the cell key; probe side never shuffles; exact refine as codegen'd filter.",
       SpatialOps.boxJoin(pts, Fixtures.boxes))
-    dump("pipJoin (literal polygons)", "ONE fused scan for every literal polygon — zero joins, zero exchanges: per-row lazily-evaluated (cover AND ray-crossing) tests explode to matching poly ids inside WholeStageCodegen (the round-1 union form re-scanned the corpus once per polygon).",
+    dump("pipJoin (literal polygons)", "ONE scan for every literal polygon — zero joins, zero exchanges: a per-partition kernel (MapPartitions) looks each row's cell up in a driver-built cell → polygons map and runs Poly.contains on those candidates only, so the generated code does not grow with the polygon count (one Column predicate per polygon passed the JIT's 8000-byte huge-method limit at three polygons).",
       SpatialOps.pipJoin(pts, Fixtures.polys))
     dump("mbrJoin (rect × rect)", "PBSM: generator (cell-cover explode) on each side, hash-partitioned EQUI-join on the cell id — no CartesianProduct/BroadcastNestedLoop anywhere — exact closed-box refine + reference-point dedup as codegen'd filters after the join.",
       SpatialOps.mbrJoin(
@@ -94,7 +94,7 @@ object PlanDump {
       graft.ops.AnnOps.annLsh(s.read.parquet("/root/testdata/sf0.001/embeddings.parquet"), Seq(0, 1), 5))
     dump("rasterize (vector→raster)", "Distributed Range source over the polygon's bbox cell box — zero table scans, zero exchanges; the ray-crossing center test is one codegen'd Filter. Raster cost scales with geometry area, not data size.",
       SpatialOps.rasterize(s, Fixtures.polys))
-    dump("zonalStats", "ONE fused scan (pipJoin shape) + partial+final hash aggregate on the exploded poly id — the exchange carries |polys|x|partitions| rows regardless of data size; the tiny literal polygon list left-joins back so empty zones keep their cnt=0 row.",
+    dump("zonalStats", "The pipJoin kernel (one scan, per-partition cell filter + Poly.contains refine) + partial+final hash aggregate on its poly id — the exchange carries |polys|x|partitions| rows regardless of data size; the tiny literal polygon list left-joins back so empty zones keep their cnt=0 row.",
       SpatialOps.zonalStats(pts, Fixtures.polys))
     try {
       val hroot = Files.createTempDirectory("pd_hilb").toString

@@ -33,7 +33,7 @@ object SpatialOps {
   val TargetRowsPerCell: Long = 64L
 
   /** Upper bound on the total covering-cell count a single query's
-    * geometry may enumerate/broadcast (matches pipJoin's isin budget). */
+    * geometry may enumerate/broadcast (and one polygon's [[polyHits]] map). */
   val MaxCoverCells: Long = 4096L
 
   /** Plan-time row estimate with ZERO scans or actions: Catalyst's
@@ -130,24 +130,22 @@ object SpatialOps {
 
   /** Tile pyramid: per-cell counts at EVERY resolution 0..rMax — the
     * multi-resolution raster rollup a tile server precomputes. ONE pass
-    * over the data builds the finest histogram; each coarser level rolls
-    * up the previous HISTOGRAM (≤ 4^r rows) via parent-cell arithmetic,
-    * so the data is scanned once and the rollups touch aggregates only.
-    * Output: (r, cell, cnt). */
+    * over the data builds the finest histogram (≤ 4^rMax rows); each of its
+    * cells explodes into its rMax + 1 ancestors, (y >> s)·n(r) + (x >> s)
+    * with s = rMax − r, and ONE aggregate sums every level: two exchanges
+    * at any rMax. Output: (r, cell, cnt). */
   def tilePyramid(points: DataFrame, rMax: Int = Fixtures.TileRes): DataFrame = {
-    val base = tileHistogram(points, rMax).withColumn("r", lit(rMax))
-    val levels = Iterator.iterate((base, rMax)) { case (child, rc) =>
-      // parent of row-major cell at rc: (y>>1)·n(rc−1) + (x>>1)
-      val y = floor(col("cell") / lit(CellId.n(rc))).cast("long")
-      val x = pmod(col("cell"), lit(CellId.n(rc)))
-      val parent = child
-        .select((floor(y / 2).cast("long") * lit(CellId.n(rc - 1)) +
-          floor(x / 2).cast("long")).as("cell"), col("cnt"))
-        .groupBy("cell").agg(sum(col("cnt")).as("cnt"))
-        .withColumn("r", lit(rc - 1))
-      (parent, rc - 1)
-    }.take(rMax + 1).map(_._1).toSeq
-    levels.reduce(_ unionAll _).select(col("r"), col("cell"), col("cnt"))
+    val y = shiftright(col("cell"), rMax)
+    val x = col("cell").bitwiseAND(lit(CellId.n(rMax) - 1))
+    val ancestors = (0 to rMax).map { r =>
+      val s = rMax - r
+      struct(lit(r).as("r"),
+        (shiftright(y, s) * lit(CellId.n(r)) + shiftright(x, s)).as("cell"))
+    }
+    tileHistogram(points, rMax)
+      .select(explode(array(ancestors: _*)).as("a"), col("cnt"))
+      .groupBy(col("a.r").as("r"), col("a.cell").as("cell"))
+      .agg(sum(col("cnt")).as("cnt"))
   }
 
   /** Brute-force kNN (op #13): d² sort + limit — Spark plans
@@ -494,34 +492,50 @@ object SpatialOps {
     r
   }
 
-
-  /** Point-in-polygon join (north-rule op): per-polygon covering-cell prune
-    * + even–odd ray-crossing refine, all as codegen'd Column predicates
-    * (GeoCols.stContains). Polygons are plan literals → zero shuffles,
-    * zero broadcast state, and — r6 optimization — ONE scan of the corpus
-    * regardless of polygon count: each row evaluates every polygon's
-    * (cover-membership AND ray-crossing) test lazily inside one
-    * projection and explodes to the matching poly ids (guide §1.2: the
-    * round-1 union-of-branches form re-scanned the corpus once PER
-    * polygon — same per-row predicate work, p× the I/O). Row sets are
-    * identical (spec + shared oracle); plans with MANY literal polygons
-    * belong on [[pipJoinBroadcast]] either way (also the codegen-size
-    * story: one projection carries all polys' edge tests). */
+  /** Point-in-polygon join (north-rule op): `(poly_id, id)` for every
+    * point inside a polygon, by the [[polyHits]] filter-and-refine kernel.
+    * Polygons are plan literals → zero shuffles, zero broadcast state and
+    * ONE scan of the corpus regardless of polygon count. */
   def pipJoin(points: DataFrame, polys: Seq[(Int, Poly)],
               rOverride: Int = AutoRes): DataFrame = {
     val r = resolveRes(points, polys.map(_._2.bbox), rOverride)
-    val cellPts = withCell(points, r)
-    val hits = polys.map { case (pid, p) =>
-      val cover = CellId.coverPoly(p, r) // exact cover: notch cells pruned
-      val pruned =
-        if (cover.size <= MaxCoverCells) col("cell").isin(cover: _*)
-        else lit(true)
-      when(pruned && GeoCols.stContains(p, col("lat"), col("lon")), lit(pid))
-    }
-    cellPts
-      .select(explode(array(hits: _*)).as("poly_id"), col("id"))
-      .filter(col("poly_id").isNotNull)
-      .select(col("poly_id"), col("id"))
+    polyHits(points, polys, r).select(col("poly_id"), col("id"))
+  }
+
+  /** Polygon-hit kernel of [[pipJoin]] and [[zonalStats]]: one
+    * `(poly_id, id, lat, lon)` row per polygon a point lies in. Filter: a
+    * driver-built map from covering cell ([[CellId.coverPoly]]) to polygons;
+    * a polygon covering more than [[MaxCoverCells]] cells is tested at every
+    * row. Refine: [[Poly.contains]] (bit-identical to [[GeoCols.stContains]]
+    * and the oracle SQL) on the candidates only. Per-polygon Column
+    * predicates grew the generated method past HotSpot's 8000-byte JIT
+    * limit at three polygons. Rows with a null lat/lon match nothing. */
+  private def polyHits(points: DataFrame, polys: Seq[(Int, Poly)], r: Int): DataFrame = {
+    val spark = points.sparkSession
+    import spark.implicits._
+    val pids = polys.map(_._1).toArray
+    val shapes = polys.map(_._2).toArray
+    val covers = shapes.map(CellId.coverPoly(_, r))
+    val (always, mapped) = shapes.indices.partition(covers(_).size > MaxCoverCells)
+    val byCell = mapped.flatMap(i => covers(i).map(_ -> i)).groupMap(_._1)(_._2)
+    // cells sorted for binary search; each candidate list in polygon order
+    val cells = byCell.keys.toArray.sorted
+    val cands = cells.map(c => (byCell(c) ++ always).sorted.toArray)
+    val rest = always.toArray
+    points.filter(col("lat").isNotNull && col("lon").isNotNull)
+      .select(col("id").cast("long"), col("lat").cast("double"), col("lon").cast("double"))
+      .as[(java.lang.Long, Double, Double)]
+      .mapPartitions { it =>
+        val n = CellId.n(r)
+        it.flatMap { case (id, la, lo) =>
+          val k = java.util.Arrays.binarySearch(cells,
+            CellId.cellY(la, r) * n + CellId.cellX(lo, r))
+          (if (k >= 0) cands(k) else rest).iterator
+            .filter(shapes(_).contains(la, lo))
+            .map(i => (pids(i), id, la, lo))
+        }
+      }
+      .toDF("poly_id", "id", "lat", "lon")
   }
 
   /** Polygon rasterization (vector→raster — the inverse of [[tileAssign]],
@@ -604,35 +618,18 @@ object SpatialOps {
 
   /** Zonal statistics (raster↔vector analytics): per-polygon aggregates of
     * the points inside — count, exact integer id-sum, and the bounding
-    * range of matched coordinates. Same covering-cell prune + ray-crossing
-    * refine as [[pipJoin]], but each polygon's rows collapse map-side into
-    * a single partial-aggregate row (Spark's partial+final hash agg), so
-    * the shuffle carries ONE row per polygon per partition regardless of
-    * data size. Exactly one output row per polygon (empty zones surface
-    * with cnt=0 and null extrema, matching the SQL aggregate contract). */
+    * range of matched coordinates. The [[polyHits]] kernel finds the points
+    * and each polygon's rows collapse map-side into one partial-aggregate
+    * row, so the shuffle carries ONE row per polygon per partition. The
+    * literal polygon list left-joins back: exactly one output row per
+    * polygon (empty zones surface with cnt=0 and null extrema, matching the
+    * SQL aggregate contract). */
   def zonalStats(points: DataFrame, polys: Seq[(Int, Poly)],
                  rOverride: Int = AutoRes): DataFrame = {
     val spark = points.sparkSession
     import spark.implicits._
     val r = resolveRes(points, polys.map(_._2.bbox), rOverride)
-    val cellPts = withCell(points, r)
-    // ONE scan for every polygon (r6, same fusion as [[pipJoin]]): the
-    // matching poly ids explode out of one lazily-evaluated projection
-    // and collapse in a partial+final hash aggregate — the exchange still
-    // carries one row per polygon per partition. The tiny literal polygon
-    // list left-joins back so empty zones keep their cnt=0/null-extrema
-    // row (the SQL aggregate contract the per-branch form gave for free).
-    val hits = polys.map { case (pid, p) =>
-      val cover = CellId.coverPoly(p, r)
-      val pruned =
-        if (cover.size <= MaxCoverCells) col("cell").isin(cover: _*)
-        else lit(true)
-      when(pruned && GeoCols.stContains(p, col("lat"), col("lon")), lit(pid))
-    }
-    val agged = cellPts
-      .select(explode(array(hits: _*)).as("poly_id"), col("id"),
-        col("lat"), col("lon"))
-      .filter(col("poly_id").isNotNull)
+    val agged = polyHits(points, polys, r)
       .groupBy(col("poly_id"))
       .agg(count(lit(1)).as("cnt"), sum(col("id")).as("sum_id"),
         min(col("lat")).as("min_lat"), max(col("lat")).as("max_lat"),

@@ -77,6 +77,42 @@ class PlanSpec extends AnyFunSuite {
       s"PIP must scan the corpus once, not per polygon: ${p.take(400)}")
   }
 
+  test("tilePyramid is one histogram plus one rollup: exactly two exchanges") {
+    for (rMax <- Seq(3, 6)) {
+      val p = plan(SpatialOps.tilePyramid(Points(spark, dir), rMax))
+      assert(p.split("Exchange").length - 1 == 2, s"rMax=$rMax:\n$p")
+    }
+  }
+
+  test("no generated whole-stage method passes HotSpot's 8000-byte huge-method limit") {
+    import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+    import org.apache.spark.sql.execution.WholeStageCodegenExec
+    // the JIT skips methods over 8000 bytecode bytes (HugeMethodLimit), so
+    // a stage past it runs interpreted; one Column predicate per polygon
+    // crossed it at three 8-vertex polygons
+    val pts = Points(spark, dir)
+    val many = SpatialOpsSpec.stars(16, seed = 5)
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    try {
+      val plans = Seq(
+        "pipJoin" -> SpatialOps.pipJoin(pts, many),
+        "zonalStats" -> SpatialOps.zonalStats(pts, many),
+        "tilePyramid" -> SpatialOps.tilePyramid(pts),
+        "tileHistogram" -> SpatialOps.tileHistogram(pts),
+        "boxJoin" -> SpatialOps.boxJoin(pts, Fixtures.boxes),
+        "knnJoinAgg" -> SpatialOps.knnJoinAgg(pts, Fixtures.knnQueries, Fixtures.knnJoinK))
+      for ((name, df) <- plans) {
+        val stages = df.queryExecution.executedPlan.collect { case w: WholeStageCodegenExec => w }
+        assert(stages.nonEmpty, s"$name has no codegen stage")
+        for (w <- stages) {
+          val size = CodeGenerator.compile(w.doCodeGen()._2)._2.maxMethodCodeSize
+          assert(size <= 8000, s"$name stage ${w.codegenStageId}: largest method $size B")
+        }
+      }
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+  }
+
   test("tileAssign is shuffle-free; histogram has exactly one exchange") {
     val pa = plan(SpatialOps.tileAssign(Points(spark, dir)))
     assert(!pa.contains("Exchange"), "tile assignment must not shuffle")

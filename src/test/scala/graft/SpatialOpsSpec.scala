@@ -580,6 +580,64 @@ class SpatialOpsSpec extends AnyFunSuite {
     assert(SpatialOps.zonalStatsMany(pts, empty).isEmpty)
   }
 
+  test("pipJoin/zonalStats over many polygons == Poly.contains brute force") {
+    import graft.geo.{CellId, Poly}
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+    // a dense cluster (3000 points in a 0.6° square) plus rows whose
+    // lat/lon is null or NaN: those match nothing and must not throw; a
+    // null id inside a polygon still matches, as (poly_id, null)
+    val (cLat, cLon) = (12.25, -47.5)
+    val cluster = (0 until 3000).map(i =>
+      Row(1000000L + i, cLat + (i % 60) * 0.01, cLon + (i / 60) * 0.01))
+    val odd = Seq(Row(2000001L, null, 10.0), Row(2000002L, 10.0, null),
+      Row(2000003L, Double.NaN, -47.0), Row(2000004L, 12.5, Double.NaN),
+      Row(2000005L, Double.NaN, Double.NaN), Row(2000006L, null, null),
+      Row(null, cLat + 0.105, cLon + 0.105))
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("lat", DoubleType), StructField("lon", DoubleType)))
+    val all = pts.unionByName(spark.createDataFrame(
+      spark.sparkContext.parallelize(cluster ++ odd, 4), schema))
+    def opt[T](r: Row, i: Int)(f: Int => T): Option[T] = if (r.isNullAt(i)) None else Some(f(i))
+    val allRows = all.collect().map(r =>
+      (opt(r, 0)(r.getLong), opt(r, 1)(r.getDouble), opt(r, 2)(r.getDouble)))
+    val overCluster = 50 -> Poly(Vector((cLat - 0.2, cLon - 0.2),
+      (cLat + 0.9, cLon + 0.1), (cLat + 0.3, cLon + 0.9)))
+    val big = 60 -> SpatialOpsSpec.star(20.0, 60.0, 25.0, new scala.util.Random(3))
+    val empty = 99 -> Poly(Vector(
+      (89.990, 179.990), (89.990, 179.999), (89.999, 179.999), (89.999, 179.990)))
+    val polys = Fixtures.polys ++ SpatialOpsSpec.stars(14, seed = 17) ++
+      Seq(overCluster, big, empty)
+    assert(polys.size >= 16)
+    // the first r where the big polygon's cover passes MaxCoverCells: it is
+    // tested at every row while the small ones stay on the cell map
+    val rFine = (4 to 12).find(r =>
+      CellId.coverPoly(big._2, r).size > SpatialOps.MaxCoverCells).get
+    assert(polys.exists(p => CellId.coverPoly(p._2, rFine).size <= SpatialOps.MaxCoverCells))
+    val inside = polys.map { case (pid, p) => pid -> allRows.collect {
+      case (id, Some(la), Some(lo)) if p.contains(la, lo) => (id, la, lo) }.toSeq }
+    assert(inside.toMap.apply(50).size > 1000, "the cluster polygon must hold the cluster")
+    assert(inside.toMap.apply(Fixtures.polyConcave._1).nonEmpty)
+    val expPip = inside.flatMap { case (pid, xs) => xs.map(x => (pid, x._1)) }.sorted
+    assert(expPip.contains((50, None)), "the null-id row must lie in the cluster polygon")
+    val expZonal = inside.map { case (pid, xs) =>
+      if (xs.isEmpty) (pid, 0L, None, None, None, None, None)
+      else (pid, xs.size.toLong, Some(xs.flatMap(_._1).sum),
+        Some(xs.map(_._2).min), Some(xs.map(_._2).max),
+        Some(xs.map(_._3).min), Some(xs.map(_._3).max))
+    }.sortBy(_._1)
+    for (r <- Seq(SpatialOps.AutoRes, rFine)) {
+      val pip = SpatialOps.pipJoin(all, polys, r).collect()
+        .map(x => (x.getInt(0), opt(x, 1)(x.getLong))).toSeq.sorted
+      assert(pip == expPip, s"pipJoin r=$r")
+      val zonal = SpatialOps.zonalStats(all, polys, r).collect().map(x =>
+        (x.getInt(0), x.getLong(1), opt(x, 2)(x.getLong), opt(x, 3)(x.getDouble),
+          opt(x, 4)(x.getDouble), opt(x, 5)(x.getDouble), opt(x, 6)(x.getDouble)))
+        .toSeq.sortBy(_._1)
+      assert(zonal == expZonal, s"zonalStats r=$r")
+    }
+  }
+
   test("rect-res outlier guard sees the FULL side (r6: no sample-prefix blind spot)") {
     import spark.implicits._
     // 70k tiny rects followed by ONE world-spanning outlier in the LAST
@@ -612,5 +670,25 @@ class SpatialOpsSpec extends AnyFunSuite {
     // and an all-zero histogram yields the empty set, not a null failure
     val zeros = Seq((1L, 0.0)).toDF("cell", "cnt")
     assert(SpatialOps.hotCellsFromHistogram(zeros, 0.05) == Set.empty)
+  }
+}
+
+object SpatialOpsSpec {
+  import graft.geo.Poly
+
+  /** A seeded 8-vertex star-shaped polygon around (lat, lon): vertex k at
+    * angle 2πk/8 and a random distance in [rad/2, rad]. */
+  def star(lat: Double, lon: Double, rad: Double, rnd: scala.util.Random): Poly =
+    Poly((0 until 8).map { k =>
+      val a = 2 * math.Pi * k / 8
+      val d = rad * (0.5 + 0.5 * rnd.nextDouble())
+      (lat + d * math.sin(a), lon + d * math.cos(a))
+    })
+
+  /** `n` seeded 8° stars scattered over the globe, ids 100 until 100 + n. */
+  def stars(n: Int, seed: Long): Seq[(Int, Poly)] = {
+    val rnd = new scala.util.Random(seed)
+    Seq.tabulate(n)(i => (100 + i) ->
+      star(rnd.nextDouble() * 120 - 60, rnd.nextDouble() * 300 - 150, 8.0, rnd))
   }
 }
