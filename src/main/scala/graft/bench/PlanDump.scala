@@ -92,7 +92,7 @@ object PlanDump {
       graft.ops.AnnOps.cosineTopK(s.read.parquet("/root/testdata/sf0.001/embeddings.parquet"), Seq(0, 1), 5))
     dump("ANN LSH (annLsh candidate join)", "Signatures come from one typed per-partition kernel over a hoisted hyperplane slab (an expression tree here would be ~4,096 element_at multiplies per row). Candidate generation runs on NARROW (vec_id, t, bkt) keys only — the 64-dim payload never rides the ×tables posexplode, the broadcast bucket join, or the dedup shuffle; it joins back onto the (much smaller) candidate set, and the exact cosine re-rank (codegen'd graft_dot) touches candidates only — never all pairs.",
       graft.ops.AnnOps.annLsh(s.read.parquet("/root/testdata/sf0.001/embeddings.parquet"), Seq(0, 1), 5))
-    dump("rasterize (vector→raster)", "Distributed Range source over the polygon's bbox cell box — zero table scans, zero exchanges; the ray-crossing center test is one codegen'd Filter. Raster cost scales with geometry area, not data size.",
+    dump("rasterize (vector→raster)", "ONE distributed Range source over every polygon's bbox cell box, back to back — zero table scans, zero exchanges, no Union at any polygon count: a per-partition kernel (MapPartitions) finds each candidate's polygon by binary search over driver-built offsets and keeps the cell when Poly.contains holds at its center. Raster cost scales with geometry area, not data size.",
       SpatialOps.rasterize(s, Fixtures.polys))
     dump("zonalStats", "The pipJoin kernel (one scan, per-partition cell filter + Poly.contains refine) + partial+final hash aggregate on its poly id — the exchange carries |polys|x|partitions| rows regardless of data size; the tiny literal polygon list left-joins back so empty zones keep their cnt=0 row.",
       SpatialOps.zonalStats(pts, Fixtures.polys))

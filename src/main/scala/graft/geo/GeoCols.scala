@@ -181,23 +181,6 @@ object GeoCols {
   def d2Cols(lat: Column, lon: Column, qLat: Column, qLon: Column): Column =
     (lat - qLat) * (lat - qLat) + (lon - qLon) * (lon - qLon)
 
-  /** Even–odd ray-crossing point-in-polygon against a polygon *literal* —
-    * the one predicate the reference lacks (boxes only) that the north rule
-    * adds. Compiles to a sum of CASE WHEN over the edges, % 2 — identical
-    * arithmetic to [[Poly.contains]] and to the generated oracle SQL, and
-    * fully inside whole-stage codegen. */
-  def stContains(poly: Poly, lat: Column, lon: Column): Column = {
-    val edges = poly.ring.indices.map { i =>
-      val j = if (i == 0) poly.ring.length - 1 else i - 1
-      val (yi, xi) = poly.ring(i)
-      val (yj, xj) = poly.ring(j)
-      val crosses = ((lit(yi) > lat) =!= (lit(yj) > lat)) &&
-        (lon < (lit(xj) - lit(xi)) * (lat - lit(yi)) / (lit(yj) - lit(yi)) + lit(xi))
-      when(crosses, lit(1)).otherwise(lit(0))
-    }
-    (edges.reduce(_ + _) % lit(2)) === lit(1)
-  }
-
   /** Derive deterministic (lat, lon) from a 64-bit phash — keeps the stored
     * image table at the exact 7-column `input_hint` shape while giving every
     * row a reproducible point. High 32 bits → lat, low 32 → lon. */

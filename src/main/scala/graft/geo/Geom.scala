@@ -76,10 +76,9 @@ final case class Poly(ring: IndexedSeq[(Double, Double)]) {
 
   /** Even–odd (ray crossing / PNPOLY) point-in-polygon test. Treat lon as
     * x and lat as y. The arithmetic sequence here MUST stay identical to
-    * the SQL generated by [[graft.oracle.OracleSql.polyContainsSql]] and
-    * the Column built by [[graft.geo.GeoCols.stContains]] — all three are
-    * the same IEEE double expression per edge, so results are bit-identical
-    * across the engine, the Scala oracle, and DuckDB.
+    * the SQL generated by [[graft.oracle.OracleSql.polyContainsSql]] — both
+    * are the same IEEE double expression per edge, so results are
+    * bit-identical between the engine's polygon kernels and DuckDB.
     */
   def contains(lat: Double, lon: Double): Boolean = {
     val px = lon; val py = lat

@@ -506,10 +506,10 @@ object SpatialOps {
     * `(poly_id, id, lat, lon)` row per polygon a point lies in. Filter: a
     * driver-built map from covering cell ([[CellId.coverPoly]]) to polygons;
     * a polygon covering more than [[MaxCoverCells]] cells is tested at every
-    * row. Refine: [[Poly.contains]] (bit-identical to [[GeoCols.stContains]]
-    * and the oracle SQL) on the candidates only. Per-polygon Column
-    * predicates grew the generated method past HotSpot's 8000-byte JIT
-    * limit at three polygons. Rows with a null lat/lon match nothing. */
+    * row. Refine: [[Poly.contains]] (bit-identical to the oracle SQL) on the
+    * candidates only. Per-polygon Column predicates grew the generated
+    * method past HotSpot's 8000-byte JIT limit at three polygons. Rows with
+    * a null lat/lon match nothing. */
   private def polyHits(points: DataFrame, polys: Seq[(Int, Poly)], r: Int): DataFrame = {
     val spark = points.sparkSession
     import spark.implicits._
@@ -541,79 +541,43 @@ object SpatialOps {
   /** Polygon rasterization (vector→raster — the inverse of [[tileAssign]],
     * closing the north rule's raster↔vector pair in both directions):
     * every cell at resolution r whose CENTER lies inside the polygon.
-    * Runs as a distributed `spark.range` over the polygon's bbox cell box
-    * (candidate count = bbox area in cells — independent of any data
-    * table's size) filtered by the same codegen'd even–odd ray-crossing
-    * predicate the PIP join refines with, evaluated at cell centers:
-    * zero shuffles, zero scans, no driver-side enumeration. At a fine
-    * target raster (r=15 → up to 10⁹ candidates for a continent-sized
-    * polygon) the range stage partitions across executors like any other
-    * narrow pipeline. Output: (poly_id, cell) with row-major cell ids. */
+    * ONE `spark.range` enumerates every polygon's bbox cell box back to
+    * back (candidate count = summed bbox area in cells — independent of any
+    * data table's size); a per-partition kernel finds each candidate's
+    * polygon by binary search over the driver-built prefix offsets, derives
+    * its (y, x) and keeps it when [[Poly.contains]] holds at the cell
+    * center (same IEEE op order as the oracle SQL). Zero shuffles, zero
+    * scans, one plan at any polygon count. Output: (poly_id, cell) with
+    * row-major cell ids. */
   def rasterize(spark: org.apache.spark.sql.SparkSession,
                 polys: Seq[(Int, Poly)],
                 r: Int = Fixtures.RasterRes): DataFrame = {
-    polys.map { case (pid, p) =>
-      val b = p.bbox
-      val y0 = CellId.cellY(b.minLat, r); val y1 = CellId.cellY(b.maxLat, r)
-      val x0 = CellId.cellX(b.minLon, r); val x1 = CellId.cellX(b.maxLon, r)
-      val nx = x1 - x0 + 1
-      val cand = spark.range((y1 - y0 + 1) * nx)
-        .select((lit(y0) + floor(col("id") / lit(nx)).cast("long")).as("y"),
-                (lit(x0) + pmod(col("id"), lit(nx))).as("x"))
-      // cell-center arithmetic — identical IEEE op order to the oracle SQL
-      val cLat = (col("y").cast("double") + lit(0.5)) * lit(CellId.latStep(r)) - lit(90.0)
-      val cLon = (col("x").cast("double") + lit(0.5)) * lit(CellId.lonStep(r)) - lit(180.0)
-      cand.filter(GeoCols.stContains(p, cLat, cLon))
-        .select(lit(pid).as("poly_id"),
-          (col("y") * lit(CellId.n(r)) + col("x")).as("cell"))
-    }.reduce(_ unionAll _)
-  }
-
-  /** Many-polygon rasterization (the scale path when polygons number in
-    * the thousands — the [[pipJoinBroadcast]] twin of [[rasterize]]):
-    * polygons as DATA rows (poly_id, ring array, bbox cell bounds),
-    * candidate cells generated data-side with two explode(sequence(...))
-    * levels (rows then cols — fan-out per intermediate row stays one bbox
-    * edge, never the full area), refined by the same even–odd crossing
-    * test over the ring ARRAY as the broadcast PIP join. One narrow
-    * pipeline regardless of polygon count; at scale the polygon table
-    * arrives partitioned and the raster parallelizes with it. Exact same
-    * output as [[rasterize]] (spec + shared oracle). */
-  def rasterizeMany(spark: org.apache.spark.sql.SparkSession,
-                    polys: Seq[(Int, Poly)],
-                    r: Int = Fixtures.RasterRes): DataFrame = {
     import spark.implicits._
-    val polyRows = polys.map { case (pid, p) =>
+    val pids = polys.map(_._1).toArray
+    val shapes = polys.map(_._2).toArray
+    val boxes = shapes.map { p =>
       val b = p.bbox
-      (pid, p.ring.map { case (la, lo) => (la, lo) },
-        CellId.cellY(b.minLat, r), CellId.cellY(b.maxLat, r),
-        CellId.cellX(b.minLon, r), CellId.cellX(b.maxLon, r))
+      val (y0, x0) = (CellId.cellY(b.minLat, r), CellId.cellX(b.minLon, r))
+      (y0, x0, CellId.cellX(b.maxLon, r) - x0 + 1, CellId.cellY(b.maxLat, r) - y0 + 1)
     }
-    val polysDf = polyRows.toDF("poly_id", "ring", "y0", "y1", "x0", "x1")
-      .repartition(spark.sparkContext.defaultParallelism, col("poly_id"))
-    val cLat = (col("y").cast("double") + lit(0.5)) * lit(CellId.latStep(r)) - lit(90.0)
-    val cLon = (col("x").cast("double") + lit(0.5)) * lit(CellId.lonStep(r)) - lit(180.0)
-    polysDf
-      .withColumn("y", explode(sequence(col("y0"), col("y1"))))
-      .withColumn("x", explode(sequence(col("x0"), col("x1"))))
-      .filter(ringCrossings(cLat, cLon) % 2 === 1)
-      .select(col("poly_id"), (col("y") * lit(CellId.n(r)) + col("x")).as("cell"))
-  }
-
-  /** Even–odd crossing count of a data-side polygon `ring` column
-    * (array<struct<lat,lon>>) against a point expression — shared by the
-    * broadcast PIP join and many-polygon rasterization. HOF lambdas run
-    * interpreted; acceptable here because the candidate row count is
-    * already pruned (covering cells / bbox area), never the corpus. */
-  private def ringCrossings(latC: Column, lonC: Column): Column = {
-    val n = size(col("ring"))
-    def vy(i: Column) = element_at(col("ring"), i).getField("_1")
-    def vx(i: Column) = element_at(col("ring"), i).getField("_2")
-    size(filter(sequence(lit(1), n), i => {
-      val j = when(i === 1, n).otherwise(i - 1)
-      ((vy(i) > latC) =!= (vy(j) > latC)) &&
-        (lonC < (vx(j) - vx(i)) * (latC - vy(i)) / (vy(j) - vy(i)) + vx(i))
-    }))
+    val y0s = boxes.map(_._1); val x0s = boxes.map(_._2); val nxs = boxes.map(_._3)
+    // offs(i) = first candidate of polygon i; every bbox holds >= 1 cell
+    val offs = boxes.scanLeft(0L)((o, b) => o + b._3 * b._4)
+    spark.range(offs.last).as[Long]
+      .mapPartitions { it =>
+        val (n, latStep, lonStep) = (CellId.n(r), CellId.latStep(r), CellId.lonStep(r))
+        it.flatMap { k =>
+          val h = java.util.Arrays.binarySearch(offs, k)
+          val i = if (h >= 0) h else -h - 2
+          val rem = k - offs(i)
+          val y = y0s(i) + rem / nxs(i); val x = x0s(i) + rem % nxs(i)
+          val cLat = (y.toDouble + 0.5) * latStep - 90.0
+          val cLon = (x.toDouble + 0.5) * lonStep - 180.0
+          if (shapes(i).contains(cLat, cLon)) Iterator.single((pids(i), y * n + x))
+          else Iterator.empty
+        }
+      }
+      .toDF("poly_id", "cell")
   }
 
   /** Zonal statistics (raster↔vector analytics): per-polygon aggregates of
@@ -639,31 +603,6 @@ object SpatialOps {
       .select(col("poly_id"), coalesce(col("cnt"), lit(0L)).as("cnt"),
         col("sum_id"), col("min_lat"), col("max_lat"),
         col("min_lon"), col("max_lon"))
-  }
-
-  /** Many-polygon zonal statistics (the [[pipJoinBroadcast]]-shaped scale
-    * path of [[zonalStats]]): polygons as broadcast DATA, one corpus scan,
-    * partial aggregation on the poly_id key — the exchange carries one row
-    * per polygon per partition. Unlike the literal-plan variant, empty
-    * zones produce NO row (a join cannot manufacture them); callers
-    * needing the every-polygon contract outer-join the polygon table. */
-  def zonalStatsMany(points: DataFrame, polys: Seq[(Int, Poly)],
-                     rOverride: Int = AutoRes): DataFrame = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    val r = resolveRes(points, polys.map(_._2.bbox), rOverride)
-    val polyRows = polys.flatMap { case (pid, p) =>
-      val ring = p.ring.map { case (la, lo) => (la, lo) }
-      CellId.coverPoly(p, r).map(c => (pid, c, ring))
-    }
-    val polysDf = polyRows.toDF("poly_id", "pcell", "ring")
-    withCell(points, r)
-      .join(broadcast(polysDf), col("cell") === col("pcell"))
-      .filter(ringCrossings(col("lat"), col("lon")) % 2 === 1)
-      .groupBy(col("poly_id"))
-      .agg(count(lit(1)).as("cnt"), sum(col("id")).as("sum_id"),
-        min(col("lat")).as("min_lat"), max(col("lat")).as("max_lat"),
-        min(col("lon")).as("min_lon"), max(col("lon")).as("max_lon"))
   }
 
   /** Skew-aware box join for shuffle-partitioned execution: when the small
@@ -730,33 +669,6 @@ object SpatialOps {
     h.crossJoin(broadcast(tot))
       .filter(col("cnt") > col("tot") * lit(hotThreshold))
       .select(col("cell")).collect().map(_.getLong(0)).toSet
-  }
-
-  /** Many-polygon PIP join (the scale path when polygons number in the
-    * thousands and per-polygon literal plans stop making sense): polygons
-    * as DATA — (poly_id, ring array<struct<lat,lon>>) exploded to covering
-    * cells, broadcast, hash-joined on the point's cell, then refined with
-    * an even–odd crossing test over the ring ARRAY via HOF expressions
-    * (size(filter(sequence...))) — still UDF-free and codegen-eligible,
-    * one scan regardless of polygon count. Exact same semantics as
-    * [[pipJoin]] (proven in spec). */
-  def pipJoinBroadcast(points: DataFrame, polys: Seq[(Int, Poly)],
-                       rOverride: Int = AutoRes): DataFrame = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    val r = resolveRes(points, polys.map(_._2.bbox), rOverride)
-    val polyRows = polys.flatMap { case (pid, p) =>
-      val ring = p.ring.map { case (la, lo) => (la, lo) }
-      CellId.coverPoly(p, r).map(c => (pid, c, ring))
-    }
-    val polysDf = polyRows.toDF("poly_id", "pcell", "ring")
-    // edge i pairs ring[i+1] with ring[i] (1-based element_at), wrapping
-    // the last edge to ring[1]; identical arithmetic to Poly.contains
-    // (ringCrossings — shared with rasterizeMany).
-    withCell(points, r)
-      .join(broadcast(polysDf), col("cell") === col("pcell"))
-      .filter(ringCrossings(col("lat"), col("lon")) % 2 === 1)
-      .select(col("poly_id"), col("id"))
   }
 
   /** Dense kNN join (the documented baseline): every |Q|·N distance is

@@ -48,8 +48,8 @@ object OracleSql {
   def d2Sql(qLat: Double, qLon: Double): String =
     s"(lat - ${d(qLat)}) * (lat - ${d(qLat)}) + (lon - ${d(qLon)}) * (lon - ${d(qLon)})"
 
-  /** Even–odd ray-crossing PIP — SQL twin of [[graft.geo.GeoCols.stContains]]
-    * and [[Poly.contains]]: same per-edge double expression. */
+  /** Even–odd ray-crossing PIP — SQL twin of [[Poly.contains]]: same
+    * per-edge double expression. */
   def polyContainsSql(p: Poly, latE: String = "lat", lonE: String = "lon"): String = {
     val terms = p.ring.indices.map { i =>
       val j = if (i == 0) p.ring.length - 1 else i - 1
@@ -206,11 +206,10 @@ object OracleSql {
        |${arms.mkString("\nUNION ALL\n")}""".stripMargin
   }
 
-  /** Twin of [[graft.ops.SpatialOps.zonalStatsMany]], whose join shape
-    * emits NO row for an empty zone (unlike the literal variant's
-    * always-one-row contract) — the HAVING makes the oracle honor that
-    * contract on ANY dataset, not just ones where every fixture zone
-    * happens to be non-empty. */
+  /** [[zonalStats]] restricted to non-empty zones — the oracle of
+    * [[graft.ops.SpatialOps.zonalStats]] filtered to `cnt > 0`. The HAVING
+    * drops an empty zone's row on ANY dataset, not just ones where every
+    * fixture zone happens to be non-empty. */
   def zonalStatsNonEmpty(polys: Seq[(Int, Poly)]): String = {
     val arms = polys.map { case (pid, p) =>
       s"""SELECT $pid AS poly_id, count(*) AS cnt,

@@ -85,11 +85,14 @@ class EmptyInputSpec extends AnyFunSuite {
     val sliver = Seq(1 -> graft.geo.Poly(Vector(
       (0.0001, 0.0001), (0.0001, 0.0002), (0.0002, 0.0002))))
     assert(SpatialOps.rasterize(spark, sliver, r = 4).count() == 0)
-    assert(SpatialOps.rasterizeMany(spark, sliver, r = 4).count() == 0)
-    // zonal over empty points: literal variant keeps the one-row contract
+    // no polygons at all: an empty raster with the (poly_id, cell) schema
+    val none = SpatialOps.rasterize(spark, Seq.empty)
+    assert(none.count() == 0)
+    assert(none.schema.map(f => (f.name, f.dataType.simpleString)) ==
+      Seq("poly_id" -> "int", "cell" -> "bigint"))
+    // zonal over empty points keeps the one-row-per-polygon contract
     val z = SpatialOps.zonalStats(noPts, Fixtures.polys).collect()
     assert(z.length == Fixtures.polys.size && z.forall(_.getLong(1) == 0L))
-    assert(SpatialOps.zonalStatsMany(noPts, Fixtures.polys).count() == 0)
     // contamination with an empty benchmark slice (no doc_id % mod == 0):
     // every doc evaluates, zero hits
     val docs = Seq((1L, "a b c d e f g"), (2L, "h i j k l m n")).toDF("doc_id", "text")

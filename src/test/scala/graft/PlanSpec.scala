@@ -77,6 +77,16 @@ class PlanSpec extends AnyFunSuite {
       s"PIP must scan the corpus once, not per polygon: ${p.take(400)}")
   }
 
+  test("rasterize is one Range source: no Union, no Exchange") {
+    for ((name, polys) <- Seq("fixtures" -> Fixtures.polys,
+                              "stars(16)" -> SpatialOpsSpec.stars(16, seed = 5))) {
+      val p = plan(SpatialOps.rasterize(spark, polys))
+      assert(p.split("Range \\(").length - 1 == 1, s"$name: one Range source\n$p")
+      assert(!p.contains("Union"), s"$name: no per-polygon Union arms\n$p")
+      assert(!p.contains("Exchange"), s"$name: rasterize must not shuffle\n$p")
+    }
+  }
+
   test("tilePyramid is one histogram plus one rollup: exactly two exchanges") {
     for (rMax <- Seq(3, 6)) {
       val p = plan(SpatialOps.tilePyramid(Points(spark, dir), rMax))
@@ -98,6 +108,7 @@ class PlanSpec extends AnyFunSuite {
       val plans = Seq(
         "pipJoin" -> SpatialOps.pipJoin(pts, many),
         "zonalStats" -> SpatialOps.zonalStats(pts, many),
+        "rasterize" -> SpatialOps.rasterize(spark, many),
         "tilePyramid" -> SpatialOps.tilePyramid(pts),
         "tileHistogram" -> SpatialOps.tileHistogram(pts),
         "boxJoin" -> SpatialOps.boxJoin(pts, Fixtures.boxes),

@@ -319,13 +319,6 @@ class SpatialOpsSpec extends AnyFunSuite {
     assert(got.toSet == exp)
   }
 
-  test("pipJoinBroadcast == pipJoin (literal-plan vs polygon-as-data plan)") {
-    def norm(df: org.apache.spark.sql.DataFrame) = df.collect()
-      .map(r => (r.getInt(0), r.getLong(1))).sortBy(t => t).toSeq
-    assert(norm(SpatialOps.pipJoinBroadcast(pts, Fixtures.polys)) ==
-           norm(SpatialOps.pipJoin(pts, Fixtures.polys)))
-  }
-
   test("knnJoinAgg (bounded-heap partial top-k) == knnJoin") {
     def norm(df: org.apache.spark.sql.DataFrame) = df.collect()
       .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).sortBy(t => t).toSeq
@@ -504,22 +497,26 @@ class SpatialOpsSpec extends AnyFunSuite {
 
   test("rasterize == brute cell-center enumeration (JVM Poly.contains)") {
     import graft.geo.CellId
-    val r = Fixtures.RasterRes
-    val got = SpatialOps.rasterize(spark, Fixtures.polys, r)
-      .collect().map(x => (x.getInt(0), x.getLong(1))).toSet
-    val exp = (for {
-      (pid, p) <- Fixtures.polys
-      b = p.bbox
-      y <- CellId.cellY(b.minLat, r) to CellId.cellY(b.maxLat, r)
-      x <- CellId.cellX(b.minLon, r) to CellId.cellX(b.maxLon, r)
-      cLat = (y + 0.5) * CellId.latStep(r) - 90.0
-      cLon = (x + 0.5) * CellId.lonStep(r) - 180.0
-      if p.contains(cLat, cLon)
-    } yield (pid, y * CellId.n(r) + x)).toSet
-    assert(got == exp)
-    assert(got.nonEmpty)
-    // both fixture polygons rasterize to at least one cell
-    assert(got.map(_._1) == Set(1, 2))
+    // the fixtures plus 32 scattered stars: one plan enumerates every
+    // polygon's bbox cell box, so polygon boundaries in the shared range
+    // must map each candidate back to the right polygon
+    val polys = Fixtures.polys ++ SpatialOpsSpec.stars(32, seed = 29)
+    for (r <- Seq(Fixtures.RasterRes, Fixtures.RasterRes + 3)) {
+      val got = SpatialOps.rasterize(spark, polys, r)
+        .collect().map(x => (x.getInt(0), x.getLong(1))).toSeq
+      val exp = for {
+        (pid, p) <- polys
+        b = p.bbox
+        y <- CellId.cellY(b.minLat, r) to CellId.cellY(b.maxLat, r)
+        x <- CellId.cellX(b.minLon, r) to CellId.cellX(b.maxLon, r)
+        cLat = (y + 0.5) * CellId.latStep(r) - 90.0
+        cLon = (x + 0.5) * CellId.lonStep(r) - 180.0
+        if p.contains(cLat, cLon)
+      } yield (pid, y * CellId.n(r) + x)
+      assert(got.sorted == exp.sorted, s"r=$r")
+      // every polygon rasterizes to at least one cell
+      assert(got.map(_._1).toSet == polys.map(_._1).toSet, s"r=$r")
+    }
   }
 
   test("rasterize area converges: center-sampled cell area ~ polygon area as r grows") {
@@ -544,16 +541,6 @@ class SpatialOpsSpec extends AnyFunSuite {
     }
   }
 
-  test("rasterizeMany (polygons-as-data) == rasterize (literal plans)") {
-    for (r <- Seq(Fixtures.RasterRes, Fixtures.RasterRes + 1)) {
-      val lit = SpatialOps.rasterize(spark, Fixtures.polys, r)
-        .collect().map(x => (x.getInt(0), x.getLong(1))).toSet
-      val many = SpatialOps.rasterizeMany(spark, Fixtures.polys, r)
-        .collect().map(x => (x.getInt(0), x.getLong(1))).toSet
-      assert(many == lit, s"r=$r")
-    }
-  }
-
   test("zonalStats == brute per-polygon aggregates") {
     val zs = SpatialOps.zonalStats(pts, Fixtures.polys).collect()
       .map(r => (r.getInt(0), (r.getLong(1), r.getLong(2)))).toMap
@@ -563,21 +550,10 @@ class SpatialOpsSpec extends AnyFunSuite {
       assert(zs(pid)._2 == inside.map(_._1).sum, s"sum_id poly $pid")
     }
     assert(zs.size == Fixtures.polys.size) // one row per polygon, always
-  }
-
-  test("zonalStatsMany == zonalStats on non-empty zones; empty zones absent") {
-    def key(r: org.apache.spark.sql.Row) =
-      (r.getInt(0), r.getLong(1), r.getLong(2), r.getDouble(3), r.getDouble(4),
-        r.getDouble(5), r.getDouble(6))
-    val lit = SpatialOps.zonalStats(pts, Fixtures.polys).collect().map(key).toSet
-    val many = SpatialOps.zonalStatsMany(pts, Fixtures.polys).collect().map(key).toSet
-    assert(many == lit)
-    // a polygon holding no points: literal variant emits the cnt=0 row,
-    // join variant emits nothing — the documented contract difference
+    // a polygon holding no points still gets its row, with cnt = 0
     val empty = Seq(99 -> graft.geo.Poly(Vector(
       (89.990, 179.990), (89.990, 179.999), (89.999, 179.999), (89.999, 179.990))))
     assert(SpatialOps.zonalStats(pts, empty).collect().map(_.getLong(1)).toSeq == Seq(0L))
-    assert(SpatialOps.zonalStatsMany(pts, empty).isEmpty)
   }
 
   test("pipJoin/zonalStats over many polygons == Poly.contains brute force") {
