@@ -54,7 +54,7 @@ object ManifestScaleBench {
             g.map(_.minZ).min, g.map(_.maxZ).max,
             g.map(_.minLat).min, g.map(_.maxLat).max,
             g.map(_.minLon).min, g.map(_.maxLon).max,
-            lineages = Some(g.map(_.lineageId).distinct))
+            lineages = g.map(_.lineageId).distinct)
         }
         Files.writeString(dir.resolve(s"root-$n.json"),
           MetaJson.manifestListJson(metas, Seq.empty))
@@ -91,19 +91,19 @@ object ManifestScaleBench {
           appendEntries.map(_.minZ).min, appendEntries.map(_.maxZ).max,
           appendEntries.map(_.minLat).min, appendEntries.map(_.maxLat).max,
           appendEntries.map(_.minLon).min, appendEntries.map(_.maxLon).max,
-          lineages = Some(appendEntries.map(_.lineageId).distinct))
+          lineages = appendEntries.map(_.lineageId).distinct)
         Files.writeString(dir.resolve(s"root-$n-next.json"),
           MetaJson.manifestListJson(pShards :+ sm, Seq.empty))
       }
       // streaming idempotence check (committedLineage): the lineage set
       // from the ROOT's per-shard summaries alone — the per-micro-batch
-      // cost, vs the full parse (≈ flatParseMs) a summary-less root pays
+      // cost, vs the full parse (≈ flatParseMs) it avoids
       var lineageCount = 0
       val tLineageRoot = timeMs {
         val (shards, inline) = MetaJson.parseManifestRoot(
           Files.readString(dir.resolve(s"root-$n.json")))
         lineageCount = (inline.map(_.lineageId) ++
-          shards.flatMap(_.lineages.getOrElse(Seq.empty))).distinct.size
+          shards.flatMap(_.lineages)).distinct.size
       }
       require(lineageCount == n / 1000, s"lineage summary lost units: $lineageCount")
       println(f"entries=$n%8d flatMB=${flatBytes / 1e6}%8.1f " +

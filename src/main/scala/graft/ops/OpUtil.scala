@@ -33,7 +33,7 @@ private[graft] object OpUtil {
     stagePath match {
       case Some(p) =>
         // committer-free write (same parquet bits, ~0.2 s less fixed
-        // driver cost per staging checkpoint — measured, WriteFloorProbe);
+        // driver cost per staging checkpoint, OPTIMIZATION_r06.md §1b);
         // the staging dir is transient and re-read immediately, so the
         // Hadoop commit protocol's directory atomicity buys nothing
         org.apache.spark.sql.GraftParquetDirect.write(df, p, overwrite = true)

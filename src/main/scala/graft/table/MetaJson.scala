@@ -1,7 +1,8 @@
 package graft.table
 
-import com.fasterxml.jackson.databind.ObjectMapper
+import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
+import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Driver-side JSON codec for the store's metadata artifacts (manifests,
   * table meta, histogram / Bloom / index sidecars).
@@ -26,14 +27,13 @@ import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
   * lineage-id summary of the shard's entries (usually ONE — a shard is
   * written by a single commit), letting the streaming-ingest idempotence
   * check ([[graft.table.SnapshotStore.committedLineage]]) read the root
-  * alone instead of parsing every shard per micro-batch; `None` means a
-  * root written before the field existed — unknown, never assumed empty
-  * (the reader falls back to a full parse). */
+  * alone instead of parsing every shard per micro-batch. Every shard row
+  * carries it: a row without it fails to parse. */
 final case class ShardMeta(path: String, entries: Int,
                            minZ: Long, maxZ: Long,
                            minLat: Double, maxLat: Double,
                            minLon: Double, maxLon: Double,
-                           lineages: Option[Seq[String]] = None)
+                           lineages: Seq[String])
 
 object MetaJson {
 
@@ -65,14 +65,13 @@ object MetaJson {
   def parseManifest(json: String): Seq[FileEntry] =
     entriesFrom(mapper.readTree(json))
 
-  private def entriesFrom(root: com.fasterxml.jackson.databind.JsonNode): Seq[FileEntry] = {
+  // field reads with a default, for fields a document may omit
+  private def l(o: JsonNode, n: String, d: Long) = Option(o.get(n)).map(_.asLong()).getOrElse(d)
+  private def d(o: JsonNode, n: String, dv: Double) = Option(o.get(n)).map(_.asDouble()).getOrElse(dv)
+  private def s(o: JsonNode, n: String, dv: String) = Option(o.get(n)).map(_.asText()).getOrElse(dv)
+
+  private def entriesFrom(root: JsonNode): Seq[FileEntry] = {
     val arr = root.get("entries").asInstanceOf[ArrayNode]
-    def l(o: com.fasterxml.jackson.databind.JsonNode, n: String, d: Long) =
-      Option(o.get(n)).map(_.asLong()).getOrElse(d)
-    def d(o: com.fasterxml.jackson.databind.JsonNode, n: String, dv: Double) =
-      Option(o.get(n)).map(_.asDouble()).getOrElse(dv)
-    def s(o: com.fasterxml.jackson.databind.JsonNode, n: String, dv: String) =
-      Option(o.get(n)).map(_.asText()).getOrElse(dv)
     (0 until arr.size()).map { i =>
       val o = arr.get(i)
       FileEntry(o.get("path").asText(), o.get("rows").asLong(),
@@ -100,9 +99,7 @@ object MetaJson {
       o.put("minZ", sm.minZ); o.put("maxZ", sm.maxZ)
       o.put("minLat", sm.minLat); o.put("maxLat", sm.maxLat)
       o.put("minLon", sm.minLon); o.put("maxLon", sm.maxLon)
-      sm.lineages.foreach { ls =>
-        val la = o.putArray("lineages"); ls.foreach(la.add)
-      }
+      val la = o.putArray("lineages"); sm.lineages.foreach(la.add)
     }
     val eArr = root.putArray("entries")
     inline.foreach(e => eArr.add(entryNode(e)))
@@ -121,19 +118,14 @@ object MetaJson {
     val entries = entriesFrom(root)
     val shardsNode = Option(root.get("shards")).map(_.asInstanceOf[ArrayNode])
     val shards = shardsNode.map { arr =>
-      def l(o: com.fasterxml.jackson.databind.JsonNode, n: String, d: Long) =
-        Option(o.get(n)).map(_.asLong()).getOrElse(d)
-      def d(o: com.fasterxml.jackson.databind.JsonNode, n: String, dv: Double) =
-        Option(o.get(n)).map(_.asDouble()).getOrElse(dv)
       (0 until arr.size()).map { i =>
         val o = arr.get(i)
-        // absent lineages node stays None (pre-field roots: UNKNOWN, the
-        // reader must full-parse) — never defaulted to the empty list,
-        // which would silently claim "no lineages in this shard"
-        val lin = Option(o.get("lineages")).map { ln =>
-          val a = ln.asInstanceOf[ArrayNode]
-          (0 until a.size()).map(j => a.get(j).asText())
-        }
+        // required: a default-to-empty would silently claim "no lineages
+        // in this shard" and re-append committed streaming units
+        val ln = Option(o.get("lineages")).getOrElse(throw new IllegalStateException(
+          s"manifest shard row ${o.get("path")} has no lineages summary"))
+          .asInstanceOf[ArrayNode]
+        val lin = (0 until ln.size()).map(j => ln.get(j).asText())
         ShardMeta(o.get("path").asText(), o.get("entries").asInt(),
           l(o, "minZ", Long.MinValue), l(o, "maxZ", Long.MaxValue),
           d(o, "minLat", -Double.MaxValue), d(o, "maxLat", Double.MaxValue),
@@ -144,16 +136,24 @@ object MetaJson {
     (shards, entries)
   }
 
-  def tableMetaJson(curve: String, zRes: Int, histRes: Int): String = {
+  /** The pinned table layout: curve, zRes, histRes and the data schema
+    * (Spark's `StructType.json`, `__z` included). */
+  def tableMetaJson(curve: String, zRes: Int, histRes: Int, schema: StructType): String = {
     val o = mapper.createObjectNode()
     o.put("curve", curve); o.put("zRes", zRes); o.put("histRes", histRes)
+    o.set[ObjectNode]("schema", mapper.readTree(schema.json))
     mapper.writerWithDefaultPrettyPrinter().writeValueAsString(o)
   }
 
-  /** (curve, zRes, histRes). */
-  def parseTableMeta(json: String): (String, Int, Int) = {
+  /** (curve, zRes, histRes, schema). A table meta without a schema is
+    * refused: nothing on disk then says what its data files hold. */
+  def parseTableMeta(json: String): (String, Int, Int, StructType) = {
     val o = mapper.readTree(json)
-    (o.get("curve").asText(), o.get("zRes").asInt(), o.get("histRes").asInt())
+    val schema = Option(o.get("schema")).getOrElse(throw new IllegalStateException(
+      "meta/table.json pins no schema (written before tables pinned their " +
+        "schema); rebuild the table"))
+    (o.get("curve").asText(), o.get("zRes").asInt(), o.get("histRes").asInt(),
+      DataType.fromJson(schema.toString).asInstanceOf[StructType])
   }
 
   // hist/index sidecars carry up to 4^histRes rows per unit — the ONE

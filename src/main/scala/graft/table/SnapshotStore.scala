@@ -1,8 +1,9 @@
 package graft.table
 
 import graft.geo.{CellId, GeoCols, MBR}
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{BinaryType, StructType}
 import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
 
 /** One file tracked by a snapshot, with its pruning stats and the
@@ -33,9 +34,14 @@ final case class FileEntry(path: String, rows: Long, minZ: Long, maxZ: Long,
   * <root>/data/<lineage>-<uuid>/part-*.parquet        immutable data files
   * <root>/meta/snap-<n>                               manifest (JSON of FileEntry)
   * <root>/meta/current                                atomic pointer "n"
-  * <root>/meta/table.json                             pinned layout (curve, zRes)
+  * <root>/meta/table.json                             pinned layout (curve, zRes,
+  *                                                    histRes, data schema)
   * <root>/meta/{hist,bloom,index}/<lineage>-<id>.json write-time sidecars
   * }}}
+  *
+  * The first commit pins the table schema (the keyed unit's columns,
+  * `__z` included); every later unit must match it, and every read plans
+  * its parquet scans from it — never from a file footer.
   *
   * Commits append a new manifest = parent's entries + new entries, then
   * atomically swing `current` (write-temp + ATOMIC_MOVE). Readers plan
@@ -139,21 +145,32 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
   // non-covering over the stored __z values and read(box) would silently
   // drop in-box rows. They are persisted in meta/table.json on first
   // commit and validated here — fail fast, never a docstring hazard
-  // (Iceberg persists its partition spec in table metadata for the same
-  // reason).
-  private def tableMetaIfExists(): Option[(String, Int, Int)] =
+  // (Iceberg persists its partition spec and schema in table metadata for
+  // the same reason).
+  private def tableMetaIfExists(): Option[(String, Int, Int, StructType)] =
     if (Files.isRegularFile(tableMetaPath))
       Some(MetaJson.parseTableMeta(Files.readString(tableMetaPath)))
     else None
 
-  private def validateTableMeta(): Unit =
-    tableMetaIfExists().foreach { case (storedCurve, storedZRes, storedHistRes) =>
+  /** Layout check, plus — given a unit's keyed schema — the schema check:
+    * a unit with an extra column would silently lose it on read, and one
+    * with a changed type would fail every later read of the table. */
+  private def validateTableMeta(unitSchema: Option[StructType] = None): Unit =
+    tableMetaIfExists().foreach { case (storedCurve, storedZRes, storedHistRes, pinned) =>
       require(storedCurve == curve && storedZRes == zRes && storedHistRes == histRes,
         s"table at $root was written with curve=$storedCurve zRes=$storedZRes " +
           s"histRes=$storedHistRes but opened with curve=$curve zRes=$zRes " +
           s"histRes=$histRes — the clustering key, its pruning ranges, and " +
           "the sidecar stats grid must agree; open with the written values")
+      unitSchema.foreach(s => require(SnapshotStore.sameColumns(pinned, s),
+        s"table at $root pins schema ${pinned.simpleString} but the unit has " +
+          s"${s.simpleString} — column names and types must match"))
     }
+
+  /** The pinned data schema (`__z` included). */
+  private def tableSchema: StructType =
+    tableMetaIfExists().map(_._4).getOrElse(throw new IllegalArgumentException(
+      "empty table: nothing committed yet"))
 
   validateTableMeta()
 
@@ -172,17 +189,17 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
   /** Pin-or-validate, called from EVERY commit (not just the constructor):
     * two stores constructed on the same empty root both pass the ctor
     * check (no meta yet); whichever commits second must fail against the
-    * winner's pinned layout instead of landing mixed-curve files whose
-    * covering ranges silently stop covering. CREATE_NEW + re-validate
-    * closes the write-write race either way. */
-  private def writeTableMeta(): Unit = {
+    * winner's pinned layout and schema instead of landing mixed-curve or
+    * mixed-schema files. CREATE_NEW + re-validate closes the write-write
+    * race either way. */
+  private def writeTableMeta(schema: StructType): Unit = {
     if (!Files.exists(tableMetaPath)) {
       try Files.writeString(tableMetaPath,
-        MetaJson.tableMetaJson(curve, zRes, histRes),
+        MetaJson.tableMetaJson(curve, zRes, histRes, schema),
         StandardOpenOption.CREATE_NEW)
       catch { case _: java.nio.file.FileAlreadyExistsException => () }
     }
-    validateTableMeta()
+    validateTableMeta(Some(schema))
   }
 
   def currentSnapshotId: Long =
@@ -201,7 +218,9 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     * two-level manifest list and `boxes` is given, only shards whose
     * union bounds overlap some box are downloaded and parsed — at the
     * 10⁶-file design point a box read touches a handful of shard files
-    * instead of a few hundred MB of driver-side JSON. Inline entries
+    * instead of a few hundred MB of driver-side JSON; with
+    * `lineageHint` (a key lookup's Bloom verdict per lineage), only shards
+    * whose `lineages` summary holds a wanted lineage load. Inline entries
     * (delete manifests, lineage markers) always load. Returns the loaded
     * entries plus the TOTAL data-file count of the snapshot (known from
     * the shard rows without reading them) so pruning stays observable. */
@@ -220,12 +239,12 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
       val (shards, inline) = readRoot(snapshotId)
       if (shards.isEmpty) (inline, dataCount(inline))
       else {
-        // all three prunes are fail-open: a shard with unknown bounds or
-        // an unknown lineage summary always loads — a pruner may only
-        // skip what it can PROVE irrelevant. The curve-range test rides
-        // the query's own merged covering (rangesHint — shards are
-        // chunked by minZ, so their [minZ, maxZ] intervals partition the
-        // key axis after compaction): a shard whose interval meets no
+        // the bound prunes are fail-open: a shard with unknown bounds
+        // always loads — a pruner may only skip what it can PROVE
+        // irrelevant. The curve-range test rides the query's own merged
+        // covering (rangesHint — shards are chunked by minZ, so their
+        // [minZ, maxZ] intervals partition the key axis after
+        // compaction): a shard whose interval meets no
         // covering range holds no row of any query box, even when its
         // lat/lon union still overlaps one (per-append shards span wide
         // boxes). Sound because shards carry ONLY data entries —
@@ -235,7 +254,7 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
             MBR(sm.minLat, sm.minLon, sm.maxLat, sm.maxLon).overlaps(b))) &&
           rangesHint.forall(_.exists(r =>
             r._1 <= sm.maxZ && sm.minZ <= r._2)) &&
-          lineageHint.forall(want => sm.lineages.forall(_.exists(want)))
+          lineageHint.forall(want => sm.lineages.exists(want))
         }
         val loaded = inline ++ wanted.flatMap(sm =>
           MetaJson.parseManifest(Files.readString(metaDir.resolve(sm.path))))
@@ -258,22 +277,15 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
 
   /** Lineage ids present in the current snapshot — the idempotence check
     * streaming ingestion runs per MICRO-BATCH ([[resumableRun]] /
-    * StreamIngest). A flat manifest's root holds every entry; on a
-    * two-level manifest whose shard rows all carry the `lineages` summary
-    * this reads the ROOT alone (KBs at the 10⁶-file design point); a root
-    * with any shard row lacking the summary falls back to the full parse —
-    * an UNKNOWN summary must widen the read, never shrink the set (a
-    * missed lineage would re-append a committed unit: duplicate rows). */
+    * StreamIngest). A flat manifest's root holds every entry; a two-level
+    * manifest's shard rows carry their `lineages` summaries, so this reads
+    * the ROOT alone either way (KBs at the 10⁶-file design point). */
   def committedLineage: Set[String] = {
     val cur = currentSnapshotId
     if (cur == 0) Set.empty
     else {
       val (shards, inline) = readRoot(cur)
-      if (shards.nonEmpty && shards.forall(_.lineages.isDefined))
-        inline.map(_.lineageId).toSet ++ shards.flatMap(_.lineages.get)
-      else inline.map(_.lineageId).toSet ++
-        (if (shards.isEmpty) Set.empty[String]
-         else manifest(cur).map(_.lineageId).toSet)
+      inline.map(_.lineageId).toSet ++ shards.flatMap(_.lineages)
     }
   }
 
@@ -302,6 +314,8 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
       else spark.sparkContext.defaultParallelism
     val unitDir = s"$root/data/$lineageId-${java.util.UUID.randomUUID().toString.take(8)}"
     val keyed = withCurveKey(df)
+    // refuse a unit that would poison the table before writing any file
+    validateTableMeta(Some(keyed.schema))
     // NOTE (r6 optimization round, measured): repartitionByRange executes
     // the child plan twice (range-sampling pass + shuffle map). Persisting
     // `keyed` to cut the second derive was tried and REGRESSED every
@@ -320,7 +334,7 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     writeSidecarJson(lineageId, files)
     SnapshotStore.trace("append.sidecars", t2)
     val t3 = System.nanoTime()
-    val snap = commitAppend(files.map(_._1))
+    val snap = commitAppend(files.map(_._1), keyed.schema)
     SnapshotStore.trace("append.commit", t3)
     snap
   }
@@ -367,9 +381,10 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     * and a tombstone rebased past a racer's data would widen its sequence
     * scope onto rows it never saw — both still fail loudly for the caller
     * to re-plan. */
-  private def commitAppend(entries: Seq[FileEntry], retries: Int = 5): Long = {
+  private def commitAppend(entries: Seq[FileEntry], schema: StructType,
+                           retries: Int = 5): Long = {
     val seen = currentSnapshotId
-    try commit(entries)
+    try commit(entries, schema)
     catch {
       case _: java.util.ConcurrentModificationException if retries > 0 =>
         // wait for the winner's pointer swing before consuming a retry: a
@@ -383,7 +398,7 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
         val deadline = System.currentTimeMillis() + 2000
         while (currentSnapshotId == seen &&
                System.currentTimeMillis() < deadline) Thread.sleep(10)
-        commitAppend(entries, retries - 1)
+        commitAppend(entries, schema, retries - 1)
     }
   }
 
@@ -545,9 +560,11 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
   private[graft] var afterParentCapture: () => Unit = () => ()
 
   /** Manifest-append commit: parent entries + new entries → snap-(n+1),
-    * atomic pointer swing. Single-writer (the driver) — matching the
-    * reference's single-threaded writer; multi-writer needs a CAS on
-    * `current`, which real Iceberg's catalog provides at the seam.
+    * atomic pointer swing; `schema` (the written files' columns) is pinned
+    * or validated against the table's pin first. Single-writer (the
+    * driver) — matching the reference's single-threaded writer;
+    * multi-writer needs a CAS on `current`, which real Iceberg's catalog
+    * provides at the seam.
     *
     * Crash/abort safety: any snap-k with k > current and any current.tmp.*
     * is UNREFERENCED (the pointer never reached it) — a leftover from a
@@ -561,7 +578,7 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     * interleaved units from a replacing manifest while their lineage ids
     * stay marked committed (permanent, re-delivery-proof data loss under
     * streaming ingestion) — so it fails loudly instead. */
-  private def commit(newEntries: Seq[FileEntry],
+  private def commit(newEntries: Seq[FileEntry], schema: StructType,
                      replaceParent: Boolean = false,
                      expectedParent: Long = -1L): Long = {
     val parent = if (expectedParent >= 0) expectedParent else currentSnapshotId
@@ -576,7 +593,7 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     // parent entries keep the seq of the commit that introduced them
     val stamped = newEntries.map(_.copy(seq = next))
     sweepOrphans()
-    writeTableMeta()
+    writeTableMeta(schema)
     // snap-N+1 (CREATE_NEW) and current.tmp.N+1 (CREATE_NEW) are the
     // optimistic-concurrency tripwires: a concurrent committer that won
     // the race leaves one of them in place and this commit FAILS instead
@@ -671,7 +688,7 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
             g.map(_.minZ).min, g.map(_.maxZ).max,
             g.map(_.minLat).min, g.map(_.maxLat).max,
             g.map(_.minLon).min, g.map(_.maxLon).max,
-            lineages = Some(g.map(_.lineageId).distinct)), g)
+            lineages = g.map(_.lineageId).distinct), g)
         }.toSeq
     try {
       if (pShards.isEmpty) {
@@ -792,20 +809,6 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     * a live commit writes its manifest and swings the pointer within
     * milliseconds, while crash debris is minutes old by the next commit. */
   private val orphanAgeMs = 60000L
-
-  /** One data-file path of the snapshot, parsing at most one shard
-    * (every shard holds only data entries, so the first suffices). */
-  private def anyDataPath(snapshotId: Long): Option[String] = {
-    def firstData(es: Seq[FileEntry]): Option[String] =
-      es.find(e => e.kind == "data" && e.path.nonEmpty).map(_.path)
-    if (!Files.exists(metaDir.resolve(s"snap-$snapshotId"))) None
-    else {
-      val (shards, inline) = readRoot(snapshotId)
-      firstData(inline).orElse(shards.headOption.flatMap(sm =>
-        firstData(MetaJson.parseManifest(
-          Files.readString(metaDir.resolve(sm.path))))))
-    }
-  }
 
   private def sweepOrphans(): Unit = {
     val cur = currentSnapshotId
@@ -935,7 +938,12 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     * skipping — MBR overlap for box reads, Bloom probes for key lookups),
     * `refine` narrows the surviving files' rows (Z-range disjunction /
     * pushed key predicate). Both read paths share the sequence-scoped
-    * tombstone chain below. */
+    * tombstone chain below. Every scan is built from the pinned schema
+    * ([[scan]]), so planning is manifest + driver IO only: zero Spark
+    * jobs before the caller's action (≤ 32 paths per scan — past that,
+    * Spark lists the files in a job). A snapshot with no surviving file —
+    * everything pruned, or a table compacted down to zero rows — plans
+    * zero rows of the pinned schema. */
   private def planAt(snapshotId: Long, keep: FileEntry => Boolean,
                      refine: DataFrame => DataFrame,
                      boxesHint: Option[Seq[MBR]] = None,
@@ -951,9 +959,9 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     // totalData stays the snapshot's true file count.
     val (loaded, totalData) =
       manifestPartial(snapshotId, boxesHint, lineageHint, rangesHint)
+    val schema = tableSchema
     val all = loaded.filter(_.path.nonEmpty)
     val entries = all.filter(_.kind == "data")
-    require(totalData > 0, "empty table: nothing committed yet")
     // SEQUENCE-SCOPED merge-on-read deletes (the Iceberg sequence-number
     // contract, via the PERSISTED per-entry seq): a tombstone applies only
     // to data entries with a smaller sequence number, so a row
@@ -966,46 +974,36 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     // union, duplicating a TOMBSTONE broadcast per group it applies to —
     // bounded and tiny: tombstones are key slivers and compact() resets
     // the group count; the data side is never duplicated. Pinned in
-    // PlanSpec.) Each anti-join is per delete file on that file's OWN
-    // columns — key sets may differ between tombstones (an old-format
-    // (id, lat, lon) file next to a schema-derived full-key one); a
-    // combined read would resolve to one footer's schema and either
-    // resurrect rows (missing key cols read NULL, never match) or
-    // over-delete (narrowed key). compact() folds deletes in and purges
-    // the tombstones, bounding the chain length.
+    // PlanSpec.) Every tombstone file holds the table's key columns
+    // ([[keySchema]]). compact() folds deletes in and purges the
+    // tombstones, bounding the chain length.
     val dels = all.filter(_.kind == "delete").sortBy(e => (e.seq, e.path))
+    val keys = SnapshotStore.keySchema(schema)
     var keptCount = 0
     def groupDf(g: Int): Option[DataFrame] = {
       val ents = entries.filter(e => dels.count(_.seq <= e.seq) == g)
       val kept = ents.filter(keep)
       keptCount += kept.size
       if (kept.isEmpty) None
-      else Some(refine(spark.read.parquet(kept.map(_.path): _*)))
+      else Some(refine(scan(schema, kept.map(_.path))))
     }
     var acc: Option[DataFrame] = groupDf(0)
     for (k <- 1 to dels.size) {
-      val cut = acc.map { a =>
-        val delDf = spark.read.parquet(dels(k - 1).path)
-        a.join(broadcast(delDf), delDf.columns.toSeq, "left_anti")
-      }
+      val cut = acc.map(_.join(broadcast(scan(keys, Seq(dels(k - 1).path))),
+        keys.fieldNames.toSeq, "left_anti"))
       acc = (cut, groupDf(k)) match {
         case (Some(a), Some(b)) => Some(a unionByName b)
         case (a, b) => a.orElse(b)
       }
     }
-    val live = acc.getOrElse {
-      // empty plan (every file pruned — possibly every SHARD, leaving no
-      // loaded entry to take a schema from): read one file's footer for
-      // the schema, rows limited to zero. anyDataPath parses at most ONE
-      // shard — the cheapest possible query must not pay a full manifest
-      // parse just to recover the schema.
-      val anyPath = entries.headOption.map(_.path).getOrElse(
-        anyDataPath(snapshotId).getOrElse(throw new IllegalStateException(
-          s"snapshot $snapshotId has no data files")))
-      spark.read.parquet(anyPath).limit(0)
-    }
-    (live.drop("__z"), keptCount, totalData)
+    (acc.getOrElse(scan(schema, Nil)).drop("__z"), keptCount, totalData)
   }
+
+  /** The one way the store reads its files: `paths` under `schema`, or
+    * zero rows of it without any read when no path survived planning. */
+  private def scan(schema: StructType, paths: Seq[String]): DataFrame =
+    if (paths.isEmpty) spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
+    else spark.read.schema(schema).parquet(paths: _*)
 
   /** Row-level delete (Iceberg-v2 equality-delete shape): materialize the
     * CURRENT snapshot's rows matching `cond` as equality tombstones and
@@ -1013,30 +1011,21 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     * tombstones merge-on-read ([[read]]); [[compact]] rewrites the data
     * with deletes applied and purges the tombstones (copy-on-write repair).
     *
-    * The equality key is SCHEMA-DERIVED, not hardcoded: all non-binary
-    * columns of the table unless the caller passes `keyCols` (binary
-    * payloads are excluded — comparing megabyte blobs in the anti-join
-    * would ship them through the broadcast; the scalar columns already
-    * identify rows in every table shape this store hosts). Distinct rows
-    * sharing an id therefore delete independently. */
-  def deleteWhere(cond: org.apache.spark.sql.Column, lineageId: String,
-                  keyCols: Seq[String] = Seq.empty): Long = {
+    * The equality key is the pinned schema's non-binary columns
+    * ([[SnapshotStore.keySchema]]), so distinct rows sharing an id delete
+    * independently. */
+  def deleteWhere(cond: org.apache.spark.sql.Column, lineageId: String): Long = {
     val t0 = System.nanoTime()
-    val (df, _, _) = read()
-    val keys =
-      if (keyCols.nonEmpty) keyCols
-      else df.schema.fields
-        .filterNot(_.dataType == org.apache.spark.sql.types.BinaryType)
-        .map(_.name).toSeq
-    require(keys.nonEmpty, "equality delete needs at least one non-binary key column")
+    val schema = tableSchema
+    val keys = SnapshotStore.keySchema(schema).fieldNames.toSeq
     val unitDir = s"$root/data/$lineageId-${java.util.UUID.randomUUID().toString.take(8)}"
     // same in-task stats as a data unit, minus leaves and Bloom: tombstone
-    // entries keep lat/lon bounds (fail open when the keys lack them) and
-    // carry no Z range — they are never Z-pruned
+    // entries keep lat/lon bounds and carry no Z range — they are never
+    // Z-pruned
     val files = writeObserved(
-      df.filter(cond).select(keys.map(col): _*).coalesce(1),
+      read()._1.filter(cond).select(keys.map(col): _*).coalesce(1),
       unitDir, lineageId, t0, "delete", key = None, leavesRes = None)
-    commit(files.map(_._1.copy(minZ = 0L, maxZ = 0L)))
+    commit(files.map(_._1.copy(minZ = 0L, maxZ = 0L)), schema)
   }
 
   /** Compaction — the distributed analog of the reference's forced-
@@ -1085,8 +1074,8 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
         minLat = 0.0, maxLat = 0.0, minLon = 0.0, maxLon = 0.0,
         lineageId = l, wallMs = 0L))
     beforeCommit()
-    val next = commit(files.map(_._1) ++ lineageMarkers, replaceParent = true,
-      expectedParent = base)
+    val next = commit(files.map(_._1) ++ lineageMarkers, keyed.schema,
+      replaceParent = true, expectedParent = base)
     // refresh the write-time histograms only AFTER the commit is durable,
     // write-then-delete, so EVERY crash window leaves hotCells an upper
     // bound of the live snapshot: before the swap, the old unit hists
@@ -1121,7 +1110,9 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     * Refuses windows that cross a compaction: rewritten files carry the
     * compaction's sequence number, so the increment would replay the
     * whole table as if new — the caller must re-baseline instead
-    * (Iceberg's incremental scan rejects replace snapshots identically). */
+    * (Iceberg's incremental scan rejects replace snapshots identically).
+    * Planned from the pinned schema like every read: an empty window is
+    * zero rows of it, with no Spark job. */
   def appendedSince(sinceSnapshot: Long, toSnapshot: Long = -1L): DataFrame = {
     val to = if (toSnapshot >= 0) toSnapshot else currentSnapshotId
     val m = manifest(to)
@@ -1131,8 +1122,7 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
         "append-only; re-baseline from the compacted snapshot")
     val ents = m.filter(e =>
       e.path.nonEmpty && e.kind == "data" && e.seq > sinceSnapshot && e.seq <= to)
-    if (ents.isEmpty) readAt(to)._1.limit(0)
-    else spark.read.parquet(ents.map(_.path): _*).drop("__z")
+    scan(tableSchema, ents.map(_.path)).drop("__z")
   }
 
   /** Remove data directories no snapshot references — debris from appends
@@ -1246,6 +1236,21 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
 }
 
 object SnapshotStore {
+
+  /** Tombstone key: the table's non-binary data columns. Binary payloads
+    * are left out — comparing megabyte blobs in the anti-join would ship
+    * them through the broadcast, and the scalar columns already identify
+    * rows in every table shape this store hosts. */
+  private def keySchema(schema: StructType): StructType =
+    StructType(schema.filterNot(f => f.name == "__z" || f.dataType == BinaryType))
+
+  /** Same column names and types, order and nullability aside: parquet
+    * resolves columns by name and reads every column as nullable (a
+    * type's `catalogString` spells no nullability, nested ones included). */
+  private def sameColumns(a: StructType, b: StructType): Boolean = {
+    def cols(s: StructType) = s.fields.map(f => (f.name, f.dataType.catalogString)).sortBy(_._1).toSeq
+    cols(a) == cols(b)
+  }
 
   /** The clustering curves this store can write and read. */
   val ValidCurves: Set[String] = Set("z", "hilbert", "str")

@@ -53,6 +53,14 @@ class EmptyInputSpec extends AnyFunSuite {
     val got = GlobalIndex.knnStored(st, 0.0, 0.0, 10)
       .orderBy("rank").collect().map(_.getLong(1)).toSeq
     assert(got == Seq(1L, 2L, 3L))
+    // compacted down to zero rows (the snapshot holds only lineage
+    // markers): reads answer 0 rows of the table schema until the next append
+    st.deleteWhere(lit(true), "del-all")
+    st.compact(numPartitions = 1)
+    val (none, _, _) = st.read()
+    assert(none.columns.toSeq == Seq("id", "lat", "lon") && none.count() == 0)
+    assert(GlobalIndex.knnStored(st, 0.0, 0.0, 5).count() == 0)
+    assert(st.lookupByKey(Seq(1L), "id")._1.count() == 0)
   }
 
   test("kNN with k larger than the table returns all rows, exactly ranked") {

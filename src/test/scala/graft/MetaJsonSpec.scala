@@ -77,8 +77,17 @@ class MetaJsonSpec extends AnyFunSuite {
     val (res, iBack) = MetaJson.parseIndex(MetaJson.indexJson(8, files))
     assert(res == 8 && iBack == files)
 
-    assert(MetaJson.parseTableMeta(MetaJson.tableMetaJson("hilbert", 12, 8)) ==
-      (("hilbert", 12, 8)))
+    import org.apache.spark.sql.types._
+    val schema = StructType(Seq(StructField("id", LongType, nullable = false),
+      StructField("lat", DoubleType), StructField("bytes", BinaryType),
+      StructField("tags", ArrayType(StringType, containsNull = false)),
+      StructField("__z", LongType)))
+    assert(MetaJson.parseTableMeta(MetaJson.tableMetaJson("hilbert", 12, 8, schema)) ==
+      (("hilbert", 12, 8, schema)))
+    // a table meta without a schema is refused, not read as "any schema"
+    val noSchema = intercept[IllegalStateException](MetaJson.parseTableMeta(
+      """{"curve":"z","zRes":12,"histRes":6}"""))
+    assert(noSchema.getMessage.contains("no schema"))
   }
 
   test("manifest JSON is additively evolvable: old manifests missing new fields parse with safe defaults") {
@@ -101,20 +110,19 @@ class MetaJsonSpec extends AnyFunSuite {
     assert(f.kind == "delete" && f.seq == 9L)
   }
 
-  test("manifest-list shard rows round-trip lineage summaries; absent summaries stay UNKNOWN, not empty") {
+  test("manifest-list shard rows round-trip lineage summaries; a row without one fails to parse") {
     import graft.table.ShardMeta
     val withLin = ShardMeta("snap-3-shard-0-ab.json", 7, -5L, 9L,
-      -10.0, 20.0, -30.0, 40.0, lineages = Some(Seq("u-0", "del-0")))
-    val noLin = ShardMeta("snap-3-shard-1-ab.json", 2, 10L, 99L,
-      21.0, 50.0, 41.0, 80.0, lineages = None)
-    val json = MetaJson.manifestListJson(Seq(withLin, noLin), Seq.empty)
+      -10.0, 20.0, -30.0, 40.0, lineages = Seq("u-0", "del-0"))
+    val json = MetaJson.manifestListJson(Seq(withLin), Seq.empty)
     val (back, _) = MetaJson.parseManifestRoot(json)
-    assert(back == Seq(withLin, noLin))
-    // the distinction matters downstream: Some(xs) is authoritative
-    // (committedLineage reads the root alone), None forces a full parse —
-    // a default-to-empty would silently claim "no lineages here" and
+    assert(back == Seq(withLin))
+    // committedLineage reads the root alone, so the summary is required: a
+    // default-to-empty would silently claim "no lineages here" and
     // re-append committed streaming units as duplicates
-    assert(back.head.lineages.contains(Seq("u-0", "del-0")))
-    assert(back(1).lineages.isEmpty)
+    val noLin = """{"shards":[{"path":"s.json","entries":1,"minZ":0,"maxZ":1,""" +
+      """"minLat":0.0,"maxLat":1.0,"minLon":0.0,"maxLon":1.0}],"entries":[]}"""
+    val e = intercept[IllegalStateException](MetaJson.parseManifestRoot(noLin))
+    assert(e.getMessage.contains("lineages"))
   }
 }

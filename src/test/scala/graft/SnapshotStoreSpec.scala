@@ -520,11 +520,9 @@ class SnapshotStoreSpec extends AnyFunSuite {
     assert(st.read()._1.count() == pts.count())
   }
 
-  test("committedLineage from the root's shard summaries == full parse; pre-field roots fall back") {
+  test("committedLineage from the root's shard summaries == full parse") {
     // the streaming-ingest idempotence check runs per MICRO-BATCH — on a
-    // summarized two-level root it must read KBs (root only), and on a
-    // root written before the lineages field existed it must WIDEN to the
-    // full parse (a missed lineage re-appends a committed unit)
+    // summarized two-level root it must read KBs (root only)
     val root = tmp()
     val st = new SnapshotStore(spark, root, manifestShardRows = 3)
     (0 until 3).foreach(u =>
@@ -532,17 +530,10 @@ class SnapshotStoreSpec extends AnyFunSuite {
     st.deleteWhere(col("id") % 7 === 0, "del-0")
     val full = st.manifest().map(_.lineageId).toSet
     assert(Seq("u-0", "u-1", "u-2", "del-0").forall(full.contains))
+    val (sh, _) = graft.table.MetaJson.parseManifestRoot(Files.readString(
+      java.nio.file.Paths.get(root, "meta", s"snap-${st.currentSnapshotId}")))
+    assert(sh.nonEmpty)
     assert(st.committedLineage == full)
-    // rewrite the root with the summaries stripped (a pre-field root)
-    val metaP = java.nio.file.Paths.get(root, "meta")
-    val rootFile = metaP.resolve(s"snap-${st.currentSnapshotId}")
-    val (sh, inl) = graft.table.MetaJson.parseManifestRoot(
-      Files.readString(rootFile))
-    assert(sh.nonEmpty && sh.forall(_.lineages.isDefined))
-    Files.writeString(rootFile, graft.table.MetaJson.manifestListJson(
-      sh.map(_.copy(lineages = None)), inl))
-    assert(st.committedLineage == full,
-      "pre-field root: fallback full parse must recover every lineage")
     // and resumableRun's skip contract holds on the summarized table
     val ran = st.resumableRun(Seq("u-0", "u-late")) { _ => pts.limit(5) }
     assert(ran == Seq("u-late"))
@@ -933,14 +924,72 @@ class SnapshotStoreSpec extends AnyFunSuite {
     for (jobs <- Seq(appendJobs, strAppendJobs))
       assert(jobs >= 2 && jobs <= 4,
         s"append ran $jobs jobs — the one-query commit contract is broken")
+    // planning a read is metadata too: every scan comes from the pinned
+    // schema, never a footer-inference job. The serve shape: a Bloom key,
+    // 3 units, 2 tombstones, ≤ 32 files per scan
+    val sv = new SnapshotStore(spark, tmp(), bloomKey = Some("id"))
+    (0 until 3).foreach(u =>
+      sv.append(pts.filter(col("id") % 3 === u), s"u-$u", numPartitions = 4))
+    val box = MBR(10.0, 30.0, 25.0, 60.0)
+    sv.deleteWhere(graft.geo.GeoCols.inBox(col("lat"), col("lon"), box), "del-box")
+    val Array(hit, gone) = sv.read()._1.select("id").head(2).map(_.getLong(0))
+    sv.deleteWhere(col("id") === gone, "del-id")
+    assert(sv.manifest().count(_.kind == "delete") == 2 && sv.manifest().size <= 32)
     val metaJobs = jobsOf("r4-meta") {
       st.manifest(); st.committedLineage; st.totalRows
       st.hotCells(graft.data.Fixtures.JoinRes)
       st.indexLeaves()
       graft.index.GlobalIndex.fromStore(st)
+      sv.read(Some(box)); sv.read()
+      sv.readBoxes(Seq(box, MBR(-40.0, -120.0, -20.0, -90.0)))
+      sv.readAt(sv.currentSnapshotId - 1, Some(box))
+      sv.lookupByKey(Seq(hit)); sv.lookupByKey(Seq(Long.MinValue))
+      sv.appendedSince(1); sv.appendedSince(sv.currentSnapshotId)
     }
     assert(metaJobs == 0,
-      s"metadata reads ran $metaJobs Spark jobs — manifests/sidecars must be driver IO")
+      s"metadata reads ran $metaJobs Spark jobs — manifests/sidecars/read plans must be driver IO")
+  }
+
+  test("the first commit pins the schema: a wider or retyped unit is refused and leaves nothing behind") {
+    val root = tmp()
+    val st = new SnapshotStore(spark, root)
+    val base = pts.filter(col("id") % 50 === 0) // same rows on every evaluation
+    st.append(base, "u-0", numPartitions = 2)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.select("id", "lat", "lon")
+      .collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2))).sorted.toSeq
+    def unitDirs(r: String): Set[String] = {
+      val ls = Files.list(java.nio.file.Paths.get(r, "data"))
+      try ls.toArray.map(_.toString).toSet finally ls.close()
+    }
+    val want = rows(st.read()._1)
+    assert(want.nonEmpty)
+    val dirs = unitDirs(root)
+    for ((name, bad) <- Seq("wider" -> base.withColumn("extra", lit(1)),
+                            "retyped" -> base.withColumn("id", col("id").cast("string")))) {
+      val e = intercept[IllegalArgumentException](st.append(bad, s"u-$name", numPartitions = 2))
+      assert(e.getMessage.contains("pins schema"), e.getMessage)
+      assert(st.currentSnapshotId == 1 && st.committedLineage == Set("u-0"))
+      assert(unitDirs(root) == dirs, s"$name unit left files behind")
+      assert(rows(st.read()._1) == want)
+    }
+    // column order and nullability are not part of the schema: parquet
+    // resolves columns by name and reads every column as nullable
+    st.append(base.select("lon", "lat", "id"), "u-reordered", numPartitions = 1)
+    assert(st.read()._1.columns.toSeq == Seq("id", "lat", "lon"))
+    assert(rows(st.read()._1) == (want ++ want).sorted)
+    // two stores on one empty root: both pass the pre-write check, so the
+    // loser must fail at COMMIT against the winner's pin — as the curve does
+    val raceRoot = tmp()
+    val winner = new SnapshotStore(spark, raceRoot)
+    val loser = new SnapshotStore(spark, raceRoot)
+    var fired = false
+    loser.afterParentCapture = () =>
+      if (!fired) { fired = true; winner.append(base, "w-0", numPartitions = 1); () }
+    val e = intercept[IllegalArgumentException](
+      loser.append(base.withColumn("extra", lit(1)), "l-0", numPartitions = 1))
+    assert(fired && e.getMessage.contains("pins schema"))
+    assert(loser.committedLineage == Set("w-0"))
+    assert(rows(loser.read()._1) == want)
   }
 
   test("image table through the store: payload intact after cluster+commit") {

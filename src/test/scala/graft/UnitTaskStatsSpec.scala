@@ -139,12 +139,7 @@ class UnitTaskStatsSpec extends AnyFunSuite {
     assert(d.rows == m.getLong(0) && d.minZ == 0L && d.maxZ == 0L)
     assert(d.minLat == m.getDouble(1) && d.maxLat == m.getDouble(2) &&
       d.minLon == m.getDouble(3) && d.maxLon == m.getDouble(4))
-    // ... and the full range when the keys carry no coordinates (fail open)
-    store.deleteWhere(col("id") === 7L, "del-id", keyCols = Seq("id"))
-    val idOnly = store.manifest().filter(e => e.kind == "delete" && e.lineageId == "del-id")
-    assert(idOnly.map(e => (e.rows, e.minZ, e.maxZ, e.minLat, e.maxLat, e.minLon, e.maxLon)) ==
-      Seq((1L, 0L, 0L, -Double.MaxValue, Double.MaxValue, -Double.MaxValue, Double.MaxValue)))
-    // no sidecar was written for either delete
+    // no sidecar was written for the delete
     assert(java.nio.file.Files.list(base.resolve("store/meta/bloom")).count() == 1)
     graft.ops.OpUtil.deleteTree(base)
   }
