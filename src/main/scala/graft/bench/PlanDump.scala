@@ -42,7 +42,7 @@ object PlanDump {
       pts.withColumn("d2", graft.geo.GeoCols.d2(col("lat"), col("lon"), 1.0, 2.0)).orderBy(col("d2"), col("id")).limit(25))
     dump("knnJoinAgg", "Dense baseline as a per-partition primitive kernel: flat per-query bounded arrays reduce each partition to k candidates per query before the exchange — |Q|*k*partitions shuffled rows instead of |Q|*N — then one tiny window ranks the survivors exactly.",
       SpatialOps.knnJoinAgg(pts, Fixtures.knnQueries.take(3), 5))
-    dump("rangeBox", "Covering prune is a 4-comparison rectangle in grid coords + the exact box predicate — one codegen'd Filter, box bounds pushed to the scan.",
+    dump("rangeBox", "Covering prune is a 4-comparison rectangle in grid coords + the exact box predicate — one codegen'd Filter. The box and cell bounds are param(...) leaves the generated code reads by reference, so a query with another box reuses the compiled stage.",
       SpatialOps.rangeBox(pts, Fixtures.boxes.head._2))
     dump("boxJoinSalted (write-time hot cells)", "With precomputed hot cells the salted plan is scan → salt projection → broadcast join: ZERO stats scans on the query path.",
       SpatialOps.boxJoinSalted(pts, Fixtures.boxes, hotCells = Some((Fixtures.JoinRes,
@@ -55,7 +55,7 @@ object PlanDump {
     val snapRoot = Files.createTempDirectory("pd_snap").toString
     val store = new graft.table.SnapshotStore(s, snapRoot)
     store.append(pts, "unit-0", numPartitions = 8)
-    dump("snapshot read(box) — __z pushdown", "Manifest prunes files driver-side; the COARSE half of the covering (a <=16-term disjunction over the MATERIALIZED __z sort key) lands in PushedFilters for parquet row-group min/max skipping, while the fine covering rides in graft_z_in_ranges — a codegen'd O(log n) binary-search probe (an n-term Or tree is O(n) per row; measured 4.1 s at 256 ranges over 600k cached rows vs 0.17 s for the probe at 2914).",
+    dump("snapshot read(box) — manifest Z-span prune", "Manifest prunes files driver-side: by lat/lon bounds, and by each file's [minZ, maxZ] span against the fine curve covering. The kept files' rows are probed by graft_z_in_ranges over the MATERIALIZED __z sort key — a codegen'd O(log n) binary search over the covering held by reference (an n-term Or tree is O(n) per row; measured 4.1 s at 256 ranges over 600k cached rows vs 0.17 s for the probe at 2914). Nothing of the covering is pushed to parquet.",
       store.read(Some(Fixtures.boxes.head._2))._1)
     // knnStored collects its k rows from ONE scan (the returned frame is a
     // local relation) — dump the scan it executes: the radius-bounded,
@@ -66,7 +66,7 @@ object PlanDump {
       val radius = gi.knnSeedRadius(qla, qlo, k)
       val b = graft.geo.MBR(qla - radius, qlo - radius, qla + radius, qlo + radius)
       dump("stored-table kNN (persisted index summaries)",
-        s"GlobalIndex.fromStore costs ZERO Spark jobs (driver-side sidecar read); the seed radius bounds a manifest-pruned box read (files outside it never open) with the __z disjunction in PushedFilters; ONE TakeOrderedAndProject scan yields the k rows, audited driver-side (knnStored's executed plan — its returned frame is the collected local relation).",
+        s"GlobalIndex.fromStore costs ZERO Spark jobs (driver-side sidecar read); the seed radius bounds a manifest-pruned box read (files outside it never open) probed by graft_z_in_ranges, and the query point enters d2 as param(...) leaves; ONE TakeOrderedAndProject scan yields the k rows, audited driver-side (knnStored's executed plan — its returned frame is the collected local relation).",
         store.read(Some(b))._1
           .withColumn("d2", graft.geo.GeoCols.d2(col("lat"), col("lon"), qla, qlo))
           .orderBy(col("d2"), col("id")).limit(k))
@@ -84,7 +84,7 @@ object PlanDump {
         pts.filter(pmod(col("id"), lit(3)) === u), s"u-$u", numPartitions = 4))
       val (bdf, bkept, btot) = bstore.lookupByKey(Seq(11L))
       dump("snapshot lookupByKey (Bloom file skipping)",
-        s"Driver-side Bloom probes opened $bkept of $btot data files (plan-time file skipping; fail-open for files without a sidecar); the IN predicate lands in PushedFilters for row-group + dictionary skipping inside the survivors.",
+        s"Driver-side Bloom probes opened $bkept of $btot data files (plan-time file skipping; fail-open for files without a sidecar); the key set is an InSet whose generated code holds it by reference, and it still lands in PushedFilters as In for row-group + dictionary skipping inside the survivors.",
         bdf)
     } catch { case e: Throwable =>
       sb ++= s"\n## snapshot lookupByKey\n\nSKIPPED: ${e.getMessage}\n" }
@@ -100,7 +100,7 @@ object PlanDump {
       val hroot = Files.createTempDirectory("pd_hilb").toString
       val hstore = new graft.table.SnapshotStore(s, hroot, curve = "hilbert")
       hstore.append(pts, "unit-0", numPartitions = 8)
-      dump("hilbert snapshot read(box) — curve-range pushdown", "Same PushedFilters shape as the Z layout but over Hilbert ranges: consecutive curve positions are grid-adjacent, so coverings compile to fewer BETWEEN conjuncts and files carry tighter lat/lon bounds.",
+      dump("hilbert snapshot read(box) — curve-range prune", "Same plan as the Z layout but over Hilbert ranges: consecutive curve positions are grid-adjacent, so coverings need fewer ranges and files carry tighter lat/lon and curve spans.",
         hstore.read(Some(Fixtures.boxes.head._2))._1)
     } catch { case e: Throwable =>
       sb ++= s"\n## hilbert snapshot read(box)\n\nSKIPPED: ${e.getMessage}\n" }
@@ -116,7 +116,7 @@ object PlanDump {
       jstore.append(pts, "unit-0", numPartitions = 32)
       val (jdf, jkept, jtot) = jstore.readBoxes(Fixtures.boxes.map(_._2))
       dump("stored-table boxJoin (readBoxes multi-geometry prune)",
-        s"ONE planned read for the whole box set: manifest prune opened $jkept of $jtot data files (files disjoint from EVERY box never open; with a sharded manifest the non-overlapping SHARDS are not even parsed); inside survivors the coarse pushable disjunction skips row groups and the fine merged covering (cap 4096) is the codegen'd graft_z_in_ranges binary-search probe. The unchanged boxJoin broadcast-hash-join refines exactly on top.",
+        s"ONE planned read for the whole box set: manifest prune opened $jkept of $jtot data files (files disjoint from EVERY box never open; with a sharded manifest the non-overlapping SHARDS are not even parsed); files whose Z span meets no range of the fine merged covering (cap 4096) never open either, and inside survivors that covering is the codegen'd graft_z_in_ranges binary-search probe. The unchanged boxJoin broadcast-hash-join refines exactly on top.",
         SpatialOps.boxJoin(jdf, Fixtures.boxes,
           SpatialOps.resolveRes(jstore, Fixtures.boxes.map(_._2))))
       val gi2 = graft.index.GlobalIndex.fromStore(jstore)

@@ -1,12 +1,16 @@
 package graft.geo
 
+import graft.functions.Param
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 /** Catalyst-friendly spatial Column expressions. Everything here composes
-  * built-in expressions only (arithmetic, floor, CASE) — no UDFs, no
-  * closures — so plans stay inside whole-stage codegen and predicates push
-  * down to the parquet scan.
+  * built-in expressions (arithmetic, floor, CASE) and graft's codegen'd
+  * leaves ([[Param]], [[graft.functions.ZRangeContains]]) — no UDFs, no
+  * closures — so plans stay inside whole-stage codegen. Per-query values
+  * (box corners, cell bounds, query points) enter as [[Param]]s, never
+  * literals, which would recompile a stage on every query; constants of
+  * the resolution `r` alone stay literals (`r` takes a few values).
   *
   * Every formula has a character-for-character SQL twin in
   * [[graft.oracle.OracleSql]]; both are pure IEEE-double arithmetic over
@@ -101,39 +105,15 @@ object GeoCols {
     cur.withColumn(out, col("__hd")).drop("__hd", "__hx", "__hy")
   }
 
-  /** Pruning predicate from a Z-range covering ([[CellId.zRangesForBox]]):
-    * a bounded disjunction of BETWEEN conjuncts over a MATERIALIZED Morton
-    * column (a stored table's `__z` sort key — parquet min/max row-group
-    * stats prune on it). Only apply this to a real column: inlining a
-    * computed z expression into every conjunct explodes codegen (janino
-    * 64KB) — computed predicates use [[cellBoxPredicate]] instead, since a
-    * covering region is a rectangle in (y, x). */
-  def zRangePredicate(zc: Column, ranges: Seq[(Long, Long)]): Column =
-    if (ranges.isEmpty) lit(false)
-    else {
-      // BALANCED Or tree, not reduce(_ || _): a left-nested chain of a few
-      // hundred ranges (a multi-box readBoxes covering) overflows the
-      // column-to-expression converter's stack; depth log2(n) never does
-      def balance(cols: IndexedSeq[Column]): Column =
-        if (cols.size == 1) cols.head
-        else balance(cols.grouped(2)
-          .map(g => if (g.size == 2) g(0) || g(1) else g(0)).toIndexedSeq)
-      balance(ranges.toIndexedSeq
-        .map { case (lo, hi) => zc >= lit(lo) && zc <= lit(hi) })
-    }
-
-  /** Full covering predicate for a stored read's key column: a COARSE
-    * pushable disjunction (parquet row-group min/max skipping — data
-    * sources only translate plain comparison trees) conjoined with the
-    * EXACT covering as an O(log n) binary-search expression
-    * ([[graft.functions.ZRangeContains]]). The Or-tree's per-row cost is
-    * linear in its term count (measured 4.1 s at 256 terms over 600k
-    * cached rows vs 0.45 s at 16), so the row-level membership test must
-    * not ride on the pushable form — `pushCap` bounds what the scan sees
-    * while the fine ranges (hundreds+) shrink the superset for free.
-    * Ranges must be sorted and disjoint ([[CellId.mergeRanges]] output).
-    * When the covering already fits under `pushCap` the disjunction IS
-    * exact and the probe is skipped.
+  /** Covering predicate for a stored read's key column: membership of the
+    * MATERIALIZED Morton column (a stored table's `__z` sort key) in the
+    * covering, as the O(log n) binary-search probe
+    * [[graft.functions.ZRangeContains]] at any range count. Its generated
+    * code holds the ranges by reference, so every covering shares one
+    * compiled class. It does not push to parquet: the store skips files
+    * by their manifest Z span against the same covering
+    * ([[graft.table.SnapshotStore.read]]). Ranges must be sorted and
+    * disjoint ([[CellId.mergeRanges]] output).
     *
     * The probe column is built DIRECTLY from the
     * [[graft.functions.ZRangeContains]] expression — not through the
@@ -141,42 +121,36 @@ object GeoCols {
     * time against the DataFrame's session and would make this public API
     * fail on any session without [[graft.plans.GraftExtensions]]
     * installed (the registration stays, for SQL-text users). */
-  def zCoveringPredicate(zc: Column, ranges: Seq[(Long, Long)],
-                         pushCap: Int = 16): Column =
-    if (ranges.size <= pushCap) zRangePredicate(zc, ranges)
-    else {
-      val coarse = CellId.mergeRanges(ranges, maxRanges = pushCap)
-      val bounds = ranges.iterator.flatMap(r => Iterator(r._1, r._2)).toArray
-      import org.apache.spark.sql.GraftColumnBridge
-      zRangePredicate(zc, coarse) &&
-        GraftColumnBridge.column(graft.functions.ZRangeContains(
-          GraftColumnBridge.expression(zc), bounds))
-    }
+  def zCoveringPredicate(zc: Column, ranges: Seq[(Long, Long)]): Column = {
+    import org.apache.spark.sql.GraftColumnBridge
+    GraftColumnBridge.column(graft.functions.ZRangeContains(
+      GraftColumnBridge.expression(zc), graft.functions.ZRangeContains.bounds(ranges)))
+  }
 
   /** Covering-region prune as a rectangle in grid coordinates: four
     * comparisons on two small floor expressions — the computed-column twin
-    * of [[zRangePredicate]] (a cell box [y0..y1]×[x0..x1] IS the covering
-    * of any lat/lon box or ring union, so no Morton arithmetic is needed
-    * until the key is materialized). */
+    * of [[zCoveringPredicate]] (a cell box [y0..y1]×[x0..x1] IS the
+    * covering of any lat/lon box or ring union, so no Morton arithmetic is
+    * needed until the key is materialized). */
   def cellBoxPredicate(lat: Column, lon: Column, r: Int,
                        y0: Long, y1: Long, x0: Long, x1: Long): Column = {
     // same clamped indices as cellCol/zCol — the lat=90/lon=180 edge
     // contract is defined once
     val y = cellYIdx(lat, r)
     val x = cellXIdx(lon, r)
-    y >= lit(y0) && y <= lit(y1) && x >= lit(x0) && x <= lit(x1)
+    y >= Param.of(y0) && y <= Param.of(y1) && x >= Param.of(x0) && x <= Param.of(x1)
   }
 
   /** Inclusive box containment — MBR.java:57-64 semantics. */
   def inBox(lat: Column, lon: Column, b: MBR): Column =
-    lat >= lit(b.minLat) && lat <= lit(b.maxLat) &&
-    lon >= lit(b.minLon) && lon <= lit(b.maxLon)
+    lat >= Param.of(b.minLat) && lat <= Param.of(b.maxLat) &&
+    lon >= Param.of(b.minLon) && lon <= Param.of(b.maxLon)
 
   /** Squared planar degree-space distance — MBR.java:67-79 / the serial
     * kNN metric (Benchmark.java:425-430). Squared (sqrt-free) so ordering
     * and pruning are exact. */
   def d2(lat: Column, lon: Column, qLat: Double, qLon: Double): Column =
-    (lat - lit(qLat)) * (lat - lit(qLat)) + (lon - lit(qLon)) * (lon - lit(qLon))
+    d2Cols(lat, lon, Param.of(qLat), Param.of(qLon))
 
   def d2Cols(lat: Column, lon: Column, qLat: Column, qLon: Column): Column =
     (lat - qLat) * (lat - qLat) + (lon - qLon) * (lon - qLon)

@@ -222,11 +222,8 @@ object AnnOps {
       .withColumn("cnrm", norm(col("cv")))
     val (e, cent) = stagePaths match {
       case Some((pv, pc)) =>
-        org.apache.spark.sql.GraftParquetDirect.write(
-          e0.select(col("vec_id"), col("v"), col("nrm"), col("list")),
-          pv, overwrite = true)
-        org.apache.spark.sql.GraftParquetDirect.write(cent0, pc, overwrite = true)
-        (spark.read.parquet(pv), spark.read.parquet(pc))
+        (OpUtil.stage(e0.select(col("vec_id"), col("v"), col("nrm"), col("list")), pv),
+          OpUtil.stage(cent0, pc))
       case None => (e0, cent0)
     }
     val q = e.filter(col("vec_id").isin(queryIds: _*))

@@ -100,9 +100,7 @@ object ImageOps {
       // checkpoint the (image_id, phash) metadata slice so the blocking
       // join + refine dataflow is DuckDB-oracle-checked (q43); bytes never
       // touch the staging either
-      org.apache.spark.sql.GraftParquetDirect.write(
-        images.select("image_id", "phash"), p, overwrite = true)
-      Dedup.hammingBlockPairs(images.sparkSession.read.parquet(p),
+      Dedup.hammingBlockPairs(OpUtil.stage(images.select("image_id", "phash"), p),
         "image_id", "phash", maxHamming, blocks)
     case None =>
       Dedup.hammingBlockPairs(images, "image_id", "phash", maxHamming, blocks)

@@ -31,16 +31,20 @@ private[graft] object OpUtil {
   private[graft] def stageOrPersist(df: DataFrame,
                                     stagePath: Option[String]): DataFrame =
     stagePath match {
-      case Some(p) =>
-        // committer-free write (same parquet bits, ~0.2 s less fixed
-        // driver cost per staging checkpoint, OPTIMIZATION_r06.md §1b);
-        // the staging dir is transient and re-read immediately, so the
-        // Hadoop commit protocol's directory atomicity buys nothing
-        org.apache.spark.sql.GraftParquetDirect.write(df, p, overwrite = true)
-        df.sparkSession.read.parquet(p)
-      case None =>
-        df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      case Some(p) => stage(df, p)
+      case None => df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     }
+
+  /** Checkpoint `df` to parquet at `path` (committer-free: ~0.2 s less
+    * fixed driver cost, OPTIMIZATION_r06.md §1b) and read back exactly the
+    * files the write reported, under `df`'s schema: no listing of the dir
+    * (a zombie's stray part file is never read) and no footer-inference
+    * job. */
+  private[graft] def stage(df: DataFrame, path: String): DataFrame = {
+    val files = org.apache.spark.sql.GraftParquetDirect.write(df, path, overwrite = true)
+    df.sparkSession.read.schema(df.schema)
+      .parquet(files.map(f => new org.apache.hadoop.fs.Path(path, f._1).toString): _*)
+  }
 
   /** Best-effort recursive delete of a temp tree, with the walk stream
     * CLOSED (Files.walk leaks a directory fd until GC otherwise). The

@@ -1,10 +1,14 @@
 package graft.table
 
+import graft.functions.ZRangeContains
 import graft.geo.{CellId, GeoCols, MBR}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, Row, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.{Cast, InSet, Literal}
+import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{BinaryType, StructType}
 import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
+import scala.collection.immutable.HashSet
 
 /** One file tracked by a snapshot, with its pruning stats and the
   * lineage unit that produced it — the manifest-entry analog of an Iceberg
@@ -116,11 +120,11 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
   }
 
   // per-box fine-covering cap 1024 (was 64, a size chosen for the old
-  // O(n)-per-row BETWEEN refine): the row-level membership test is now the
+  // O(n)-per-row BETWEEN refine): the row-level membership test is the
   // O(log n) probe ([[GeoCols.zCoveringPredicate]]) and the decomposition
   // cost is cap-independent (full quadtree descent, then coalesce), so a
-  // finer covering only SHRINKS the read superset. The ≤16-term pushable
-  // disjunction parquet sees is capped separately inside the predicate.
+  // finer covering only SHRINKS the read superset — and the set of files
+  // whose Z span meets it ([[planAt]]).
   private def curveRangesForMbr(b: MBR): Seq[(Long, Long)] = curve match {
     case "hilbert" => CellId.hilbertRangesForMbr(b, zRes, maxRanges = 1024)
     case "str" => CellId.strRangesForMbr(b, strStripRes, CellId.MaxRes, maxRanges = 1024)
@@ -237,6 +241,7 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
         throw new IllegalStateException(
           s"snapshot $snapshotId is expired or was never committed")
       val (shards, inline) = readRoot(snapshotId)
+      val zBounds = rangesHint.map(ZRangeContains.bounds)
       if (shards.isEmpty) (inline, dataCount(inline))
       else {
         // the bound prunes are fail-open: a shard with unknown bounds
@@ -252,8 +257,7 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
         val wanted = shards.filter { sm =>
           boxes.forall(bs => bs.exists(b =>
             MBR(sm.minLat, sm.minLon, sm.maxLat, sm.maxLon).overlaps(b))) &&
-          rangesHint.forall(_.exists(r =>
-            r._1 <= sm.maxZ && sm.minZ <= r._2)) &&
+          zBounds.forall(ZRangeContains.meets(_, sm.minZ, sm.maxZ)) &&
           lineageHint.forall(want => sm.lineages.exists(want))
         }
         val loaded = inline ++ wanted.flatMap(sm =>
@@ -456,7 +460,7 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     * (plus any file with no filter — fail open, e.g. units written before
     * the store had a bloom key). The result applies the same
     * sequence-scoped tombstone chain as [[read]], then refines exactly
-    * with a pushed `IN` predicate, so `lookupByKey(vs)` ==
+    * with a pushed `IN` predicate ([[keyIn]]), so `lookupByKey(vs)` ==
     * `read()._1.filter(key IN vs)` always — the Bloom only changes how
     * many files the plan opens. Returns (rows, files read, total files).
     * Sidecars are driver-read JSON (KBs) — planning costs no Spark job.
@@ -475,8 +479,17 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     planAt(currentSnapshotId,
       keep = e => filters.get(normPath(e.path))
         .forall(bits => hashes.exists(Bloom.mightContain(bits, _))),
-      refine = df => df.filter(col(key).isin(values: _*)),
+      refine = df => df.filter(keyIn(df, key, values)),
       lineageHint = Some(shardFilter))
+  }
+
+  /** `key IN values` as an `InSet` that generated code holds by reference
+    * (`isin` spells each key into it): a HashSet, whatever its size, since
+    * the code spells the set's class, of the values cast to the key type. */
+  private def keyIn(df: DataFrame, key: String, values: Seq[Any]): Column = {
+    val (t, tz) = (df.schema(key).dataType, Some(SQLConf.get.sessionLocalTimeZone))
+    GraftColumnBridge.column(InSet(GraftColumnBridge.expression(col(key)),
+      HashSet.from(values.map(v => Cast(Literal(v), t, tz).eval()))))
   }
 
   /** The per-file Bloom map, probe hashes, and the shard-level lineage
@@ -854,11 +867,12 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     }
 
   /** Plan a read from the current snapshot; `box` prunes manifest entries
-    * whose lat/lon range cannot intersect it AND pushes a Z-range
-    * disjunction over the materialized `__z` sort key, so parquet min/max
-    * row-group stats skip within the surviving files too (the file- and
-    * page-level halves of the reference's subtree prune). The returned
-    * frame is a SUPERSET of the box's rows — callers refine exactly.
+    * whose lat/lon range misses it or whose `[minZ, maxZ]` span meets no
+    * range of its fine curve covering (the reference's subtree prune,
+    * from manifest metadata alone; a file is one parquet row group below
+    * 128 MB, so nothing is pushed to parquet), then probes the kept rows'
+    * `__z` against that covering ([[GeoCols.zCoveringPredicate]]). The
+    * returned frame is a SUPERSET of the box's rows — callers refine exactly.
     * Returns (files read, total files) alongside the DataFrame so
     * callers/tests can observe pruning. */
   def read(box: Option[MBR] = None): (DataFrame, Int, Int) =
@@ -867,11 +881,10 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
   /** Multi-geometry planned read — the JOIN-side analog of [[read]]
     * (round-4 verdict ask #3: the metric-bearing join operators need the
     * same file skip the single-box path has). A file disjoint from EVERY
-    * box never opens, and the surviving rows are refined by ONE merged
-    * curve-range disjunction over the union of the boxes' coverings
-    * ([[CellId.mergeRanges]] caps it at a few hundred BETWEENs regardless
-    * of geometry count). Superset contract as [[read]] — the join
-    * operator's exact predicate refines. */
+    * box, or whose Z span meets no range of the boxes' merged covering
+    * ([[CellId.mergeRanges]]), never opens, and the surviving rows are
+    * probed against that covering. Superset contract as [[read]] — the
+    * join operator's exact predicate refines. */
   def readBoxes(boxes: Seq[MBR]): (DataFrame, Int, Int) = {
     require(boxes.nonEmpty, "readBoxes needs at least one box")
     // covering computed ONCE per read, OUTSIDE the refine closure: planAt
@@ -883,16 +896,14 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     // O(log n) binary search ([[GeoCols.zCoveringPredicate]]), so a
     // finer covering only SHRINKS the superset — the old 256 cap
     // existed because the covering rode in an O(n)-per-row BETWEEN
-    // disjunction (measured 4.1 s at 256 ranges over 600k rows; the
-    // disjunction that parquet row-group skipping sees is now capped
-    // separately at 16 pushable terms inside zCoveringPredicate)
+    // disjunction (measured 4.1 s at 256 ranges over 600k rows)
     val ranges = CellId.mergeRanges(boxes.flatMap(curveRangesForMbr),
       maxRanges = 4096)
     // selectivity cutoff: when the merged covering spans most of the
     // key domain (e.g. globe-scattered join boxes), the predicate
     // excludes almost nothing — skip it entirely rather than pay even
     // the cheap probe. The read stays a superset either way; the
-    // operator's exact predicate refines.
+    // operator's exact predicate refines (the files still prune by Z span).
     val covered = ranges.map(r => (r._2 - r._1 + 1).toDouble).sum
     val skipRefine = covered / curveKeySpan > 0.5
     planAt(currentSnapshotId,
@@ -936,9 +947,11 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
 
   /** Shared snapshot planner: `keep` prunes manifest data entries (file
     * skipping — MBR overlap for box reads, Bloom probes for key lookups),
-    * `refine` narrows the surviving files' rows (Z-range disjunction /
-    * pushed key predicate). Both read paths share the sequence-scoped
-    * tombstone chain below. Every scan is built from the pinned schema
+    * as does `rangesHint`, a box read's covering: a shard or file whose Z
+    * span meets none of its ranges holds no row the probe would keep.
+    * `refine` narrows the surviving files' rows (covering probe / pushed
+    * key predicate). Both read paths share the sequence-scoped tombstone
+    * chain below. Every scan is built from the pinned schema
     * ([[scan]]), so planning is manifest + driver IO only: zero Spark
     * jobs before the caller's action (≤ 32 paths per scan — past that,
     * Spark lists the files in a job). A snapshot with no surviving file —
@@ -959,6 +972,7 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     // totalData stays the snapshot's true file count.
     val (loaded, totalData) =
       manifestPartial(snapshotId, boxesHint, lineageHint, rangesHint)
+    val zBounds = rangesHint.map(ZRangeContains.bounds)
     val schema = tableSchema
     val all = loaded.filter(_.path.nonEmpty)
     val entries = all.filter(_.kind == "data")
@@ -982,7 +996,8 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     var keptCount = 0
     def groupDf(g: Int): Option[DataFrame] = {
       val ents = entries.filter(e => dels.count(_.seq <= e.seq) == g)
-      val kept = ents.filter(keep)
+      val kept = ents.filter(e => keep(e) &&
+        zBounds.forall(ZRangeContains.meets(_, e.minZ, e.maxZ)))
       keptCount += kept.size
       if (kept.isEmpty) None
       else Some(refine(scan(schema, kept.map(_.path))))

@@ -112,4 +112,32 @@ class DirectWriteSpec extends AnyFunSuite {
     assert(back.count() == 1 && back.head().getLong(0) == 9L)
     graft.ops.OpUtil.deleteTree(base)
   }
+
+  test("staging reads back the reported files: no planning job, strays unread") {
+    // the staged oracle operators re-read their checkpoint: from the
+    // (name, rows) list the write reported, under the input's schema — no
+    // directory listing and no footer-inference job
+    def jobsOf(group: String)(body: => Unit): Int = {
+      spark.sparkContext.setJobGroup(group, group)
+      try body finally spark.sparkContext.clearJobGroup()
+      spark.sparkContext.statusTracker.getJobIdsForGroup(group).length
+    }
+    val base = tmp()
+    // a fresh frame per write: a re-run of one frame reuses its shuffle
+    def df = (1L to 200L).map(i => (i, i * 0.5, s"s$i")).toDF("id", "v", "s").repartition(3)
+    var staged: org.apache.spark.sql.DataFrame = null
+    val stageJobs = jobsOf("stage") { staged = graft.ops.OpUtil.stageOrPersist(df, Some(s"$base/s")) }
+    val writeJobs = jobsOf("write-only")(GraftParquetDirect.write(df, s"$base/w"))
+    assert(stageJobs == writeJobs, s"staging ran $stageJobs jobs, its write alone $writeJobs")
+    // a stray part file (a zombie attempt's output) beside the reported ones
+    val dir = base.resolve("s")
+    val real = dir.toFile.listFiles().find(_.getName.endsWith(".parquet")).get
+    java.nio.file.Files.copy(real.toPath, dir.resolve("part-99999-stray-t0.snappy.parquet"))
+    def rows(d: org.apache.spark.sql.DataFrame) =
+      d.collect().map(r => (r.getLong(0), r.getDouble(1), r.getString(2))).sorted.toSeq
+    assert(staged.schema.map(f => (f.name, f.dataType)) == df.schema.map(f => (f.name, f.dataType)))
+    assert(rows(staged) == rows(df))
+    assert(!staged.inputFiles.exists(_.contains("stray")))
+    graft.ops.OpUtil.deleteTree(base)
+  }
 }

@@ -111,19 +111,14 @@ class ExtensionsSpec extends AnyFunSuite {
       assert(graft.functions.ZRangeContains.contains(bounds, z) == expect(z),
         s"interpreted mismatch at z=$z")
     }
-    // codegen path through a real (non-local) scan, via the hybrid
-    // covering predicate the stored reads use
+    // codegen path through a real (non-local) scan, via the covering
+    // predicate the stored reads use, at many ranges and at a few
     val df = probes.toDF("z").repartition(2)
-    val got = df.filter(graft.geo.GeoCols.zCoveringPredicate(col("z"), merged))
-      .collect().map(_.getLong(0)).toSet
-    assert(got == expect.collect { case (z, true) => z }.toSet)
-    // under the push cap the predicate IS the plain pushable disjunction
-    val few = merged.take(8)
-    val gotFew = df.filter(graft.geo.GeoCols.zCoveringPredicate(col("z"), few))
-      .collect().map(_.getLong(0)).toSet
-    val gotFewRef = df.filter(graft.geo.GeoCols.zRangePredicate(col("z"), few))
-      .collect().map(_.getLong(0)).toSet
-    assert(gotFew == gotFewRef)
+    for (rs <- Seq(merged, merged.take(8))) {
+      val got = df.filter(graft.geo.GeoCols.zCoveringPredicate(col("z"), rs))
+        .collect().map(_.getLong(0)).toSet
+      assert(got == probes.filter(z => rs.exists(r => z >= r._1 && z <= r._2)).toSet)
+    }
     // empty bounds: contains() is total and false
     assert(!graft.functions.ZRangeContains.contains(Array.empty[Long], 7L))
     // SQL surface: an int-array literal must cast, not throw a raw CCE
@@ -150,36 +145,103 @@ class ExtensionsSpec extends AnyFunSuite {
     assert(e1.canonicalized semanticEquals e2.canonicalized)
   }
 
-  test("stored box read keeps a pushable coarse disjunction AND the probe in-plan") {
-    // the hybrid's point: parquet row-group skipping still sees plain
-    // comparisons (PushedFilters non-empty) while the row-level covering
-    // is the O(log n) probe — both must appear in the executed plan
+  test("Param: codegen == interpreted at edge values; equal by value") {
     import org.apache.spark.sql.functions._
-    val root = java.nio.file.Files.createTempDirectory("graft_zr_push").toString
-    val st = new graft.table.SnapshotStore(spark, root)
-    st.append(graft.data.Points(spark, "/root/testdata/sf0.001"), "u0",
-      numPartitions = 4)
-    // many scattered boxes so the fine covering exceeds the push cap
-    val boxes = (0 until 24).map { i =>
-      val la = -80.0 + i * 6.5; val lo = -170.0 + i * 13.7
-      graft.geo.MBR(la, lo, la + 4.0, lo + 9.0)
+    import org.apache.spark.sql.catalyst.expressions.{GreaterThanOrEqual, Literal}
+    import org.apache.spark.sql.types.{DoubleType, LongType}
+    import graft.functions.Param
+    import spark.implicits._
+    val ds = Seq(Double.NaN, 0.0, -0.0, Double.PositiveInfinity,
+      Double.NegativeInfinity, 1234.5)
+    val ls = Seq(Long.MinValue, Long.MaxValue, 0L, -1L)
+    def bits(d: Double) = java.lang.Double.doubleToRawLongBits(d)
+    // the values themselves, through one whole-stage projection over a
+    // non-local relation: bit-equal to eval(), and absent from the source
+    val q = spark.range(0, 2, 1, 2).select(
+      ds.map(Param.of) ++ ls.map(Param.of): _*)
+    val row = q.collect().head
+    ds.indices.foreach(i => assert(bits(row.getDouble(i)) ==
+      bits(Param(ds(i), DoubleType).eval().asInstanceOf[Double]), ds(i)))
+    ls.indices.foreach(i => assert(row.getLong(ds.size + i) == ls(i)))
+    val code = q.queryExecution.debug.codegenToSeq().map(_._2).mkString
+    assert(code.contains("references[") && !code.contains("1234.5") &&
+      !code.contains("9223372036854775807"), code.take(2000))
+    // comparisons against every edge value: whole-stage codegen == the
+    // interpreted evaluator, over data holding the same edge values
+    val xs = ds.toDF("x").repartition(2)
+    val ys = ls.toDF("y").repartition(2)
+    def rows(): Seq[Seq[Any]] =
+      ds.flatMap(v => Seq(xs.filter(col("x") >= Param.of(v)), xs.filter(col("x") <= Param.of(v)))
+          .map(_.collect().map(r => bits(r.getDouble(0))).sorted.toSeq)) ++
+      ls.flatMap(v => Seq(ys.filter(col("y") >= Param.of(v)), ys.filter(col("y") <= Param.of(v)))
+          .map(_.collect().map(_.getLong(0)).sorted.toSeq))
+    val codegen = rows()
+    val interpreted =
+      try {
+        spark.conf.set("spark.sql.codegen.wholeStage", "false")
+        spark.conf.set("spark.sql.codegen.factoryMode", "NO_CODEGEN")
+        rows()
+      } finally {
+        spark.conf.unset("spark.sql.codegen.wholeStage")
+        spark.conf.unset("spark.sql.codegen.factoryMode")
+      }
+    assert(codegen == interpreted)
+    // equality and hashing by value, so canonicalization/CSE/exchange
+    // reuse see two equal Params as one expression
+    for (v <- ds) {
+      val (a, b) = (Param(v, DoubleType), Param(v, DoubleType))
+      assert(a == b && a.hashCode == b.hashCode)
+      assert(a.canonicalized semanticEquals b.canonicalized)
+      val ea = GreaterThanOrEqual(Literal(1.0), a)
+      assert(ea.canonicalized semanticEquals GreaterThanOrEqual(Literal(1.0), b).canonicalized)
     }
-    val (df, _, _) = st.readBoxes(boxes)
-    df.collect() // finalize adaptive plan
-    val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("graft_z_in_ranges"), plan.take(800))
-    val pushed = plan.linesIterator.find(_.contains("PushedFilters:"))
-      .getOrElse("")
-    assert(pushed.contains("GreaterThanOrEqual(__z") ||
-      pushed.contains("Or("), pushed)
-    // and the read is still the exact superset contract: refine == truth
-    val got = df.filter(boxes.map(b =>
-        graft.geo.GeoCols.inBox(col("lat"), col("lon"), b)).reduce(_ || _))
-      .select("id").collect().map(_.getLong(0)).sorted.toSeq
-    val pts = graft.data.Points(spark, "/root/testdata/sf0.001")
-    val exp = pts.filter(boxes.map(b =>
-        graft.geo.GeoCols.inBox(col("lat"), col("lon"), b)).reduce(_ || _))
-      .select("id").collect().map(_.getLong(0)).sorted.toSeq
-    assert(got == exp && got.nonEmpty)
+    for (v <- ls) assert(Param(v, LongType) == Param(v, LongType) &&
+      Param(v, LongType).hashCode == Param(v, LongType).hashCode)
+    assert(Param(0.0, DoubleType) != Param(-0.0, DoubleType))
+    assert(Param(1L, LongType) != Param(1.0, DoubleType))
+    assert(!Param(1.0, DoubleType).foldable)
+  }
+
+  test("stored box read drops files off the covering's Z span, probes the rest") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    import graft.geo.{GeoCols, MBR}
+    val root = java.nio.file.Files.createTempDirectory("graft_zr_span").toString
+    try {
+      val st = new graft.table.SnapshotStore(spark, root)
+      // one file with a point in the SE and one in the NW Z quadrant: its
+      // lat/lon bbox [-45, 45] x [-90, 90] overlaps the SW query box, but
+      // its Z span (quadrants 1..2) meets none of the box's ranges
+      // (quadrant 0)
+      st.append(Seq((1L, -45.0, 90.0), (2L, 45.0, -90.0)).toDF("id", "lat", "lon"),
+        "far", numPartitions = 1)
+      st.append(Seq((3L, -40.0, -80.0), (4L, -50.0, -100.0), (5L, 10.0, 10.0))
+        .toDF("id", "lat", "lon"), "near", numPartitions = 1)
+      val box = MBR(-60.0, -120.0, -30.0, -60.0)
+      for ((df, kept, total) <- Seq(st.read(Some(box)), st.readBoxes(Seq(box)))) {
+        assert((kept, total) == (1, 2))
+        df.collect() // finalize adaptive plan
+        val plan = df.queryExecution.executedPlan.toString
+        assert(plan.contains("graft_z_in_ranges"), plan.take(800))
+        assert(df.filter(GeoCols.inBox(col("lat"), col("lon"), box))
+          .select("id").collect().map(_.getLong(0)).sorted.toSeq == Seq(3L, 4L))
+      }
+    } finally graft.ops.OpUtil.deleteTree(java.nio.file.Paths.get(root))
+    // exact superset over real data: many scattered boxes, refine == truth
+    val root2 = java.nio.file.Files.createTempDirectory("graft_zr_push").toString
+    try {
+      val st = new graft.table.SnapshotStore(spark, root2)
+      val pts = graft.data.Points(spark, "/root/testdata/sf0.001")
+      st.append(pts, "u0", numPartitions = 4)
+      val boxes = (0 until 24).map { i =>
+        val la = -80.0 + i * 6.5; val lo = -170.0 + i * 13.7
+        MBR(la, lo, la + 4.0, lo + 9.0)
+      }
+      val (df, _, _) = st.readBoxes(boxes)
+      def inAny = boxes.map(b => GeoCols.inBox(col("lat"), col("lon"), b)).reduce(_ || _)
+      val got = df.filter(inAny).select("id").collect().map(_.getLong(0)).sorted.toSeq
+      val exp = pts.filter(inAny).select("id").collect().map(_.getLong(0)).sorted.toSeq
+      assert(got == exp && got.nonEmpty)
+    } finally graft.ops.OpUtil.deleteTree(java.nio.file.Paths.get(root2))
   }
 }

@@ -5,13 +5,14 @@ import graft.geo.MBR
 import graft.table.SnapshotStore
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
+import java.nio.file.{Files, Path}
 
 /** Iceberg-shaped snapshot layout: atomic commits, file pruning from
   * manifest stats, per-partition lineage + metrics, crash-resume to
   * bit-identical output (SURVEY.md §7.4/§7.6). */
-class SnapshotStoreSpec extends AnyFunSuite {
+class SnapshotStoreSpec extends AnyFunSuite with BeforeAndAfterAll {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -19,7 +20,17 @@ class SnapshotStoreSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  def tmp(): String = Files.createTempDirectory("graft_snap").toString
+  // every store dir this suite creates, deleted once it has run
+  private val tmps = scala.collection.mutable.ArrayBuffer.empty[Path]
+
+  def tmp(): String = synchronized {
+    val d = Files.createTempDirectory("graft_snap")
+    tmps += d
+    d.toString
+  }
+
+  override def afterAll(): Unit =
+    try synchronized(tmps.foreach(graft.ops.OpUtil.deleteTree)) finally super.afterAll()
 
   lazy val pts = Points(spark, "/root/testdata/sf0.001").cache()
 
