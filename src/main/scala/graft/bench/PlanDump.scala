@@ -3,11 +3,44 @@ import graft.data.{Fixtures, Points, Synth}
 import graft.ops.SpatialOps
 import org.apache.spark.sql.functions._
 import java.nio.file.{Files, Paths}
+
+/** Writes `docs/PLANS.md` (relative to the working directory — run it from
+  * the root of a checkout): the `.explain("formatted")` plans the scale
+  * story depends on. Plans pass through [[normalize]], so two runs on one
+  * commit write byte-identical files and a regenerated dump diffs only
+  * where a plan changed. */
 object PlanDump {
+
+  /** Run-invariant form of an explain string: expression ids (`#123`),
+    * `plan_id=`s, AQE query-stage ids (stages are numbered as they finish),
+    * lambda class names and identity hashes, temp-dir names and the
+    * per-write uuid segments of unit dirs and part files differ between
+    * two runs of the same plans. Codegen stage ids, also numbered in
+    * finishing order under AQE, are renumbered by first appearance, which
+    * keeps which operators share a stage. */
+  def normalize(plan: String): String = {
+    val tmp = java.util.regex.Pattern.quote(
+      Paths.get(System.getProperty("java.io.tmpdir")).toString)
+    val stages = scala.collection.mutable.HashMap.empty[String, Int]
+    "\\[codegen id : (\\d+)\\]".r.replaceAllIn(plan, m =>
+        s"[codegen id : ${stages.getOrElseUpdate(m.group(1), stages.size + 1)}]")
+      .replaceAll("#\\d+", "#N")
+      .replaceAll("plan_id=\\d+", "plan_id=N")
+      .replaceAll("(QueryStage\\nOutput \\[\\d+\\]: [^\\n]*\\nArguments: )\\d+", "$1N")
+      .replaceAll("\\$Lambda[^\\s,@]*@[0-9a-f]+", "\\$Lambda")
+      .replaceAll(tmp + "/([A-Za-z_]+?)\\d+(?=/|\\])", "<tmp>/$1")
+      .replaceAll("(/data/[^/\\s,\\]]+)-[0-9a-f]{8}/", "$1-<uuid>/")
+      .replaceAll("part-(\\d+)-[0-9a-f]{8}-t\\d+", "part-$1-<uuid>-t<n>")
+  }
+
   def main(args: Array[String]): Unit = {
     val s = Headline.session(8)
     s.sparkContext.setLogLevel("ERROR")
     val pts = Points(s, "/root/testdata/sf0.001")
+    val tmps = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
+    def tempDir(prefix: String): String = {
+      val d = Files.createTempDirectory(prefix); tmps += d; d.toString
+    }
     val sb = new StringBuilder
     sb ++= "# Physical plans (generated by graft.bench.PlanDump)\n\n"
     sb ++= "The plans the scale story depends on, `.explain(\"formatted\")` output.\n"
@@ -17,7 +50,7 @@ object PlanDump {
       try {
         val plan = df.queryExecution.explainString(org.apache.spark.sql.execution.FormattedMode)
         sb ++= s"\n## $name\n\n$what\n\n```\n"
-        sb ++= plan
+        sb ++= normalize(plan)
         sb ++= "```\n"
       } catch {
         case e: Throwable =>
@@ -48,11 +81,11 @@ object PlanDump {
       SpatialOps.boxJoinSalted(pts, Fixtures.boxes, hotCells = Some((Fixtures.JoinRes,
         Set(Fixtures.boxes.head._2).map(b => graft.geo.CellId.grid(b.minLat, b.minLon, Fixtures.JoinRes))))))
     val images = Synth.table(s, 32).toDF()
-    val tmp = Files.createTempDirectory("pd").toString + "/t"
+    val tmp = tempDir("pd") + "/t"
     images.write.parquet(tmp)
     dump("image tile pipeline", "ReadSchema carries ONLY image_id+phash: the bytes column never leaves the parquet footprint (late materialization).",
       SpatialOps.tileHistogram(Synth.imagePoints(s.read.parquet(tmp).select(col("image_id"), col("phash"))).withColumn("id", xxhash64(col("image_id"))), Fixtures.TileRes))
-    val snapRoot = Files.createTempDirectory("pd_snap").toString
+    val snapRoot = tempDir("pd_snap")
     val store = new graft.table.SnapshotStore(s, snapRoot)
     store.append(pts, "unit-0", numPartitions = 8)
     dump("snapshot read(box) — manifest Z-span prune", "Manifest prunes files driver-side: by lat/lon bounds, and by each file's [minZ, maxZ] span against the fine curve covering. The kept files' rows are probed by graft_z_in_ranges over the MATERIALIZED __z sort key — a codegen'd O(log n) binary search over the covering held by reference (an n-term Or tree is O(n) per row; measured 4.1 s at 256 ranges over 600k cached rows vs 0.17 s for the probe at 2914). Nothing of the covering is pushed to parquet.",
@@ -78,7 +111,7 @@ object PlanDump {
     dump("distanceJoin", "Spatial self-join: the exploded 3x3-neighborhood probe side is tiny and broadcasts; the corpus side is scanned once, joined on its single cell key — never an all-pairs cross.",
       SpatialOps.distanceJoin(pts, Fixtures.distEps, Fixtures.distProbeMod))
     try {
-      val broot = Files.createTempDirectory("pd_bloom").toString
+      val broot = tempDir("pd_bloom")
       val bstore = new graft.table.SnapshotStore(s, broot, bloomKey = Some("id"))
       (0 until 3).foreach(u => bstore.append(
         pts.filter(pmod(col("id"), lit(3)) === u), s"u-$u", numPartitions = 4))
@@ -97,7 +130,7 @@ object PlanDump {
     dump("zonalStats", "The pipJoin kernel (one scan, per-partition cell filter + Poly.contains refine) + partial+final hash aggregate on its poly id — the exchange carries |polys|x|partitions| rows regardless of data size; the tiny literal polygon list left-joins back so empty zones keep their cnt=0 row.",
       SpatialOps.zonalStats(pts, Fixtures.polys))
     try {
-      val hroot = Files.createTempDirectory("pd_hilb").toString
+      val hroot = tempDir("pd_hilb")
       val hstore = new graft.table.SnapshotStore(s, hroot, curve = "hilbert")
       hstore.append(pts, "unit-0", numPartitions = 8)
       dump("hilbert snapshot read(box) — curve-range prune", "Same plan as the Z layout but over Hilbert ranges: consecutive curve positions are grid-adjacent, so coverings need fewer ranges and files carry tighter lat/lon and curve spans.",
@@ -111,7 +144,7 @@ object PlanDump {
     // round-5 stored-table JOIN paths: the same file-level prune the
     // single-box path has, on the operators that carry the metric
     try {
-      val jroot = Files.createTempDirectory("pd_join").toString
+      val jroot = tempDir("pd_join")
       val jstore = new graft.table.SnapshotStore(s, jroot)
       jstore.append(pts, "unit-0", numPartitions = 32)
       val (jdf, jkept, jtot) = jstore.readBoxes(Fixtures.boxes.map(_._2))
@@ -132,8 +165,9 @@ object PlanDump {
           .select(col("q_id"), col("rank"), col("id")))
     } catch { case e: Throwable =>
       sb ++= s"\n## stored-table JOINs\n\nSKIPPED: ${e.getMessage}\n" }
-    Files.writeString(Paths.get("/root/repo/docs/PLANS.md"), sb.toString)
+    Files.writeString(Paths.get("docs", "PLANS.md"), sb.toString)
     println("WROTE docs/PLANS.md")
     s.stop()
+    tmps.foreach(graft.ops.OpUtil.deleteTree)
   }
 }

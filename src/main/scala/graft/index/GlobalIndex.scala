@@ -119,7 +119,7 @@ object GlobalIndex {
     * data before trusting it. */
   def fromStore(store: graft.table.SnapshotStore,
                 fanout: Int = LocalRTree.DefaultFanout): GlobalIndex = {
-    val live = store.manifest().filter(e => e.path.nonEmpty && e.kind == "data")
+    val live = store.manifest().filter(_.kind == "data")
     val leavesByFile = store.indexLeaves()
     val parts = live.sortBy(_.path).zipWithIndex.map { case (e, i) =>
       val leaves = leavesByFile.get(

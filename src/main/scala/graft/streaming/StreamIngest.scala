@@ -19,10 +19,10 @@ import org.apache.spark.sql.streaming.StreamingQuery
   * reference's SAX parse-and-insert loop (OSMParser.java:27-94), with
   * durability per batch instead of per process.
   *
-  * Scale notes: one snapshot per micro-batch means manifest length grows
-  * with batch count — compact() folds history (zero-file lineage markers
-  * keep idempotence intact). State on the driver is just the lineage-id
-  * set read from the current manifest.
+  * Scale notes: one snapshot per micro-batch means the shard count grows
+  * with batch count — compact() folds history (the root's `folded`
+  * lineage list keeps idempotence intact). State on the driver is just
+  * the lineage-id set read from the current snapshot root.
   */
 object StreamIngest {
 

@@ -5,7 +5,7 @@ import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Driver-side JSON codec for the store's metadata artifacts (manifests,
-  * table meta, histogram / Bloom / index sidecars).
+  * table meta, Bloom / index sidecars).
   *
   * Why JSON files instead of parquet datasets: a manifest is a few hundred
   * rows of driver-resident metadata, but writing it through Spark costs a
@@ -34,6 +34,12 @@ final case class ShardMeta(path: String, entries: Int,
                            minLat: Double, maxLat: Double,
                            minLon: Double, maxLon: Double,
                            lineages: Seq[String])
+
+/** A parsed snapshot root ([[MetaJson.manifestListJson]]): the shard rows
+  * (data entries), the inline delete tombstones, and the lineage ids
+  * folded into compactions. */
+final case class ManifestRoot(shards: Seq[ShardMeta], inline: Seq[FileEntry],
+                              folded: Seq[String])
 
 object MetaJson {
 
@@ -83,57 +89,62 @@ object MetaJson {
     }
   }
 
-  /** Two-level manifest LIST (the Iceberg shape at the 10⁶-file design
-    * point): `shards` rows point at per-shard manifest files with union
-    * Z / lat-lon bounds so a box read downloads only overlapping shards;
-    * `entries` holds the few non-data rows INLINE (delete tombstone
-    * manifests + lineage markers), which every plan needs regardless of
-    * the box. A flat manifest is the same document with no `shards`
-    * node — one parser reads both. */
-  def manifestListJson(shards: Seq[ShardMeta], inline: Seq[FileEntry]): String = {
-    val root = mapper.createObjectNode()
-    val sArr = root.putArray("shards")
-    shards.foreach { sm =>
-      val o = sArr.addObject()
-      o.put("path", sm.path); o.put("entries", sm.entries)
-      o.put("minZ", sm.minZ); o.put("maxZ", sm.maxZ)
-      o.put("minLat", sm.minLat); o.put("maxLat", sm.maxLat)
-      o.put("minLon", sm.minLon); o.put("maxLon", sm.maxLon)
-      val la = o.putArray("lineages"); sm.lineages.foreach(la.add)
+  /** A snapshot root — the manifest LIST, the only manifest layout (the
+    * Iceberg shape at any table size): `shards` rows point at per-shard
+    * manifest files holding the DATA entries, with union Z / lat-lon
+    * bounds so a box read downloads only overlapping shards; `entries`
+    * holds the delete tombstones INLINE, which every plan needs regardless
+    * of the box; `folded` lists the lineage ids a compaction rewrote, so
+    * they stay committed for resumable runs without any manifest entry. */
+  def manifestListJson(root: ManifestRoot): String = {
+    val o = mapper.createObjectNode()
+    val sArr = o.putArray("shards")
+    root.shards.foreach { sm =>
+      val so = sArr.addObject()
+      so.put("path", sm.path); so.put("entries", sm.entries)
+      so.put("minZ", sm.minZ); so.put("maxZ", sm.maxZ)
+      so.put("minLat", sm.minLat); so.put("maxLat", sm.maxLat)
+      so.put("minLon", sm.minLon); so.put("maxLon", sm.maxLon)
+      val la = so.putArray("lineages"); sm.lineages.foreach(la.add)
     }
-    val eArr = root.putArray("entries")
-    inline.foreach(e => eArr.add(entryNode(e)))
-    mapper.writerWithDefaultPrettyPrinter().writeValueAsString(root)
+    val eArr = o.putArray("entries")
+    root.inline.foreach(e => eArr.add(entryNode(e)))
+    val fArr = o.putArray("folded")
+    root.folded.foreach(fArr.add)
+    mapper.writerWithDefaultPrettyPrinter().writeValueAsString(o)
   }
 
-  /** Parse either manifest form: (shards, inline entries). Flat manifests
-    * come back as (empty, all entries). Shard bounds read through the
-    * same fail-open defaults as entry stats — an unknown bound makes the
-    * shard un-prunable, never silently skipped. */
-  def parseManifestRoot(json: String): (Seq[ShardMeta], Seq[FileEntry]) = {
-    // ONE readTree for both halves — a second parse of the same document
-    // doubled driver-side cost on every snapshot read (flat manifests can
-    // be MBs before the sharding threshold)
+  /** Parse a snapshot root. Shard bounds read through the same fail-open
+    * defaults as entry stats — an unknown bound makes the shard
+    * un-prunable, never silently skipped. Readers look for data only in
+    * shards and for compacted lineage only in `folded`, so a root missing
+    * either node, or holding a data entry inline, fails instead of
+    * reading as an empty (or lineage-less) table. */
+  def parseManifestRoot(json: String): ManifestRoot = {
     val root = mapper.readTree(json)
-    val entries = entriesFrom(root)
-    val shardsNode = Option(root.get("shards")).map(_.asInstanceOf[ArrayNode])
-    val shards = shardsNode.map { arr =>
-      (0 until arr.size()).map { i =>
-        val o = arr.get(i)
-        // required: a default-to-empty would silently claim "no lineages
-        // in this shard" and re-append committed streaming units
-        val ln = Option(o.get("lineages")).getOrElse(throw new IllegalStateException(
-          s"manifest shard row ${o.get("path")} has no lineages summary"))
-          .asInstanceOf[ArrayNode]
-        val lin = (0 until ln.size()).map(j => ln.get(j).asText())
-        ShardMeta(o.get("path").asText(), o.get("entries").asInt(),
-          l(o, "minZ", Long.MinValue), l(o, "maxZ", Long.MaxValue),
-          d(o, "minLat", -Double.MaxValue), d(o, "maxLat", Double.MaxValue),
-          d(o, "minLon", -Double.MaxValue), d(o, "maxLon", Double.MaxValue),
-          lin)
-      }
-    }.getOrElse(Seq.empty)
-    (shards, entries)
+    def required(n: String): ArrayNode = Option(root.get(n)).getOrElse(
+      throw new IllegalStateException(s"manifest root has no `$n` node"))
+      .asInstanceOf[ArrayNode]
+    val shardsNode = required("shards")
+    val shards = (0 until shardsNode.size()).map { i =>
+      val o = shardsNode.get(i)
+      // required: a default-to-empty would silently claim "no lineages
+      // in this shard" and re-append committed streaming units
+      val ln = Option(o.get("lineages")).getOrElse(throw new IllegalStateException(
+        s"manifest shard row ${o.get("path")} has no lineages summary"))
+        .asInstanceOf[ArrayNode]
+      val lin = (0 until ln.size()).map(j => ln.get(j).asText())
+      ShardMeta(o.get("path").asText(), o.get("entries").asInt(),
+        l(o, "minZ", Long.MinValue), l(o, "maxZ", Long.MaxValue),
+        d(o, "minLat", -Double.MaxValue), d(o, "maxLat", Double.MaxValue),
+        d(o, "minLon", -Double.MaxValue), d(o, "maxLon", Double.MaxValue),
+        lin)
+    }
+    val inline = entriesFrom(root)
+    inline.find(_.kind == "data").foreach(e => throw new IllegalStateException(
+      s"manifest root holds data entry '${e.path}' inline; data entries live in shards"))
+    val fNode = required("folded")
+    ManifestRoot(shards, inline, (0 until fNode.size()).map(i => fNode.get(i).asText()))
   }
 
   /** The pinned table layout: curve, zRes, histRes and the data schema
@@ -156,45 +167,11 @@ object MetaJson {
       DataType.fromJson(schema.toString).asInstanceOf[StructType])
   }
 
-  // hist/index sidecars carry up to 4^histRes rows per unit — the ONE
+  // index sidecars carry up to 4^histRes rows per unit — the ONE
   // metadata payload where codec speed matters (every append serializes
-  // them, every fromStore/hotCells parses them). These four codecs use
+  // them, every fromStore/hotCells parses them). The sidecar codecs use
   // jackson's STREAMING generator/parser instead of the tree model (no
-  // per-value node allocation); the document format is unchanged and the
-  // tree-model parsers above still read the same files.
-
-  def histJson(cells: Seq[(Long, Long)]): String = {
-    val sw = new java.io.StringWriter(cells.size * 16 + 32)
-    val g = mapper.getFactory.createGenerator(sw)
-    g.writeStartObject()
-    g.writeArrayFieldStart("cells")
-    cells.foreach { case (c, n) =>
-      g.writeStartArray(); g.writeNumber(c); g.writeNumber(n); g.writeEndArray()
-    }
-    g.writeEndArray()
-    g.writeEndObject()
-    g.close()
-    sw.toString
-  }
-
-  def parseHist(json: String): Seq[(Long, Long)] = {
-    import com.fasterxml.jackson.core.JsonToken
-    val p = mapper.getFactory.createParser(json)
-    val out = Seq.newBuilder[(Long, Long)]
-    try {
-      // {"cells": [[c,n], ...]} — walk tokens, no tree
-      while (p.nextToken() != null && p.currentToken() != JsonToken.START_ARRAY) ()
-      var t = p.nextToken()
-      while (t == JsonToken.START_ARRAY) {
-        p.nextToken(); val c = p.getLongValue
-        p.nextToken(); val n = p.getLongValue
-        p.nextToken() // END_ARRAY of the row
-        out += ((c, n))
-        t = p.nextToken()
-      }
-    } finally p.close()
-    out.result()
-  }
+  // per-value node allocation).
 
   def bloomJson(keyCol: String, k: Int, files: Seq[(String, Array[Long])]): String = {
     val sw = new java.io.StringWriter(files.map(_._2.length).sum * 12 + 256)

@@ -36,18 +36,19 @@ final case class FileEntry(path: String, rows: Long, minZ: Long, maxZ: Long,
   *
   * {{{
   * <root>/data/<lineage>-<uuid>/part-*.parquet        immutable data files
-  * <root>/meta/snap-<n>                               manifest (JSON of FileEntry)
+  * <root>/meta/snap-<n>                               snapshot root (manifest list)
+  * <root>/meta/snap-<n>-shard-<k>-<uid>.json          data entries (JSON of FileEntry)
   * <root>/meta/current                                atomic pointer "n"
   * <root>/meta/table.json                             pinned layout (curve, zRes,
   *                                                    histRes, data schema)
-  * <root>/meta/{hist,bloom,index}/<lineage>-<id>.json write-time sidecars
+  * <root>/meta/{bloom,index}/<lineage>-<id>.json      write-time sidecars
   * }}}
   *
   * The first commit pins the table schema (the keyed unit's columns,
   * `__z` included); every later unit must match it, and every read plans
   * its parquet scans from it — never from a file footer.
   *
-  * Commits append a new manifest = parent's entries + new entries, then
+  * Commits write a new root = parent's shards + new entries, then
   * atomically swing `current` (write-temp + ATOMIC_MOVE). Readers plan
   * from a snapshot: file pruning by Z-range against a query box's covering
   * cells — the distributed analog of the reference's subtree prune
@@ -55,36 +56,25 @@ final case class FileEntry(path: String, rows: Long, minZ: Long, maxZ: Long,
   * wall-clock metrics make multi-unit jobs resumable: a rerun skips units
   * already present in the current snapshot ([[resumableRun]]).
   *
-  * Scale note — manifest size: a flat manifest is O(file count); at the
-  * 10¹²-row design point (~10⁶ files of ~100 MB) that is a few hundred MB
-  * of driver-side JSON per read. Past `manifestShardRows` data entries a
-  * commit therefore writes Iceberg's TWO-LEVEL shape — a manifest LIST
-  * whose rows carry per-shard Z/lat-lon union bounds, data entries
-  * chunked into shard files — and box reads download only the shards
-  * overlapping the query ([[manifestPartial]]); flat manifests read
-  * through the same parser. Commits onto a sharded
-  * parent REUSE its shard files by reference and write only their own
-  * entries as a new shard, so the commit path is O(commit size), not
-  * O(table) ([[writeManifestFile]]); [[compact]] re-chunks globally
-  * (Iceberg's rewrite-manifests analog). Key lookups ([[lookupByKey]])
+  * Manifest layout — one at every size, Iceberg's TWO-LEVEL shape: the
+  * root `snap-N` is a manifest LIST whose rows carry per-shard Z/lat-lon
+  * union bounds, with the data entries chunked (`manifestShardRows` per
+  * shard) into shard files; delete tombstones ride inline in the root and
+  * compacted lineage ids in its `folded` list. Box reads download only the
+  * shards overlapping the query ([[manifestPartial]]) — at the 10¹²-row
+  * design point (~10⁶ files of ~100 MB) a whole manifest would be a few
+  * hundred MB of driver-side JSON per read. Commits carry the parent's
+  * shard files by reference and write only their own entries as new
+  * shards, so the commit path is O(commit size), not O(table)
+  * ([[writeManifestFile]]); [[compact]] re-chunks globally (Iceberg's
+  * rewrite-manifests analog). Key lookups ([[lookupByKey]])
   * prune shards through the lineage summaries: the per-unit Bloom
   * sidecars name the units that might hold a probed key, and only
   * shards carrying those units (or units with no consulted sidecar —
   * fail open) are parsed. The remaining O(table) term on the lookup
   * path is the Bloom sidecar read itself — the index being consulted.
-  * Compaction bounds entry-count growth between appends either way.
+  * Compaction bounds entry and shard counts between appends.
   */
-/** What a commit wrote, for read-back verification: `fullExpect` is the
-  * complete expected entry list when the root was written whole (flat
-  * root, first sharding conversion, or a replacing commit); on the
-  * shard-REUSE path it is None and verification checks the root's shard
-  * list + inline entries + only the newly created shards. */
-private[table] final case class CommitLayout(
-    fullExpect: Option[Seq[FileEntry]],
-    rootShardPaths: Seq[String],
-    newShards: Seq[(String, Seq[FileEntry])],
-    inline: Seq[FileEntry])
-
 final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
                           histRes: Int = SnapshotStore.DefaultHistRes,
                           bloomKey: Option[String] = None,
@@ -133,7 +123,6 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
 
   private val metaDir = Paths.get(root, "meta")
   private val currentPtr = metaDir.resolve("current")
-  private val histDir = metaDir.resolve("hist")
   private val bloomDir = metaDir.resolve("bloom")
   private val indexDir = metaDir.resolve("index")
   private val tableMetaPath = metaDir.resolve("table.json")
@@ -218,14 +207,14 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
   def manifest(snapshotId: Long = currentSnapshotId): Seq[FileEntry] =
     manifestPartial(snapshotId, None)._1
 
-  /** Manifest read with optional SHARD pruning: when the snapshot is a
-    * two-level manifest list and `boxes` is given, only shards whose
-    * union bounds overlap some box are downloaded and parsed — at the
+  /** Manifest read with optional SHARD pruning: when `boxes` is given,
+    * only shards whose union bounds overlap some box are downloaded and
+    * parsed — at the
     * 10⁶-file design point a box read touches a handful of shard files
     * instead of a few hundred MB of driver-side JSON; with
     * `lineageHint` (a key lookup's Bloom verdict per lineage), only shards
     * whose `lineages` summary holds a wanted lineage load. Inline entries
-    * (delete manifests, lineage markers) always load. Returns the loaded
+    * (delete tombstones) always load. Returns the loaded
     * entries plus the TOTAL data-file count of the snapshot (known from
     * the shard rows without reading them) so pruning stays observable. */
   private[graft] def manifestPartial(snapshotId: Long,
@@ -233,72 +222,71 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
                                      lineageHint: Option[String => Boolean] = None,
                                      rangesHint: Option[Seq[(Long, Long)]] = None)
       : (Seq[FileEntry], Int) = {
-    def dataCount(es: Seq[FileEntry]): Int =
-      es.count(e => e.kind == "data" && e.path.nonEmpty)
     if (snapshotId == 0) (Seq.empty, 0)
     else {
       if (!Files.exists(metaDir.resolve(s"snap-$snapshotId")))
         throw new IllegalStateException(
           s"snapshot $snapshotId is expired or was never committed")
-      val (shards, inline) = readRoot(snapshotId)
+      val root = readRoot(snapshotId)
       val zBounds = rangesHint.map(ZRangeContains.bounds)
-      if (shards.isEmpty) (inline, dataCount(inline))
-      else {
-        // the bound prunes are fail-open: a shard with unknown bounds
-        // always loads — a pruner may only skip what it can PROVE
-        // irrelevant. The curve-range test rides the query's own merged
-        // covering (rangesHint — shards are chunked by minZ, so their
-        // [minZ, maxZ] intervals partition the key axis after
-        // compaction): a shard whose interval meets no
-        // covering range holds no row of any query box, even when its
-        // lat/lon union still overlaps one (per-append shards span wide
-        // boxes). Sound because shards carry ONLY data entries —
-        // tombstones and markers stay inline in the root.
-        val wanted = shards.filter { sm =>
-          boxes.forall(bs => bs.exists(b =>
-            MBR(sm.minLat, sm.minLon, sm.maxLat, sm.maxLon).overlaps(b))) &&
-          zBounds.forall(ZRangeContains.meets(_, sm.minZ, sm.maxZ)) &&
-          lineageHint.forall(want => sm.lineages.exists(want))
-        }
-        val loaded = inline ++ wanted.flatMap(sm =>
-          MetaJson.parseManifest(Files.readString(metaDir.resolve(sm.path))))
-        (loaded, shards.map(_.entries).sum + dataCount(inline))
+      // the bound prunes are fail-open: a shard with unknown bounds
+      // always loads — a pruner may only skip what it can PROVE
+      // irrelevant. The curve-range test rides the query's own merged
+      // covering (rangesHint — shards are chunked by minZ, so their
+      // [minZ, maxZ] intervals partition the key axis after
+      // compaction): a shard whose interval meets no
+      // covering range holds no row of any query box, even when its
+      // lat/lon union still overlaps one (per-append shards span wide
+      // boxes). Sound because shards carry ONLY data entries —
+      // tombstones stay inline in the root.
+      val wanted = root.shards.filter { sm =>
+        boxes.forall(bs => bs.exists(b =>
+          MBR(sm.minLat, sm.minLon, sm.maxLat, sm.maxLon).overlaps(b))) &&
+        zBounds.forall(ZRangeContains.meets(_, sm.minZ, sm.maxZ)) &&
+        lineageHint.forall(want => sm.lineages.exists(want))
       }
+      val loaded = root.inline ++ wanted.flatMap(sm =>
+        MetaJson.parseManifest(Files.readString(metaDir.resolve(sm.path))))
+      (loaded, root.shards.map(_.entries).sum)
     }
   }
 
-  /** Parse the root of snapshot `snapshotId`: (shards, inline entries).
-    * The root is a JSON FILE; anything else under the `snap-N` name (a
-    * directory, say) fails naming the path, so no reader guesses at its
-    * contents and no reference scan treats it as "references nothing". */
-  private def readRoot(snapshotId: Long): (Seq[ShardMeta], Seq[FileEntry]) = {
+  /** Parse the root of snapshot `snapshotId`. The root is a JSON FILE;
+    * anything else under the `snap-N` name (a directory, say), or a
+    * document that is not a manifest list, fails naming the path, so no
+    * reader guesses at its contents and no reference scan treats it as
+    * "references nothing". */
+  private def readRoot(snapshotId: Long): ManifestRoot = {
     val p = metaDir.resolve(s"snap-$snapshotId")
     if (!Files.isRegularFile(p))
       throw new IllegalStateException(
         s"snapshot root $p is not a regular file; it cannot be read as a manifest")
-    MetaJson.parseManifestRoot(Files.readString(p))
+    try MetaJson.parseManifestRoot(Files.readString(p))
+    catch { case e: IllegalStateException =>
+      throw new IllegalStateException(s"snapshot root $p: ${e.getMessage}", e) }
   }
 
   /** Lineage ids present in the current snapshot — the idempotence check
     * streaming ingestion runs per MICRO-BATCH ([[resumableRun]] /
-    * StreamIngest). A flat manifest's root holds every entry; a two-level
-    * manifest's shard rows carry their `lineages` summaries, so this reads
-    * the ROOT alone either way (KBs at the 10⁶-file design point). */
-  def committedLineage: Set[String] = {
-    val cur = currentSnapshotId
-    if (cur == 0) Set.empty
+    * StreamIngest). */
+  def committedLineage: Set[String] = lineageSet(currentSnapshotId)
+
+  /** Lineage ids of snapshot `snapshotId`, from its ROOT alone (KBs at the
+    * 10⁶-file design point): the shard rows' `lineages` summaries, the
+    * inline tombstones' ids and the ids folded into compactions. */
+  private def lineageSet(snapshotId: Long): Set[String] =
+    if (snapshotId == 0) Set.empty
     else {
-      val (shards, inline) = readRoot(cur)
-      inline.map(_.lineageId).toSet ++ shards.flatMap(_.lineages)
+      val root = readRoot(snapshotId)
+      root.inline.map(_.lineageId).toSet ++ root.shards.flatMap(_.lineages) ++ root.folded
     }
-  }
 
   /** Live-row count from manifest stats alone — the plan-time input to
     * [[graft.geo.CellId.pickResolution]] (adaptive covering resolution
     * with ZERO data scans; tombstone rows are subtracted as an upper
     * bound on dead rows). */
   def totalRows: Long = {
-    val m = manifest().filter(_.path.nonEmpty)
+    val m = manifest()
     m.filter(_.kind == "data").map(_.rows).sum -
       m.filter(_.kind == "delete").map(_.rows).sum
   }
@@ -406,23 +394,22 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     }
   }
 
-  /** Three driver-written JSON sidecars for a just-written unit, from the
+  /** Two driver-written JSON sidecars for a just-written unit, from the
     * in-task stats of its files (none for an empty unit):
     *
-    *  - `meta/hist/<lineage>-<uuid>.json` — the unit's per-cell histogram
-    *    at `histRes` ([[hotCells]]'s write-time skew hint);
     *  - `meta/bloom/<lineage>-<uuid>.json` — per-file Bloom bitsets over
     *    `bloomKey` (skipped when the store has none or the table lacks the
     *    column) — [[lookupByKey]]'s file-skipping input;
     *  - `meta/index/<lineage>-<uuid>.json` — per-file leaf slabs
-    *    (cell, cnt, MBR): the PERSISTED index summaries
+    *    (cell, cnt, MBR) at `histRes`: the PERSISTED index summaries
     *    [[graft.index.GlobalIndex.fromStore]] rebuilds the broadcastable
     *    index from with zero scans (the reference persists its tree the
-    *    same way, IndexFile.java:37-95).
+    *    same way, IndexFile.java:37-95), and whose counts summed per cell
+    *    are [[hotCells]]'s write-time skew hint.
     *
     * Written BEFORE the commit, under UNIQUE names: an aborted commit or a
     * repeated lineage id leaves orphan sidecars, which only OVERCOUNT the
-    * histogram hint (safe direction) and are never consulted by
+    * hot-cell hint (safe direction) and are never consulted by
     * path-keyed readers (lookups/index key by manifest paths). */
   private def writeSidecarJson(lineageId: String,
                             files: Seq[(FileEntry, UnitFileStats)])
@@ -438,10 +425,6 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
       Files.writeString(p, json, StandardOpenOption.CREATE_NEW)
       written += p
     }
-    val cellTotals = scala.collection.mutable.HashMap.empty[Long, Long]
-    byFile.foreach { case (_, fs) => fs.leaves.foreach { l =>
-      cellTotals.update(l._1, cellTotals.getOrElse(l._1, 0L) + l._2) } }
-    put(histDir, MetaJson.histJson(cellTotals.toSeq.sortBy(_._1)))
     put(indexDir, MetaJson.indexJson(histRes,
       byFile.map { case (f, fs) => (f, fs.leaves.toSeq) }))
     // the unit's files share one schema: either all carry bitsets or none
@@ -520,7 +503,7 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     if (!Files.exists(dir)) Seq.empty
     else listDir(dir).filter(_.getFileName.toString.endsWith(".json"))
 
-  /** Resolution the write-time stats (hist + index leaves) are keyed at. */
+  /** Resolution the write-time index leaves are keyed at. */
   def statsRes: Int = histRes
 
   /** Persisted per-file index summaries (leaf slabs keyed by normalized
@@ -534,18 +517,17 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
       .toMap
 
   /** Write-time hot-cell set at resolution `r` — the zero-query-time-scan
-    * input to [[graft.ops.SpatialOps.boxJoinSalted]]. Counts come from the
-    * persisted per-unit histograms (kept at `histRes`): rolled up through
-    * parent cells for coarser r, expanded to descendants for finer r.
-    * Both directions yield a SUPERSET of the truly-hot set (deletes are
-    * not subtracted either) — exactly the safe side for a salting hint. */
+    * input to [[graft.ops.SpatialOps.boxJoinSalted]]. Counts are the
+    * persisted index leaves' counts (kept at `histRes`) summed per cell
+    * over every index sidecar: rolled up through parent cells for coarser
+    * r, expanded to descendants for finer r. Both directions yield a
+    * SUPERSET of the truly-hot set (deletes are not subtracted either) —
+    * exactly the safe side for a salting hint. */
   def hotCells(r: Int, hotThreshold: Double = 0.05): Set[Long] = {
-    val files = sidecarFiles(histDir)
-    if (files.isEmpty) return Set.empty
     val merged = scala.collection.mutable.HashMap.empty[Long, Long]
-    files.foreach(f => MetaJson.parseHist(Files.readString(f)).foreach {
-      case (c, n) => merged.update(c, merged.getOrElse(c, 0L) + n)
-    })
+    indexLeaves().valuesIterator.flatten.foreach { l =>
+      merged.update(l._1, merged.getOrElse(l._1, 0L) + l._2) }
+    if (merged.isEmpty) return Set.empty
     val cells = merged.toArray
     val total = cells.map(_._2).sum
     val hotAtHist = cells.filter(_._2 > total * hotThreshold).map(_._1)
@@ -572,8 +554,9 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     * race only exercises it probabilistically). */
   private[graft] var afterParentCapture: () => Unit = () => ()
 
-  /** Manifest-append commit: parent entries + new entries → snap-(n+1),
-    * atomic pointer swing; `schema` (the written files' columns) is pinned
+  /** Manifest-append commit: parent shards + new entries → snap-(n+1),
+    * atomic pointer swing; `folded` joins the root's compacted-lineage
+    * list; `schema` (the written files' columns) is pinned
     * or validated against the table's pin first. Single-writer (the
     * driver) — matching the reference's single-threaded writer;
     * multi-writer needs a CAS on `current`, which real Iceberg's catalog
@@ -593,7 +576,8 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     * streaming ingestion) — so it fails loudly instead. */
   private def commit(newEntries: Seq[FileEntry], schema: StructType,
                      replaceParent: Boolean = false,
-                     expectedParent: Long = -1L): Long = {
+                     expectedParent: Long = -1L,
+                     folded: Seq[String] = Seq.empty): Long = {
     val parent = if (expectedParent >= 0) expectedParent else currentSnapshotId
     afterParentCapture()
     def assertUnmoved(): Unit =
@@ -612,8 +596,8 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     // the race leaves one of them in place and this commit FAILS instead
     // of silently replacing a snapshot it never read (real Iceberg moves
     // this CAS into the catalog; the seam is identical)
-    val layout =
-      try writeManifestFile(next, parent, stamped, replaceParent)
+    val (written, fresh) =
+      try writeManifestFile(next, parent, stamped, folded, replaceParent)
       catch {
         case e: java.nio.file.FileAlreadyExistsException =>
           throw new java.util.ConcurrentModificationException(
@@ -631,29 +615,23 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     // reference must contain exactly the entries THIS commit wrote. A
     // stalled writer whose stale snap dir was swept and recreated by a
     // racer would otherwise swing the pointer onto the racer's manifest
-    // and silently lose its own entries while reporting success. The
-    // shard-reuse path verifies WITHOUT a full manifest parse (commits
-    // must stay O(commit), not O(table)): the root's shard list and
-    // inline entries must be exactly what this commit wrote, and only
-    // the shards this commit CREATED are re-parsed — carried shards are
-    // immutable files a racer cannot have produced under our uid names.
+    // and silently lose its own entries while reporting success. This
+    // verifies WITHOUT a full manifest parse (commits must stay
+    // O(commit), not O(table)): the root's shard list, inline entries and
+    // folded lineage must be exactly what this commit wrote, and only the
+    // shards this commit CREATED are re-parsed — carried shards are
+    // immutable files a racer cannot have produced under our uid names
+    // (a replacing commit creates every shard it lists).
     def tup(e: FileEntry) = (e.lineageId, e.path, e.rows, e.seq)
-    def mismatch(): Nothing =
+    val got = readRoot(next)
+    if (got.shards.map(_.path) != written.shards.map(_.path) ||
+        got.inline.map(tup).sorted != written.inline.map(tup).sorted ||
+        got.folded != written.folded ||
+        fresh.exists { case (name, ents) =>
+          MetaJson.parseManifest(Files.readString(metaDir.resolve(name))).map(tup).sorted !=
+            ents.map(tup).sorted })
       throw new java.util.ConcurrentModificationException(
         s"snap-$next does not contain this commit's entries — replaced by another writer")
-    layout.fullExpect match {
-      case Some(all) =>
-        if (manifest(next).map(tup).sorted != all.map(tup).sorted) mismatch()
-      case None =>
-        val (shards2, inline2) =
-          MetaJson.parseManifestRoot(Files.readString(metaDir.resolve(s"snap-$next")))
-        if (shards2.map(_.path) != layout.rootShardPaths) mismatch()
-        if (inline2.map(tup).sorted != layout.inline.map(tup).sorted) mismatch()
-        layout.newShards.foreach { case (name, ents) =>
-          val got = MetaJson.parseManifest(Files.readString(metaDir.resolve(name)))
-          if (got.map(tup).sorted != ents.map(tup).sorted) mismatch()
-        }
-    }
     val tmp = metaDir.resolve(s"current.tmp.$next")
     Files.writeString(tmp, next.toString, StandardOpenOption.CREATE_NEW)
     Files.move(tmp, currentPtr, StandardCopyOption.ATOMIC_MOVE,
@@ -661,80 +639,51 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     next
   }
 
-  /** Write the snap-`next` manifest. Small manifests stay FLAT (one JSON
-    * file); past `manifestShardRows` data entries the manifest becomes a
-    * two-level LIST — data entries chunked into shard files whose union
-    * bounds ride in the root, so a box read downloads only overlapping
-    * shards ([[manifestPartial]]). A commit onto an already-sharded
-    * parent REUSES the parent's shard files by reference (the Iceberg
+  /** Write the snap-`next` root — the manifest LIST, whatever the table
+    * size. The parent's shard files are carried BY REFERENCE (the Iceberg
     * manifest-list contract: manifests are immutable and carried forward,
-    * not rewritten) and chunks only ITS OWN new data entries into new
-    * shard file(s) — commits are O(commit size) driver JSON, not O(table
-    * file count). Per-append shards overlap in Z (each append spans its
-    * own key range), so their union bounds are looser than a global
-    * re-sort; [[compact]]'s replacing commit re-chunks globally by minZ,
-    * exactly like Iceberg's rewrite-manifests maintenance. Shards are
-    * written FIRST under commit-unique names; the root file write is the
-    * CREATE_NEW tripwire either way, so concurrency semantics are
-    * unchanged. Non-data entries (delete manifests, lineage markers)
-    * stay inline in the root — every plan needs them. */
+    * not rewritten; a first or replacing commit has no parent shards) and
+    * only THIS commit's data entries are chunked, `manifestShardRows` per
+    * shard, into new shard file(s) — commits are O(commit size) driver
+    * JSON, not O(table file count). Per-append shards overlap in Z (each
+    * append spans its own key range), so their union bounds are looser
+    * than a global re-sort; [[compact]]'s replacing commit re-chunks
+    * globally by minZ, exactly like Iceberg's rewrite-manifests
+    * maintenance. Delete tombstones stay inline in the root — every plan
+    * needs them — and `folded` extends the parent's compacted-lineage
+    * list. Shards are written FIRST under commit-unique names; the root
+    * file write is the CREATE_NEW tripwire. Returns the root written and
+    * the shards this commit created, with their entries. */
   private def writeManifestFile(next: Long, parent: Long,
                                 stamped: Seq[FileEntry],
-                                replaceParent: Boolean): CommitLayout = {
-    def isData(e: FileEntry) = e.kind == "data" && e.path.nonEmpty
-    val rootPath = metaDir.resolve(s"snap-$next")
-    val (pShards, pInline) =
-      if (replaceParent || parent == 0) (Seq.empty[ShardMeta], Seq.empty[FileEntry])
+                                folded: Seq[String],
+                                replaceParent: Boolean)
+      : (ManifestRoot, Seq[(String, Seq[FileEntry])]) = {
+    val prev =
+      if (replaceParent || parent == 0) ManifestRoot(Seq.empty, Seq.empty, Seq.empty)
       else readRoot(parent)
-    val newData = stamped.filter(isData)
+    val (data, deletes) = stamped.partition(_.kind == "data")
     val uid = java.util.UUID.randomUUID().toString.take(8)
     val written = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
-    def writeShards(data: Seq[FileEntry]): Seq[(ShardMeta, Seq[FileEntry])] =
-      data.sortBy(_.minZ).grouped(manifestShardRows)
+    try {
+      val fresh = data.sortBy(_.minZ).grouped(manifestShardRows)
         .zipWithIndex.map { case (g, k) =>
           val name = s"snap-$next-shard-$k-$uid.json"
-          val p = metaDir.resolve(name)
-          Files.writeString(p, MetaJson.manifestJson(g),
+          val path = metaDir.resolve(name)
+          Files.writeString(path, MetaJson.manifestJson(g),
             StandardOpenOption.CREATE_NEW)
-          written += p
+          written += path
           (ShardMeta(name, g.size,
             g.map(_.minZ).min, g.map(_.maxZ).max,
             g.map(_.minLat).min, g.map(_.maxLat).max,
             g.map(_.minLon).min, g.map(_.maxLon).max,
             lineages = g.map(_.lineageId).distinct), g)
         }.toSeq
-    try {
-      if (pShards.isEmpty) {
-        // flat parent (or empty/replacing commit): all parent entries are
-        // inline in its root, already in hand — no shard files to carry
-        val flatData = pInline.filter(isData) ++ newData
-        if (flatData.size <= manifestShardRows) {
-          val all = pInline ++ stamped
-          Files.writeString(rootPath, MetaJson.manifestJson(all),
-            StandardOpenOption.CREATE_NEW)
-          CommitLayout(Some(all), Seq.empty, Seq.empty, Seq.empty)
-        } else {
-          // one-time conversion to the two-level shape: global minZ chunk
-          val inline = pInline.filterNot(isData) ++ stamped.filterNot(isData)
-          val shards = writeShards(flatData).map(_._1)
-          Files.writeString(rootPath, MetaJson.manifestListJson(shards, inline),
-            StandardOpenOption.CREATE_NEW)
-          CommitLayout(Some(inline ++ flatData), Seq.empty, Seq.empty, Seq.empty)
-        }
-      } else {
-        // sharded parent: carry its shards BY REFERENCE, chunk only the
-        // new data entries (usually one small shard per append). A
-        // sharded root normally holds no inline data entries, but the
-        // format admits them (one parser reads both layouts) — fold any
-        // into the new shard rather than silently dropping them
-        val inline = pInline.filterNot(isData) ++ stamped.filterNot(isData)
-        val fresh = writeShards(pInline.filter(isData) ++ newData)
-        val shards = pShards ++ fresh.map(_._1)
-        Files.writeString(rootPath, MetaJson.manifestListJson(shards, inline),
-          StandardOpenOption.CREATE_NEW)
-        CommitLayout(None, shards.map(_.path),
-          fresh.map { case (sm, g) => sm.path -> g }, inline)
-      }
+      val root = ManifestRoot(prev.shards ++ fresh.map(_._1), prev.inline ++ deletes,
+        prev.folded ++ folded)
+      Files.writeString(metaDir.resolve(s"snap-$next"), MetaJson.manifestListJson(root),
+        StandardOpenOption.CREATE_NEW)
+      (root, fresh.map { case (sm, g) => sm.path -> g })
     } catch {
       case e: Throwable =>
         // a failed root write (lost race / crash mid-commit) must not
@@ -765,8 +714,8 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     * `excludeIds`. Under shard reuse a shard written at snap-k is
     * referenced by k and every descendant until a replacing commit —
     * deletion must check the whole root set, not just the snapshot being
-    * dropped. Roots of sharded tables are KBs (shard list + inline
-    * non-data rows), so this scan is cheap even at the 10⁶-file design
+    * dropped. Roots are KBs (shard list + inline tombstones + folded
+    * lineage ids), so this scan is cheap even at the 10⁶-file design
     * point. Returns None if ANY root is unreadable — an IO error, or a
     * `snap-N` that is not a regular file: an unknown reference set must
     * FAIL CLOSED — callers delete nothing rather than treat "couldn't
@@ -777,7 +726,7 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
       snapRootId(p.getFileName.toString) match {
         case Some(id) if !excludeIds.contains(id) =>
           try {
-            acc ++= readRoot(id)._1.map(_.path)
+            acc ++= readRoot(id).shards.map(_.path)
             true
           } catch { case _: Throwable => false }
         case _ => true
@@ -787,7 +736,7 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
   }
 
   /** Delete a snapshot's manifest root AND the shard files only IT
-    * references (if the snapshot is a two-level list) — shards carried
+    * references — shards carried
     * forward into retained snapshots must survive, and the shard names
     * are only recorded in roots, so the root must be read before it is
     * removed. */
@@ -801,7 +750,7 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
   private def deleteSnapshotArtifacts(k: Long,
                                       keep: Option[Set[String]]): Unit = {
     try {
-      val (shards, _) = readRoot(k)
+      val shards = readRoot(k).shards
       keep match {
         case Some(ks) if shards.nonEmpty =>
           shards.filterNot(sm => ks.contains(sm.path))
@@ -887,61 +836,38 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     * join operator's exact predicate refines. */
   def readBoxes(boxes: Seq[MBR]): (DataFrame, Int, Int) = {
     require(boxes.nonEmpty, "readBoxes needs at least one box")
-    // covering computed ONCE per read, OUTSIDE the refine closure: planAt
-    // invokes `refine` once per tombstone sequence group, and the quadtree
-    // descents + 4096-range merge are driver work proportional to geometry
-    // count — they must not multiply by delete-chain length.
-    //
-    // fine covering cap 4096: the row-level membership test is an
-    // O(log n) binary search ([[GeoCols.zCoveringPredicate]]), so a
-    // finer covering only SHRINKS the superset — the old 256 cap
-    // existed because the covering rode in an O(n)-per-row BETWEEN
-    // disjunction (measured 4.1 s at 256 ranges over 600k rows)
-    val ranges = CellId.mergeRanges(boxes.flatMap(curveRangesForMbr),
-      maxRanges = 4096)
-    // selectivity cutoff: when the merged covering spans most of the
-    // key domain (e.g. globe-scattered join boxes), the predicate
-    // excludes almost nothing — skip it entirely rather than pay even
-    // the cheap probe. The read stays a superset either way; the
-    // operator's exact predicate refines (the files still prune by Z span).
-    val covered = ranges.map(r => (r._2 - r._1 + 1).toDouble).sum
-    val skipRefine = covered / curveKeySpan > 0.5
-    planAt(currentSnapshotId,
-      keep = e => boxes.exists(b =>
-        MBR(e.minLat, e.minLon, e.maxLat, e.maxLon).overlaps(b)),
-      refine = df =>
-        if (skipRefine) df
-        else df.filter(GeoCols.zCoveringPredicate(col("__z"), ranges)),
-      boxesHint = Some(boxes),
-      rangesHint = Some(ranges))
-  }
-
-  /** Size of this store's curve-key domain (for covering-selectivity
-    * estimates): quadtree curves index 4^zRes cells; the STR key places
-    * strips at bit 32 ([[GeoCols.strCol]]), so its numeric domain is
-    * 2^(strips+32) — STR coverings (≤ one range per strip) always look
-    * highly selective under this ratio and keep their refine, which is
-    * the right call: they cost at most `strips` comparisons. */
-  private def curveKeySpan: Double = curve match {
-    case "str" => math.pow(2.0, strStripRes + 32)
-    case _     => math.pow(4.0, zRes)
+    planBoxes(currentSnapshotId, Some(boxes))
   }
 
   /** Time travel: the same planned read against ANY committed snapshot —
     * vacuum() keeps every snapshot's files, so pre-compaction history
     * stays queryable until snapshots are expired out-of-band. */
-  def readAt(snapshotId: Long, box: Option[MBR] = None): (DataFrame, Int, Int) = {
-    // hoisted for the same reason as [[readBoxes]]: one covering per read,
-    // not one per tombstone sequence group
-    val ranges = box.map(curveRangesForMbr)
+  def readAt(snapshotId: Long, box: Option[MBR] = None): (DataFrame, Int, Int) =
+    planBoxes(snapshotId, box.map(Seq(_)))
+
+  /** The one box-read planner behind [[read]], [[readAt]] and
+    * [[readBoxes]]: no boxes reads everything; otherwise files disjoint
+    * from every box, or whose Z span meets no range of the boxes' merged
+    * covering, are skipped and the kept rows are probed against that
+    * covering. A single box's covering is already sorted, disjoint and
+    * within 1024 ranges, so the merge leaves it as it is.
+    *
+    * The covering is computed ONCE per read, outside the refine closure:
+    * planAt invokes `refine` once per tombstone sequence group, and the
+    * quadtree descents + merge are driver work proportional to geometry
+    * count — they must not multiply by delete-chain length. Fine covering
+    * cap 4096: the row-level membership test is an O(log n) binary search
+    * ([[GeoCols.zCoveringPredicate]]), so a finer covering only SHRINKS
+    * the superset. */
+  private def planBoxes(snapshotId: Long, boxes: Option[Seq[MBR]]): (DataFrame, Int, Int) = {
+    val ranges = boxes.map(bs =>
+      CellId.mergeRanges(bs.flatMap(curveRangesForMbr), maxRanges = 4096))
     planAt(snapshotId,
-      keep = e => box.forall(b =>
-        MBR(e.minLat, e.minLon, e.maxLat, e.maxLon).overlaps(b)),
-      refine = df => ranges match {
-        case Some(rs) => df.filter(GeoCols.zCoveringPredicate(col("__z"), rs))
-        case None     => df
-      },
-      boxesHint = box.map(Seq(_)),
+      keep = e => boxes.forall(_.exists(b =>
+        MBR(e.minLat, e.minLon, e.maxLat, e.maxLon).overlaps(b))),
+      refine = df => ranges.fold(df)(rs =>
+        df.filter(GeoCols.zCoveringPredicate(col("__z"), rs))),
+      boxesHint = boxes,
       rangesHint = ranges)
   }
 
@@ -963,10 +889,8 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
                      lineageHint: Option[String => Boolean] = None,
                      rangesHint: Option[Seq[(Long, Long)]] = None)
       : (DataFrame, Int, Int) = {
-    // drop compaction lineage markers (zero-file entries kept only so
-    // resumableRun still recognizes pre-compaction units as committed).
     // boxesHint / lineageHint prune manifest SHARDS before any entry is
-    // even parsed (two-level list, [[manifestPartial]]) — entries in a
+    // even parsed ([[manifestPartial]]) — entries in a
     // skipped shard are provably disjoint from every box / bloom-clear
     // for every probed key, so `keep` would reject them anyway;
     // totalData stays the snapshot's true file count.
@@ -974,8 +898,7 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
       manifestPartial(snapshotId, boxesHint, lineageHint, rangesHint)
     val zBounds = rangesHint.map(ZRangeContains.bounds)
     val schema = tableSchema
-    val all = loaded.filter(_.path.nonEmpty)
-    val entries = all.filter(_.kind == "data")
+    val entries = loaded.filter(_.kind == "data")
     // SEQUENCE-SCOPED merge-on-read deletes (the Iceberg sequence-number
     // contract, via the PERSISTED per-entry seq): a tombstone applies only
     // to data entries with a smaller sequence number, so a row
@@ -991,7 +914,7 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     // PlanSpec.) Every tombstone file holds the table's key columns
     // ([[keySchema]]). compact() folds deletes in and purges the
     // tombstones, bounding the chain length.
-    val dels = all.filter(_.kind == "delete").sortBy(e => (e.seq, e.path))
+    val dels = loaded.filter(_.kind == "delete").sortBy(e => (e.seq, e.path))
     val keys = SnapshotStore.keySchema(schema)
     var keptCount = 0
     def groupDf(g: Int): Option[DataFrame] = {
@@ -1080,18 +1003,15 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
         .repartitionByRange(parts, col("__z"))
         .sortWithinPartitions(col("__z")),
       unitDir, lineage, t0)
-    // replacing commit: new manifest = compacted entries + the BASE
-    // manifest's lineage ids as zero-file markers so resumableRun still
-    // skips them (read from `base`, not the live pointer — a racer's
-    // lineage must fail the commit, not get absorbed as an empty marker)
-    val lineageMarkers = manifest(base).map(_.lineageId).toSet.toSeq.sorted.map(l =>
-      FileEntry(path = "", rows = 0L, minZ = 0L, maxZ = 0L,
-        minLat = 0.0, maxLat = 0.0, minLon = 0.0, maxLon = 0.0,
-        lineageId = l, wallMs = 0L))
+    // replacing commit: new root = compacted entries, with the BASE
+    // snapshot's lineage ids in `folded` so resumableRun still skips them
+    // (read from `base`, not the live pointer — a racer's lineage must
+    // fail the commit, not get absorbed into `folded`)
+    val baseLineage = lineageSet(base)
     beforeCommit()
-    val next = commit(files.map(_._1) ++ lineageMarkers, keyed.schema,
-      replaceParent = true, expectedParent = base)
-    // refresh the write-time histograms only AFTER the commit is durable,
+    val next = commit(files.map(_._1), keyed.schema,
+      replaceParent = true, expectedParent = base, folded = baseLineage.toSeq.sorted)
+    // refresh the write-time sidecars only AFTER the commit is durable,
     // write-then-delete, so EVERY crash window leaves hotCells an upper
     // bound of the live snapshot: before the swap, the old unit hists
     // overcount the compacted table (deletes not yet folded); mid-swap,
@@ -1099,11 +1019,11 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     // would leave the still-live pre-compact snapshot UNDERCOUNTED if the
     // commit never lands — the one unsafe direction. Only histograms of
     // lineage FOLDED INTO this compaction are removed: a concurrent
-    // append's freshly written histogram (its unit is not in `base`) must
-    // survive or its hot cells vanish from the hint.
-    val folded = lineageMarkers.map(_.lineageId).toSet + lineage
+    // append's freshly written sidecars (its unit is not in `base`) must
+    // survive or its rows vanish from the index and the hint.
+    val folded = baseLineage + lineage
     val fresh = writeSidecarJson(lineage, files).toSet
-    Seq(histDir, bloomDir, indexDir).foreach { dir =>
+    Seq(bloomDir, indexDir).foreach { dir =>
       sidecarFiles(dir).filterNot(fresh.contains).foreach { f =>
         if (folded.contains(sidecarLineage(f))) deleteRecursive(f)
       }
@@ -1131,12 +1051,10 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
   def appendedSince(sinceSnapshot: Long, toSnapshot: Long = -1L): DataFrame = {
     val to = if (toSnapshot >= 0) toSnapshot else currentSnapshotId
     val m = manifest(to)
-    require(!m.exists(e => e.path.nonEmpty && e.seq > sinceSnapshot &&
-        e.lineageId.startsWith("compact-")),
+    require(!m.exists(e => e.seq > sinceSnapshot && e.lineageId.startsWith("compact-")),
       s"window ($sinceSnapshot, $to] crosses a compaction — increments are " +
         "append-only; re-baseline from the compacted snapshot")
-    val ents = m.filter(e =>
-      e.path.nonEmpty && e.kind == "data" && e.seq > sinceSnapshot && e.seq <= to)
+    val ents = m.filter(e => e.kind == "data" && e.seq > sinceSnapshot && e.seq <= to)
     scan(tableSchema, ents.map(_.path)).drop("__z")
   }
 
@@ -1173,11 +1091,10 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
       // of expireSnapshots; their dirs become reclaimable here
       .filter(k => Files.exists(metaDir.resolve(s"snap-$k")))
       .flatMap { k =>
-        val (shards, inline) = readRoot(k)
-        inline.filter(_.path.nonEmpty).map(dirOf) ++
-          shards.flatMap(sm => shardDirs.getOrElseUpdate(sm.path,
-            MetaJson.parseManifest(Files.readString(metaDir.resolve(sm.path)))
-              .filter(_.path.nonEmpty).map(dirOf)))
+        val r = readRoot(k)
+        r.inline.map(dirOf) ++
+          r.shards.flatMap(sm => shardDirs.getOrElseUpdate(sm.path,
+            MetaJson.parseManifest(Files.readString(metaDir.resolve(sm.path))).map(dirOf)))
       }
       .toSet
     val dirs = listDir(Paths.get(root, "data"))
@@ -1270,11 +1187,11 @@ object SnapshotStore {
   /** The clustering curves this store can write and read. */
   val ValidCurves: Set[String] = Set("z", "hilbert", "str")
 
-  /** Data entries per manifest shard / the flat-manifest ceiling: at the
-    * ~10⁶-file design point this yields ~100 shard files of ~2 MB JSON
-    * each behind a ~20 KB root list — a box read parses the root plus the
-    * few overlapping shards instead of the full manifest (measured in
-    * ManifestScaleBench / SnapshotStoreSpec). */
+  /** Data entries per manifest shard (the chunk size of a commit's own
+    * entries): at the ~10⁶-file design point a compacted table has ~100
+    * shard files of ~2 MB JSON each behind a ~20 KB root list — a box
+    * read parses the root plus the few overlapping shards instead of the
+    * full manifest. */
   val DefaultManifestShardRows: Int = 10000
 
   /** Default sidecar stats grid (4^6 = 4096 cells). Was 8 (65,536 cells)

@@ -10,7 +10,7 @@ import java.nio.file.Files
 /** Manifest-level Bloom pruning for key point lookups: no false negatives
   * ever (the superset contract), observable file skipping, and exact
   * agreement with read()+filter under appends, deletes, and compaction. */
-class BloomSpec extends AnyFunSuite {
+class BloomSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -18,7 +18,7 @@ class BloomSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  def tmp(): String = Files.createTempDirectory("graft_bloom").toString
+  def tmp(): String = tempDir("graft_bloom").toString
 
   lazy val pts = Points(spark, "/root/testdata/sf0.001").cache()
 

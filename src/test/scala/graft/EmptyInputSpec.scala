@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Degenerate-input hardening: every operator must return an empty (or
   * k-truncated) result on empty/undersized inputs, never crash — the
   * empty partition / empty table cases a 1000-executor job hits daily. */
-class EmptyInputSpec extends AnyFunSuite {
+class EmptyInputSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -40,7 +40,7 @@ class EmptyInputSpec extends AnyFunSuite {
 
   test("empty / undersized snapshot store: index and stored-kNN degenerate sanely") {
     import graft.index.GlobalIndex
-    val root = java.nio.file.Files.createTempDirectory("graft_empty_store").toString
+    val root = tempDir("graft_empty_store").toString
     val st = new graft.table.SnapshotStore(spark, root)
     // nothing committed: the persisted index is empty, reads fail loudly
     assert(GlobalIndex.fromStore(st).totalRows == 0)
@@ -53,8 +53,8 @@ class EmptyInputSpec extends AnyFunSuite {
     val got = GlobalIndex.knnStored(st, 0.0, 0.0, 10)
       .orderBy("rank").collect().map(_.getLong(1)).toSeq
     assert(got == Seq(1L, 2L, 3L))
-    // compacted down to zero rows (the snapshot holds only lineage
-    // markers): reads answer 0 rows of the table schema until the next append
+    // compacted down to zero rows (the snapshot holds only folded lineage
+    // ids): reads answer 0 rows of the table schema until the next append
     st.deleteWhere(lit(true), "del-all")
     st.compact(numPartitions = 1)
     val (none, _, _) = st.read()

@@ -8,14 +8,13 @@ import graft.table.SnapshotStore
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
-import java.nio.file.Files
 
 /** The whole engine composed, image bytes end to end:
   * generate → snapshot-commit (Z-clustered) → incremental append →
   * global index build → pruned range/kNN/tile queries → payload
   * invariants on the query results. The shape a 100 TB deployment runs,
   * at deterministic small scale. */
-class EndToEndSpec extends AnyFunSuite {
+class EndToEndSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -24,7 +23,7 @@ class EndToEndSpec extends AnyFunSuite {
     .getOrCreate()
 
   test("ingest -> snapshot -> append -> index -> query -> invariants") {
-    val root = Files.createTempDirectory("graft_e2e").toString
+    val root = tempDir("graft_e2e").toString
     val store = new SnapshotStore(spark, root)
 
     // two ingest units (e.g., two upstream drops), resumable lineage

@@ -11,7 +11,7 @@ import java.nio.file.Files
 /** Multimodal-column operators: real decode, features, resize, plus the
   * binaryFile source path and an image stream — the Spark-side plumbing
   * the 100 TB pipeline needs around opaque binary columns. */
-class ImageOpsSpec extends AnyFunSuite {
+class ImageOpsSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -227,7 +227,7 @@ class ImageOpsSpec extends AnyFunSuite {
   }
 
   test("binaryFile source: read a directory of real image files into the pipeline") {
-    val dir = Files.createTempDirectory("graft_imgs")
+    val dir = tempDir("graft_imgs")
     for (i <- 0 until 12) {
       val row = Synth.row(seed = 3L, i)
       Files.write(dir.resolve(f"${row.image_id}.${row.fmt}"), row.bytes)
@@ -242,7 +242,7 @@ class ImageOpsSpec extends AnyFunSuite {
   }
 
   test("streaming image pipeline: readStream over the image table -> tile counts") {
-    val dir = Files.createTempDirectory("graft_imgstream").toString
+    val dir = tempDir("graft_imgstream").toString
     Synth.table(spark, 40, seed = 8L).toDF().write.parquet(s"$dir/t")
     val schema = spark.read.parquet(s"$dir/t").schema
     val src = spark.readStream.schema(schema).parquet(s"$dir/t")

@@ -61,10 +61,7 @@ class MetaJsonSpec extends AnyFunSuite {
     }
   }
 
-  test("hist / bloom / index / table-meta sidecar JSON round-trips exactly") {
-    val cells = (0 until 300).map(_ => (randLong(), randLong()))
-    assert(MetaJson.parseHist(MetaJson.histJson(cells)) == cells)
-
+  test("bloom / index / table-meta sidecar JSON round-trips exactly") {
     val blooms = (0 until 5).map(_ =>
       (randStr(), Array.fill(rng.nextInt(64) + 1)(rng.nextLong())))
     val (kc, k, back) = MetaJson.parseBloom(MetaJson.bloomJson("id", 7, blooms))
@@ -111,18 +108,42 @@ class MetaJsonSpec extends AnyFunSuite {
   }
 
   test("manifest-list shard rows round-trip lineage summaries; a row without one fails to parse") {
-    import graft.table.ShardMeta
+    import graft.table.{ManifestRoot, ShardMeta}
     val withLin = ShardMeta("snap-3-shard-0-ab.json", 7, -5L, 9L,
       -10.0, 20.0, -30.0, 40.0, lineages = Seq("u-0", "del-0"))
-    val json = MetaJson.manifestListJson(Seq(withLin), Seq.empty)
-    val (back, _) = MetaJson.parseManifestRoot(json)
-    assert(back == Seq(withLin))
+    val tomb = FileEntry("data/del-0/part-0.parquet", 3L, 0L, 0L, 1.0, 2.0, 3.0, 4.0,
+      "del-0", 5L, "delete", 3L)
+    val root = ManifestRoot(Seq(withLin), Seq(tomb), Seq("u-old", "compact-2"))
+    assert(MetaJson.parseManifestRoot(MetaJson.manifestListJson(root)) == root)
     // committedLineage reads the root alone, so the summary is required: a
     // default-to-empty would silently claim "no lineages here" and
     // re-append committed streaming units as duplicates
     val noLin = """{"shards":[{"path":"s.json","entries":1,"minZ":0,"maxZ":1,""" +
-      """"minLat":0.0,"maxLat":1.0,"minLon":0.0,"maxLon":1.0}],"entries":[]}"""
+      """"minLat":0.0,"maxLat":1.0,"minLon":0.0,"maxLon":1.0}],"entries":[],"folded":[]}"""
     val e = intercept[IllegalStateException](MetaJson.parseManifestRoot(noLin))
     assert(e.getMessage.contains("lineages"))
+  }
+
+  test("a root without shards or folded, or with a data entry inline, fails to parse") {
+    // readers look for data only in shards and for compacted lineage only
+    // in `folded`: a lenient parse would read such a root as an empty
+    // (or lineage-less) table and silently drop rows
+    val noShards = """{"entries":[],"folded":[]}"""
+    assert(intercept[IllegalStateException](MetaJson.parseManifestRoot(noShards))
+      .getMessage.contains("no `shards`"))
+    val flat = """{"entries":[{"path":"data/u-0/part-0.parquet","rows":42}]}"""
+    intercept[IllegalStateException](MetaJson.parseManifestRoot(flat))
+    val noFolded = """{"shards":[],"entries":[]}"""
+    assert(intercept[IllegalStateException](MetaJson.parseManifestRoot(noFolded))
+      .getMessage.contains("folded"))
+    val inlineData = """{"shards":[],"entries":[{"path":"data/u-0/part-0.parquet",""" +
+      """"rows":42,"kind":"data"}],"folded":[]}"""
+    assert(intercept[IllegalStateException](MetaJson.parseManifestRoot(inlineData))
+      .getMessage.contains("data/u-0/part-0.parquet"))
+    // a zero-file lineage marker is a data entry too
+    val marker = """{"shards":[],"entries":[{"path":"","rows":0,"lineageId":"u-0"}],"folded":[]}"""
+    intercept[IllegalStateException](MetaJson.parseManifestRoot(marker))
+    assert(MetaJson.parseManifestRoot("""{"shards":[],"entries":[],"folded":[]}""") ==
+      graft.table.ManifestRoot(Seq.empty, Seq.empty, Seq.empty))
   }
 }

@@ -8,7 +8,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Training-data pipeline operators: dedup family, text analysis, ANN,
   * streaming — checked against independent in-memory oracles on sf0.001. */
-class PipelineOpsSpec extends AnyFunSuite {
+class PipelineOpsSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -418,7 +418,7 @@ class PipelineOpsSpec extends AnyFunSuite {
   test("watermark drops late rows across micro-batches") {
     import spark.implicits._
     import java.sql.Timestamp
-    val dir = java.nio.file.Files.createTempDirectory("graft_late").toString
+    val dir = tempDir("graft_late").toString
     def write(name: String, rows: Seq[(Long, String, Long)]): Unit =
       rows.map { case (id, et, epochSec) =>
         (id, new Timestamp(epochSec * 1000L), 1L, et, 1.0, "{}")

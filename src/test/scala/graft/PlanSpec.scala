@@ -10,7 +10,7 @@ import org.scalatest.funsuite.AnyFunSuite
   * These pin the *mechanism*, not just the result — a regression that
   * swaps a broadcast for a shuffle or un-pushes a filter fails here even
   * though results stay correct. */
-class PlanSpec extends AnyFunSuite {
+class PlanSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -26,7 +26,7 @@ class PlanSpec extends AnyFunSuite {
   test("merge-on-read plan: tombstone scans bounded by applicable groups, data never duplicated") {
     import graft.table.SnapshotStore
     val st = new SnapshotStore(spark,
-      java.nio.file.Files.createTempDirectory("graft_planspec").toString)
+      tempDir("graft_planspec").toString)
     val pts = Points(spark, dir)
     // 3 appends interleaved with 2 deletes → 3 sequence groups. Catalyst
     // pushes the anti-joins through the union, so a tombstone may be
@@ -141,7 +141,7 @@ class PlanSpec extends AnyFunSuite {
 
   test("image pipeline prunes the bytes column at the scan") {
     val images = Synth.table(spark, 8).toDF()
-    val path = java.nio.file.Files.createTempDirectory("plan_img").toString + "/t"
+    val path = tempDir("plan_img").toString + "/t"
     images.write.parquet(path)
     val pts = Synth.imagePoints(
       spark.read.parquet(path).select(col("image_id"), col("phash")))

@@ -11,7 +11,7 @@ import java.nio.file.{Files, Paths, StandardCopyOption}
   * lineage units, a crash mid-stream resumes from the checkpoint, and a
   * RE-DELIVERED batch (crash between the append and the offset commit) is
   * skipped by the lineage check — the exactly-once sink contract. */
-class StreamIngestSpec extends AnyFunSuite {
+class StreamIngestSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -19,7 +19,7 @@ class StreamIngestSpec extends AnyFunSuite {
     .config("spark.ui.enabled", "false")
     .getOrCreate()
 
-  def tmp(): String = Files.createTempDirectory("graft_si").toString
+  def tmp(): String = tempDir("graft_si").toString
 
   lazy val pts = Points(spark, "/root/testdata/sf0.001").cache()
 

@@ -81,11 +81,13 @@ class UnitTaskStatsSpec extends AnyFunSuite {
     assert(gotLeaves.toMap.view.mapValues(_.toList).toMap ==
       expLeaves.view.mapValues(_.toList).toMap)
 
-    // 2. hist: sum of leaves across files
-    val gotHist = MetaJson.parseHist(sidecar(base, "hist"))
+    // 2. hot cells: the leaf counts summed per cell across files
     val expHist = expLeaves.values.flatten
-      .groupBy(_._1).view.mapValues(_.map(_._2).sum).toSeq.sortBy(_._1)
-    assert(gotHist == expHist)
+      .groupBy(_._1).view.mapValues(_.map(_._2).sum).toSeq
+    val total = expHist.map(_._2).sum
+    for (t <- Seq(0.0, 0.01, 0.05, 0.2))
+      assert(store.hotCells(res, t) == expHist.filter(_._2 > total * t).map(_._1).toSet,
+        s"hotCells at threshold $t")
 
     // 3. bloom: xxhash64 of EVERY row (null key → seed), folded into a
     //    bitset sized from the rows of THAT file
