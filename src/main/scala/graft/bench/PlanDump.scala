@@ -99,7 +99,7 @@ object PlanDump {
       val radius = gi.knnSeedRadius(qla, qlo, k)
       val b = graft.geo.MBR(qla - radius, qlo - radius, qla + radius, qlo + radius)
       dump("stored-table kNN (persisted index summaries)",
-        s"GlobalIndex.fromStore costs ZERO Spark jobs (driver-side sidecar read); the seed radius bounds a manifest-pruned box read (files outside it never open) probed by graft_z_in_ranges, and the query point enters d2 as param(...) leaves; ONE TakeOrderedAndProject scan yields the k rows, audited driver-side (knnStored's executed plan — its returned frame is the collected local relation).",
+        s"GlobalIndex.fromStore costs ZERO Spark jobs (driver-side read of the index files the root names); the seed radius bounds a manifest-pruned box read (files outside it never open) probed by graft_z_in_ranges, and the query point enters d2 as param(...) leaves; ONE TakeOrderedAndProject scan yields the k rows, audited driver-side (knnStored's executed plan — its returned frame is the collected local relation).",
         store.read(Some(b))._1
           .withColumn("d2", graft.geo.GeoCols.d2(col("lat"), col("lon"), qla, qlo))
           .orderBy(col("d2"), col("id")).limit(k))
@@ -117,7 +117,7 @@ object PlanDump {
         pts.filter(pmod(col("id"), lit(3)) === u), s"u-$u", numPartitions = 4))
       val (bdf, bkept, btot) = bstore.lookupByKey(Seq(11L))
       dump("snapshot lookupByKey (Bloom file skipping)",
-        s"Driver-side Bloom probes opened $bkept of $btot data files (plan-time file skipping; fail-open for files without a sidecar); the key set is an InSet whose generated code holds it by reference, and it still lands in PushedFilters as In for row-group + dictionary skipping inside the survivors.",
+        s"Driver-side Bloom probes opened $bkept of $btot data files (plan-time file and shard skipping from the Bloom files the root names; fail-open for files without a filter); the key set is an InSet whose generated code holds it by reference, and it still lands in PushedFilters as In for row-group + dictionary skipping inside the survivors.",
         bdf)
     } catch { case e: Throwable =>
       sb ++= s"\n## snapshot lookupByKey\n\nSKIPPED: ${e.getMessage}\n" }

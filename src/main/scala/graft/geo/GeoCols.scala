@@ -1,7 +1,7 @@
 package graft.geo
 
 import graft.functions.Param
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Catalyst-friendly spatial Column expressions. Everything here composes
@@ -104,6 +104,47 @@ object GeoCols {
     }
     cur.withColumn(out, col("__hd")).drop("__hd", "__hx", "__hy")
   }
+
+  /** One clustering curve: how a `(lat, lon, …)` frame gets its `__z` key
+    * at resolution r, and which key ranges cover a box. The two must agree
+    * bit-for-bit or a stored read's covering stops covering its rows. */
+  private final case class Curve(key: (DataFrame, Int) => DataFrame,
+                                 ranges: (MBR, Int, Int) => Seq[(Long, Long)])
+
+  /** STR strip resolution: 2^(r/2) lat strips, the fixed-key stand-in for
+    * STR's √(n/fanout) strip count; the within-strip lon index runs at
+    * [[CellId.MaxRes]]. */
+  private def strStripRes(r: Int): Int = math.max(1, r / 2)
+
+  /** The three packings the north star names ("STR/Hilbert-curve bulk-load
+    * packing"): Morton (default), Hilbert (consecutive key values
+    * grid-adjacent → tightest file bounds, fewest covering ranges) and STR
+    * (lat strips, lon-ordered within — the classic packed-R-tree layout).
+    * Content is curve-independent; only file bounds and coverings differ. */
+  private val curves = scala.collection.immutable.ListMap(
+    "z" -> Curve((df, r) => df.withColumn("__z", zCol(col("lat"), col("lon"), r)),
+      (b, r, m) => CellId.zRangesForMbr(b, r, m)),
+    "hilbert" -> Curve((df, r) => withHilbert(df, col("lat"), col("lon"), r, "__z"),
+      (b, r, m) => CellId.hilbertRangesForMbr(b, r, m)),
+    "str" -> Curve((df, r) => df.withColumn("__z",
+        strCol(col("lat"), col("lon"), strStripRes(r), CellId.MaxRes)),
+      (b, r, m) => CellId.strRangesForMbr(b, strStripRes(r), CellId.MaxRes, m)))
+
+  /** The curve names [[withCurveKey]] and [[curveRanges]] accept. */
+  val CurveNames: Seq[String] = curves.keys.toSeq
+
+  private def curveOf(name: String): Curve = curves.getOrElse(name,
+    throw new IllegalArgumentException(
+      s"unknown clustering curve '$name' (want ${CurveNames.mkString(" | ")})"))
+
+  /** `df` with its `__z` clustering key for `curve` at resolution `r`. */
+  def withCurveKey(df: DataFrame, curve: String, r: Int): DataFrame =
+    curveOf(curve).key(df, r)
+
+  /** At most `maxRanges` sorted key ranges of `curve` at resolution `r`
+    * covering box `b` — the twin of [[withCurveKey]]'s key. */
+  def curveRanges(curve: String, b: MBR, r: Int, maxRanges: Int): Seq[(Long, Long)] =
+    curveOf(curve).ranges(b, r, maxRanges)
 
   /** Covering predicate for a stored read's key column: membership of the
     * MATERIALIZED Morton column (a stored table's `__z` sort key) in the

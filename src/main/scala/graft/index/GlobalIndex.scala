@@ -71,22 +71,10 @@ object GlobalIndex {
     import spark.implicits._
     val parts = if (numPartitions > 0) numPartitions
       else spark.sparkContext.defaultParallelism
-    // packing key — all three modes the north star names ("STR/Hilbert-
-    // curve bulk-load packing"): Morton (default), Hilbert (consecutive
-    // curve positions always grid-adjacent → tightest root MBRs), and STR
-    // (lat strips at ~sqrt granularity, lon-ordered within — the classic
-    // packed-R-tree layout; 2^(r/2) strips plays the role of its
-    // √(n/fanout) strip count). The index works identically under any of
-    // them — summaries are built from the clustered rows, not the key.
-    val keyed = curve match {
-      case "hilbert" => GeoCols.withHilbert(points, col("lat"), col("lon"), r, "__z")
-      case "str" => points.withColumn("__z",
-        GeoCols.strCol(col("lat"), col("lon"), math.max(1, r / 2), CellId.MaxRes))
-      case "z" => points.withColumn("__z", GeoCols.zCol(col("lat"), col("lon"), r))
-      case other => throw new IllegalArgumentException(
-        s"unknown packing curve '$other' (want z | hilbert | str)")
-    }
-    val clustered = keyed
+    // packing key: the store's curves ([[GeoCols.withCurveKey]]). The
+    // index works identically under any of them — summaries are built
+    // from the clustered rows, not the key.
+    val clustered = GeoCols.withCurveKey(points, curve, r)
       .repartitionByRange(parts, col("__z"))
       .sortWithinPartitions(col("__z"))
       .drop("__z")
@@ -107,11 +95,12 @@ object GlobalIndex {
     * computed inside the write tasks and ride next to the manifest
     * (SURVEY §1.5's "summaries ride in the snapshot manifest", the
     * distributed analog of the reference persisting its tree pages in
-    * IndexFile.java:37-95 instead of rebuilding per process). Each live
-    * data FILE becomes one PartitionIndex whose leaves are its per-cell
-    * slabs at the store's stats resolution; a file written before the
-    * sidecar existed falls back to its manifest MBR as a single leaf —
-    * a coarser bound, never a wrong one.
+    * IndexFile.java:37-95 instead of rebuilding per process). The leaves
+    * are read from the index files the current root names, one per
+    * manifest shard. Each live data FILE becomes one PartitionIndex whose
+    * leaves are its per-cell slabs at the store's stats resolution; a file
+    * with no slabs (all-null coordinates) falls back to its manifest MBR
+    * as a single leaf — a coarser bound, never a wrong one.
     *
     * Caveat for count-based bounds ([[GlobalIndex.knnSeedRadius]]):
     * pending equality-delete tombstones make slab counts an OVERcount of
@@ -143,7 +132,7 @@ object GlobalIndex {
     * prune, RStarTree.java:426) → exact top-k. The index build cost is
     * amortized to WRITE time; the query pays only the pruned scan.
     *
-    * Exactness audit: sidecar counts may overcount live rows under pending
+    * Exactness audit: index-file counts may overcount live rows under pending
     * tombstones, so the bound is re-verified against the candidates
     * (count ≥ k and kth distance ≤ radius²); a failed audit falls back to
     * the full-table scan — superset-then-refine, never a wrong answer. */
@@ -205,7 +194,7 @@ object GlobalIndex {
     * Exactness: each query's candidates are a superset of its radius box,
     * and the seed radius provably bounds the kth distance — re-audited per
     * query against the live rows (count ≥ k, kth distance ≤ radius²)
-    * because tombstones make sidecar counts an overcount; failed queries
+    * because tombstones make index-file counts an overcount; failed queries
     * fall back to the dense join over the full table, never a wrong
     * answer. */
   def knnJoinStored(store: graft.table.SnapshotStore,

@@ -57,7 +57,7 @@ object LocalRTree {
   /** Pack upper levels over an existing leaf array — shared by the
     * row-iterator pack above and the PERSISTED-summary path
     * ([[GlobalIndex.fromStore]]), whose leaves come from a stored table's
-    * write-time index sidecar instead of a live partition scan. Leaves
+    * write-time index file instead of a live partition scan. Leaves
     * must arrive in spatial order (Z/arrival) for tight parent MBRs;
     * correctness does not depend on it. */
   def fromLeaves(partitionId: Int, leaves: Array[IndexNode],

@@ -125,9 +125,14 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 }
 
 object GraftExtensions {
-  /** Register the graft_* SQL functions on a live session. */
-  def install(spark: org.apache.spark.sql.SparkSession): Unit =
+  /** Register the graft_* SQL functions a live session lacks. Functions
+    * already there are left as they are: every store opened on a session
+    * installs, and re-registering would replace (and log a warning for)
+    * each function every time. */
+  def install(spark: org.apache.spark.sql.SparkSession): Unit = {
+    val registry = spark.sessionState.functionRegistry
     new GraftExtensions().registrations.foreach { case (id, inf, builder) =>
-      spark.sessionState.functionRegistry.registerFunction(id, inf, builder)
+      if (!registry.functionExists(id)) registry.registerFunction(id, inf, builder)
     }
+  }
 }

@@ -16,7 +16,7 @@ package graft.table
   *
   * Sizing: ~10 bits/row of the FILE the filter covers, k=7 probes →
   * ≈0.8% false-positive rate. Bits are capped at 2²⁵ (4 MiB) per file;
-  * past that the fpp degrades gracefully rather than the manifest sidecar
+  * past that the fpp degrades gracefully rather than the manifest Bloom file
   * growing unboundedly — at the design point files are Z-clustered
   * ~100 MB units (≪ 3M rows), well under the cap.
   *

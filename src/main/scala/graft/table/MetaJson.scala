@@ -5,7 +5,7 @@ import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Driver-side JSON codec for the store's metadata artifacts (manifests,
-  * table meta, Bloom / index sidecars).
+  * table meta, per-shard Bloom / index stats files).
   *
   * Why JSON files instead of parquet datasets: a manifest is a few hundred
   * rows of driver-resident metadata, but writing it through Spark costs a
@@ -27,13 +27,20 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * lineage-id summary of the shard's entries (usually ONE — a shard is
   * written by a single commit), letting the streaming-ingest idempotence
   * check ([[graft.table.SnapshotStore.committedLineage]]) read the root
-  * alone instead of parsing every shard per micro-batch. Every shard row
-  * carries it: a row without it fails to parse. */
+  * alone instead of parsing every shard per micro-batch. `index` and
+  * `bloom` name the shard's stats files, written beside it by the same
+  * commit: the per-file index leaves (always) and the per-file Bloom
+  * bitsets (when its files carry them). Every shard row carries
+  * `lineages` and `index`: a row without either fails to parse. */
 final case class ShardMeta(path: String, entries: Int,
                            minZ: Long, maxZ: Long,
                            minLat: Double, maxLat: Double,
                            minLon: Double, maxLon: Double,
-                           lineages: Seq[String])
+                           lineages: Seq[String],
+                           index: String, bloom: Option[String]) {
+  /** The shard file and its stats files: what the shard row references. */
+  def files: Seq[String] = Seq(path, index) ++ bloom
+}
 
 /** A parsed snapshot root ([[MetaJson.manifestListJson]]): the shard rows
   * (data entries), the inline delete tombstones, and the lineage ids
@@ -106,6 +113,8 @@ object MetaJson {
       so.put("minLat", sm.minLat); so.put("maxLat", sm.maxLat)
       so.put("minLon", sm.minLon); so.put("maxLon", sm.maxLon)
       val la = so.putArray("lineages"); sm.lineages.foreach(la.add)
+      so.put("index", sm.index)
+      sm.bloom.foreach(so.put("bloom", _))
     }
     val eArr = o.putArray("entries")
     root.inline.foreach(e => eArr.add(entryNode(e)))
@@ -129,16 +138,18 @@ object MetaJson {
     val shards = (0 until shardsNode.size()).map { i =>
       val o = shardsNode.get(i)
       // required: a default-to-empty would silently claim "no lineages
-      // in this shard" and re-append committed streaming units
-      val ln = Option(o.get("lineages")).getOrElse(throw new IllegalStateException(
-        s"manifest shard row ${o.get("path")} has no lineages summary"))
-        .asInstanceOf[ArrayNode]
+      // in this shard" (re-appending committed streaming units) or "no
+      // leaves for its files" (dropping them from the index and hot cells)
+      def field(n: String, what: String): JsonNode = Option(o.get(n)).getOrElse(
+        throw new IllegalStateException(s"manifest shard row ${o.get("path")} has no $what"))
+      val ln = field("lineages", "lineages summary").asInstanceOf[ArrayNode]
       val lin = (0 until ln.size()).map(j => ln.get(j).asText())
       ShardMeta(o.get("path").asText(), o.get("entries").asInt(),
         l(o, "minZ", Long.MinValue), l(o, "maxZ", Long.MaxValue),
         d(o, "minLat", -Double.MaxValue), d(o, "maxLat", Double.MaxValue),
         d(o, "minLon", -Double.MaxValue), d(o, "maxLon", Double.MaxValue),
-        lin)
+        lin, field("index", "index stats file").asText(),
+        Option(o.get("bloom")).map(_.asText()))
     }
     val inline = entriesFrom(root)
     inline.find(_.kind == "data").foreach(e => throw new IllegalStateException(
@@ -167,9 +178,9 @@ object MetaJson {
       DataType.fromJson(schema.toString).asInstanceOf[StructType])
   }
 
-  // index sidecars carry up to 4^histRes rows per unit — the ONE
+  // index files carry up to 4^histRes rows per data file — the ONE
   // metadata payload where codec speed matters (every append serializes
-  // them, every fromStore/hotCells parses them). The sidecar codecs use
+  // them, every fromStore/hotCells parses them). The stats codecs use
   // jackson's STREAMING generator/parser instead of the tree model (no
   // per-value node allocation).
 

@@ -38,11 +38,16 @@ final case class FileEntry(path: String, rows: Long, minZ: Long, maxZ: Long,
   * <root>/data/<lineage>-<uuid>/part-*.parquet        immutable data files
   * <root>/meta/snap-<n>                               snapshot root (manifest list)
   * <root>/meta/snap-<n>-shard-<k>-<uid>.json          data entries (JSON of FileEntry)
+  * <root>/meta/snap-<n>-shard-<k>-<uid>.index.json    the shard's files' index leaves
+  * <root>/meta/snap-<n>-shard-<k>-<uid>.bloom.json    their Bloom bitsets (bloomKey)
   * <root>/meta/current                                atomic pointer "n"
   * <root>/meta/table.json                             pinned layout (curve, zRes,
   *                                                    histRes, data schema)
-  * <root>/meta/{bloom,index}/<lineage>-<id>.json      write-time sidecars
   * }}}
+  *
+  * The root names every other file under meta/: readers open only what
+  * it names, and a shard's stats files are written, carried, expired and
+  * vacuumed together with the shard.
   *
   * The first commit pins the table schema (the keyed unit's columns,
   * `__z` included); every later unit must match it, and every read plans
@@ -68,12 +73,11 @@ final case class FileEntry(path: String, rows: Long, minZ: Long, maxZ: Long,
   * shards, so the commit path is O(commit size), not O(table)
   * ([[writeManifestFile]]); [[compact]] re-chunks globally (Iceberg's
   * rewrite-manifests analog). Key lookups ([[lookupByKey]])
-  * prune shards through the lineage summaries: the per-unit Bloom
-  * sidecars name the units that might hold a probed key, and only
-  * shards carrying those units (or units with no consulted sidecar —
-  * fail open) are parsed. The remaining O(table) term on the lookup
-  * path is the Bloom sidecar read itself — the index being consulted.
-  * Compaction bounds entry and shard counts between appends.
+  * prune shards through their Bloom files: only shards with a file that
+  * might hold a probed key (or with no usable Bloom file — fail open) are
+  * parsed. The remaining O(table) term on the lookup path is the Bloom
+  * read itself — the index being consulted. Compaction bounds entry and
+  * shard counts between appends.
   */
 final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
                           histRes: Int = SnapshotStore.DefaultHistRes,
@@ -85,46 +89,10 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
 
   require(SnapshotStore.ValidCurves(curve),
     s"unknown clustering curve '$curve' " +
-      s"(want ${SnapshotStore.ValidCurves.mkString(" | ")})")
-
-  /** Strip resolution of the STR key (2^(zRes/2) lat strips — the
-    * fixed-key stand-in for STR's √(n/fanout) strip count); the fine
-    * within-strip lon index runs at [[CellId.MaxRes]]. Must match
-    * [[graft.geo.GeoCols.strCol]]'s layout bit-for-bit or the covering
-    * ranges stop covering. */
-  private val strStripRes = math.max(1, zRes / 2)
-
-  /** Materialize the clustering key for this store's curve — all three
-    * modes the north star names ("STR/Hilbert-curve bulk-load packing"):
-    * Morton (default), Hilbert (consecutive key values grid-adjacent →
-    * tightest file bounds, fewest covering ranges), STR (lat strips,
-    * lon-ordered within — the classic packed-R-tree layout). The curve is
-    * a WRITE-TIME property of the table, pinned in meta/table.json and
-    * validated on open (the key and its pruning ranges must agree;
-    * content correctness is curve-independent, spec-pinned). */
-  private def withCurveKey(df: DataFrame): DataFrame = curve match {
-    case "hilbert" => GeoCols.withHilbert(df, col("lat"), col("lon"), zRes, "__z")
-    case "str" => df.withColumn("__z",
-      GeoCols.strCol(col("lat"), col("lon"), strStripRes, CellId.MaxRes))
-    case _         => df.withColumn("__z", GeoCols.zCol(col("lat"), col("lon"), zRes))
-  }
-
-  // per-box fine-covering cap 1024 (was 64, a size chosen for the old
-  // O(n)-per-row BETWEEN refine): the row-level membership test is the
-  // O(log n) probe ([[GeoCols.zCoveringPredicate]]) and the decomposition
-  // cost is cap-independent (full quadtree descent, then coalesce), so a
-  // finer covering only SHRINKS the read superset — and the set of files
-  // whose Z span meets it ([[planAt]]).
-  private def curveRangesForMbr(b: MBR): Seq[(Long, Long)] = curve match {
-    case "hilbert" => CellId.hilbertRangesForMbr(b, zRes, maxRanges = 1024)
-    case "str" => CellId.strRangesForMbr(b, strStripRes, CellId.MaxRes, maxRanges = 1024)
-    case _         => CellId.zRangesForMbr(b, zRes, maxRanges = 1024)
-  }
+      s"(want ${GeoCols.CurveNames.mkString(" | ")})")
 
   private val metaDir = Paths.get(root, "meta")
   private val currentPtr = metaDir.resolve("current")
-  private val bloomDir = metaDir.resolve("bloom")
-  private val indexDir = metaDir.resolve("index")
   private val tableMetaPath = metaDir.resolve("table.json")
   Files.createDirectories(metaDir)
   Files.createDirectories(Paths.get(root, "data"))
@@ -134,7 +102,7 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
   graft.plans.GraftExtensions.install(spark)
 
   // The curve and key resolution are WRITE-TIME table properties: opening
-  // a hilbert-written table as z (or vice versa) makes curveRangesForMbr
+  // a hilbert-written table as z (or vice versa) makes the covering ranges
   // non-covering over the stored __z values and read(box) would silently
   // drop in-box rows. They are persisted in meta/table.json on first
   // commit and validated here — fail fast, never a docstring hazard
@@ -154,7 +122,7 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
         s"table at $root was written with curve=$storedCurve zRes=$storedZRes " +
           s"histRes=$storedHistRes but opened with curve=$curve zRes=$zRes " +
           s"histRes=$histRes — the clustering key, its pruning ranges, and " +
-          "the sidecar stats grid must agree; open with the written values")
+          "the stats grid must agree; open with the written values")
       unitSchema.foreach(s => require(SnapshotStore.sameColumns(pinned, s),
         s"table at $root pins schema ${pinned.simpleString} but the unit has " +
           s"${s.simpleString} — column names and types must match"))
@@ -212,14 +180,13 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     * parsed — at the
     * 10⁶-file design point a box read touches a handful of shard files
     * instead of a few hundred MB of driver-side JSON; with
-    * `lineageHint` (a key lookup's Bloom verdict per lineage), only shards
-    * whose `lineages` summary holds a wanted lineage load. Inline entries
-    * (delete tombstones) always load. Returns the loaded
+    * `shardHint` (a key lookup's Bloom verdict per shard), only the shards
+    * it passes load. Inline entries (delete tombstones) always load. Returns the loaded
     * entries plus the TOTAL data-file count of the snapshot (known from
     * the shard rows without reading them) so pruning stays observable. */
   private[graft] def manifestPartial(snapshotId: Long,
                                      boxes: Option[Seq[MBR]],
-                                     lineageHint: Option[String => Boolean] = None,
+                                     shardHint: Option[ShardMeta => Boolean] = None,
                                      rangesHint: Option[Seq[(Long, Long)]] = None)
       : (Seq[FileEntry], Int) = {
     if (snapshotId == 0) (Seq.empty, 0)
@@ -243,10 +210,10 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
         boxes.forall(bs => bs.exists(b =>
           MBR(sm.minLat, sm.minLon, sm.maxLat, sm.maxLon).overlaps(b))) &&
         zBounds.forall(ZRangeContains.meets(_, sm.minZ, sm.maxZ)) &&
-        lineageHint.forall(want => sm.lineages.exists(want))
+        shardHint.forall(_(sm))
       }
       val loaded = root.inline ++ wanted.flatMap(sm =>
-        MetaJson.parseManifest(Files.readString(metaDir.resolve(sm.path))))
+        MetaJson.parseManifest(readMeta(sm.path)))
       (loaded, root.shards.map(_.entries).sum)
     }
   }
@@ -265,6 +232,10 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     catch { case e: IllegalStateException =>
       throw new IllegalStateException(s"snapshot root $p: ${e.getMessage}", e) }
   }
+
+  /** A file the root names under meta/ (a shard or a stats file). A
+    * missing one fails the read, naming its path. */
+  private def readMeta(name: String): String = Files.readString(metaDir.resolve(name))
 
   /** Lineage ids present in the current snapshot — the idempotence check
     * streaming ingestion runs per MICRO-BATCH ([[resumableRun]] /
@@ -297,7 +268,7 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     * atomically. ONE Spark query, whatever the key or coordinate types:
     * the clustered write, whose tasks also compute every file's manifest
     * stats, index leaves, histogram cells and Bloom bitset
-    * ([[writeUnitFiles]]); the sidecars and the commit are driver IO
+    * ([[writeUnitFiles]]); the commit, stats files included, is driver IO
     * (AQE may split the query into a few stage-jobs — the budget is
     * pinned in spec). */
   def append(df: DataFrame, lineageId: String, numPartitions: Int = 0): Long = {
@@ -305,7 +276,7 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     val parts = if (numPartitions > 0) numPartitions
       else spark.sparkContext.defaultParallelism
     val unitDir = s"$root/data/$lineageId-${java.util.UUID.randomUUID().toString.take(8)}"
-    val keyed = withCurveKey(df)
+    val keyed = GeoCols.withCurveKey(df, curve, zRes)
     // refuse a unit that would poison the table before writing any file
     validateTableMeta(Some(keyed.schema))
     // NOTE (r6 optimization round, measured): repartitionByRange executes
@@ -322,12 +293,9 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
         .repartitionByRange(parts, col("__z"))
         .sortWithinPartitions(col("__z")),
       unitDir, lineageId, t0)
-    val t2 = System.nanoTime()
-    writeSidecarJson(lineageId, files)
-    SnapshotStore.trace("append.sidecars", t2)
-    val t3 = System.nanoTime()
-    val snap = commitAppend(files.map(_._1), keyed.schema)
-    SnapshotStore.trace("append.commit", t3)
+    val t1 = System.nanoTime()
+    val snap = commitAppend(files, keyed.schema)
+    SnapshotStore.trace("append.commit", t1)
     snap
   }
 
@@ -363,8 +331,8 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     }
   }
 
-  /** Appends COMMUTE: the unit's data files and sidecars are already on
-    * disk under unique names and the manifest merge is purely additive, so
+  /** Appends COMMUTE: the unit's data files are already on disk under
+    * unique names and the manifest merge is purely additive, so
     * a commit that loses the optimistic-concurrency race rebases onto the
     * winner's manifest and retries with nothing rewritten — Iceberg's
     * fast-append retry, bounded. Replacing/delete commits never come
@@ -373,10 +341,10 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     * and a tombstone rebased past a racer's data would widen its sequence
     * scope onto rows it never saw — both still fail loudly for the caller
     * to re-plan. */
-  private def commitAppend(entries: Seq[FileEntry], schema: StructType,
+  private def commitAppend(files: Seq[(FileEntry, UnitFileStats)], schema: StructType,
                            retries: Int = 5): Long = {
     val seen = currentSnapshotId
-    try commit(entries, schema)
+    try commit(files, schema)
     catch {
       case _: java.util.ConcurrentModificationException if retries > 0 =>
         // wait for the winner's pointer swing before consuming a retry: a
@@ -390,80 +358,35 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
         val deadline = System.currentTimeMillis() + 2000
         while (currentSnapshotId == seen &&
                System.currentTimeMillis() < deadline) Thread.sleep(10)
-        commitAppend(entries, schema, retries - 1)
+        commitAppend(files, schema, retries - 1)
     }
-  }
-
-  /** Two driver-written JSON sidecars for a just-written unit, from the
-    * in-task stats of its files (none for an empty unit):
-    *
-    *  - `meta/bloom/<lineage>-<uuid>.json` — per-file Bloom bitsets over
-    *    `bloomKey` (skipped when the store has none or the table lacks the
-    *    column) — [[lookupByKey]]'s file-skipping input;
-    *  - `meta/index/<lineage>-<uuid>.json` — per-file leaf slabs
-    *    (cell, cnt, MBR) at `histRes`: the PERSISTED index summaries
-    *    [[graft.index.GlobalIndex.fromStore]] rebuilds the broadcastable
-    *    index from with zero scans (the reference persists its tree the
-    *    same way, IndexFile.java:37-95), and whose counts summed per cell
-    *    are [[hotCells]]'s write-time skew hint.
-    *
-    * Written BEFORE the commit, under UNIQUE names: an aborted commit or a
-    * repeated lineage id leaves orphan sidecars, which only OVERCOUNT the
-    * hot-cell hint (safe direction) and are never consulted by
-    * path-keyed readers (lookups/index key by manifest paths). */
-  private def writeSidecarJson(lineageId: String,
-                            files: Seq[(FileEntry, UnitFileStats)])
-      : Seq[java.nio.file.Path] = {
-    if (files.isEmpty) return Seq.empty
-    val tJson = System.nanoTime()
-    val byFile = files.map { case (e, s) => (normPath(e.path), s) }.sortBy(_._1)
-    val uuid = java.util.UUID.randomUUID().toString.take(8)
-    val written = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
-    def put(dir: java.nio.file.Path, json: String): Unit = {
-      Files.createDirectories(dir)
-      val p = dir.resolve(s"$lineageId-$uuid.json")
-      Files.writeString(p, json, StandardOpenOption.CREATE_NEW)
-      written += p
-    }
-    put(indexDir, MetaJson.indexJson(histRes,
-      byFile.map { case (f, fs) => (f, fs.leaves.toSeq) }))
-    // the unit's files share one schema: either all carry bitsets or none
-    bloomKey.filter(_ => byFile.head._2.bits.nonEmpty).foreach { kc =>
-      put(bloomDir, MetaJson.bloomJson(kc, Bloom.K,
-        byFile.map { case (f, fs) => (f, fs.bits) }))
-    }
-    SnapshotStore.trace("sidecars.json", tJson)
-    written.toSeq
   }
 
   private def normPath(p: String): String = SnapshotStore.normalizePath(p)
 
-  /** Key point lookup planned through the manifest Bloom sidecars: only
+  /** Key point lookup planned through the shards' Bloom files: only
     * files whose filter says a probed key MIGHT be present are opened
-    * (plus any file with no filter — fail open, e.g. units written before
-    * the store had a bloom key). The result applies the same
+    * (plus any file with no filter — fail open, e.g. units appended by a
+    * store without a bloom key). The result applies the same
     * sequence-scoped tombstone chain as [[read]], then refines exactly
     * with a pushed `IN` predicate ([[keyIn]]), so `lookupByKey(vs)` ==
     * `read()._1.filter(key IN vs)` always — the Bloom only changes how
     * many files the plan opens. Returns (rows, files read, total files).
-    * Sidecars are driver-read JSON (KBs) — planning costs no Spark job.
+    * Bloom files are driver-read JSON (KBs) — planning costs no Spark job.
     *
-    * On a two-level manifest the Bloom verdict also prunes SHARDS: a
-    * sidecar is per-unit (lineage), shard rows carry their lineage
-    * summaries, so only shards holding a bloom-HIT unit — or a unit with
-    * no consulted sidecar (fail open) — are parsed at all
-    * ([[lookupShardFilter]]). A point lookup then costs one root parse +
-    * the hit units' shards, not the full manifest. */
+    * The same verdict prunes SHARDS ([[bloomVerdicts]]): a shard none of
+    * whose files might hold a probed key is never parsed, so a point
+    * lookup costs one root parse + one Bloom file per shard + the hit
+    * shards, not the full manifest. */
   def lookupByKey(values: Seq[Any], keyCol: String = ""): (DataFrame, Int, Int) = {
     val key = if (keyCol.nonEmpty) keyCol
       else bloomKey.getOrElse(throw new IllegalArgumentException(
         "store has no bloomKey: pass keyCol explicitly"))
-    val (filters, hashes, shardFilter) = lookupShardFilter(values, key)
-    planAt(currentSnapshotId,
-      keep = e => filters.get(normPath(e.path))
-        .forall(bits => hashes.exists(Bloom.mightContain(bits, _))),
+    val snap = currentSnapshotId
+    val (fileMight, shardMight) = bloomVerdicts(snap, values, key)
+    planAt(snap, keep = fileMight,
       refine = df => df.filter(keyIn(df, key, values)),
-      lineageHint = Some(shardFilter))
+      shardHint = Some(shardMight))
   }
 
   /** `key IN values` as an `InSet` that generated code holds by reference
@@ -475,52 +398,46 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
       HashSet.from(values.map(v => Cast(Literal(v), t, tz).eval()))))
   }
 
-  /** The per-file Bloom map, probe hashes, and the shard-level lineage
-    * predicate a key lookup plans with: a lineage passes iff some of its
-    * files' filters MIGHT contain a probed key, or no sidecar for it was
-    * consulted (unknown coverage must fail open — skipping it could drop
-    * live rows). The lineage is recovered from the sidecar file name
-    * ([[sidecarLineage]]); orphan sidecars from a crashed duplicate
-    * append can only WIDEN the hit set, never shrink it. */
-  private[graft] def lookupShardFilter(values: Seq[Any], key: String)
-      : (Map[String, Array[Long]], Seq[Long], String => Boolean) = {
+  /** The Bloom verdicts a key lookup on `snapshotId` plans with: per data
+    * file, whether its filter MIGHT hold a probed key, and per shard,
+    * whether any of its files might. The filters come from the Bloom files
+    * the root names — a shard's Bloom file covers every file of the shard
+    * or is not written. A shard without one, or whose filters were built
+    * over another key column or probe count, passes, as does any file no
+    * filter covers: unknown coverage fails open, since skipping it could
+    * drop live rows. */
+  private[graft] def bloomVerdicts(snapshotId: Long, values: Seq[Any], key: String)
+      : (FileEntry => Boolean, ShardMeta => Boolean) = {
     val hashes = values.map(Bloom.hashLiteral)
-    val perUnit: Seq[(String, Seq[(String, Array[Long])])] =
-      sidecarFiles(bloomDir).flatMap { f =>
-        val (kc, k, perFile) = MetaJson.parseBloom(Files.readString(f))
-        if (kc == key && k == Bloom.K) Some(sidecarLineage(f) -> perFile.toSeq)
-        else None
-      }
-    val covered = perUnit.map(_._1).toSet
-    val hit = perUnit.collect { case (lin, pf)
-      if pf.exists { case (_, bits) =>
-        hashes.exists(Bloom.mightContain(bits, _)) } => lin }.toSet
-    (perUnit.flatMap(_._2).toMap, hashes, l => hit(l) || !covered(l))
+    def might(bits: Array[Long]) = hashes.exists(Bloom.mightContain(bits, _))
+    val shards = if (snapshotId == 0) Seq.empty else readRoot(snapshotId).shards
+    val perShard: Map[String, Seq[(String, Array[Long])]] = shards.flatMap(sm =>
+      sm.bloom.map(b => MetaJson.parseBloom(readMeta(b))).collect {
+        case (kc, k, perFile) if kc == key && k == Bloom.K => sm.path -> perFile
+      }).toMap
+    val perFile = perShard.valuesIterator.flatten.toMap
+    (e => perFile.get(normPath(e.path)).forall(might),
+      sm => perShard.get(sm.path).forall(_.exists { case (_, bits) => might(bits) }))
   }
-
-  /** JSON sidecar files under a meta subdirectory (empty if absent). */
-  private def sidecarFiles(dir: java.nio.file.Path): Seq[java.nio.file.Path] =
-    if (!Files.exists(dir)) Seq.empty
-    else listDir(dir).filter(_.getFileName.toString.endsWith(".json"))
 
   /** Resolution the write-time index leaves are keyed at. */
   def statsRes: Int = histRes
 
-  /** Persisted per-file index summaries (leaf slabs keyed by normalized
-    * file path) — written by [[writeSidecarJson]], consumed by
-    * [[graft.index.GlobalIndex.fromStore]] with zero Spark jobs. Orphan
-    * sidecars from crashed appends are harmless: consumers key by the
-    * manifest's file paths, which never reference them. */
-  def indexLeaves(): Map[String, Seq[(Long, Long, Double, Double, Double, Double)]] =
-    sidecarFiles(indexDir)
-      .flatMap(f => MetaJson.parseIndex(Files.readString(f))._2)
-      .toMap
+  /** Persisted per-file index summaries of the current snapshot (leaf
+    * slabs keyed by normalized file path), read from the index files its
+    * root names — written by [[writeManifestFile]], consumed by
+    * [[graft.index.GlobalIndex.fromStore]] with zero Spark jobs. */
+  def indexLeaves(): Map[String, Seq[(Long, Long, Double, Double, Double, Double)]] = {
+    val snap = currentSnapshotId
+    if (snap == 0) Map.empty
+    else readRoot(snap).shards.flatMap(sm => MetaJson.parseIndex(readMeta(sm.index))._2).toMap
+  }
 
   /** Write-time hot-cell set at resolution `r` — the zero-query-time-scan
     * input to [[graft.ops.SpatialOps.boxJoinSalted]]. Counts are the
     * persisted index leaves' counts (kept at `histRes`) summed per cell
-    * over every index sidecar: rolled up through parent cells for coarser
-    * r, expanded to descendants for finer r. Both directions yield a
+    * over the current snapshot's files: rolled up through parent cells
+    * for coarser r, expanded to descendants for finer r. Both directions yield a
     * SUPERSET of the truly-hot set (deletes are not subtracted either) —
     * exactly the safe side for a salting hint. */
   def hotCells(r: Int, hotThreshold: Double = 0.05): Set[Long] = {
@@ -554,10 +471,10 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     * race only exercises it probabilistically). */
   private[graft] var afterParentCapture: () => Unit = () => ()
 
-  /** Manifest-append commit: parent shards + new entries → snap-(n+1),
-    * atomic pointer swing; `folded` joins the root's compacted-lineage
-    * list; `schema` (the written files' columns) is pinned
-    * or validated against the table's pin first. Single-writer (the
+  /** Manifest-append commit: parent shards + new entries (with their
+    * write-task stats) → snap-(n+1), atomic pointer swing; `folded` joins
+    * the root's compacted-lineage list; `schema` (the written files'
+    * columns) is pinned or validated against the table's pin first. Single-writer (the
     * driver) — matching the reference's single-threaded writer;
     * multi-writer needs a CAS on `current`, which real Iceberg's catalog
     * provides at the seam.
@@ -574,7 +491,7 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     * interleaved units from a replacing manifest while their lineage ids
     * stay marked committed (permanent, re-delivery-proof data loss under
     * streaming ingestion) — so it fails loudly instead. */
-  private def commit(newEntries: Seq[FileEntry], schema: StructType,
+  private def commit(files: Seq[(FileEntry, UnitFileStats)], schema: StructType,
                      replaceParent: Boolean = false,
                      expectedParent: Long = -1L,
                      folded: Seq[String] = Seq.empty): Long = {
@@ -588,7 +505,7 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     val next = parent + 1
     // sequence number = the committing snapshot id (Iceberg semantics);
     // parent entries keep the seq of the commit that introduced them
-    val stamped = newEntries.map(_.copy(seq = next))
+    val stamped = files.map { case (e, st) => (e.copy(seq = next), st) }
     sweepOrphans()
     writeTableMeta(schema)
     // snap-N+1 (CREATE_NEW) and current.tmp.N+1 (CREATE_NEW) are the
@@ -617,18 +534,18 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     // racer would otherwise swing the pointer onto the racer's manifest
     // and silently lose its own entries while reporting success. This
     // verifies WITHOUT a full manifest parse (commits must stay
-    // O(commit), not O(table)): the root's shard list, inline entries and
+    // O(commit), not O(table)): the root's shard rows, inline entries and
     // folded lineage must be exactly what this commit wrote, and only the
     // shards this commit CREATED are re-parsed — carried shards are
     // immutable files a racer cannot have produced under our uid names
     // (a replacing commit creates every shard it lists).
     def tup(e: FileEntry) = (e.lineageId, e.path, e.rows, e.seq)
     val got = readRoot(next)
-    if (got.shards.map(_.path) != written.shards.map(_.path) ||
+    if (got.shards != written.shards ||
         got.inline.map(tup).sorted != written.inline.map(tup).sorted ||
         got.folded != written.folded ||
         fresh.exists { case (name, ents) =>
-          MetaJson.parseManifest(Files.readString(metaDir.resolve(name))).map(tup).sorted !=
+          MetaJson.parseManifest(readMeta(name)).map(tup).sorted !=
             ents.map(tup).sorted })
       throw new java.util.ConcurrentModificationException(
         s"snap-$next does not contain this commit's entries — replaced by another writer")
@@ -651,43 +568,67 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     * globally by minZ, exactly like Iceberg's rewrite-manifests
     * maintenance. Delete tombstones stay inline in the root — every plan
     * needs them — and `folded` extends the parent's compacted-lineage
-    * list. Shards are written FIRST under commit-unique names; the root
-    * file write is the CREATE_NEW tripwire. Returns the root written and
-    * the shards this commit created, with their entries. */
+    * list.
+    *
+    * Each new shard `snap-N-shard-K-<uid>.json` gets its stats files
+    * beside it, named by its root row, from the in-task stats of its files:
+    *
+    *  - `….index.json` — per-file leaf slabs (cell, cnt, MBR) at `histRes`:
+    *    the PERSISTED index summaries [[graft.index.GlobalIndex.fromStore]]
+    *    rebuilds the broadcastable index from with zero scans (the
+    *    reference persists its tree the same way, IndexFile.java:37-95),
+    *    and whose counts summed per cell are [[hotCells]]'s skew hint;
+    *  - `….bloom.json` — per-file Bloom bitsets over `bloomKey`, when the
+    *    shard's files carry them (not when the store has no key or the
+    *    table lacks the column) — [[lookupByKey]]'s file and shard skip.
+    *
+    * Shards and stats are written FIRST under commit-unique names; the
+    * root file write is the CREATE_NEW tripwire, and a failed commit
+    * deletes every file it wrote. Returns the root written and the shards
+    * this commit created, with their entries. */
   private def writeManifestFile(next: Long, parent: Long,
-                                stamped: Seq[FileEntry],
+                                stamped: Seq[(FileEntry, UnitFileStats)],
                                 folded: Seq[String],
                                 replaceParent: Boolean)
       : (ManifestRoot, Seq[(String, Seq[FileEntry])]) = {
     val prev =
       if (replaceParent || parent == 0) ManifestRoot(Seq.empty, Seq.empty, Seq.empty)
       else readRoot(parent)
-    val (data, deletes) = stamped.partition(_.kind == "data")
+    val (data, deletes) = stamped.partition(_._1.kind == "data")
     val uid = java.util.UUID.randomUUID().toString.take(8)
     val written = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
+    def put(name: String, json: String): String = {
+      val path = metaDir.resolve(name)
+      Files.writeString(path, json, StandardOpenOption.CREATE_NEW)
+      written += path
+      name
+    }
     try {
-      val fresh = data.sortBy(_.minZ).grouped(manifestShardRows)
-        .zipWithIndex.map { case (g, k) =>
-          val name = s"snap-$next-shard-$k-$uid.json"
-          val path = metaDir.resolve(name)
-          Files.writeString(path, MetaJson.manifestJson(g),
-            StandardOpenOption.CREATE_NEW)
-          written += path
-          (ShardMeta(name, g.size,
+      val fresh = data.sortBy(_._1.minZ).grouped(manifestShardRows)
+        .zipWithIndex.map { case (chunk, k) =>
+          val name = s"snap-$next-shard-$k-$uid"
+          val g = chunk.map(_._1)
+          val byFile = chunk.map { case (e, st) => (normPath(e.path), st) }
+          val index = put(s"$name.index.json", MetaJson.indexJson(histRes,
+            byFile.map { case (f, st) => (f, st.leaves.toSeq) }))
+          val bloom = bloomKey.filter(_ => byFile.forall(_._2.bits.nonEmpty)).map(kc =>
+            put(s"$name.bloom.json", MetaJson.bloomJson(kc, Bloom.K,
+              byFile.map { case (f, st) => (f, st.bits) })))
+          (ShardMeta(put(s"$name.json", MetaJson.manifestJson(g)), g.size,
             g.map(_.minZ).min, g.map(_.maxZ).max,
             g.map(_.minLat).min, g.map(_.maxLat).max,
             g.map(_.minLon).min, g.map(_.maxLon).max,
-            lineages = g.map(_.lineageId).distinct), g)
+            lineages = g.map(_.lineageId).distinct, index, bloom), g)
         }.toSeq
-      val root = ManifestRoot(prev.shards ++ fresh.map(_._1), prev.inline ++ deletes,
-        prev.folded ++ folded)
+      val root = ManifestRoot(prev.shards ++ fresh.map(_._1),
+        prev.inline ++ deletes.map(_._1), prev.folded ++ folded)
       Files.writeString(metaDir.resolve(s"snap-$next"), MetaJson.manifestListJson(root),
         StandardOpenOption.CREATE_NEW)
       (root, fresh.map { case (sm, g) => sm.path -> g })
     } catch {
       case e: Throwable =>
         // a failed root write (lost race / crash mid-commit) must not
-        // leave this commit's shards as permanent debris
+        // leave this commit's shards or stats files as permanent debris
         written.foreach(p => try Files.deleteIfExists(p)
           catch { case _: Throwable => () })
         throw e
@@ -710,8 +651,8 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
   /** Shard-file name twin of [[snapRootId]] — one compiled copy. */
   private val shardNameRe = "^snap-([0-9]{1,18})-shard-.*\\.json$".r
 
-  /** Shard paths referenced by every existing snapshot root except
-    * `excludeIds`. Under shard reuse a shard written at snap-k is
+  /** Shard and stats file names referenced by every existing snapshot
+    * root except `excludeIds`. Under shard reuse a shard written at snap-k is
     * referenced by k and every descendant until a replacing commit —
     * deletion must check the whole root set, not just the snapshot being
     * dropped. Roots are KBs (shard list + inline tombstones + folded
@@ -726,7 +667,7 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
       snapRootId(p.getFileName.toString) match {
         case Some(id) if !excludeIds.contains(id) =>
           try {
-            acc ++= readRoot(id).shards.map(_.path)
+            acc ++= readRoot(id).shards.flatMap(_.files)
             true
           } catch { case _: Throwable => false }
         case _ => true
@@ -735,8 +676,8 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     if (allReadable) Some(acc.result()) else None
   }
 
-  /** Delete a snapshot's manifest root AND the shard files only IT
-    * references — shards carried
+  /** Delete a snapshot's manifest root AND the shard and stats files only
+    * IT references — shards carried
     * forward into retained snapshots must survive, and the shard names
     * are only recorded in roots, so the root must be read before it is
     * removed. */
@@ -753,8 +694,8 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
       val shards = readRoot(k).shards
       keep match {
         case Some(ks) if shards.nonEmpty =>
-          shards.filterNot(sm => ks.contains(sm.path))
-            .foreach(sm => try Files.deleteIfExists(metaDir.resolve(sm.path))
+          shards.flatMap(_.files).filterNot(ks.contains)
+            .foreach(f => try Files.deleteIfExists(metaDir.resolve(f))
               catch { case _: Throwable => () })
         case _ => () // unknown reference set: leave every shard in place
       }
@@ -856,12 +797,14 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     * planAt invokes `refine` once per tombstone sequence group, and the
     * quadtree descents + merge are driver work proportional to geometry
     * count — they must not multiply by delete-chain length. Fine covering
-    * cap 4096: the row-level membership test is an O(log n) binary search
-    * ([[GeoCols.zCoveringPredicate]]), so a finer covering only SHRINKS
-    * the superset. */
+    * caps 1024 per box and 4096 merged: the row-level membership test is
+    * an O(log n) binary search ([[GeoCols.zCoveringPredicate]]) and the
+    * decomposition cost is cap-independent (full quadtree descent, then
+    * coalesce), so a finer covering only SHRINKS the superset — and the
+    * set of files whose Z span meets it. */
   private def planBoxes(snapshotId: Long, boxes: Option[Seq[MBR]]): (DataFrame, Int, Int) = {
-    val ranges = boxes.map(bs =>
-      CellId.mergeRanges(bs.flatMap(curveRangesForMbr), maxRanges = 4096))
+    val ranges = boxes.map(bs => CellId.mergeRanges(
+      bs.flatMap(GeoCols.curveRanges(curve, _, zRes, maxRanges = 1024)), maxRanges = 4096))
     planAt(snapshotId,
       keep = e => boxes.forall(_.exists(b =>
         MBR(e.minLat, e.minLon, e.maxLat, e.maxLon).overlaps(b))),
@@ -886,16 +829,16 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
   private def planAt(snapshotId: Long, keep: FileEntry => Boolean,
                      refine: DataFrame => DataFrame,
                      boxesHint: Option[Seq[MBR]] = None,
-                     lineageHint: Option[String => Boolean] = None,
+                     shardHint: Option[ShardMeta => Boolean] = None,
                      rangesHint: Option[Seq[(Long, Long)]] = None)
       : (DataFrame, Int, Int) = {
-    // boxesHint / lineageHint prune manifest SHARDS before any entry is
+    // boxesHint / shardHint prune manifest SHARDS before any entry is
     // even parsed ([[manifestPartial]]) — entries in a
     // skipped shard are provably disjoint from every box / bloom-clear
     // for every probed key, so `keep` would reject them anyway;
     // totalData stays the snapshot's true file count.
     val (loaded, totalData) =
-      manifestPartial(snapshotId, boxesHint, lineageHint, rangesHint)
+      manifestPartial(snapshotId, boxesHint, shardHint, rangesHint)
     val zBounds = rangesHint.map(ZRangeContains.bounds)
     val schema = tableSchema
     val entries = loaded.filter(_.kind == "data")
@@ -963,7 +906,7 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     val files = writeObserved(
       read()._1.filter(cond).select(keys.map(col): _*).coalesce(1),
       unitDir, lineageId, t0, "delete", key = None, leavesRes = None)
-    commit(files.map(_._1.copy(minZ = 0L, maxZ = 0L)), schema)
+    commit(files.map { case (e, st) => (e.copy(minZ = 0L, maxZ = 0L), st) }, schema)
   }
 
   /** Compaction — the distributed analog of the reference's forced-
@@ -996,7 +939,7 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     // its commit must not wedge every retry on ErrorIfExists
     val unitDir = s"$root/data/compact-${base + 1}-" +
       java.util.UUID.randomUUID().toString.take(8)
-    val keyed = withCurveKey(df)
+    val keyed = GeoCols.withCurveKey(df, curve, zRes)
     val lineage = s"compact-${base + 1}"
     val files = writeUnitFiles(
       keyed
@@ -1009,31 +952,9 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     // fail the commit, not get absorbed into `folded`)
     val baseLineage = lineageSet(base)
     beforeCommit()
-    val next = commit(files.map(_._1), keyed.schema,
+    commit(files, keyed.schema,
       replaceParent = true, expectedParent = base, folded = baseLineage.toSeq.sorted)
-    // refresh the write-time sidecars only AFTER the commit is durable,
-    // write-then-delete, so EVERY crash window leaves hotCells an upper
-    // bound of the live snapshot: before the swap, the old unit hists
-    // overcount the compacted table (deletes not yet folded); mid-swap,
-    // old + new coexist (≈2× superset); after, exact. A pre-commit swap
-    // would leave the still-live pre-compact snapshot UNDERCOUNTED if the
-    // commit never lands — the one unsafe direction. Only histograms of
-    // lineage FOLDED INTO this compaction are removed: a concurrent
-    // append's freshly written sidecars (its unit is not in `base`) must
-    // survive or its rows vanish from the index and the hint.
-    val folded = baseLineage + lineage
-    val fresh = writeSidecarJson(lineage, files).toSet
-    Seq(bloomDir, indexDir).foreach { dir =>
-      sidecarFiles(dir).filterNot(fresh.contains).foreach { f =>
-        if (folded.contains(sidecarLineage(f))) deleteRecursive(f)
-      }
-    }
-    next
   }
-
-  /** Lineage id encoded in a sidecar file name (`<lineage>-<uuid8>.json`). */
-  private def sidecarLineage(p: java.nio.file.Path): String =
-    p.getFileName.toString.stripSuffix(".json").dropRight(9) // strip "-<uuid8>"
 
   /** Incremental consumption (the CDC primitive a downstream pipeline
     * uses to process ONLY data that arrived since its last checkpointed
@@ -1094,7 +1015,7 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
         val r = readRoot(k)
         r.inline.map(dirOf) ++
           r.shards.flatMap(sm => shardDirs.getOrElseUpdate(sm.path,
-            MetaJson.parseManifest(Files.readString(metaDir.resolve(sm.path))).map(dirOf)))
+            MetaJson.parseManifest(readMeta(sm.path)).map(dirOf)))
       }
       .toSet
     val dirs = listDir(Paths.get(root, "data"))
@@ -1185,7 +1106,7 @@ object SnapshotStore {
   }
 
   /** The clustering curves this store can write and read. */
-  val ValidCurves: Set[String] = Set("z", "hilbert", "str")
+  val ValidCurves: Set[String] = GeoCols.CurveNames.toSet
 
   /** Data entries per manifest shard (the chunk size of a commit's own
     * entries): at the ~10⁶-file design point a compacted table has ~100
@@ -1194,10 +1115,10 @@ object SnapshotStore {
     * full manifest. */
   val DefaultManifestShardRows: Int = 10000
 
-  /** Default sidecar stats grid (4^6 = 4096 cells). Was 8 (65,536 cells)
+  /** Default index-leaf stats grid (4^6 = 4096 cells). Was 8 (65,536 cells)
     * through round 5; the r6 optimization round measured the per-append
-    * sidecar cost at histRes=8 on a globe-spanning unit — ~65k leaf slabs
-    * of ~9 rows each, 0.42 s of stats aggregation + 0.32 s of sidecar
+    * stats cost at histRes=8 on a globe-spanning unit — ~65k leaf slabs
+    * of ~9 rows each, 0.42 s of stats aggregation + 0.32 s of stats
     * JSON per append, and a matching parse tax on every fromStore — and
     * dropped the default one quadtree level per 16× unit-cell blowup.
     * Correctness is res-invariant (every consumer treats the slabs as
@@ -1218,7 +1139,7 @@ object SnapshotStore {
 
   /** `file:`-URI and plain-path spellings of the same file must compare
     * equal: manifest paths are Hadoop URIs (`file:/x`), `input_file_name`
-    * yields `file:///x`. Sidecars persist the normalized form. */
+    * yields `file:///x`. Stats files persist the normalized form. */
   def normalizePath(p: String): String =
     if (p.startsWith("file:")) "/" + p.stripPrefix("file:").dropWhile(_ == '/')
     else p

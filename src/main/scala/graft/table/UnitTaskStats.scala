@@ -8,7 +8,7 @@ import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StructType}
 
 /** Per-file write-time statistics, computed INSIDE the direct-write task
   * ([[org.apache.spark.sql.GraftParquetDirect.writeStats]]): the writer
-  * already sees every row, so the manifest entry and the sidecars cost no
+  * already sees every row, so the manifest entry and the stats files cost no
   * second pass over the unit. This is the only source of them — appends,
   * compactions and delete files all take their entries from here.
   *

@@ -85,9 +85,9 @@ class BloomSpec extends AnyFunSuite with TempDirs {
   }
 
   test("two-level manifest: a key lookup parses only the bloom-hit units' shards") {
-    // the lineage-summary × bloom-sidecar composition: a point lookup on
-    // a sharded table reads root + the HIT units' shards, not the full
-    // manifest — O(match), with unknown coverage failing open
+    // the per-shard Bloom files the root names: a point lookup on a
+    // sharded table reads root + the HIT shards, not the full manifest —
+    // O(match), with unknown coverage failing open
     val root = tmp()
     val st = new SnapshotStore(spark, root, bloomKey = Some("id"),
       manifestShardRows = 3)
@@ -97,10 +97,10 @@ class BloomSpec extends AnyFunSuite with TempDirs {
     val ids = norm(pts).map(_._1).distinct
     val probe = ids.find(_ % 3 == 0).get // lives in unit-0 only
     // shard-level skip observable through the planner's own filter
-    val (_, _, shardFilter) = st.lookupShardFilter(Seq(probe), "id")
     val cur = st.currentSnapshotId
+    val (_, shardMight) = st.bloomVerdicts(cur, Seq(probe), "id")
     val (loaded, total) =
-      st.manifestPartial(cur, None, Some(shardFilter))
+      st.manifestPartial(cur, None, Some(shardMight))
     assert(total == 12)
     assert(loaded.count(_.kind == "data") < 12,
       "lookup parsed every manifest shard")
@@ -108,20 +108,22 @@ class BloomSpec extends AnyFunSuite with TempDirs {
     val (df, kept, tot) = st.lookupByKey(Seq(probe))
     assert(tot == 12 && kept <= 3)
     assert(norm(df) == norm(pts.filter(col("id") === probe)))
-    // a unit with NO sidecar keeps its shards loaded (fail open): strip
-    // unit-1's bloom sidecar and look up one of ITS keys
-    val bloomP = java.nio.file.Paths.get(root, "meta", "bloom")
-    val u1 = {
-      val s = Files.list(bloomP)
-      val f = try { import scala.jdk.CollectionConverters._
-        s.iterator().asScala.find(_.getFileName.toString.startsWith("unit-1-")).get
-      } finally s.close()
-      Files.delete(f); f
-    }
-    val probe1 = ids.find(_ % 3 == 1).get
+    // a unit with NO Bloom file keeps its shards loaded (fail open): a
+    // bloom-less store instance appends a unit, and the lookup still
+    // finds its rows
+    val extra = pts.filter(col("id") % 31 === 0).withColumn("id", col("id") + 1000000L)
+    new SnapshotStore(spark, root, manifestShardRows = 3)
+      .append(extra, "unit-plain", numPartitions = 2)
+    val plainShards = graft.table.MetaJson.parseManifestRoot(Files.readString(
+      java.nio.file.Paths.get(root, "meta", s"snap-${st.currentSnapshotId}")))
+      .shards.filter(_.lineages == Seq("unit-plain"))
+    assert(plainShards.nonEmpty && plainShards.forall(_.bloom.isEmpty))
+    val probe1 = norm(extra).head._1
+    val (_, plainMight) = st.bloomVerdicts(st.currentSnapshotId, Seq(probe1), "id")
+    assert(plainShards.forall(plainMight), "a bloom-less shard was skipped")
     val (df1, _, _) = st.lookupByKey(Seq(probe1))
-    assert(norm(df1) == norm(pts.filter(col("id") === probe1)),
-      s"uncovered unit's rows dropped after removing ${u1.getFileName}")
+    assert(norm(df1) == norm(extra.filter(col("id") === probe1)),
+      "the bloom-less unit's rows were dropped")
   }
 
   test("tombstones apply to lookups; compaction refreshes sidecars") {
@@ -131,13 +133,17 @@ class BloomSpec extends AnyFunSuite with TempDirs {
     st.deleteWhere(col("id") === victim, "del-0")
     assert(st.lookupByKey(Seq(victim))._1.count() == 0)
     st.compact(numPartitions = 2)
-    // folded units' sidecars swept; the compacted unit's filter remains
-    val bloomDirs = Files.list(java.nio.file.Paths.get(root, "meta", "bloom"))
-    val names = try {
-      import scala.jdk.CollectionConverters._
-      bloomDirs.iterator().asScala.map(_.getFileName.toString).toSeq
-    } finally bloomDirs.close()
-    assert(names.size == 1 && names.head.startsWith("compact-"))
+    // the compacted root names only the Bloom files its own commit wrote,
+    // and they cover exactly the compacted files
+    val cur = st.currentSnapshotId
+    val metaP = java.nio.file.Paths.get(root, "meta")
+    val shards = graft.table.MetaJson.parseManifestRoot(
+      Files.readString(metaP.resolve(s"snap-$cur"))).shards
+    assert(shards.nonEmpty && shards.forall(_.bloom.exists(_.startsWith(s"snap-$cur-shard-"))))
+    val covered = shards.flatMap(sm => graft.table.MetaJson.parseBloom(
+      Files.readString(metaP.resolve(sm.bloom.get)))._3.map(_._1))
+    assert(covered.sorted == st.manifest().filter(_.kind == "data")
+      .map(e => SnapshotStore.normalizePath(e.path)).sorted)
     val survivor = norm(pts).map(_._1).distinct.apply(1)
     val (df, kept, tot) = st.lookupByKey(Seq(survivor))
     assert(tot == 2 && kept <= 2)

@@ -244,4 +244,20 @@ class ExtensionsSpec extends AnyFunSuite {
       assert(got == exp && got.nonEmpty)
     } finally graft.ops.OpUtil.deleteTree(java.nio.file.Paths.get(root2))
   }
+
+  test("install registers only what the session lacks: a reinstall or a new store keeps every builder") {
+    // every SnapshotStore installs on its session; replacing the six
+    // functions each time logged six warnings per store opened
+    val registry = spark.sessionState.functionRegistry
+    val ids = new graft.plans.GraftExtensions().registrations.map(_._1)
+    assert(ids.size == 6 && ids.forall(_.funcName.startsWith("graft_")))
+    val first = ids.map(id => registry.lookupFunctionBuilder(id).get)
+    graft.plans.GraftExtensions.install(spark)
+    val root = java.nio.file.Files.createTempDirectory("graft_install")
+    try new graft.table.SnapshotStore(spark, root.toString)
+    finally graft.ops.OpUtil.deleteTree(root)
+    ids.zip(first).foreach { case (id, b) =>
+      assert(registry.lookupFunctionBuilder(id).get eq b, s"$id was registered again")
+    }
+  }
 }

@@ -110,11 +110,18 @@ class MetaJsonSpec extends AnyFunSuite {
   test("manifest-list shard rows round-trip lineage summaries; a row without one fails to parse") {
     import graft.table.{ManifestRoot, ShardMeta}
     val withLin = ShardMeta("snap-3-shard-0-ab.json", 7, -5L, 9L,
-      -10.0, 20.0, -30.0, 40.0, lineages = Seq("u-0", "del-0"))
+      -10.0, 20.0, -30.0, 40.0, lineages = Seq("u-0", "del-0"),
+      index = "snap-3-shard-0-ab.index.json", bloom = Some("snap-3-shard-0-ab.bloom.json"))
+    // a shard whose files carry no Bloom bitsets names no bloom file
+    val noBloom = ShardMeta("snap-4-shard-0-cd.json", 2, 0L, 1L,
+      0.0, 1.0, 0.0, 1.0, lineages = Seq("u-1"),
+      index = "snap-4-shard-0-cd.index.json", bloom = None)
     val tomb = FileEntry("data/del-0/part-0.parquet", 3L, 0L, 0L, 1.0, 2.0, 3.0, 4.0,
       "del-0", 5L, "delete", 3L)
-    val root = ManifestRoot(Seq(withLin), Seq(tomb), Seq("u-old", "compact-2"))
+    val root = ManifestRoot(Seq(withLin, noBloom), Seq(tomb), Seq("u-old", "compact-2"))
     assert(MetaJson.parseManifestRoot(MetaJson.manifestListJson(root)) == root)
+    assert(withLin.files == Seq(withLin.path, withLin.index, withLin.bloom.get))
+    assert(noBloom.files == Seq(noBloom.path, noBloom.index))
     // committedLineage reads the root alone, so the summary is required: a
     // default-to-empty would silently claim "no lineages here" and
     // re-append committed streaming units as duplicates
@@ -122,6 +129,16 @@ class MetaJsonSpec extends AnyFunSuite {
       """"minLat":0.0,"maxLat":1.0,"minLon":0.0,"maxLon":1.0}],"entries":[],"folded":[]}"""
     val e = intercept[IllegalStateException](MetaJson.parseManifestRoot(noLin))
     assert(e.getMessage.contains("lineages"))
+  }
+
+  test("a shard row without an index stats file fails to parse") {
+    // the index file carries the shard's leaves: a default-to-none would
+    // drop its files from fromStore and hotCells without a word
+    val noIndex = """{"shards":[{"path":"s.json","entries":1,"minZ":0,"maxZ":1,""" +
+      """"minLat":0.0,"maxLat":1.0,"minLon":0.0,"maxLon":1.0,"lineages":["u-0"]}],""" +
+      """"entries":[],"folded":[]}"""
+    val e = intercept[IllegalStateException](MetaJson.parseManifestRoot(noIndex))
+    assert(e.getMessage.contains("s.json") && e.getMessage.contains("index"))
   }
 
   test("a root without shards or folded, or with a data entry inline, fails to parse") {

@@ -469,8 +469,8 @@ class SnapshotStoreSpec extends AnyFunSuite with TempDirs {
     }
     val parent = parse(st.currentSnapshotId)
     assert(parent.shards.size == 2 && parent.inline.isEmpty)
-    val parentBytes = parent.shards.map(sm =>
-      sm.path -> Files.readAllBytes(metaP.resolve(sm.path)).toSeq).toMap
+    val parentBytes = parent.shards.flatMap(_.files).map(f =>
+      f -> Files.readAllBytes(metaP.resolve(f)).toSeq).toMap
     val before = metaNames()
     st.append(pts.limit(40), "u-2", numPartitions = 2)
     val cur = st.currentSnapshotId
@@ -484,7 +484,7 @@ class SnapshotStoreSpec extends AnyFunSuite with TempDirs {
     assert((added - s"snap-$cur").nonEmpty &&
       (added - s"snap-$cur").forall(_.startsWith(s"snap-$cur-shard-")),
       s"the append wrote $added")
-    assert(child.shards.drop(2).map(_.path).toSet == added - s"snap-$cur")
+    assert(child.shards.drop(2).flatMap(_.files).toSet == added - s"snap-$cur")
     assert(child.shards.drop(2).flatMap(_.lineages) == Seq("u-2"))
     assert(st.read()._1.count() == pts.count() + 40)
     // a delete adds no shard: its tombstone rides inline in the root
@@ -625,6 +625,108 @@ class SnapshotStoreSpec extends AnyFunSuite with TempDirs {
     assert(st.read()._1.count() == pts.count())
     assert(st.expireSnapshots(keepLast = 1) == Seq(cur - 1))
     assert(st.read()._1.count() == pts.count())
+  }
+
+  /** meta/ of the store at `root` holds `current`, `table.json`, the
+    * snapshot roots and exactly the files those roots name: no
+    * subdirectory, nothing unreferenced. */
+  private def assertMetaReachable(root: String): Unit = {
+    val metaP = java.nio.file.Paths.get(root, "meta")
+    val ls = Files.list(metaP)
+    val entries = try ls.toArray.map(_.asInstanceOf[java.nio.file.Path]).toSeq
+      finally ls.close()
+    assert(!entries.exists(Files.isDirectory(_)), s"meta/ has a subdirectory: $entries")
+    val names = entries.map(_.getFileName.toString).toSet
+    val roots = names.filter(_.matches("snap-[0-9]+"))
+    val named = roots.flatMap(r => graft.table.MetaJson.parseManifestRoot(
+      Files.readString(metaP.resolve(r))).shards.flatMap(_.files))
+    assert(names == Set("current", "table.json") ++ roots ++ named,
+      s"unreferenced under meta/: ${names -- roots -- named - "current" - "table.json"}")
+  }
+
+  test("an append that always loses its commit leaves no stats file after vacuum") {
+    // stats files are written by the commit, beside the shards the root
+    // names: a commit that never lands leaves none behind, and vacuum
+    // reclaims the loser's data dir
+    val root = tmp()
+    val st = new SnapshotStore(spark, root, bloomKey = Some("id"))
+    st.append(pts.limit(20), "u-0", numPartitions = 1)
+    val racer = new SnapshotStore(spark, root, bloomKey = Some("id"))
+    var raced = 0
+    st.afterParentCapture = () => {
+      raced += 1
+      racer.append(pts.limit(10), s"u-racer-$raced", numPartitions = 1); ()
+    }
+    intercept[java.util.ConcurrentModificationException] {
+      st.append(pts.limit(30), "u-loser", numPartitions = 1)
+    }
+    st.afterParentCapture = () => ()
+    assert(raced == 6, s"$raced attempts: one plus five retries")
+    assert(!st.committedLineage.contains("u-loser"))
+    st.vacuum(0L)
+    assertMetaReachable(root)
+    val ls = Files.list(java.nio.file.Paths.get(root, "data"))
+    val dirs = try ls.toArray.map(_.toString).toSeq finally ls.close()
+    assert(!dirs.exists(_.contains("u-loser-")), s"loser's unit survived vacuum: $dirs")
+    assert(st.read()._1.count() == 20 + 6 * 10)
+  }
+
+  test("stats lifecycle: after delete, compact, expiry and vacuum meta/ holds only what the root names") {
+    import graft.index.GlobalIndex
+    val root = tmp()
+    val st = new SnapshotStore(spark, root, bloomKey = Some("id"))
+    (0 until 3).foreach(u =>
+      st.append(pts.filter(col("id") % 3 === u), s"u-$u", numPartitions = 4))
+    st.deleteWhere(col("id") % 7 === 0, "del-0")
+    st.compact(numPartitions = 8)
+    // expiry alone already takes the expired shards' stats files along
+    st.expireSnapshots(keepLast = 1)
+    assertMetaReachable(root)
+    st.vacuum(0L)
+    assertMetaReachable(root)
+    val metaP = java.nio.file.Paths.get(root, "meta")
+    val cur = st.currentSnapshotId
+    val ls = Files.list(metaP)
+    val names = try ls.toArray.map(_.asInstanceOf[java.nio.file.Path]
+      .getFileName.toString).toSet finally ls.close()
+    val shards = graft.table.MetaJson.parseManifestRoot(
+      Files.readString(metaP.resolve(s"snap-$cur"))).shards
+    assert(shards.forall(_.bloom.nonEmpty))
+    assert(names == Set("current", "table.json", s"snap-$cur") ++ shards.flatMap(_.files))
+    // the reachable stats still prune, and answers match brute force
+    val live = st.read()._1
+    val id = live.select("id").head().getLong(0)
+    val (hit, kept, total) = st.lookupByKey(Seq(id))
+    assert(kept < total, s"lookup opened all $total files")
+    def ids(df: org.apache.spark.sql.DataFrame) =
+      df.select("id").collect().map(_.getLong(0)).sorted.toSeq
+    assert(ids(hit) == ids(live.filter(col("id") === id)))
+    val (qLat, qLon, k) = (graft.data.Fixtures.knnPoint._1,
+      graft.data.Fixtures.knnPoint._2, graft.data.Fixtures.knnK)
+    val (knn, kKept, kTotal) = GlobalIndex.knnStoredPruned(st, qLat, qLon, k)
+    assert(kKept < kTotal, s"stored kNN opened all $kTotal files")
+    def ranked(d: org.apache.spark.sql.DataFrame) = d
+      .select("rank", "id", "d2").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    assert(ranked(knn) == ranked(graft.ops.SpatialOps.knnSerial(live, qLat, qLon, k)))
+  }
+
+  test("a stats file the root names but the disk lacks fails the read naming its path") {
+    val root = tmp()
+    val st = new SnapshotStore(spark, root, bloomKey = Some("id"))
+    st.append(pts.limit(50), "u-0", numPartitions = 2)
+    val metaP = java.nio.file.Paths.get(root, "meta")
+    val Seq(sm) = graft.table.MetaJson.parseManifestRoot(
+      Files.readString(metaP.resolve(s"snap-${st.currentSnapshotId}"))).shards
+    Files.delete(metaP.resolve(sm.bloom.get))
+    val onLookup = intercept[java.nio.file.NoSuchFileException](st.lookupByKey(Seq(1L)))
+    assert(onLookup.getMessage.contains(sm.bloom.get), onLookup.getMessage)
+    Files.delete(metaP.resolve(sm.index))
+    for (e <- Seq(
+        intercept[java.nio.file.NoSuchFileException](st.indexLeaves()),
+        intercept[java.nio.file.NoSuchFileException](st.hotCells(4)),
+        intercept[java.nio.file.NoSuchFileException](graft.index.GlobalIndex.fromStore(st))))
+      assert(e.getMessage.contains(sm.index), e.getMessage)
   }
 
   test("committedLineage from the root's shard summaries == full parse") {

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The in-task unit stats (UnitTaskStats, computed inside the direct
   * write's tasks) are the only source of a unit's manifest entries and
-  * sidecars. This spec recomputes them with independent relational
+  * stats files. This spec recomputes them with independent relational
   * expressions over the files the store actually committed — the
   * per-(file, cell) aggregate, `xxhash64` of every key folded into a
   * `Bloom.bitsFor(rows of that file)` bitset, and SQL min/max — including
@@ -25,12 +25,22 @@ class UnitTaskStatsSpec extends AnyFunSuite {
 
   import spark.implicits._
 
-  private def sidecar(base: java.nio.file.Path, kind: String): String = {
+  /** The `index` or `bloom` stats document of the store's one shard, read
+    * through the current root that names it. */
+  private def statsDoc(base: java.nio.file.Path, kind: String): String = {
+    val meta = base.resolve("store/meta")
+    val cur = java.nio.file.Files.readString(meta.resolve("current")).trim
+    val shards = MetaJson.parseManifestRoot(
+      java.nio.file.Files.readString(meta.resolve(s"snap-$cur"))).shards
+    assert(shards.length == 1, s"expected one shard, got ${shards.length}")
+    val name = if (kind == "index") shards.head.index else shards.head.bloom.get
+    java.nio.file.Files.readString(meta.resolve(name))
+  }
+
+  private def metaNames(base: java.nio.file.Path): Set[String] = {
     import scala.jdk.CollectionConverters._
-    val files = java.nio.file.Files.list(base.resolve(s"store/meta/$kind"))
-      .iterator().asScala.toArray
-    assert(files.length == 1, s"expected one $kind sidecar")
-    java.nio.file.Files.readString(files.head)
+    val ls = java.nio.file.Files.list(base.resolve("store/meta"))
+    try ls.iterator().asScala.map(_.getFileName.toString).toSet finally ls.close()
   }
 
   /** `df` with planted rows: null lat, NaN lat, null key. */
@@ -76,7 +86,7 @@ class UnitTaskStatsSpec extends AnyFunSuite {
       .view.mapValues(_.map(r => (r.getLong(1), r.getLong(2), r.getDouble(3),
         r.getDouble(4), r.getDouble(5), r.getDouble(6))).sortBy(_._1).toSeq)
       .toMap
-    val (idxRes, gotLeaves) = MetaJson.parseIndex(sidecar(base, "index"))
+    val (idxRes, gotLeaves) = MetaJson.parseIndex(statsDoc(base, "index"))
     assert(idxRes == res)
     assert(gotLeaves.toMap.view.mapValues(_.toList).toMap ==
       expLeaves.view.mapValues(_.toList).toMap)
@@ -94,7 +104,7 @@ class UnitTaskStatsSpec extends AnyFunSuite {
     val expHashes = raw.select(input_file_name().as("f"), xxhash64(col("id")).as("h"))
       .collect().groupBy(r => SnapshotStore.normalizePath(r.getString(0)))
       .view.mapValues(_.map(_.getLong(1)).toSeq).toMap
-    val (kc, k, gotBits) = MetaJson.parseBloom(sidecar(base, "bloom"))
+    val (kc, k, gotBits) = MetaJson.parseBloom(statsDoc(base, "bloom"))
     assert(kc == "id" && k == Bloom.K)
     assert(gotBits.map(_._1).toSet == expHashes.keySet)
     for ((f, hs) <- expHashes) {
@@ -131,6 +141,7 @@ class UnitTaskStatsSpec extends AnyFunSuite {
 
     // delete files take their entry from the same observer: no Z range,
     // lat/lon bounds equal to the tombstone file's SQL min/max ...
+    val before = metaNames(base)
     store.deleteWhere(col("lat") > 0 && col("lon") < 0, "del-box")
     val withCoords = store.manifest().filter(_.kind == "delete")
     assert(withCoords.size == 1)
@@ -141,8 +152,9 @@ class UnitTaskStatsSpec extends AnyFunSuite {
     assert(d.rows == m.getLong(0) && d.minZ == 0L && d.maxZ == 0L)
     assert(d.minLat == m.getDouble(1) && d.maxLat == m.getDouble(2) &&
       d.minLon == m.getDouble(3) && d.maxLon == m.getDouble(4))
-    // no sidecar was written for the delete
-    assert(java.nio.file.Files.list(base.resolve("store/meta/bloom")).count() == 1)
+    // ... and the delete commit adds no shard and no stats file: its
+    // tombstone rides inline in the one new root
+    assert(metaNames(base) -- before == Set(s"snap-${store.currentSnapshotId}"))
     graft.ops.OpUtil.deleteTree(base)
   }
 
