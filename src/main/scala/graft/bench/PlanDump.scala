@@ -13,9 +13,10 @@ object PlanDump {
 
   /** Run-invariant form of an explain string: expression ids (`#123`),
     * `plan_id=`s, AQE query-stage ids (stages are numbered as they finish),
-    * lambda class names and identity hashes, temp-dir names and the
-    * per-write uuid segments of unit dirs and part files differ between
-    * two runs of the same plans. Codegen stage ids, also numbered in
+    * lambda class names and identity hashes, temp-dir names, the
+    * per-write uuid segments of unit dirs and part files, and the
+    * BroadcastQueryStage `sizeInBytes` estimates (they scale with the
+    * driver heap) differ between two runs of the same plans. Codegen stage ids, also numbered in
     * finishing order under AQE, are renumbered by first appearance, which
     * keeps which operators share a stage. */
   def normalize(plan: String): String = {
@@ -27,6 +28,7 @@ object PlanDump {
       .replaceAll("#\\d+", "#N")
       .replaceAll("plan_id=\\d+", "plan_id=N")
       .replaceAll("(QueryStage\\nOutput \\[\\d+\\]: [^\\n]*\\nArguments: )\\d+", "$1N")
+      .replaceAll("(BroadcastQueryStage \\(\\d+\\), Statistics\\(sizeInBytes=)[^,)]+", "$1N")
       .replaceAll("\\$Lambda[^\\s,@]*@[0-9a-f]+", "\\$Lambda")
       .replaceAll(tmp + "/([A-Za-z_]+?)\\d+(?=/|\\])", "<tmp>/$1")
       .replaceAll("(/data/[^/\\s,\\]]+)-[0-9a-f]{8}/", "$1-<uuid>/")
@@ -106,7 +108,7 @@ object PlanDump {
     } catch { case e: Throwable =>
       sb ++= s"\n## stored-table kNN\n\nSKIPPED: ${e.getMessage}\n" }
     store.deleteWhere(graft.geo.GeoCols.inBox(col("lat"), col("lon"), Fixtures.boxes.head._2), "del-0")
-    dump("snapshot read() with equality deletes", "Merge-on-read tombstones: one BroadcastHashJoin LeftAnti on the exact row — the data side never shuffles.",
+    dump("snapshot read() with deletion vectors", "Merge-on-read by position: the deleted rows' positions, one bitset per data file read from the DV files the root names, feed ONE codegen'd graft_row_deleted filter over the scan's _metadata.file_path and _metadata.row_index — no join, no broadcast, no union; each data file is scanned once.",
       store.read()._1)
     dump("distanceJoin", "Spatial self-join: the exploded 3x3-neighborhood probe side is tiny and broadcasts; the corpus side is scanned once, joined on its single cell key — never an all-pairs cross.",
       SpatialOps.distanceJoin(pts, Fixtures.distEps, Fixtures.distProbeMod))

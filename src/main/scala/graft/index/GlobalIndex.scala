@@ -102,13 +102,13 @@ object GlobalIndex {
     * with no slabs (all-null coordinates) falls back to its manifest MBR
     * as a single leaf — a coarser bound, never a wrong one.
     *
-    * Caveat for count-based bounds ([[GlobalIndex.knnSeedRadius]]):
-    * pending equality-delete tombstones make slab counts an OVERcount of
-    * live rows, so [[knnStored]] re-audits its radius against the live
-    * data before trusting it. */
+    * Caveat for count-based bounds ([[GlobalIndex.knnSeedRadius]]): the
+    * slabs count rows as written, so deleted positions overcount live
+    * rows, and [[knnStored]] re-audits its radius against the live data
+    * before trusting it. */
   def fromStore(store: graft.table.SnapshotStore,
                 fanout: Int = LocalRTree.DefaultFanout): GlobalIndex = {
-    val live = store.manifest().filter(_.kind == "data")
+    val live = store.manifest()
     val leavesByFile = store.indexLeaves()
     val parts = live.sortBy(_.path).zipWithIndex.map { case (e, i) =>
       val leaves = leavesByFile.get(
@@ -132,8 +132,8 @@ object GlobalIndex {
     * prune, RStarTree.java:426) → exact top-k. The index build cost is
     * amortized to WRITE time; the query pays only the pruned scan.
     *
-    * Exactness audit: index-file counts may overcount live rows under pending
-    * tombstones, so the bound is re-verified against the candidates
+    * Exactness audit: index-file counts overcount live rows by the deleted
+    * positions, so the bound is re-verified against the candidates
     * (count ≥ k and kth distance ≤ radius²); a failed audit falls back to
     * the full-table scan — superset-then-refine, never a wrong answer. */
   def knnStored(store: graft.table.SnapshotStore,
@@ -174,7 +174,7 @@ object GlobalIndex {
         .map { case ((id, la, lo, d2), i) => ((i + 1).toLong, id, la, lo, d2) }
         .toDF("rank", "id", "lat", "lon", "d2"), kept, total)
     else {
-      // tombstone overcounts shrank the radius below provability: pay the
+      // deleted positions overcount: the radius fell below provability; pay the
       // full scan (superset-then-refine, never a wrong answer)
       val (full, fullKept, fullTotal) = store.read()
       (graft.ops.SpatialOps.knnSerial(full, qLat, qLon, k), fullKept, fullTotal)
@@ -194,7 +194,7 @@ object GlobalIndex {
     * Exactness: each query's candidates are a superset of its radius box,
     * and the seed radius provably bounds the kth distance — re-audited per
     * query against the live rows (count ≥ k, kth distance ≤ radius²)
-    * because tombstones make index-file counts an overcount; failed queries
+    * because deleted positions make index-file counts an overcount; failed queries
     * fall back to the dense join over the full table, never a wrong
     * answer. */
   def knnJoinStored(store: graft.table.SnapshotStore,
@@ -265,7 +265,7 @@ object GlobalIndex {
       .select(col("q_id"), col("rank"), col("id"))
     // on fallback the reported counts must describe the EXECUTED plan, not
     // the pruned read the audit abandoned (knnStoredPruned's contract): a
-    // prune assert against a tombstone-degraded store would otherwise pass
+    // prune assert against a store with deletes would otherwise pass
     // while the query scanned every file
     val (out, keptOut, totalOut) =
       if (bad.isEmpty) (exactPart, kept, total)

@@ -177,8 +177,11 @@ object TextOps {
                        stagePath: Option[String] = None): DataFrame = {
     val fpRaw = fingerprint(docs, k)
     val fp = OpUtil.stageOrPersist(fpRaw, stagePath)
+    // the fingerprint table has one row per document; naming the b side
+    // as the broadcast side fixes the plan (both sides are one relation
+    // with equal stats, and AQE's own pick flipped between runs)
     val out = fp.select(col("fingerprint"), col("doc_id").as("a_id"))
-      .join(fp.select(col("fingerprint").as("fp_b"), col("doc_id").as("b_id")),
+      .join(broadcast(fp.select(col("fingerprint").as("fp_b"), col("doc_id").as("b_id"))),
         col("fingerprint") === col("fp_b") && col("a_id") < col("b_id"))
       .select(col("a_id"), col("b_id"))
     if (stagePath.isDefined) out else OpUtil.finish(out, fp)

@@ -5,7 +5,7 @@ import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import org.apache.spark.sql.types.{DataType, StructType}
 
 /** Driver-side JSON codec for the store's metadata artifacts (manifests,
-  * table meta, per-shard Bloom / index stats files).
+  * table meta, per-shard Bloom / index stats and deletion-vector files).
   *
   * Why JSON files instead of parquet datasets: a manifest is a few hundred
   * rows of driver-resident metadata, but writing it through Spark costs a
@@ -30,23 +30,25 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * alone instead of parsing every shard per micro-batch. `index` and
   * `bloom` name the shard's stats files, written beside it by the same
   * commit: the per-file index leaves (always) and the per-file Bloom
-  * bitsets (when its files carry them). Every shard row carries
+  * bitsets (when its files carry them). `dv` names the deletion-vector
+  * file of the shard's files (per file, the bitset of deleted row
+  * positions), written by the delete commit that last replaced this row,
+  * and `deleted` counts the positions it marks. Every shard row carries
   * `lineages` and `index`: a row without either fails to parse. */
 final case class ShardMeta(path: String, entries: Int,
                            minZ: Long, maxZ: Long,
                            minLat: Double, maxLat: Double,
                            minLon: Double, maxLon: Double,
                            lineages: Seq[String],
-                           index: String, bloom: Option[String]) {
+                           index: String, bloom: Option[String],
+                           dv: Option[String] = None, deleted: Long = 0L) {
   /** The shard file and its stats files: what the shard row references. */
-  def files: Seq[String] = Seq(path, index) ++ bloom
+  def files: Seq[String] = Seq(path, index) ++ bloom ++ dv
 }
 
 /** A parsed snapshot root ([[MetaJson.manifestListJson]]): the shard rows
-  * (data entries), the inline delete tombstones, and the lineage ids
-  * folded into compactions. */
-final case class ManifestRoot(shards: Seq[ShardMeta], inline: Seq[FileEntry],
-                              folded: Seq[String])
+  * and the lineage ids folded into compactions and deletes. */
+final case class ManifestRoot(shards: Seq[ShardMeta], folded: Seq[String])
 
 object MetaJson {
 
@@ -59,7 +61,7 @@ object MetaJson {
     o.put("minLat", e.minLat); o.put("maxLat", e.maxLat)
     o.put("minLon", e.minLon); o.put("maxLon", e.maxLon)
     o.put("lineageId", e.lineageId); o.put("wallMs", e.wallMs)
-    o.put("kind", e.kind); o.put("seq", e.seq)
+    o.put("seq", e.seq)
     o
   }
 
@@ -91,18 +93,17 @@ object MetaJson {
         l(o, "minZ", Long.MinValue), l(o, "maxZ", Long.MaxValue),
         d(o, "minLat", -Double.MaxValue), d(o, "maxLat", Double.MaxValue),
         d(o, "minLon", -Double.MaxValue), d(o, "maxLon", Double.MaxValue),
-        s(o, "lineageId", ""), l(o, "wallMs", 0L),
-        s(o, "kind", "data"), l(o, "seq", 0L))
+        s(o, "lineageId", ""), l(o, "wallMs", 0L), l(o, "seq", 0L))
     }
   }
 
   /** A snapshot root — the manifest LIST, the only manifest layout (the
     * Iceberg shape at any table size): `shards` rows point at per-shard
-    * manifest files holding the DATA entries, with union Z / lat-lon
-    * bounds so a box read downloads only overlapping shards; `entries`
-    * holds the delete tombstones INLINE, which every plan needs regardless
-    * of the box; `folded` lists the lineage ids a compaction rewrote, so
-    * they stay committed for resumable runs without any manifest entry. */
+    * manifest files holding the data entries, with union Z / lat-lon
+    * bounds so a box read downloads only overlapping shards, and name the
+    * shard's stats and deletion-vector files; `folded` lists the lineage
+    * ids a compaction rewrote or a delete applied, so they stay committed
+    * for resumable runs without any manifest entry. */
   def manifestListJson(root: ManifestRoot): String = {
     val o = mapper.createObjectNode()
     val sArr = o.putArray("shards")
@@ -115,9 +116,8 @@ object MetaJson {
       val la = so.putArray("lineages"); sm.lineages.foreach(la.add)
       so.put("index", sm.index)
       sm.bloom.foreach(so.put("bloom", _))
+      sm.dv.foreach { d => so.put("dv", d); so.put("deleted", sm.deleted) }
     }
-    val eArr = o.putArray("entries")
-    root.inline.foreach(e => eArr.add(entryNode(e)))
     val fArr = o.putArray("folded")
     root.folded.foreach(fArr.add)
     mapper.writerWithDefaultPrettyPrinter().writeValueAsString(o)
@@ -127,8 +127,10 @@ object MetaJson {
     * defaults as entry stats — an unknown bound makes the shard
     * un-prunable, never silently skipped. Readers look for data only in
     * shards and for compacted lineage only in `folded`, so a root missing
-    * either node, or holding a data entry inline, fails instead of
-    * reading as an empty (or lineage-less) table. */
+    * either node fails instead of reading as an empty (or lineage-less)
+    * table. A root with entries inline (equality-delete tombstones, or
+    * data) fails too: read without them, it would bring deleted rows
+    * back. */
   def parseManifestRoot(json: String): ManifestRoot = {
     val root = mapper.readTree(json)
     def required(n: String): ArrayNode = Option(root.get(n)).getOrElse(
@@ -149,13 +151,16 @@ object MetaJson {
         d(o, "minLat", -Double.MaxValue), d(o, "maxLat", Double.MaxValue),
         d(o, "minLon", -Double.MaxValue), d(o, "maxLon", Double.MaxValue),
         lin, field("index", "index stats file").asText(),
-        Option(o.get("bloom")).map(_.asText()))
+        Option(o.get("bloom")).map(_.asText()),
+        Option(o.get("dv")).map(_.asText()), l(o, "deleted", 0L))
     }
-    val inline = entriesFrom(root)
-    inline.find(_.kind == "data").foreach(e => throw new IllegalStateException(
-      s"manifest root holds data entry '${e.path}' inline; data entries live in shards"))
+    Option(root.get("entries")).filter(_.size() > 0).foreach(_ =>
+      throw new IllegalStateException(
+        s"manifest root holds entry '${entriesFrom(root).head.path}' inline; " +
+          "data entries live in shards and deletes in deletion vectors (a root " +
+          "with inline equality-delete tombstones predates them: rebuild the table)"))
     val fNode = required("folded")
-    ManifestRoot(shards, inline, (0 until fNode.size()).map(i => fNode.get(i).asText()))
+    ManifestRoot(shards, (0 until fNode.size()).map(i => fNode.get(i).asText()))
   }
 
   /** The pinned table layout: curve, zRes, histRes and the data schema
@@ -184,12 +189,32 @@ object MetaJson {
   // jackson's STREAMING generator/parser instead of the tree model (no
   // per-value node allocation).
 
-  def bloomJson(keyCol: String, k: Int, files: Seq[(String, Array[Long])]): String = {
+  /** Per-file bitsets: a shard's Bloom filters over `keyCol` with `k`
+    * probes. */
+  def bloomJson(keyCol: String, k: Int, files: Seq[(String, Array[Long])]): String =
+    bitsJson(Seq("keyCol" -> keyCol, "k" -> k), files)
+
+  /** (keyCol, k, path → bits). */
+  def parseBloom(json: String): (String, Int, Seq[(String, Array[Long])]) = {
+    val (h, files) = parseBits(json)
+    (h.getOrElse("keyCol", ""), h.get("k").fold(0)(_.toInt), files)
+  }
+
+  /** Per-file bitsets: a shard's deletion vectors (bit i = row position i
+    * of that file is deleted). */
+  def dvJson(files: Seq[(String, Array[Long])]): String = bitsJson(Nil, files)
+
+  def parseDv(json: String): Seq[(String, Array[Long])] = parseBits(json)._2
+
+  /** `{<scalar header fields>, "files": [{"path", "bits": [...]}, ...]}`. */
+  private def bitsJson(header: Seq[(String, Any)], files: Seq[(String, Array[Long])]): String = {
     val sw = new java.io.StringWriter(files.map(_._2.length).sum * 12 + 256)
     val g = mapper.getFactory.createGenerator(sw)
     g.writeStartObject()
-    g.writeStringField("keyCol", keyCol)
-    g.writeNumberField("k", k)
+    header.foreach {
+      case (n, v: Int) => g.writeNumberField(n, v)
+      case (n, v)      => g.writeStringField(n, v.toString)
+    }
     g.writeArrayFieldStart("files")
     files.foreach { case (p, bits) =>
       g.writeStartObject()
@@ -206,19 +231,16 @@ object MetaJson {
     sw.toString
   }
 
-  /** (keyCol, k, path → bits). */
-  def parseBloom(json: String): (String, Int, Seq[(String, Array[Long])]) = {
+  /** (scalar header fields as text, path → bits). */
+  private def parseBits(json: String): (Map[String, String], Seq[(String, Array[Long])]) = {
     import com.fasterxml.jackson.core.JsonToken
     val p = mapper.getFactory.createParser(json)
-    var keyCol = ""
-    var k = 0
+    val header = Map.newBuilder[String, String]
     val files = Seq.newBuilder[(String, Array[Long])]
     try {
       p.nextToken() // START_OBJECT
       while (p.nextToken() == JsonToken.FIELD_NAME) {
         p.currentName() match {
-          case "keyCol" => p.nextToken(); keyCol = p.getText
-          case "k" => p.nextToken(); k = p.getIntValue
           case "files" =>
             p.nextToken() // START_ARRAY
             while (p.nextToken() == JsonToken.START_OBJECT) {
@@ -237,11 +259,12 @@ object MetaJson {
               }
               files += ((path, bits))
             }
-          case _ => p.nextToken(); p.skipChildren()
+          case n =>
+            if (p.nextToken().isScalarValue) header += n -> p.getText else p.skipChildren()
         }
       }
     } finally p.close()
-    (keyCol, k, files.result())
+    (header.result(), files.result())
   }
 
   /** Per-file leaf slabs: (cell, cnt, minLat, maxLat, minLon, maxLon). */

@@ -1,12 +1,12 @@
 package graft.table
 
-import graft.functions.ZRangeContains
+import graft.functions.{RowDeleted, ZRangeContains}
 import graft.geo.{CellId, GeoCols, MBR}
 import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Cast, InSet, Literal}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{BinaryType, StructType}
+import org.apache.spark.sql.types.StructType
 import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
 import scala.collection.immutable.HashSet
 
@@ -15,20 +15,21 @@ import scala.collection.immutable.HashSet
   * DataFile (per-file cell-range stats replace the reference's per-node
   * MBRs, IndexFile.java:37-95, at file granularity).
   *
-  * `kind` is "data" for data files, "delete" for equality-delete
-  * tombstone files (Iceberg-v2-shaped: a parquet of key rows whose exact
-  * matches are dead in every data file committed BEFORE the tombstone —
-  * sequence-scoped, so later re-inserts stay live — until a compaction
-  * folds the deletes in and purges them).
+  * Every entry is a data file: deleted rows are positions in their file's
+  * deletion vector ([[ShardMeta.dv]]), not entries. `rows` counts the rows
+  * written, deleted ones included.
   *
   * `seq` is the Iceberg-style sequence number: the snapshot id of the
-  * commit that introduced the entry, PERSISTED so delete scoping never
-  * depends on the physical row order of the manifest. */
+  * commit that introduced the entry, PERSISTED so incremental reads
+  * ([[SnapshotStore.appendedSince]]) never depend on the physical row
+  * order of the manifest. */
 final case class FileEntry(path: String, rows: Long, minZ: Long, maxZ: Long,
                            minLat: Double, maxLat: Double,
                            minLon: Double, maxLon: Double,
-                           lineageId: String, wallMs: Long,
-                           kind: String = "data", seq: Long = 0L)
+                           lineageId: String, wallMs: Long, seq: Long = 0L) {
+  /** Always "data": kept for readers that still filter entries on it. */
+  def kind: String = "data"
+}
 
 /** Minimal Iceberg-shaped table format (SURVEY.md §7.4). Real Iceberg jars
   * aren't in this environment, so the same semantics are implemented
@@ -40,14 +41,16 @@ final case class FileEntry(path: String, rows: Long, minZ: Long, maxZ: Long,
   * <root>/meta/snap-<n>-shard-<k>-<uid>.json          data entries (JSON of FileEntry)
   * <root>/meta/snap-<n>-shard-<k>-<uid>.index.json    the shard's files' index leaves
   * <root>/meta/snap-<n>-shard-<k>-<uid>.bloom.json    their Bloom bitsets (bloomKey)
+  * <root>/meta/snap-<n>-dv-<uid>-<k>.json              a shard's deletion vectors,
+  *                                                    written by delete n
   * <root>/meta/current                                atomic pointer "n"
   * <root>/meta/table.json                             pinned layout (curve, zRes,
   *                                                    histRes, data schema)
   * }}}
   *
   * The root names every other file under meta/: readers open only what
-  * it names, and a shard's stats files are written, carried, expired and
-  * vacuumed together with the shard.
+  * it names, and a shard's stats and deletion-vector files are carried,
+  * expired and vacuumed together with the shard.
   *
   * The first commit pins the table schema (the keyed unit's columns,
   * `__z` included); every later unit must match it, and every read plans
@@ -64,8 +67,8 @@ final case class FileEntry(path: String, rows: Long, minZ: Long, maxZ: Long,
   * Manifest layout — one at every size, Iceberg's TWO-LEVEL shape: the
   * root `snap-N` is a manifest LIST whose rows carry per-shard Z/lat-lon
   * union bounds, with the data entries chunked (`manifestShardRows` per
-  * shard) into shard files; delete tombstones ride inline in the root and
-  * compacted lineage ids in its `folded` list. Box reads download only the
+  * shard) into shard files; compacted and deleting lineage ids ride in its
+  * `folded` list. Box reads download only the
   * shards overlapping the query ([[manifestPartial]]) — at the 10¹²-row
   * design point (~10⁶ files of ~100 MB) a whole manifest would be a few
   * hundred MB of driver-side JSON per read. Commits carry the parent's
@@ -173,7 +176,7 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     * never a cluster job). A `snap-N` that is not a regular file fails
     * the read ([[readRoot]]). */
   def manifest(snapshotId: Long = currentSnapshotId): Seq[FileEntry] =
-    manifestPartial(snapshotId, None)._1
+    manifestPartial(snapshotId, None)._1.flatMap(_._2)
 
   /** Manifest read with optional SHARD pruning: when `boxes` is given,
     * only shards whose union bounds overlap some box are downloaded and
@@ -181,14 +184,14 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     * 10⁶-file design point a box read touches a handful of shard files
     * instead of a few hundred MB of driver-side JSON; with
     * `shardHint` (a key lookup's Bloom verdict per shard), only the shards
-    * it passes load. Inline entries (delete tombstones) always load. Returns the loaded
-    * entries plus the TOTAL data-file count of the snapshot (known from
+    * it passes load. Returns the loaded shard rows with their
+    * entries, plus the TOTAL data-file count of the snapshot (known from
     * the shard rows without reading them) so pruning stays observable. */
   private[graft] def manifestPartial(snapshotId: Long,
                                      boxes: Option[Seq[MBR]],
                                      shardHint: Option[ShardMeta => Boolean] = None,
                                      rangesHint: Option[Seq[(Long, Long)]] = None)
-      : (Seq[FileEntry], Int) = {
+      : (Seq[(ShardMeta, Seq[FileEntry])], Int) = {
     if (snapshotId == 0) (Seq.empty, 0)
     else {
       if (!Files.exists(metaDir.resolve(s"snap-$snapshotId")))
@@ -204,19 +207,21 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
       // compaction): a shard whose interval meets no
       // covering range holds no row of any query box, even when its
       // lat/lon union still overlaps one (per-append shards span wide
-      // boxes). Sound because shards carry ONLY data entries —
-      // tombstones stay inline in the root.
+      // boxes).
       val wanted = root.shards.filter { sm =>
         boxes.forall(bs => bs.exists(b =>
           MBR(sm.minLat, sm.minLon, sm.maxLat, sm.maxLon).overlaps(b))) &&
         zBounds.forall(ZRangeContains.meets(_, sm.minZ, sm.maxZ)) &&
         shardHint.forall(_(sm))
       }
-      val loaded = root.inline ++ wanted.flatMap(sm =>
-        MetaJson.parseManifest(readMeta(sm.path)))
-      (loaded, root.shards.map(_.entries).sum)
+      (wanted.map(sm => sm -> MetaJson.parseManifest(readMeta(sm.path))),
+        root.shards.map(_.entries).sum)
     }
   }
+
+  /** The deletion vectors of one shard row, by normalized file path. */
+  private def vectorsOf(sm: ShardMeta): Map[String, Array[Long]] =
+    sm.dv.fold(Map.empty[String, Array[Long]])(n => MetaJson.parseDv(readMeta(n)).toMap)
 
   /** Parse the root of snapshot `snapshotId`. The root is a JSON FILE;
     * anything else under the `snap-N` name (a directory, say), or a
@@ -243,24 +248,21 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
   def committedLineage: Set[String] = lineageSet(currentSnapshotId)
 
   /** Lineage ids of snapshot `snapshotId`, from its ROOT alone (KBs at the
-    * 10⁶-file design point): the shard rows' `lineages` summaries, the
-    * inline tombstones' ids and the ids folded into compactions. */
+    * 10⁶-file design point): the shard rows' `lineages` summaries and the
+    * ids folded into compactions and deletes. */
   private def lineageSet(snapshotId: Long): Set[String] =
     if (snapshotId == 0) Set.empty
     else {
       val root = readRoot(snapshotId)
-      root.inline.map(_.lineageId).toSet ++ root.shards.flatMap(_.lineages) ++ root.folded
+      root.shards.flatMap(_.lineages).toSet ++ root.folded
     }
 
-  /** Live-row count from manifest stats alone — the plan-time input to
+  /** Exact live-row count from metadata alone — the plan-time input to
     * [[graft.geo.CellId.pickResolution]] (adaptive covering resolution
-    * with ZERO data scans; tombstone rows are subtracted as an upper
-    * bound on dead rows). */
-  def totalRows: Long = {
-    val m = manifest()
-    m.filter(_.kind == "data").map(_.rows).sum -
-      m.filter(_.kind == "delete").map(_.rows).sum
-  }
+    * with ZERO data scans): the rows written minus the positions the
+    * shard rows' deletion vectors mark. */
+  def totalRows: Long = manifestPartial(currentSnapshotId, None)._1
+    .map { case (sm, es) => es.map(_.rows).sum - sm.deleted }.sum
 
   /** Append a (lat, lon, …) DataFrame as one lineage unit: Z-cluster it
     * (repartitionByRange + sortWithinPartitions — the bulk-load pack),
@@ -303,31 +305,24 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     * [[UnitTaskStats]] observer threaded through each task, yielding every
     * non-empty file's manifest entry (exact `__z`/lat/lon bounds,
     * fail-open on NaN or all-null) with its leaves and Bloom bitset — zero
-    * further passes over the unit. */
+    * further passes over the unit. Entries name only the files of
+    * SUCCESSFUL tasks, so a failed attempt's orphan never reaches the
+    * manifest. */
   private def writeUnitFiles(clustered: DataFrame, unitDir: String,
                              lineageId: String, t0: Long)
-      : Seq[(FileEntry, UnitFileStats)] =
-    writeObserved(clustered, unitDir, lineageId, t0, "data",
-      bloomKey.filter(clustered.columns.contains), Some(histRes))
-
-  /** Direct write of `df` into `unitDir` with in-task stats; one manifest
-    * entry of `kind` per non-empty written file. Entries name only the
-    * files of SUCCESSFUL tasks, so a failed attempt's orphan never reaches
-    * the manifest. */
-  private def writeObserved(df: DataFrame, unitDir: String, lineageId: String,
-                            t0: Long, kind: String, key: Option[String],
-                            leavesRes: Option[Int]): Seq[(FileEntry, UnitFileStats)] = {
-    val res = org.apache.spark.sql.GraftParquetDirect.writeStats(df, unitDir,
-      UnitTaskStats.observer(df.schema, key, leavesRes))
+      : Seq[(FileEntry, UnitFileStats)] = {
+    val res = org.apache.spark.sql.GraftParquetDirect.writeStats(clustered, unitDir,
+      UnitTaskStats.observer(clustered.schema,
+        bloomKey.filter(clustered.columns.contains), histRes))
     val wallMs = (System.nanoTime() - t0) / 1000000
-    SnapshotStore.trace(s"$kind.write", t0)
+    SnapshotStore.trace("data.write", t0)
     val dirPath = new org.apache.hadoop.fs.Path(unitDir)
     val fs = dirPath.getFileSystem(spark.sessionState.newHadoopConf())
     res.filter(_._2 > 0).map { case (name, rows, s) =>
       (FileEntry(
         fs.makeQualified(new org.apache.hadoop.fs.Path(dirPath, name)).toString,
         rows, s.minZ, s.maxZ, s.minLat, s.maxLat, s.minLon, s.maxLon,
-        lineageId, wallMs, kind), s)
+        lineageId, wallMs), s)
     }
   }
 
@@ -335,12 +330,11 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     * unique names and the manifest merge is purely additive, so
     * a commit that loses the optimistic-concurrency race rebases onto the
     * winner's manifest and retries with nothing rewritten — Iceberg's
-    * fast-append retry, bounded. Replacing/delete commits never come
-    * through here: a compaction PLANS against a pinned parent (rebasing
-    * would silently drop the racer's unit from the replacing manifest),
-    * and a tombstone rebased past a racer's data would widen its sequence
-    * scope onto rows it never saw — both still fail loudly for the caller
-    * to re-plan. */
+    * fast-append retry, bounded. Replacing and delete commits never come
+    * through here: both PLAN against a pinned parent — rebasing a
+    * compaction would silently drop the racer's unit from the replacing
+    * manifest, and a delete's shard rows replace the parent's by name —
+    * so both still fail loudly for the caller to re-plan. */
   private def commitAppend(files: Seq[(FileEntry, UnitFileStats)], schema: StructType,
                            retries: Int = 5): Long = {
     val seen = currentSnapshotId
@@ -367,8 +361,8 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
   /** Key point lookup planned through the shards' Bloom files: only
     * files whose filter says a probed key MIGHT be present are opened
     * (plus any file with no filter — fail open, e.g. units appended by a
-    * store without a bloom key). The result applies the same
-    * sequence-scoped tombstone chain as [[read]], then refines exactly
+    * store without a bloom key). The result drops deleted rows as
+    * [[read]] does, then refines exactly
     * with a pushed `IN` predicate ([[keyIn]]), so `lookupByKey(vs)` ==
     * `read()._1.filter(key IN vs)` always — the Bloom only changes how
     * many files the plan opens. Returns (rows, files read, total files).
@@ -472,8 +466,9 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
   private[graft] var afterParentCapture: () => Unit = () => ()
 
   /** Manifest-append commit: parent shards + new entries (with their
-    * write-task stats) → snap-(n+1), atomic pointer swing; `folded` joins
-    * the root's compacted-lineage list; `schema` (the written files'
+    * write-task stats) → snap-(n+1), atomic pointer swing; `vectors`
+    * replaces parent shard rows with their new deletion vectors; `folded`
+    * joins the root's folded-lineage list; `schema` (the written files'
     * columns) is pinned or validated against the table's pin first. Single-writer (the
     * driver) — matching the reference's single-threaded writer;
     * multi-writer needs a CAS on `current`, which real Iceberg's catalog
@@ -494,7 +489,8 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
   private def commit(files: Seq[(FileEntry, UnitFileStats)], schema: StructType,
                      replaceParent: Boolean = false,
                      expectedParent: Long = -1L,
-                     folded: Seq[String] = Seq.empty): Long = {
+                     folded: Seq[String] = Seq.empty,
+                     vectors: Seq[(ShardMeta, Seq[(String, Array[Long])])] = Seq.empty): Long = {
     val parent = if (expectedParent >= 0) expectedParent else currentSnapshotId
     afterParentCapture()
     def assertUnmoved(): Unit =
@@ -514,7 +510,7 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     // of silently replacing a snapshot it never read (real Iceberg moves
     // this CAS into the catalog; the seam is identical)
     val (written, fresh) =
-      try writeManifestFile(next, parent, stamped, folded, replaceParent)
+      try writeManifestFile(next, parent, stamped, folded, replaceParent, vectors)
       catch {
         case e: java.nio.file.FileAlreadyExistsException =>
           throw new java.util.ConcurrentModificationException(
@@ -534,16 +530,14 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     // racer would otherwise swing the pointer onto the racer's manifest
     // and silently lose its own entries while reporting success. This
     // verifies WITHOUT a full manifest parse (commits must stay
-    // O(commit), not O(table)): the root's shard rows, inline entries and
-    // folded lineage must be exactly what this commit wrote, and only the
+    // O(commit), not O(table)): the root's shard rows and folded lineage
+    // must be exactly what this commit wrote, and only the
     // shards this commit CREATED are re-parsed — carried shards are
     // immutable files a racer cannot have produced under our uid names
     // (a replacing commit creates every shard it lists).
     def tup(e: FileEntry) = (e.lineageId, e.path, e.rows, e.seq)
     val got = readRoot(next)
-    if (got.shards != written.shards ||
-        got.inline.map(tup).sorted != written.inline.map(tup).sorted ||
-        got.folded != written.folded ||
+    if (got.shards != written.shards || got.folded != written.folded ||
         fresh.exists { case (name, ents) =>
           MetaJson.parseManifest(readMeta(name)).map(tup).sorted !=
             ents.map(tup).sorted })
@@ -566,9 +560,7 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     * append spans its own key range), so their union bounds are looser
     * than a global re-sort; [[compact]]'s replacing commit re-chunks
     * globally by minZ, exactly like Iceberg's rewrite-manifests
-    * maintenance. Delete tombstones stay inline in the root — every plan
-    * needs them — and `folded` extends the parent's compacted-lineage
-    * list.
+    * maintenance. `folded` extends the parent's folded-lineage list.
     *
     * Each new shard `snap-N-shard-K-<uid>.json` gets its stats files
     * beside it, named by its root row, from the in-task stats of its files:
@@ -582,6 +574,12 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     *    shard's files carry them (not when the store has no key or the
     *    table lacks the column) — [[lookupByKey]]'s file and shard skip.
     *
+    * A delete's `vectors` give, per parent shard it hit, that shard's
+    * whole new set of deletion vectors: each is written as
+    * `snap-N-dv-<uid>-<k>.json` and the shard row is carried with `dv`
+    * naming it and `deleted` counting its marked positions — the shard
+    * file and its stats files stay the same files.
+    *
     * Shards and stats are written FIRST under commit-unique names; the
     * root file write is the CREATE_NEW tripwire, and a failed commit
     * deletes every file it wrote. Returns the root written and the shards
@@ -589,12 +587,12 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
   private def writeManifestFile(next: Long, parent: Long,
                                 stamped: Seq[(FileEntry, UnitFileStats)],
                                 folded: Seq[String],
-                                replaceParent: Boolean)
+                                replaceParent: Boolean,
+                                vectors: Seq[(ShardMeta, Seq[(String, Array[Long])])])
       : (ManifestRoot, Seq[(String, Seq[FileEntry])]) = {
     val prev =
-      if (replaceParent || parent == 0) ManifestRoot(Seq.empty, Seq.empty, Seq.empty)
+      if (replaceParent || parent == 0) ManifestRoot(Seq.empty, Seq.empty)
       else readRoot(parent)
-    val (data, deletes) = stamped.partition(_._1.kind == "data")
     val uid = java.util.UUID.randomUUID().toString.take(8)
     val written = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
     def put(name: String, json: String): String = {
@@ -604,7 +602,11 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
       name
     }
     try {
-      val fresh = data.sortBy(_._1.minZ).grouped(manifestShardRows)
+      val marked = vectors.zipWithIndex.map { case ((sm, vs), k) =>
+        sm.path -> sm.copy(dv = Some(put(s"snap-$next-dv-$uid-$k.json", MetaJson.dvJson(vs))),
+          deleted = vs.map(_._2.map(java.lang.Long.bitCount).sum.toLong).sum)
+      }.toMap
+      val fresh = stamped.sortBy(_._1.minZ).grouped(manifestShardRows)
         .zipWithIndex.map { case (chunk, k) =>
           val name = s"snap-$next-shard-$k-$uid"
           val g = chunk.map(_._1)
@@ -620,8 +622,8 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
             g.map(_.minLon).min, g.map(_.maxLon).max,
             lineages = g.map(_.lineageId).distinct, index, bloom), g)
         }.toSeq
-      val root = ManifestRoot(prev.shards ++ fresh.map(_._1),
-        prev.inline ++ deletes.map(_._1), prev.folded ++ folded)
+      val root = ManifestRoot(prev.shards.map(sm => marked.getOrElse(sm.path, sm)) ++
+        fresh.map(_._1), prev.folded ++ folded)
       Files.writeString(metaDir.resolve(s"snap-$next"), MetaJson.manifestListJson(root),
         StandardOpenOption.CREATE_NEW)
       (root, fresh.map { case (sm, g) => sm.path -> g })
@@ -648,15 +650,16 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
         digits.forall(_.isDigit)) Some(digits.toLong) else None
   }
 
-  /** Shard-file name twin of [[snapRootId]] — one compiled copy. */
-  private val shardNameRe = "^snap-([0-9]{1,18})-shard-.*\\.json$".r
+  /** Shard-file name twin of [[snapRootId]] — one compiled copy. It names
+    * shard, stats and deletion-vector files alike. */
+  private val shardNameRe = "^snap-([0-9]{1,18})-(?:shard|dv)-.*\\.json$".r
 
   /** Shard and stats file names referenced by every existing snapshot
     * root except `excludeIds`. Under shard reuse a shard written at snap-k is
     * referenced by k and every descendant until a replacing commit —
     * deletion must check the whole root set, not just the snapshot being
-    * dropped. Roots are KBs (shard list + inline tombstones + folded
-    * lineage ids), so this scan is cheap even at the 10⁶-file design
+    * dropped. Roots are KBs (shard list + folded lineage ids), so this
+    * scan is cheap even at the 10⁶-file design
     * point. Returns None if ANY root is unreadable — an IO error, or a
     * `snap-N` that is not a regular file: an unknown reference set must
     * FAIL CLOSED — callers delete nothing rather than treat "couldn't
@@ -793,12 +796,9 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     * covering. A single box's covering is already sorted, disjoint and
     * within 1024 ranges, so the merge leaves it as it is.
     *
-    * The covering is computed ONCE per read, outside the refine closure:
-    * planAt invokes `refine` once per tombstone sequence group, and the
-    * quadtree descents + merge are driver work proportional to geometry
-    * count — they must not multiply by delete-chain length. Fine covering
-    * caps 1024 per box and 4096 merged: the row-level membership test is
-    * an O(log n) binary search ([[GeoCols.zCoveringPredicate]]) and the
+    * Fine covering caps 1024 per box and 4096 merged: the row-level
+    * membership test is an O(log n) binary search
+    * ([[GeoCols.zCoveringPredicate]]) and the
     * decomposition cost is cap-independent (full quadtree descent, then
     * coalesce), so a finer covering only SHRINKS the superset — and the
     * set of files whose Z span meets it. */
@@ -819,8 +819,12 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     * as does `rangesHint`, a box read's covering: a shard or file whose Z
     * span meets none of its ranges holds no row the probe would keep.
     * `refine` narrows the surviving files' rows (covering probe / pushed
-    * key predicate). Both read paths share the sequence-scoped tombstone
-    * chain below. Every scan is built from the pinned schema
+    * key predicate). Deleted rows are dropped in the scan itself: the
+    * deletion vectors of the kept files, read from the DV files of the
+    * shards that hold them, feed ONE [[RowDeleted]] filter over the scan's
+    * file path and row index — no join, no broadcast, no Spark job; with
+    * no vector, there is no filter. `snapshotId`'s own DV names are used,
+    * so time travel is exact. Every scan is built from the pinned schema
     * ([[scan]]), so planning is manifest + driver IO only: zero Spark
     * jobs before the caller's action (≤ 32 paths per scan — past that,
     * Spark lists the files in a job). A snapshot with no surviving file —
@@ -837,47 +841,18 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     // skipped shard are provably disjoint from every box / bloom-clear
     // for every probed key, so `keep` would reject them anyway;
     // totalData stays the snapshot's true file count.
-    val (loaded, totalData) =
-      manifestPartial(snapshotId, boxesHint, shardHint, rangesHint)
+    val (loaded, totalData) = manifestPartial(snapshotId, boxesHint, shardHint, rangesHint)
     val zBounds = rangesHint.map(ZRangeContains.bounds)
-    val schema = tableSchema
-    val entries = loaded.filter(_.kind == "data")
-    // SEQUENCE-SCOPED merge-on-read deletes (the Iceberg sequence-number
-    // contract, via the PERSISTED per-entry seq): a tombstone applies only
-    // to data entries with a smaller sequence number, so a row
-    // legitimately re-inserted after its delete stays live. Data entries
-    // are grouped by how many deletes precede them (group g's applicable
-    // deletes are the sequence-suffix dels[g..D)), and the plan is built
-    // by SUFFIX FOLDING — A_k = antiJoin(A_(k-1), del_(k-1)) ∪ group_k —
-    // one authored anti-join per delete FILE. (Catalyst's
-    // PushdownLeftSemiOrAntiJoin may re-expand an anti-join through the
-    // union, duplicating a TOMBSTONE broadcast per group it applies to —
-    // bounded and tiny: tombstones are key slivers and compact() resets
-    // the group count; the data side is never duplicated. Pinned in
-    // PlanSpec.) Every tombstone file holds the table's key columns
-    // ([[keySchema]]). compact() folds deletes in and purges the
-    // tombstones, bounding the chain length.
-    val dels = loaded.filter(_.kind == "delete").sortBy(e => (e.seq, e.path))
-    val keys = SnapshotStore.keySchema(schema)
-    var keptCount = 0
-    def groupDf(g: Int): Option[DataFrame] = {
-      val ents = entries.filter(e => dels.count(_.seq <= e.seq) == g)
-      val kept = ents.filter(e => keep(e) &&
-        zBounds.forall(ZRangeContains.meets(_, e.minZ, e.maxZ)))
-      keptCount += kept.size
-      if (kept.isEmpty) None
-      else Some(refine(scan(schema, kept.map(_.path))))
-    }
-    var acc: Option[DataFrame] = groupDf(0)
-    for (k <- 1 to dels.size) {
-      val cut = acc.map(_.join(broadcast(scan(keys, Seq(dels(k - 1).path))),
-        keys.fieldNames.toSeq, "left_anti"))
-      acc = (cut, groupDf(k)) match {
-        case (Some(a), Some(b)) => Some(a unionByName b)
-        case (a, b) => a.orElse(b)
-      }
-    }
-    (acc.getOrElse(scan(schema, Nil)).drop("__z"), keptCount, totalData)
+    val perShard = loaded.map { case (sm, es) => sm -> es.filter(e => keep(e) &&
+      zBounds.forall(ZRangeContains.meets(_, e.minZ, e.maxZ))) }
+    val kept = perShard.flatMap(_._2)
+    val deleted = perShard.filter(_._2.nonEmpty).flatMap { case (sm, es) =>
+      val paths = es.map(e => normPath(e.path)).toSet
+      vectorsOf(sm).filter(v => paths(v._1))
+    }.toMap
+    val scanned = scan(tableSchema, kept.map(_.path))
+    val live = if (deleted.isEmpty) scanned else scanned.filter(RowDeleted.live(deleted))
+    (refine(live).drop("__z"), kept.size, totalData)
   }
 
   /** The one way the store reads its files: `paths` under `schema`, or
@@ -886,27 +861,39 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     if (paths.isEmpty) spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
     else spark.read.schema(schema).parquet(paths: _*)
 
-  /** Row-level delete (Iceberg-v2 equality-delete shape): materialize the
-    * CURRENT snapshot's rows matching `cond` as equality tombstones and
-    * commit them as a `kind="delete"` manifest entry. Readers apply
-    * tombstones merge-on-read ([[read]]); [[compact]] rewrites the data
-    * with deletes applied and purges the tombstones (copy-on-write repair).
+  /** Row-level delete by position (Iceberg v3 / Delta Lake deletion
+    * vectors): ONE Spark job over the current snapshot's live rows
+    * matching `cond` folds, per task, the `_metadata.row_index` positions
+    * of each `_metadata.file_path` it matched into a bitset no longer than
+    * that file's rows; the driver ORs them. The commit writes, for each
+    * shard holding a hit file, one DV file with the shard's old vectors OR
+    * the new ones, and replaces those shard rows in the root — no `data/`
+    * dir, no entry. Readers drop the marked rows in-plan ([[planAt]]);
+    * [[compact]] rewrites the live rows and drops the vectors.
     *
-    * The equality key is the pinned schema's non-binary columns
-    * ([[SnapshotStore.keySchema]]), so distinct rows sharing an id delete
-    * independently. */
+    * A position names one row of one file, so a row with nulls deletes
+    * like any other, rows differing only in a binary column delete
+    * independently, and a row re-inserted after its delete lands in a new
+    * file and stays live. The delete plans against the snapshot it read:
+    * a commit racing it fails the delete loudly. Its lineage id joins the
+    * root's `folded` list, so [[committedLineage]] holds it. */
   def deleteWhere(cond: org.apache.spark.sql.Column, lineageId: String): Long = {
-    val t0 = System.nanoTime()
-    val schema = tableSchema
-    val keys = SnapshotStore.keySchema(schema).fieldNames.toSeq
-    val unitDir = s"$root/data/$lineageId-${java.util.UUID.randomUUID().toString.take(8)}"
-    // same in-task stats as a data unit, minus leaves and Bloom: tombstone
-    // entries keep lat/lon bounds and carry no Z range — they are never
-    // Z-pruned
-    val files = writeObserved(
-      read()._1.filter(cond).select(keys.map(col): _*).coalesce(1),
-      unitDir, lineageId, t0, "delete", key = None, leavesRes = None)
-    commit(files.map { case (e, st) => (e.copy(minZ = 0L, maxZ = 0L), st) }, schema)
+    val base = currentSnapshotId
+    val (live, kept, _) = readAt(base)
+    import spark.implicits._
+    // a snapshot without files has no `_metadata` to select
+    val hits = if (kept == 0) Map.empty[String, Array[Long]] else live.filter(cond)
+      .select(col("_metadata.file_path"), col("_metadata.row_index"))
+      .as[(String, Long)].mapPartitions(SnapshotStore.positions).collect()
+      .groupMapReduce(v => RowDeleted.fileKey(v._1))(_._2)(SnapshotStore.or)
+    val vectors = manifestPartial(base, None)._1.collect {
+      case (sm, es) if es.exists(e => hits.contains(normPath(e.path))) =>
+        val old = vectorsOf(sm)
+        sm -> es.map(e => normPath(e.path)).flatMap(f =>
+          (old.get(f) ++ hits.get(f)).reduceOption(SnapshotStore.or).map(f -> _))
+    }
+    commit(Seq.empty, tableSchema, expectedParent = base, folded = Seq(lineageId),
+      vectors = vectors)
   }
 
   /** Compaction — the distributed analog of the reference's forced-
@@ -959,10 +946,11 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
   /** Incremental consumption (the CDC primitive a downstream pipeline
     * uses to process ONLY data that arrived since its last checkpointed
     * snapshot): rows of data units with sequence number in
-    * (`sinceSnapshot`, `toSnapshot`]. Tombstones are never applied —
-    * sequence scoping means a delete cannot affect rows appended after
-    * it, and deletes inside the window only affect PRIOR data (consumers
-    * reconciling deletions read the `kind="delete"` manifest entries).
+    * (`sinceSnapshot`, `toSnapshot`], deleted rows included: deletion
+    * vectors are never applied — a delete cannot affect rows appended
+    * after it, and deletes inside the window mark rows by position in
+    * their files (consumers reconciling deletions read the shard rows'
+    * `dv` files).
     * Refuses windows that cross a compaction: rewritten files carry the
     * compaction's sequence number, so the increment would replay the
     * whole table as if new — the caller must re-baseline instead
@@ -975,7 +963,7 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     require(!m.exists(e => e.seq > sinceSnapshot && e.lineageId.startsWith("compact-")),
       s"window ($sinceSnapshot, $to] crosses a compaction — increments are " +
         "append-only; re-baseline from the compacted snapshot")
-    val ents = m.filter(e => e.kind == "data" && e.seq > sinceSnapshot && e.seq <= to)
+    val ents = m.filter(e => e.seq > sinceSnapshot && e.seq <= to)
     scan(tableSchema, ents.map(_.path)).drop("__z")
   }
 
@@ -1012,10 +1000,8 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
       // of expireSnapshots; their dirs become reclaimable here
       .filter(k => Files.exists(metaDir.resolve(s"snap-$k")))
       .flatMap { k =>
-        val r = readRoot(k)
-        r.inline.map(dirOf) ++
-          r.shards.flatMap(sm => shardDirs.getOrElseUpdate(sm.path,
-            MetaJson.parseManifest(readMeta(sm.path)).map(dirOf)))
+        readRoot(k).shards.flatMap(sm => shardDirs.getOrElseUpdate(sm.path,
+          MetaJson.parseManifest(readMeta(sm.path)).map(dirOf)))
       }
       .toSet
     val dirs = listDir(Paths.get(root, "data"))
@@ -1090,12 +1076,20 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
 
 object SnapshotStore {
 
-  /** Tombstone key: the table's non-binary data columns. Binary payloads
-    * are left out — comparing megabyte blobs in the anti-join would ship
-    * them through the broadcast, and the scalar columns already identify
-    * rows in every table shape this store hosts. */
-  private def keySchema(schema: StructType): StructType =
-    StructType(schema.filterNot(f => f.name == "__z" || f.dataType == BinaryType))
+  /** One task's deletion vectors: its matched (file, row position) pairs
+    * folded into one bitset per file, as long words (bit i of word i/64 =
+    * position i). */
+  private def positions(hits: Iterator[(String, Long)]): Iterator[(String, Array[Long])] = {
+    val acc = scala.collection.mutable.HashMap.empty[String, java.util.BitSet]
+    hits.foreach { case (f, i) =>
+      acc.getOrElseUpdate(f, new java.util.BitSet).set(Math.toIntExact(i)) }
+    acc.iterator.map { case (f, b) => (f, b.toLongArray) }
+  }
+
+  /** Bitwise OR of two deletion vectors. */
+  private def or(a: Array[Long], b: Array[Long]): Array[Long] =
+    Array.tabulate(math.max(a.length, b.length))(i =>
+      (if (i < a.length) a(i) else 0L) | (if (i < b.length) b(i) else 0L))
 
   /** Same column names and types, order and nullability aside: parquet
     * resolves columns by name and reads every column as nullable (a

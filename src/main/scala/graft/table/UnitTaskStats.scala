@@ -9,8 +9,8 @@ import org.apache.spark.sql.types.{DataType, DoubleType, LongType, StructType}
 /** Per-file write-time statistics, computed INSIDE the direct-write task
   * ([[org.apache.spark.sql.GraftParquetDirect.writeStats]]): the writer
   * already sees every row, so the manifest entry and the stats files cost no
-  * second pass over the unit. This is the only source of them — appends,
-  * compactions and delete files all take their entries from here.
+  * second pass over the unit. This is the only source of them — appends
+  * and compactions both take their entries from here.
   *
   *  - file min/max for `__z`/lat/lon — exact over non-null values; a
   *    column with no usable values (absent, all null, or any NaN for
@@ -48,8 +48,8 @@ object UnitTaskStats {
     * `__z` cast to long (a missing column reads as null — fail open), and
     * `xxhash64(key)` — the same expression [[Bloom.hashLiteral]] evaluates
     * on the driver, so the key may be of any type. `key = None` builds no
-    * Bloom; `histRes = None` builds no leaves. */
-  def observer(schema: StructType, key: Option[String], histRes: Option[Int])
+    * Bloom. */
+  def observer(schema: StructType, key: Option[String], histRes: Int)
       : () => (InternalRow => Unit, () => UnitFileStats) = {
     def ref(name: String): Option[Expression] =
       Some(schema.fieldNames.indexOf(name)).filter(_ >= 0)
@@ -94,8 +94,8 @@ object UnitTaskStats {
           else if (!lonSeen) { lonSeen = true; minLon = lon; maxLon = lon }
           else { if (lon < minLon) minLon = lon; if (lon > maxLon) maxLon = lon }
         }
-        if (histRes.isDefined && !latNull && !lonNull && !lat.isNaN && !lon.isNaN) {
-          val cell = CellId.grid(lat, lon, histRes.get)
+        if (!latNull && !lonNull && !lat.isNaN && !lon.isNaN) {
+          val cell = CellId.grid(lat, lon, histRes)
           val acc = cells.getOrElseUpdate(cell, Array(0.0, lat, lat, lon, lon))
           acc(0) += 1.0
           if (lat < acc(1)) acc(1) = lat

@@ -102,7 +102,7 @@ class BloomSpec extends AnyFunSuite with TempDirs {
     val (loaded, total) =
       st.manifestPartial(cur, None, Some(shardMight))
     assert(total == 12)
-    assert(loaded.count(_.kind == "data") < 12,
+    assert(loaded.flatMap(_._2).size < 12,
       "lookup parsed every manifest shard")
     // ...and the covered-but-not-hit skip never drops rows: result exact
     val (df, kept, tot) = st.lookupByKey(Seq(probe))
@@ -142,7 +142,7 @@ class BloomSpec extends AnyFunSuite with TempDirs {
     assert(shards.nonEmpty && shards.forall(_.bloom.exists(_.startsWith(s"snap-$cur-shard-"))))
     val covered = shards.flatMap(sm => graft.table.MetaJson.parseBloom(
       Files.readString(metaP.resolve(sm.bloom.get)))._3.map(_._1))
-    assert(covered.sorted == st.manifest().filter(_.kind == "data")
+    assert(covered.sorted == st.manifest()
       .map(e => SnapshotStore.normalizePath(e.path)).sorted)
     val survivor = norm(pts).map(_._1).distinct.apply(1)
     val (df, kept, tot) = st.lookupByKey(Seq(survivor))

@@ -33,7 +33,7 @@ class CompileOnceSpec extends AnyFunSuite {
     val root = java.nio.file.Files.createTempDirectory("graft_compile").toString
     try {
       // the serve store's shape: globe-hashed points, a Bloom key, one
-      // box and one id tombstone; one file per unit, so every box read
+      // box delete and one id delete; one file per unit, so every box read
       // keeps every file and the plan shape is the same for each query
       val st = new SnapshotStore(spark, root, bloomKey = Some("id"))
       val h = xxhash64(col("id"), lit(7L))

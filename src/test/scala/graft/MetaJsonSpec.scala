@@ -44,8 +44,7 @@ class MetaJsonSpec extends AnyFunSuite {
     val entries = (0 until 500).map { _ =>
       FileEntry(randStr(), randLong(), randLong(), randLong(),
         randDouble(), randDouble(), randDouble(), randDouble(),
-        randStr(), randLong(), if (rng.nextBoolean()) "data" else "delete",
-        randLong())
+        randStr(), randLong(), randLong())
     }
     val back = MetaJson.parseManifest(MetaJson.manifestJson(entries))
     assert(back.size == entries.size)
@@ -54,7 +53,7 @@ class MetaJsonSpec extends AnyFunSuite {
       def bits(d: Double) = java.lang.Double.doubleToRawLongBits(d)
       assert(b.path == e.path && b.lineageId == e.lineageId &&
         b.rows == e.rows && b.minZ == e.minZ && b.maxZ == e.maxZ &&
-        b.wallMs == e.wallMs && b.kind == e.kind && b.seq == e.seq)
+        b.wallMs == e.wallMs && b.seq == e.seq)
       assert(bits(b.minLat) == bits(e.minLat) && bits(b.maxLat) == bits(e.maxLat) &&
         bits(b.minLon) == bits(e.minLon) && bits(b.maxLon) == bits(e.maxLon),
         s"double drift: $e -> $b")
@@ -68,6 +67,10 @@ class MetaJsonSpec extends AnyFunSuite {
     assert(kc == "id" && k == 7)
     assert(back.map(_._1) == blooms.map(_._1))
     back.zip(blooms).foreach { case ((_, a), (_, b)) => assert(a.sameElements(b)) }
+    // deletion vectors share the per-file bitset layout, with no header
+    val dvBack = MetaJson.parseDv(MetaJson.dvJson(blooms))
+    assert(dvBack.map(_._1) == blooms.map(_._1))
+    dvBack.zip(blooms).foreach { case ((_, a), (_, b)) => assert(a.sameElements(b)) }
 
     val files = (0 until 4).map(_ => (randStr(), (0 until rng.nextInt(20)).map(_ =>
       (randLong(), randLong(), randDouble(), randDouble(), randDouble(), randDouble()))))
@@ -99,12 +102,12 @@ class MetaJsonSpec extends AnyFunSuite {
     assert(e.minZ == Long.MinValue && e.maxZ == Long.MaxValue)
     assert(e.minLat == -Double.MaxValue && e.maxLat == Double.MaxValue)
     assert(e.minLon == -Double.MaxValue && e.maxLon == Double.MaxValue)
-    assert(e.kind == "data" && e.seq == 0L && e.lineageId == "" && e.wallMs == 0L)
+    assert(e.seq == 0L && e.lineageId == "" && e.wallMs == 0L)
     // unknown EXTRA fields from a future writer are ignored, not fatal
     val future =
-      """{"entries":[{"path":"p","rows":1,"kind":"delete","seq":9,"futureField":{"x":1}}]}"""
+      """{"entries":[{"path":"p","rows":1,"seq":9,"futureField":{"x":1}}]}"""
     val Seq(f) = MetaJson.parseManifest(future)
-    assert(f.kind == "delete" && f.seq == 9L)
+    assert(f.path == "p" && f.seq == 9L)
   }
 
   test("manifest-list shard rows round-trip lineage summaries; a row without one fails to parse") {
@@ -116,12 +119,15 @@ class MetaJsonSpec extends AnyFunSuite {
     val noBloom = ShardMeta("snap-4-shard-0-cd.json", 2, 0L, 1L,
       0.0, 1.0, 0.0, 1.0, lineages = Seq("u-1"),
       index = "snap-4-shard-0-cd.index.json", bloom = None)
-    val tomb = FileEntry("data/del-0/part-0.parquet", 3L, 0L, 0L, 1.0, 2.0, 3.0, 4.0,
-      "del-0", 5L, "delete", 3L)
-    val root = ManifestRoot(Seq(withLin, noBloom), Seq(tomb), Seq("u-old", "compact-2"))
+    // a shard a delete hit names its deletion vectors and their count
+    val withDv = noBloom.copy(path = "snap-4-shard-1-cd.json",
+      dv = Some("snap-5-dv-ef-0.json"), deleted = 12L)
+    val root = ManifestRoot(Seq(withLin, noBloom, withDv), Seq("u-old", "del-0", "compact-2"))
     assert(MetaJson.parseManifestRoot(MetaJson.manifestListJson(root)) == root)
     assert(withLin.files == Seq(withLin.path, withLin.index, withLin.bloom.get))
     assert(noBloom.files == Seq(noBloom.path, noBloom.index))
+    assert(withDv.files == Seq(withDv.path, withDv.index, withDv.dv.get))
+    assert(!MetaJson.manifestListJson(ManifestRoot(Seq(noBloom), Nil)).contains("dv"))
     // committedLineage reads the root alone, so the summary is required: a
     // default-to-empty would silently claim "no lineages here" and
     // re-append committed streaming units as duplicates
@@ -139,6 +145,18 @@ class MetaJsonSpec extends AnyFunSuite {
       """"entries":[],"folded":[]}"""
     val e = intercept[IllegalStateException](MetaJson.parseManifestRoot(noIndex))
     assert(e.getMessage.contains("s.json") && e.getMessage.contains("index"))
+  }
+
+  test("a root with inline entries fails to parse, naming it") {
+    // the equality-delete tombstones of an older layout rode inline in the
+    // root: read as a root without them, their deleted rows would come back
+    val tomb = """{"shards":[],"entries":[{"path":"data/del-0-ab/part-0.parquet",""" +
+      """"rows":3,"kind":"delete","seq":3}],"folded":[]}"""
+    assert(intercept[IllegalStateException](MetaJson.parseManifestRoot(tomb))
+      .getMessage.contains("data/del-0-ab/part-0.parquet"))
+    // an empty `entries` node holds nothing to lose
+    assert(MetaJson.parseManifestRoot("""{"shards":[],"entries":[],"folded":["u-0"]}""") ==
+      graft.table.ManifestRoot(Seq.empty, Seq("u-0")))
   }
 
   test("a root without shards or folded, or with a data entry inline, fails to parse") {
@@ -160,7 +178,7 @@ class MetaJsonSpec extends AnyFunSuite {
     // a zero-file lineage marker is a data entry too
     val marker = """{"shards":[],"entries":[{"path":"","rows":0,"lineageId":"u-0"}],"folded":[]}"""
     intercept[IllegalStateException](MetaJson.parseManifestRoot(marker))
-    assert(MetaJson.parseManifestRoot("""{"shards":[],"entries":[],"folded":[]}""") ==
-      graft.table.ManifestRoot(Seq.empty, Seq.empty, Seq.empty))
+    assert(MetaJson.parseManifestRoot("""{"shards":[],"folded":[]}""") ==
+      graft.table.ManifestRoot(Seq.empty, Seq.empty))
   }
 }

@@ -23,42 +23,46 @@ class PlanSpec extends AnyFunSuite with TempDirs {
   def plan(df: org.apache.spark.sql.DataFrame): String =
     df.queryExecution.executedPlan.toString
 
-  test("merge-on-read plan: tombstone scans bounded by applicable groups, data never duplicated") {
+  test("live-delete store read: no Join, BroadcastExchange or Union; each file scanned once") {
+    import graft.geo.MBR
     import graft.table.SnapshotStore
-    val st = new SnapshotStore(spark,
-      tempDir("graft_planspec").toString)
+    import org.apache.spark.sql.execution.FileSourceScanExec
+    val st = new SnapshotStore(spark, tempDir("graft_planspec").toString, bloomKey = Some("id"))
     val pts = Points(spark, dir)
-    // 3 appends interleaved with 2 deletes → 3 sequence groups. Catalyst
-    // pushes the anti-joins through the union, so a tombstone may be
-    // scanned once per group it APPLIES to (d-0 → group 0 only; d-1 →
-    // groups 0 and 1) — never more, and data files exactly once.
-    st.append(pts.filter(col("id") % 3 === 0), "u-0", 1)
+    // 3 appends interleaved with 2 deletes: every read drops the deleted
+    // positions with one filter over its one scan
+    st.append(pts.filter(col("id") % 3 === 0), "u-0", 2)
     st.deleteWhere(col("id") % 10 === 0, "d-0")
-    st.append(pts.filter(col("id") % 3 === 1), "u-1", 1)
+    st.append(pts.filter(col("id") % 3 === 1), "u-1", 2)
     st.deleteWhere(col("id") % 10 === 1, "d-1")
-    st.append(pts.filter(col("id") % 3 === 2), "u-2", 1)
-    val m = st.manifest()
-    val delPaths = m.filter(_.kind == "delete").sortBy(_.seq).map(_.path)
-    assert(delPaths.size == 2)
-    val lp = st.read()._1.queryExecution.optimizedPlan
-    val scannedDirs = lp.collect {
-      case r: org.apache.spark.sql.execution.datasources.LogicalRelation =>
-        r.relation match {
-          case h: org.apache.spark.sql.execution.datasources.HadoopFsRelation =>
-            h.location.rootPaths.map(_.toString)
-          case _ => Seq.empty
-        }
-    }.flatten
-    def hits(p: String): Int = {
-      val parent = p.substring(0, p.lastIndexOf('/'))
-      scannedDirs.count(s => s.contains(parent) || parent.contains(s))
+    st.append(pts.filter(col("id") % 3 === 2), "u-2", 2)
+    val box = MBR(-60.0, -170.0, 60.0, 170.0)
+    val id = st.read()._1.select("id").head().getLong(0)
+    val reads = Seq(
+      "read()" -> st.read()._1,
+      "read(box)" -> st.read(Some(box))._1,
+      "readBoxes" -> st.readBoxes(Seq(box, MBR(-10.0, -10.0, 10.0, 10.0)))._1,
+      "readAt" -> st.readAt(st.currentSnapshotId - 1)._1,
+      "lookupByKey" -> st.lookupByKey(Seq(id))._1)
+    for ((name, df) <- reads) {
+      df.collect() // AQE plans are final after an action
+      val p = plan(df)
+      for (op <- Seq("Join", "BroadcastExchange", "Union"))
+        assert(!p.contains(op), s"$name plans a $op:\n$p")
+      assert(p.contains("graft_row_deleted"), s"$name does not drop deleted rows:\n$p")
+      val scans = df.queryExecution.executedPlan.collect { case s: FileSourceScanExec => s }
+      assert(scans.size == 1, s"$name: ${scans.size} scans")
+      val files = scans.head.relation.location.inputFiles.map(SnapshotStore.normalizePath).toSeq
+      assert(files.distinct == files && files.nonEmpty, s"$name scans a file twice: $files")
     }
-    assert(hits(delPaths(0)) >= 1 && hits(delPaths(0)) <= 1,
-      s"d-0 applies to one group: ${scannedDirs}")
-    assert(hits(delPaths(1)) >= 1 && hits(delPaths(1)) <= 2,
-      s"d-1 applies to two groups: ${scannedDirs}")
-    for (dp <- m.filter(_.kind == "data").map(_.path))
-      assert(hits(dp) == 1, s"data file duplicated in plan: $scannedDirs")
+    // the position filter sits inside whole-stage codegen with the batched scan
+    val p = plan(st.read()._1)
+    assert(p.contains("*(1) Filter NOT graft_row_deleted"), p)
+    assert(p.contains("Batched: true"), p)
+    // each delete reaches only the units committed before it
+    val (a, b) = (col("id") % 3, col("id") % 10)
+    val dead = (a === 0 && (b === 0 || b === 1)) || (a === 1 && b === 1)
+    assert(st.read()._1.count() == pts.filter(!dead).count())
   }
 
   test("boxJoin broadcasts the box side (no shuffle on the probe side)") {

@@ -23,6 +23,13 @@ class SnapshotStoreSpec extends AnyFunSuite with TempDirs {
 
   lazy val pts = Points(spark, "/root/testdata/sf0.001").cache()
 
+  /** The shard rows of the current root of the store at `root`. */
+  private def shardRows(root: String): Seq[graft.table.ShardMeta] = {
+    val meta = java.nio.file.Paths.get(root, "meta")
+    graft.table.MetaJson.parseManifestRoot(Files.readString(
+      meta.resolve("snap-" + Files.readString(meta.resolve("current")).trim))).shards
+  }
+
   test("equality deletes: merge-on-read excludes, compact purges tombstones") {
     val root = tmp()
     val st = new SnapshotStore(spark, root)
@@ -34,18 +41,18 @@ class SnapshotStoreSpec extends AnyFunSuite with TempDirs {
       .collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2))).sorted.toSeq
     val exp = norm(pts.filter(!inBox))
     assert(exp.nonEmpty && exp.size < pts.count())
-    // merge-on-read: tombstones applied at read time
+    // merge-on-read: deletion vectors applied at read time
     val afterDelete = norm(st.read()._1)
     assert(afterDelete == exp)
-    // tombstones present in the manifest until compaction...
-    assert(st.manifest().exists(_.kind == "delete"))
+    // deletion vectors present in the root until compaction...
+    assert(shardRows(root).exists(_.dv.nonEmpty))
     // ...and a second delete composes
     st.deleteWhere(col("id") === exp.head._1, "del-1")
     val afterSecond = norm(st.read()._1)
     assert(afterSecond == exp.filterNot(_._1 == exp.head._1))
-    // compact applies deletes copy-on-write and purges tombstones
+    // compact applies deletes copy-on-write and drops the vectors
     st.compact(numPartitions = 2)
-    assert(!st.manifest().exists(_.kind == "delete"))
+    assert(shardRows(root).forall(_.dv.isEmpty))
     assert(norm(st.read()._1) == afterSecond)
     // delete lineage survives in the root's folded list (resumable runs skip it)
     assert(st.committedLineage.contains("del-0") && st.committedLineage.contains("del-1"))
@@ -346,16 +353,16 @@ class SnapshotStoreSpec extends AnyFunSuite with TempDirs {
     val mr = graft.table.MetaJson.parseManifestRoot(rootJson)
     assert(mr.shards.size >= 4 && mr.shards.forall(sm =>
       Files.exists(java.nio.file.Paths.get(root, "meta", sm.path))))
-    assert(mr.inline.isEmpty && mr.folded.isEmpty)
+    assert(mr.folded.isEmpty)
     // full reassembly: content identical to the raw table
-    assert(st.manifest().count(e => e.kind == "data" && e.path.nonEmpty) == 24)
+    assert(st.manifest().count(_.path.nonEmpty) == 24)
     assert(st.read()._1.count() == pts.count())
     // shard pruning: a small box loads FEWER data entries than the
     // snapshot holds, while the true total stays known without reading
     val b = graft.data.Fixtures.boxes(4)._2 // the tiny map.osm-bounds box
     val (loaded, total) = st.manifestPartial(cur, Some(Seq(b)))
     assert(total == 24)
-    assert(loaded.count(_.kind == "data") < 24,
+    assert(loaded.flatMap(_._2).size < 24,
       s"box read parsed all $total manifest entries")
     // compaction re-chunks GLOBALLY by minZ (Iceberg's rewrite-manifests
     // analog): the per-append shard overlap the reuse path accumulates is
@@ -366,7 +373,7 @@ class SnapshotStoreSpec extends AnyFunSuite with TempDirs {
     st.compact(numPartitions = 24)
     val (loadedC, totalC) =
       st.manifestPartial(st.currentSnapshotId, Some(Seq(b)))
-    assert(loadedC.count(_.kind == "data") < totalC,
+    assert(loadedC.flatMap(_._2).size < totalC,
       s"post-compact box read parsed all $totalC manifest entries")
     assert(st.read()._1.count() == pts.count())
     // the pruned read is still exact
@@ -379,7 +386,7 @@ class SnapshotStoreSpec extends AnyFunSuite with TempDirs {
     // a box overlapping NO shard still plans (schema-only empty frame)
     val nowhere = MBR(89.99, 179.98, 89.995, 179.99)
     assert(st.read(Some(nowhere))._1.count() == 0)
-    // deletes ride inline and compose with sharded data entries
+    // deletes mark positions in the shards' files and compose with them
     st.deleteWhere(col("id") % 5 === 0, "del-0")
     assert(st.read()._1.count() == pts.filter(col("id") % 5 =!= 0).count())
     // expiry removes the expired snapshots' shard files too
@@ -397,11 +404,11 @@ class SnapshotStoreSpec extends AnyFunSuite with TempDirs {
     val st = new SnapshotStore(spark, root, manifestShardRows = 3)
     st.append(pts, "u-0", numPartitions = 24) // one append: Z-sorted chunking
     val cur = st.currentSnapshotId
-    def dataCount(es: Seq[graft.table.FileEntry]) = es.count(_.kind == "data")
+    def dataCount(es: Seq[(graft.table.ShardMeta, Seq[graft.table.FileEntry])]) =
+      es.flatMap(_._2).size
     val total = dataCount(st.manifestPartial(cur, None)._1)
     assert(total == 24)
-    // a band meeting no shard interval skips EVERY data shard — sound
-    // because shards carry only data entries (tombstones inline)
+    // a band meeting no shard interval skips EVERY data shard
     val none = st.manifestPartial(cur, None,
       rangesHint = Some(Seq((Long.MinValue, Long.MinValue + 1L))))._1
     assert(dataCount(none) == 0, "disjoint band should skip all data shards")
@@ -448,7 +455,7 @@ class SnapshotStoreSpec extends AnyFunSuite with TempDirs {
       s"unexpected new shards $fresh")
     // the reassembled table is exact
     assert(st.read()._1.count() == pts.count())
-    assert(st.manifest().count(e => e.kind == "data" && e.path.nonEmpty) == 12)
+    assert(st.manifest().count(_.path.nonEmpty) == 12)
   }
 
   test("default store: an append carries the parent's shard files and writes only its own") {
@@ -468,7 +475,7 @@ class SnapshotStoreSpec extends AnyFunSuite with TempDirs {
       finally ls.close()
     }
     val parent = parse(st.currentSnapshotId)
-    assert(parent.shards.size == 2 && parent.inline.isEmpty)
+    assert(parent.shards.size == 2)
     val parentBytes = parent.shards.flatMap(_.files).map(f =>
       f -> Files.readAllBytes(metaP.resolve(f)).toSeq).toMap
     val before = metaNames()
@@ -487,10 +494,17 @@ class SnapshotStoreSpec extends AnyFunSuite with TempDirs {
     assert(child.shards.drop(2).flatMap(_.files).toSet == added - s"snap-$cur")
     assert(child.shards.drop(2).flatMap(_.lineages) == Seq("u-2"))
     assert(st.read()._1.count() == pts.count() + 40)
-    // a delete adds no shard: its tombstone rides inline in the root
-    st.deleteWhere(col("id") === st.read()._1.select("id").head().getLong(0), "del-0")
+    // a delete adds no shard: it replaces the row of the shard it hit with
+    // one naming its deletion vectors; every shard file stays as it was
+    val beforeDel = metaNames()
+    val victim = st.read()._1.select("id").head().getLong(0)
+    val copies = st.read()._1.filter(col("id") === victim).count()
+    st.deleteWhere(col("id") === victim, "del-0")
     val afterDel = parse(st.currentSnapshotId)
-    assert(afterDel.shards == child.shards && afterDel.inline.map(_.lineageId) == Seq("del-0"))
+    assert(afterDel.shards.map(_.copy(dv = None, deleted = 0L)) == child.shards)
+    val hit = afterDel.shards.filter(_.dv.nonEmpty)
+    assert(hit.nonEmpty && hit.map(_.deleted).sum == copies && afterDel.folded == Seq("del-0"))
+    assert(metaNames() -- beforeDel == Set(s"snap-${st.currentSnapshotId}") ++ hit.flatMap(_.dv))
   }
 
   test("a root that is not a manifest list fails every read naming its path") {
@@ -737,11 +751,11 @@ class SnapshotStoreSpec extends AnyFunSuite with TempDirs {
     (0 until 3).foreach(u =>
       st.append(pts.filter(col("id") % 3 === u), s"u-$u", numPartitions = 4))
     st.deleteWhere(col("id") % 7 === 0, "del-0")
-    val full = st.manifest().map(_.lineageId).toSet
+    val mr = graft.table.MetaJson.parseManifestRoot(Files.readString(
+      java.nio.file.Paths.get(root, "meta", s"snap-${st.currentSnapshotId}")))
+    val full = st.manifest().map(_.lineageId).toSet ++ mr.folded
     assert(Seq("u-0", "u-1", "u-2", "del-0").forall(full.contains))
-    val sh = graft.table.MetaJson.parseManifestRoot(Files.readString(
-      java.nio.file.Paths.get(root, "meta", s"snap-${st.currentSnapshotId}"))).shards
-    assert(sh.nonEmpty)
+    assert(mr.shards.nonEmpty)
     assert(st.committedLineage == full)
     // and resumableRun's skip contract holds on the summarized table
     val ran = st.resumableRun(Seq("u-0", "u-late")) { _ => pts.limit(5) }
@@ -831,7 +845,7 @@ class SnapshotStoreSpec extends AnyFunSuite with TempDirs {
     val (df, kept, total) = GlobalIndex.knnJoinStoredPruned(st, qs, k)
     assert(kept < total, s"stored kNN join opened all $total files")
     assert(norm(df) == norm(SpatialOps.knnJoinAgg(pts, qs, k)))
-    // tombstones overcount sidecar slabs: the per-query audit must keep
+    // deleted positions overcount the index leaves: the per-query audit must keep
     // the join exact (fall back only the queries whose bound broke)
     st.deleteWhere(col("id") % 3 === 0, "del-0")
     val live = st.read()._1
@@ -856,7 +870,7 @@ class SnapshotStoreSpec extends AnyFunSuite with TempDirs {
       .select("rank", "id", "d2").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     assert(norm(df) == norm(graft.ops.SpatialOps.knnSerial(pts, qLat, qLon, k)))
-    // tombstones overcount sidecar slabs — the audit must keep the result
+    // deleted positions overcount the index leaves — the audit must keep the result
     // exact (fall back when the bound is no longer provable)
     st.deleteWhere(col("id") % 3 === 0, "del-0")
     val live = st.read()._1
@@ -882,9 +896,9 @@ class SnapshotStoreSpec extends AnyFunSuite with TempDirs {
     // binary payload excluded from the key but intact in surviving rows
     val r = back.orderBy("image_id").select("bytes", "phash").head()
     assert(graft.img.Codec.pHash64(graft.img.Codec.decode(r.getAs[Array[Byte]](0))) == r.getLong(1))
-    // compact folds the tombstone in
+    // compact folds the delete in
     st.compact(numPartitions = 2)
-    assert(!st.manifest().exists(_.kind == "delete"))
+    assert(shardRows(root).forall(_.dv.isEmpty))
     assert(st.read()._1.count() == 23)
   }
 
@@ -934,12 +948,13 @@ class SnapshotStoreSpec extends AnyFunSuite with TempDirs {
 
   test("re-insert after equality delete stays live (sequence-scoped tombstones)") {
     import spark.implicits._
-    val st = new SnapshotStore(spark, tmp())
+    val root = tmp()
+    val st = new SnapshotStore(spark, root)
     val r = Seq((1L, 10.0, 20.0), (2L, -5.0, 30.0))
     st.append(r.toDF("id", "lat", "lon"), "u-0", numPartitions = 1)
     st.deleteWhere(col("id") === 1L, "del-0")
     assert(st.read()._1.select("id").collect().map(_.getLong(0)).toSeq == Seq(2L))
-    // legitimate re-insert of the SAME row after its delete: the tombstone
+    // legitimate re-insert of the SAME row after its delete: the delete
     // was committed earlier, so it must not reach forward in time
     st.append(Seq((1L, 10.0, 20.0)).toDF("id", "lat", "lon"), "u-1",
       numPartitions = 1)
@@ -958,7 +973,31 @@ class SnapshotStoreSpec extends AnyFunSuite with TempDirs {
     // and compaction preserves exactly the sequence-scoped result
     st.compact(numPartitions = 1)
     assert(ids == Seq(1L, 2L))
-    assert(!st.manifest().exists(_.kind == "delete"))
+    assert(shardRows(root).forall(_.dv.isEmpty))
+  }
+
+  test("a delete removes a row whose non-key columns are null") {
+    import spark.implicits._
+    val st = new SnapshotStore(spark, tmp())
+    val rows = Seq((1L, Some(10.0), Some(20.0)), (2L, None, None), (3L, Some(-5.0), Some(30.0)))
+    st.append(rows.toDF("id", "lat", "lon"), "u-0", numPartitions = 1)
+    st.deleteWhere(col("id") === 2L, "del-0")
+    def ids = st.read()._1.select("id").collect().map(_.getLong(0)).sorted.toSeq
+    assert(ids == Seq(1L, 3L), s"the row with null coordinates survived: $ids")
+    assert(st.totalRows == 2L)
+    st.compact(numPartitions = 1)
+    assert(ids == Seq(1L, 3L))
+  }
+
+  test("a delete on a binary column removes exactly the rows it matches") {
+    import spark.implicits._
+    val st = new SnapshotStore(spark, tmp())
+    val rows = Seq((7L, 1.0, 2.0, Array[Byte](1)), (7L, 1.0, 2.0, Array[Byte](2)))
+    st.append(rows.toDF("id", "lat", "lon", "blob"), "u-0", numPartitions = 1)
+    st.deleteWhere(col("blob") === lit(Array[Byte](1)), "del-0")
+    val left = st.read()._1.select("blob").collect().map(_.getAs[Array[Byte]](0).toSeq).toSeq
+    assert(left == Seq(Seq[Byte](2)), s"rows left: $left")
+    assert(st.totalRows == 1L)
   }
 
   test("compaction fails loudly when a unit commits mid-rewrite; nothing is lost") {
@@ -1135,15 +1174,28 @@ class SnapshotStoreSpec extends AnyFunSuite with TempDirs {
         s"append ran $jobs jobs — the one-query commit contract is broken")
     // planning a read is metadata too: every scan comes from the pinned
     // schema, never a footer-inference job. The serve shape: a Bloom key,
-    // 3 units, 2 tombstones, ≤ 32 files per scan
-    val sv = new SnapshotStore(spark, tmp(), bloomKey = Some("id"))
+    // 3 units, 2 deletes, ≤ 32 files per scan
+    val svRoot = tmp()
+    val sv = new SnapshotStore(spark, svRoot, bloomKey = Some("id"))
     (0 until 3).foreach(u =>
       sv.append(pts.filter(col("id") % 3 === u), s"u-$u", numPartitions = 4))
     val box = MBR(10.0, 30.0, 25.0, 60.0)
-    sv.deleteWhere(graft.geo.GeoCols.inBox(col("lat"), col("lon"), box), "del-box")
+    val inBox = graft.geo.GeoCols.inBox(col("lat"), col("lon"), box)
+    def dataDirs(): Set[String] = {
+      val ls = Files.list(java.nio.file.Paths.get(svRoot, "data"))
+      try ls.toArray.map(_.toString).toSet finally ls.close()
+    }
+    val dirsBefore = dataDirs()
+    // a delete is ONE Spark job (the position scan) and writes no data dir
+    val deleteJobs = jobsOf("r4-delete") { sv.deleteWhere(inBox, "del-box"); () }
+    assert(deleteJobs == 1, s"deleteWhere ran $deleteJobs jobs")
+    assert(dataDirs() == dirsBefore, "deleteWhere wrote a data dir")
     val Array(hit, gone) = sv.read()._1.select("id").head(2).map(_.getLong(0))
     sv.deleteWhere(col("id") === gone, "del-id")
-    assert(sv.manifest().count(_.kind == "delete") == 2 && sv.manifest().size <= 32)
+    val dead = pts.filter(inBox || col("id") === gone).count()
+    val svShards = shardRows(svRoot)
+    assert(svShards.exists(_.dv.nonEmpty) && svShards.map(_.deleted).sum == dead &&
+      sv.manifest().size <= 32)
     val metaJobs = jobsOf("r4-meta") {
       st.manifest(); st.committedLineage; st.totalRows
       st.hotCells(graft.data.Fixtures.JoinRes)

@@ -65,7 +65,7 @@ class UnitTaskStatsSpec extends AnyFunSuite {
     val store = new SnapshotStore(spark, s"$base/store", bloomKey = Some("id"))
     store.append(df, "unit-all", numPartitions = 4)
 
-    val entries = store.manifest().filter(e => e.kind == "data" && e.path.nonEmpty)
+    val entries = store.manifest().filter(_.path.nonEmpty)
     assert(entries.map(_.rows).sum == df.count())
     expectFiles.foreach(n => assert(entries.size == n, s"${entries.size} files"))
     val raw = spark.read.parquet(entries.map(_.path): _*)
@@ -139,22 +139,25 @@ class UnitTaskStatsSpec extends AnyFunSuite {
     val base = java.nio.file.Files.createTempDirectory("graft_utstats_")
     val store = checkUnit(base, planted())
 
-    // delete files take their entry from the same observer: no Z range,
-    // lat/lon bounds equal to the tombstone file's SQL min/max ...
+    // a delete writes no data file and leaves the entries and stats as
+    // they are: its commit adds the new root and the shard's deletion
+    // vectors, which mark exactly the matched rows' positions
     val before = metaNames(base)
+    val entriesBefore = store.manifest()
+    val matched = store.read()._1.filter(col("lat") > 0 && col("lon") < 0)
+      .select(col("_metadata.file_path"), col("_metadata.row_index")).collect()
+      .map(r => (SnapshotStore.normalizePath(r.getString(0)), r.getLong(1))).toSet
+    assert(matched.nonEmpty)
     store.deleteWhere(col("lat") > 0 && col("lon") < 0, "del-box")
-    val withCoords = store.manifest().filter(_.kind == "delete")
-    assert(withCoords.size == 1)
-    val d = withCoords.head
-    val tomb = spark.read.parquet(d.path)
-    assert(tomb.columns.toSeq == Seq("id", "lat", "lon"))
-    val m = tomb.agg(count(lit(1)), min("lat"), max("lat"), min("lon"), max("lon")).head()
-    assert(d.rows == m.getLong(0) && d.minZ == 0L && d.maxZ == 0L)
-    assert(d.minLat == m.getDouble(1) && d.maxLat == m.getDouble(2) &&
-      d.minLon == m.getDouble(3) && d.maxLon == m.getDouble(4))
-    // ... and the delete commit adds no shard and no stats file: its
-    // tombstone rides inline in the one new root
-    assert(metaNames(base) -- before == Set(s"snap-${store.currentSnapshotId}"))
+    assert(store.manifest() == entriesBefore)
+    val Seq(sm) = MetaJson.parseManifestRoot(java.nio.file.Files.readString(base.resolve(
+      s"store/meta/snap-${store.currentSnapshotId}"))).shards
+    assert(metaNames(base) -- before == Set(s"snap-${store.currentSnapshotId}", sm.dv.get))
+    val marked = MetaJson.parseDv(java.nio.file.Files.readString(
+      base.resolve("store/meta").resolve(sm.dv.get))).flatMap { case (f, bits) =>
+        (0L until bits.length * 64L).filter(i => (bits((i >>> 6).toInt) & (1L << i)) != 0)
+          .map(f -> _) }.toSet
+    assert(marked == matched && sm.deleted == matched.size)
     graft.ops.OpUtil.deleteTree(base)
   }
 
