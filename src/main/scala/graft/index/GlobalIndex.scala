@@ -1,7 +1,8 @@
 package graft.index
 
 import graft.geo.{CellId, GeoCols, MBR}
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -21,41 +22,72 @@ final case class GlobalIndex(resolution: Int, parts: Array[PartitionIndex]) {
   def prunePartitions(box: MBR): Array[Int] =
     parts.filter(p => p.count > 0 && p.root.mbr.overlaps(box)).map(_.partitionId)
 
-  /** Branch-and-bound kNN seed: walk leaf slabs in ascending max-distance
-    * order, accumulate counts until >= k. Every point in a visited slab is
-    * within that slab's maxDist, so the returned radius provably contains
-    * >= k points — one driver-side pass over the broadcastable summary,
-    * no Spark job (the distributed analog of the reference's PQ descent,
-    * RStarTree.java:450-481). */
-  // live leaf slabs, extracted ONCE: kNN JOINs call knnSeedRadius once
-  // per query, and rebuilding this array per call is O(|Q| * slabs) driver
-  // work at the 10^6-file design point (only the per-query distance keying
-  // and sort genuinely depend on the query point)
-  private lazy val liveSlabs: Array[(MBR, Long)] =
-    parts.iterator.flatMap(_.leaves).filter(_.count > 0)
-      .map(l => (l.mbr, l.count)).toArray
+  /** The partitions with rows, and their roots packed under one more
+    * level: the descent starts at one root at any partition count. */
+  private lazy val live: Array[PartitionIndex] = parts.filter(_.count > 0)
+  private lazy val top: PartitionIndex = LocalRTree.fromLeaves(-1, live.map(_.root))
 
-  def knnSeedRadius(qLat: Double, qLon: Double, k: Int): Double = {
-    val slabs = liveSlabs.map { case (m, c) => (m.maxDistSq(qLat, qLon), c) }
-      .sortBy(_._1)
-    var acc = 0L
-    var i = 0
-    while (i < slabs.length) {
-      acc += slabs(i)._2
-      // nextUp: sqrt rounds to NEAREST, so an unpadded radius can sit half
-      // an ulp BELOW the true bound — a point exactly at the slab's
-      // maxDistSq then falls outside the ball box (missed candidate) and
-      // rad*rad undershoots its d2 (measured: dk 39.21061000000006 vs rad²
-      // 39.21060992…, a spurious audit fallback that read every file). One
-      // ulp up guarantees rad ≥ √bound; the bound only widens, never wrong.
-      if (acc >= k) return math.nextUp(math.sqrt(slabs(i)._1))
-      i += 1
+  /** Branch-and-bound kNN seed: the smallest leaf max-distance within
+    * which the leaves hold >= k points. Every point of a leaf lies within
+    * its maxDist, so the radius provably contains >= k points — a
+    * driver-side walk of the broadcastable summary, no Spark job. */
+  def knnSeedRadius(qLat: Double, qLon: Double, k: Int): Double =
+    knnSeedDescent(qLat, qLon, k)._1
+
+  /** [[knnSeedRadius]] by best-first descent — the reference's
+    * priority-queue NN search (RStarTree.java:450-481): a queue keys
+    * internal nodes by minDist and leaves by maxDist, and the descent stops
+    * once the popped leaves' counts reach k. A node's minDist is at most
+    * every key below it, so leaves pop in ascending maxDist order and the
+    * radius is the one sorting every leaf would give. Also returns the
+    * number of nodes popped. */
+  private[graft] def knnSeedDescent(qLat: Double, qLon: Double, k: Int): (Double, Int) = {
+    // a node: (key, tree, level, index); tree -1 is `top`, whose leaves
+    // are the roots of `live`
+    val queue = new java.util.PriorityQueue[(Double, Int, Int, Int)](
+      (a: (Double, Int, Int, Int), b: (Double, Int, Int, Int)) => java.lang.Double.compare(a._1, b._1))
+    def push(tree: Int, level: Int, i: Int): Unit = {
+      val n = (if (tree < 0) top else live(tree)).levels(level)(i)
+      if (n.count > 0) queue.add((
+        if (tree >= 0 && level == 0) n.mbr.maxDistSq(qLat, qLon) else n.mbr.minDistSq(qLat, qLon),
+        tree, level, i))
     }
-    Double.MaxValue // fewer than k points exist: caller scans everything
+    if (live.nonEmpty) push(-1, top.levels.length - 1, 0)
+    var acc = 0L
+    var popped = 0
+    while (!queue.isEmpty) {
+      val (key, tree, level, i) = queue.poll()
+      popped += 1
+      if (tree >= 0 && level == 0) {
+        acc += live(tree).leaves(i).count
+        // nextUp: sqrt rounds to NEAREST, so an unpadded radius can sit half
+        // an ulp BELOW the true bound — a point exactly at the slab's
+        // maxDistSq then falls outside the ball box (missed candidate) and
+        // rad*rad undershoots its d2 (measured: dk 39.21061000000006 vs rad²
+        // 39.21060992…, a spurious audit fallback that read every file). One
+        // ulp up guarantees rad ≥ √bound; the bound only widens, never wrong.
+        if (acc >= k) return (math.nextUp(math.sqrt(key)), popped)
+      } else if (tree < 0 && level == 0) push(i, live(i).levels.length - 1, 0)
+      else {
+        val idx = if (tree < 0) top else live(tree)
+        val lo = i * idx.fanout
+        (lo until math.min(lo + idx.fanout, idx.levels(level - 1).length))
+          .foreach(push(tree, level - 1, _))
+      }
+    }
+    (Double.MaxValue, popped) // fewer than k points exist: caller scans everything
   }
 }
 
 object GlobalIndex {
+
+  /** Schemas of the driver-built frames below: primitive columns, not
+    * nullable — what `toDF` derives for the tuples, without deriving an
+    * encoder per call. */
+  private val KnnSchema = StructType(Seq("rank", "id").map(StructField(_, LongType, false)) ++
+    Seq("lat", "lon", "d2").map(StructField(_, DoubleType, false)))
+  private val BoundsSchema = StructType(StructField("q_id", IntegerType, false) +:
+    Seq("qlat", "qlon", "rad").map(StructField(_, DoubleType, false)))
 
   /** Cluster the point DataFrame by Z-order cell (ONE shuffle — the same
     * single exchange the reference's bulkLoad sort is, RStarTree.java:177,
@@ -90,27 +122,30 @@ object GlobalIndex {
     (clustered, GlobalIndex(r, summaries))
   }
 
-  /** Rebuild the global index from a stored table's PERSISTED per-file
-    * summaries — zero Spark jobs, no re-clustering: the leaf slabs were
-    * computed inside the write tasks and ride next to the manifest
-    * (SURVEY §1.5's "summaries ride in the snapshot manifest", the
+  /** The global index of a stored table's current snapshot, from its
+    * PERSISTED per-file summaries — zero Spark jobs, no re-clustering: the
+    * leaf slabs were computed inside the write tasks and ride next to the
+    * manifest (SURVEY §1.5's "summaries ride in the snapshot manifest", the
     * distributed analog of the reference persisting its tree pages in
-    * IndexFile.java:37-95 instead of rebuilding per process). The leaves
-    * are read from the index files the current root names, one per
-    * manifest shard. Each live data FILE becomes one PartitionIndex whose
-    * leaves are its per-cell slabs at the store's stats resolution; a file
-    * with no slabs (all-null coordinates) falls back to its manifest MBR
-    * as a single leaf — a coarser bound, never a wrong one.
+    * IndexFile.java:37-95 instead of rebuilding per process). Built once
+    * per snapshot: the store's [[graft.table.SnapshotView]] holds it
+    * ([[fromFiles]]).
     *
     * Caveat for count-based bounds ([[GlobalIndex.knnSeedRadius]]): the
     * slabs count rows as written, so deleted positions overcount live
     * rows, and [[knnStored]] re-audits its radius against the live data
     * before trusting it. */
-  def fromStore(store: graft.table.SnapshotStore,
-                fanout: Int = LocalRTree.DefaultFanout): GlobalIndex = {
-    val live = store.manifest()
-    val leavesByFile = store.indexLeaves()
-    val parts = live.sortBy(_.path).zipWithIndex.map { case (e, i) =>
+  def fromStore(store: graft.table.SnapshotStore): GlobalIndex = store.view().index
+
+  /** The index over a snapshot's data `files` and their persisted leaves
+    * (read from the index files its root names, one per manifest shard,
+    * keyed by normalized path). Each file becomes one PartitionIndex whose
+    * leaves are its per-cell slabs at stats resolution `res`; a file with
+    * no slabs (all-null coordinates) falls back to its manifest MBR as a
+    * single leaf — a coarser bound, never a wrong one. */
+  private[graft] def fromFiles(res: Int, files: Seq[graft.table.FileEntry],
+      leavesByFile: Map[String, Seq[(Long, Long, Double, Double, Double, Double)]]): GlobalIndex = {
+    val parts = files.sortBy(_.path).zipWithIndex.map { case (e, i) =>
       val leaves = leavesByFile.get(
           graft.table.SnapshotStore.normalizePath(e.path)) match {
         case Some(ls) if ls.nonEmpty =>
@@ -120,9 +155,9 @@ object GlobalIndex {
         case _ =>
           Array(IndexNode(0, e.minLat, e.minLon, e.maxLat, e.maxLon, e.rows))
       }
-      LocalRTree.fromLeaves(i, leaves, fanout)
+      LocalRTree.fromLeaves(i, leaves)
     }.toArray
-    GlobalIndex(store.statsRes, parts)
+    GlobalIndex(res, parts)
   }
 
   /** Exact kNN over a STORED table, planned from the persisted index
@@ -147,14 +182,13 @@ object GlobalIndex {
   private[graft] def knnStoredPruned(store: graft.table.SnapshotStore,
                                      qLat: Double, qLon: Double,
                                      k: Int): (DataFrame, Int, Int) = {
-    val gi = fromStore(store)
-    val radius = gi.knnSeedRadius(qLat, qLon, k)
+    // the index and every read come from ONE snapshot
+    val v = store.view()
+    val radius = v.index.knnSeedRadius(qLat, qLon, k)
     val (cand, kept, total) =
-      if (radius == Double.MaxValue) store.read()
-      else store.read(Some(MBR(qLat - radius, qLon - radius,
+      if (radius == Double.MaxValue) store.readAt(v.snapshotId)
+      else store.readAt(v.snapshotId, Some(MBR(qLat - radius, qLon - radius,
         qLat + radius, qLon + radius)))
-    val spark = cand.sparkSession
-    import spark.implicits._
     val d2c = GeoCols.d2(col("lat"), col("lon"), qLat, qLon)
     // ONE scan of the pruned files: collect the k candidate rows (k is
     // small by contract) and audit them driver-side — re-running the
@@ -162,21 +196,21 @@ object GlobalIndex {
     val topk = cand.withColumn("d2", d2c)
       .orderBy(col("d2"), col("id")).limit(k)
       .select(col("id"), col("lat"), col("lon"), col("d2"))
-      .as[(Long, Double, Double, Double)].collect()
+      .collect()
     // an unbounded radius means `cand` was the FULL table — the collected
     // top-k is exact even with fewer than k live rows (the audit's
     // topk.length >= k would otherwise reject an already-exact answer and
     // pay the full scan a second time)
     val sound = topk.nonEmpty && (radius == Double.MaxValue ||
-      (topk.length >= k && topk.last._4 <= radius * radius))
+      (topk.length >= k && topk.last.getDouble(3) <= radius * radius))
     if (sound)
-      (topk.zipWithIndex.toSeq
-        .map { case ((id, la, lo, d2), i) => ((i + 1).toLong, id, la, lo, d2) }
-        .toDF("rank", "id", "lat", "lon", "d2"), kept, total)
+      (graft.ops.OpUtil.localFrame(cand.sparkSession, KnnSchema, topk.zipWithIndex.toSeq.map { case (r, i) =>
+        Row((i + 1).toLong, r.getLong(0), r.getDouble(1), r.getDouble(2), r.getDouble(3)) }),
+        kept, total)
     else {
       // deleted positions overcount: the radius fell below provability; pay the
       // full scan (superset-then-refine, never a wrong answer)
-      val (full, fullKept, fullTotal) = store.read()
+      val (full, fullKept, fullTotal) = store.readAt(v.snapshotId)
       (graft.ops.SpatialOps.knnSerial(full, qLat, qLon, k), fullKept, fullTotal)
     }
   }
@@ -212,9 +246,7 @@ object GlobalIndex {
     * `bounds` = (q_id, qLat, qLon, radius). */
   private[graft] def knnJoinCandidatePlan(cand: DataFrame,
       bounds: Seq[(Int, Double, Double, Double)], k: Int): DataFrame = {
-    val spark = cand.sparkSession
-    import spark.implicits._
-    val q = bounds.toDF("q_id", "qlat", "qlon", "rad")
+    val q = graft.ops.OpUtil.localFrame(cand.sparkSession, BoundsSchema, bounds.map(Row.fromTuple))
     val w = Window.partitionBy(col("q_id")).orderBy(col("d2"), col("id"))
     cand.join(broadcast(q),
         col("lat") >= col("qlat") - col("rad") &&
@@ -233,20 +265,21 @@ object GlobalIndex {
                                          queries: Seq[(Int, Double, Double)],
                                          k: Int): (DataFrame, Int, Int) = {
     require(queries.nonEmpty, "knnJoinStored needs at least one query")
-    val gi = fromStore(store)
+    // the index and every read come from ONE snapshot
+    val v = store.view()
     val bounds = queries.map { case (qid, qla, qlo) =>
-      (qid, qla, qlo, gi.knnSeedRadius(qla, qlo, k))
+      (qid, qla, qlo, v.index.knnSeedRadius(qla, qlo, k))
     }
     if (bounds.exists(_._4 == Double.MaxValue)) {
       // fewer than k rows in the summaries: no ball bounds anything —
       // the dense join over the full table IS the plan
-      val (full, kept, total) = store.read()
+      val (full, kept, total) = store.readAt(v.snapshotId)
       return (graft.ops.SpatialOps.knnJoinAgg(full, queries, k), kept, total)
     }
     val boxes = bounds.map { case (_, qla, qlo, rad) =>
       MBR(qla - rad, qlo - rad, qla + rad, qlo + rad)
     }
-    val (cand, kept, total) = store.readBoxes(boxes)
+    val (cand, kept, total) = store.readBoxesAt(v.snapshotId, boxes)
     val pruned = knnJoinCandidatePlan(cand, bounds, k)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val perQ = pruned.groupBy("q_id")
@@ -270,7 +303,7 @@ object GlobalIndex {
     val (out, keptOut, totalOut) =
       if (bad.isEmpty) (exactPart, kept, total)
       else {
-        val (full, fKept, fTotal) = store.read()
+        val (full, fKept, fTotal) = store.readAt(v.snapshotId)
         (exactPart.unionAll(graft.ops.SpatialOps.knnJoinAgg(
           full, queries.filter(qq => bad.contains(qq._1)), k)), fKept, fTotal)
       }

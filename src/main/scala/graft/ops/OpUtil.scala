@@ -1,6 +1,7 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, Dataset}
+import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.types.StructType
 
 private[graft] object OpUtil {
 
@@ -20,6 +21,12 @@ private[graft] object OpUtil {
     upstream.foreach(_.unpersist(false))
     out
   }
+
+  /** A small driver-built frame of `rows` under `schema` — a local
+    * relation, as `Seq(...).toDF` gives, without deriving a tuple encoder
+    * on every call (≈ 6 ms for a 6-tuple on a warm driver). */
+  private[graft] def localFrame(spark: SparkSession, schema: StructType, rows: Seq[Row]): DataFrame =
+    spark.createDataFrame(java.util.Arrays.asList(rows: _*), schema)
 
   /** Stage-or-persist barrier behind every staged-oracle operator: with a
     * `stagePath` the intermediate is checkpointed to parquet and read back

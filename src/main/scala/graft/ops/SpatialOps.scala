@@ -2,9 +2,10 @@ package graft.ops
 
 import graft.data.Fixtures
 import graft.geo.{CellId, GeoCols, MBR, Poly}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
 
 /** Spatial operators over a point DataFrame with columns (id, lat, lon).
   *
@@ -274,6 +275,11 @@ object SpatialOps {
     sweep(local, Window.partitionBy()) // survivors are few → single task is fine
   }
 
+  /** [[boxJoin]]'s broadcast side: a box's covering cells with its bounds. */
+  private val BoxCellSchema = StructType(Seq(StructField("box_id", IntegerType, false),
+    StructField("bcell", LongType, false)) ++
+    Seq("minlat", "minlon", "maxlat", "maxlon").map(StructField(_, DoubleType, false)))
+
   /** Multi-box spatial join (the de-facto join in Benchmark.java:101-118):
     * boxes → covering cells, broadcast hash join on the point's cell, exact
     * refine. Each point has exactly one cell and covering cells are
@@ -283,11 +289,10 @@ object SpatialOps {
   def boxJoin(points: DataFrame, boxes: Seq[(Int, MBR)],
               rOverride: Int = AutoRes): DataFrame = {
     val spark = points.sparkSession
-    import spark.implicits._
     val r = resolveRes(points, boxes.map(_._2), rOverride)
-    val cells = boxes.flatMap { case (bid, b) =>
-      CellId.cover(b, r).map(c => (bid, c, b.minLat, b.minLon, b.maxLat, b.maxLon))
-    }.toDF("box_id", "bcell", "minlat", "minlon", "maxlat", "maxlon")
+    val cells = OpUtil.localFrame(spark, BoxCellSchema, boxes.flatMap { case (bid, b) =>
+      CellId.cover(b, r).map(c => Row(bid, c, b.minLat, b.minLon, b.maxLat, b.maxLon))
+    })
     withCell(points, r)
       .join(broadcast(cells), col("cell") === col("bcell"))
       .filter(col("lat") >= col("minlat") && col("lat") <= col("maxlat") &&

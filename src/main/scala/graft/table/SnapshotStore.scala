@@ -2,7 +2,7 @@ package graft.table
 
 import graft.functions.{RowDeleted, ZRangeContains}
 import graft.geo.{CellId, GeoCols, MBR}
-import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{Cast, InSet, Literal}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.functions._
@@ -82,7 +82,7 @@ final case class FileEntry(path: String, rows: Long, minZ: Long, maxZ: Long,
   * read itself — the index being consulted. Compaction bounds entry and
   * shard counts between appends.
   */
-final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
+final class SnapshotStore(private[table] val spark: SparkSession, root: String, zRes: Int = 12,
                           histRes: Int = SnapshotStore.DefaultHistRes,
                           bloomKey: Option[String] = None,
                           curve: String = "z",
@@ -97,6 +97,11 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
   private val metaDir = Paths.get(root, "meta")
   private val currentPtr = metaDir.resolve("current")
   private val tableMetaPath = metaDir.resolve("table.json")
+
+  /** Test seam, production no-op: sees the name of every file under
+    * meta/ a read opens, so specs count metadata reads. */
+  private[graft] var onMetaRead: String => Unit = _ => ()
+
   Files.createDirectories(metaDir)
   Files.createDirectories(Paths.get(root, "data"))
   // stored reads refine through graft_z_in_ranges (the binary-search
@@ -113,7 +118,7 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
   // the same reason).
   private def tableMetaIfExists(): Option[(String, Int, Int, StructType)] =
     if (Files.isRegularFile(tableMetaPath))
-      Some(MetaJson.parseTableMeta(Files.readString(tableMetaPath)))
+      Some(MetaJson.parseTableMeta(readMeta(tableMetaPath.getFileName.toString)))
     else None
 
   /** Layout check, plus — given a unit's keyed schema — the schema check:
@@ -132,7 +137,7 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     }
 
   /** The pinned data schema (`__z` included). */
-  private def tableSchema: StructType =
+  private[table] def pinnedSchema(): StructType =
     tableMetaIfExists().map(_._4).getOrElse(throw new IllegalArgumentException(
       "empty table: nothing committed yet"))
 
@@ -167,7 +172,32 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
   }
 
   def currentSnapshotId: Long =
-    if (Files.exists(currentPtr)) Files.readString(currentPtr).trim.toLong else 0L
+    if (Files.exists(currentPtr)) readMeta(currentPtr.getFileName.toString).trim.toLong else 0L
+
+  /** The view of the last snapshot this store read or committed
+    * ([[SnapshotView]]): one per store instance. */
+  private val cachedView = new java.util.concurrent.atomic.AtomicReference[SnapshotView]()
+
+  private def cache(snapshotId: Long): SnapshotView = {
+    val v = new SnapshotView(this, snapshotId)
+    cachedView.set(v)
+    v
+  }
+
+  /** The view of the current snapshot: reads `current`, then reuses the
+    * cached view or replaces it — a commit by another store instance is
+    * seen here. */
+  private[graft] def view(): SnapshotView = viewAt(currentSnapshotId)
+
+  /** The view of snapshot `snapshotId`: the cached one, a new cached one
+    * when `snapshotId` is current, or — for an older snapshot — an
+    * uncached view that leaves the cached one in place. */
+  private def viewAt(snapshotId: Long): SnapshotView = {
+    val v = cachedView.get
+    if (v != null && v.snapshotId == snapshotId) v
+    else if (snapshotId == currentSnapshotId) cache(snapshotId)
+    else new SnapshotView(this, snapshotId)
+  }
 
   /** Manifest read: a driver-written JSON FILE — KBs of metadata, zero
     * Spark jobs (a parquet manifest cost one job to write and one per
@@ -176,7 +206,7 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     * never a cluster job). A `snap-N` that is not a regular file fails
     * the read ([[readRoot]]). */
   def manifest(snapshotId: Long = currentSnapshotId): Seq[FileEntry] =
-    manifestPartial(snapshotId, None)._1.flatMap(_._2)
+    viewAt(snapshotId).manifest
 
   /** Manifest read with optional SHARD pruning: when `boxes` is given,
     * only shards whose union bounds overlap some box are downloaded and
@@ -191,13 +221,16 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
                                      boxes: Option[Seq[MBR]],
                                      shardHint: Option[ShardMeta => Boolean] = None,
                                      rangesHint: Option[Seq[(Long, Long)]] = None)
+      : (Seq[(ShardMeta, Seq[FileEntry])], Int) =
+    manifestPartial(viewAt(snapshotId), boxes, shardHint, rangesHint)
+
+  private def manifestPartial(v: SnapshotView, boxes: Option[Seq[MBR]],
+                              shardHint: Option[ShardMeta => Boolean],
+                              rangesHint: Option[Seq[(Long, Long)]])
       : (Seq[(ShardMeta, Seq[FileEntry])], Int) = {
-    if (snapshotId == 0) (Seq.empty, 0)
+    if (v.snapshotId == 0) (Seq.empty, 0)
     else {
-      if (!Files.exists(metaDir.resolve(s"snap-$snapshotId")))
-        throw new IllegalStateException(
-          s"snapshot $snapshotId is expired or was never committed")
-      val root = readRoot(snapshotId)
+      val root = v.root
       val zBounds = rangesHint.map(ZRangeContains.bounds)
       // the bound prunes are fail-open: a shard with unknown bounds
       // always loads — a pruner may only skip what it can PROVE
@@ -214,33 +247,36 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
         zBounds.forall(ZRangeContains.meets(_, sm.minZ, sm.maxZ)) &&
         shardHint.forall(_(sm))
       }
-      (wanted.map(sm => sm -> MetaJson.parseManifest(readMeta(sm.path))),
-        root.shards.map(_.entries).sum)
+      (wanted.map(sm => sm -> v.entries(sm)), root.shards.map(_.entries).sum)
     }
   }
-
-  /** The deletion vectors of one shard row, by normalized file path. */
-  private def vectorsOf(sm: ShardMeta): Map[String, Array[Long]] =
-    sm.dv.fold(Map.empty[String, Array[Long]])(n => MetaJson.parseDv(readMeta(n)).toMap)
 
   /** Parse the root of snapshot `snapshotId`. The root is a JSON FILE;
     * anything else under the `snap-N` name (a directory, say), or a
     * document that is not a manifest list, fails naming the path, so no
     * reader guesses at its contents and no reference scan treats it as
     * "references nothing". */
-  private def readRoot(snapshotId: Long): ManifestRoot = {
+  private[table] def readRoot(snapshotId: Long): ManifestRoot = {
     val p = metaDir.resolve(s"snap-$snapshotId")
+    if (!Files.exists(p))
+      throw new IllegalStateException(
+        s"snapshot $snapshotId is expired or was never committed")
     if (!Files.isRegularFile(p))
       throw new IllegalStateException(
         s"snapshot root $p is not a regular file; it cannot be read as a manifest")
-    try MetaJson.parseManifestRoot(Files.readString(p))
+    try MetaJson.parseManifestRoot(readMeta(p.getFileName.toString))
     catch { case e: IllegalStateException =>
       throw new IllegalStateException(s"snapshot root $p: ${e.getMessage}", e) }
   }
 
-  /** A file the root names under meta/ (a shard or a stats file). A
-    * missing one fails the read, naming its path. */
-  private def readMeta(name: String): String = Files.readString(metaDir.resolve(name))
+  /** The one way the store opens a file under meta/: `current`,
+    * `table.json`, a root, or a file a root names (a shard, stats or
+    * deletion-vector file). A missing one fails the read, naming its
+    * path. */
+  private[table] def readMeta(name: String): String = {
+    onMetaRead(name)
+    Files.readString(metaDir.resolve(name))
+  }
 
   /** Lineage ids present in the current snapshot — the idempotence check
     * streaming ingestion runs per MICRO-BATCH ([[resumableRun]] /
@@ -250,19 +286,16 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
   /** Lineage ids of snapshot `snapshotId`, from its ROOT alone (KBs at the
     * 10⁶-file design point): the shard rows' `lineages` summaries and the
     * ids folded into compactions and deletes. */
-  private def lineageSet(snapshotId: Long): Set[String] =
-    if (snapshotId == 0) Set.empty
-    else {
-      val root = readRoot(snapshotId)
-      root.shards.flatMap(_.lineages).toSet ++ root.folded
-    }
+  private def lineageSet(snapshotId: Long): Set[String] = {
+    val root = viewAt(snapshotId).root
+    root.shards.flatMap(_.lineages).toSet ++ root.folded
+  }
 
   /** Exact live-row count from metadata alone — the plan-time input to
     * [[graft.geo.CellId.pickResolution]] (adaptive covering resolution
     * with ZERO data scans): the rows written minus the positions the
     * shard rows' deletion vectors mark. */
-  def totalRows: Long = manifestPartial(currentSnapshotId, None)._1
-    .map { case (sm, es) => es.map(_.rows).sum - sm.deleted }.sum
+  def totalRows: Long = view().totalRows
 
   /** Append a (lat, lon, …) DataFrame as one lineage unit: Z-cluster it
     * (repartitionByRange + sortWithinPartitions — the bulk-load pack),
@@ -370,15 +403,15 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     *
     * The same verdict prunes SHARDS ([[bloomVerdicts]]): a shard none of
     * whose files might hold a probed key is never parsed, so a point
-    * lookup costs one root parse + one Bloom file per shard + the hit
-    * shards, not the full manifest. */
+    * lookup reads the root + one Bloom file per shard + the hit shards,
+    * not the full manifest — once per snapshot: the view keeps them. */
   def lookupByKey(values: Seq[Any], keyCol: String = ""): (DataFrame, Int, Int) = {
     val key = if (keyCol.nonEmpty) keyCol
       else bloomKey.getOrElse(throw new IllegalArgumentException(
         "store has no bloomKey: pass keyCol explicitly"))
-    val snap = currentSnapshotId
-    val (fileMight, shardMight) = bloomVerdicts(snap, values, key)
-    planAt(snap, keep = fileMight,
+    val v = view()
+    val (fileMight, shardMight) = bloomVerdicts(v, values, key)
+    planAt(v, keep = fileMight,
       refine = df => df.filter(keyIn(df, key, values)),
       shardHint = Some(shardMight))
   }
@@ -401,12 +434,15 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     * filter covers: unknown coverage fails open, since skipping it could
     * drop live rows. */
   private[graft] def bloomVerdicts(snapshotId: Long, values: Seq[Any], key: String)
+      : (FileEntry => Boolean, ShardMeta => Boolean) =
+    bloomVerdicts(viewAt(snapshotId), values, key)
+
+  private def bloomVerdicts(v: SnapshotView, values: Seq[Any], key: String)
       : (FileEntry => Boolean, ShardMeta => Boolean) = {
     val hashes = values.map(Bloom.hashLiteral)
     def might(bits: Array[Long]) = hashes.exists(Bloom.mightContain(bits, _))
-    val shards = if (snapshotId == 0) Seq.empty else readRoot(snapshotId).shards
-    val perShard: Map[String, Seq[(String, Array[Long])]] = shards.flatMap(sm =>
-      sm.bloom.map(b => MetaJson.parseBloom(readMeta(b))).collect {
+    val perShard: Map[String, Seq[(String, Array[Long])]] = v.root.shards.flatMap(sm =>
+      v.bloom(sm).collect {
         case (kc, k, perFile) if kc == key && k == Bloom.K => sm.path -> perFile
       }).toMap
     val perFile = perShard.valuesIterator.flatten.toMap
@@ -421,11 +457,8 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     * slabs keyed by normalized file path), read from the index files its
     * root names — written by [[writeManifestFile]], consumed by
     * [[graft.index.GlobalIndex.fromStore]] with zero Spark jobs. */
-  def indexLeaves(): Map[String, Seq[(Long, Long, Double, Double, Double, Double)]] = {
-    val snap = currentSnapshotId
-    if (snap == 0) Map.empty
-    else readRoot(snap).shards.flatMap(sm => MetaJson.parseIndex(readMeta(sm.index))._2).toMap
-  }
+  def indexLeaves(): Map[String, Seq[(Long, Long, Double, Double, Double, Double)]] =
+    view().indexLeaves
 
   /** Write-time hot-cell set at resolution `r` — the zero-query-time-scan
     * input to [[graft.ops.SpatialOps.boxJoinSalted]]. Counts are the
@@ -547,6 +580,7 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     Files.writeString(tmp, next.toString, StandardOpenOption.CREATE_NEW)
     Files.move(tmp, currentPtr, StandardCopyOption.ATOMIC_MOVE,
       StandardCopyOption.REPLACE_EXISTING)
+    cache(next)
     next
   }
 
@@ -778,16 +812,20 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     * ([[CellId.mergeRanges]]), never opens, and the surviving rows are
     * probed against that covering. Superset contract as [[read]] — the
     * join operator's exact predicate refines. */
-  def readBoxes(boxes: Seq[MBR]): (DataFrame, Int, Int) = {
+  def readBoxes(boxes: Seq[MBR]): (DataFrame, Int, Int) =
+    readBoxesAt(currentSnapshotId, boxes)
+
+  /** [[readBoxes]] against snapshot `snapshotId`. */
+  private[graft] def readBoxesAt(snapshotId: Long, boxes: Seq[MBR]): (DataFrame, Int, Int) = {
     require(boxes.nonEmpty, "readBoxes needs at least one box")
-    planBoxes(currentSnapshotId, Some(boxes))
+    planBoxes(viewAt(snapshotId), Some(boxes))
   }
 
   /** Time travel: the same planned read against ANY committed snapshot —
     * vacuum() keeps every snapshot's files, so pre-compaction history
     * stays queryable until snapshots are expired out-of-band. */
   def readAt(snapshotId: Long, box: Option[MBR] = None): (DataFrame, Int, Int) =
-    planBoxes(snapshotId, box.map(Seq(_)))
+    planBoxes(viewAt(snapshotId), box.map(Seq(_)))
 
   /** The one box-read planner behind [[read]], [[readAt]] and
     * [[readBoxes]]: no boxes reads everything; otherwise files disjoint
@@ -802,10 +840,10 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     * decomposition cost is cap-independent (full quadtree descent, then
     * coalesce), so a finer covering only SHRINKS the superset — and the
     * set of files whose Z span meets it. */
-  private def planBoxes(snapshotId: Long, boxes: Option[Seq[MBR]]): (DataFrame, Int, Int) = {
+  private def planBoxes(v: SnapshotView, boxes: Option[Seq[MBR]]): (DataFrame, Int, Int) = {
     val ranges = boxes.map(bs => CellId.mergeRanges(
       bs.flatMap(GeoCols.curveRanges(curve, _, zRes, maxRanges = 1024)), maxRanges = 4096))
-    planAt(snapshotId,
+    planAt(v,
       keep = e => boxes.forall(_.exists(b =>
         MBR(e.minLat, e.minLon, e.maxLat, e.maxLon).overlaps(b))),
       refine = df => ranges.fold(df)(rs =>
@@ -823,14 +861,15 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     * deletion vectors of the kept files, read from the DV files of the
     * shards that hold them, feed ONE [[RowDeleted]] filter over the scan's
     * file path and row index — no join, no broadcast, no Spark job; with
-    * no vector, there is no filter. `snapshotId`'s own DV names are used,
-    * so time travel is exact. Every scan is built from the pinned schema
-    * ([[scan]]), so planning is manifest + driver IO only: zero Spark
-    * jobs before the caller's action (≤ 32 paths per scan — past that,
-    * Spark lists the files in a job). A snapshot with no surviving file —
-    * everything pruned, or a table compacted down to zero rows — plans
-    * zero rows of the pinned schema. */
-  private def planAt(snapshotId: Long, keep: FileEntry => Boolean,
+    * no vector, there is no filter. The view's own DV names are used,
+    * so time travel is exact. Every part comes from the snapshot's view
+    * (parsed once per view) and every scan is built over the view's file
+    * statuses ([[SnapshotView.scan]]), so planning is driver IO only, and
+    * none once the view holds the parts: zero Spark jobs before the
+    * caller's action, at any file count. A snapshot with no surviving
+    * file — everything pruned, or a table compacted down to zero rows —
+    * plans zero rows of the pinned schema. */
+  private def planAt(v: SnapshotView, keep: FileEntry => Boolean,
                      refine: DataFrame => DataFrame,
                      boxesHint: Option[Seq[MBR]] = None,
                      shardHint: Option[ShardMeta => Boolean] = None,
@@ -841,25 +880,19 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     // skipped shard are provably disjoint from every box / bloom-clear
     // for every probed key, so `keep` would reject them anyway;
     // totalData stays the snapshot's true file count.
-    val (loaded, totalData) = manifestPartial(snapshotId, boxesHint, shardHint, rangesHint)
+    val (loaded, totalData) = manifestPartial(v, boxesHint, shardHint, rangesHint)
     val zBounds = rangesHint.map(ZRangeContains.bounds)
     val perShard = loaded.map { case (sm, es) => sm -> es.filter(e => keep(e) &&
       zBounds.forall(ZRangeContains.meets(_, e.minZ, e.maxZ))) }
     val kept = perShard.flatMap(_._2)
     val deleted = perShard.filter(_._2.nonEmpty).flatMap { case (sm, es) =>
       val paths = es.map(e => normPath(e.path)).toSet
-      vectorsOf(sm).filter(v => paths(v._1))
+      v.vectors(sm).filter(dv => paths(dv._1))
     }.toMap
-    val scanned = scan(tableSchema, kept.map(_.path))
+    val scanned = v.scan(kept.map(_.path))
     val live = if (deleted.isEmpty) scanned else scanned.filter(RowDeleted.live(deleted))
     (refine(live).drop("__z"), kept.size, totalData)
   }
-
-  /** The one way the store reads its files: `paths` under `schema`, or
-    * zero rows of it without any read when no path survived planning. */
-  private def scan(schema: StructType, paths: Seq[String]): DataFrame =
-    if (paths.isEmpty) spark.createDataFrame(java.util.Collections.emptyList[Row](), schema)
-    else spark.read.schema(schema).parquet(paths: _*)
 
   /** Row-level delete by position (Iceberg v3 / Delta Lake deletion
     * vectors): ONE Spark job over the current snapshot's live rows
@@ -878,21 +911,23 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     * a commit racing it fails the delete loudly. Its lineage id joins the
     * root's `folded` list, so [[committedLineage]] holds it. */
   def deleteWhere(cond: org.apache.spark.sql.Column, lineageId: String): Long = {
-    val base = currentSnapshotId
-    val (live, kept, _) = readAt(base)
+    // the scan's view maps the hit files to their shards: a delete parses
+    // each shard and DV file at most once
+    val v = view()
+    val (live, kept, _) = planBoxes(v, None)
     import spark.implicits._
     // a snapshot without files has no `_metadata` to select
     val hits = if (kept == 0) Map.empty[String, Array[Long]] else live.filter(cond)
       .select(col("_metadata.file_path"), col("_metadata.row_index"))
       .as[(String, Long)].mapPartitions(SnapshotStore.positions).collect()
       .groupMapReduce(v => RowDeleted.fileKey(v._1))(_._2)(SnapshotStore.or)
-    val vectors = manifestPartial(base, None)._1.collect {
+    val vectors = manifestPartial(v, None, None, None)._1.collect {
       case (sm, es) if es.exists(e => hits.contains(normPath(e.path))) =>
-        val old = vectorsOf(sm)
+        val old = v.vectors(sm)
         sm -> es.map(e => normPath(e.path)).flatMap(f =>
           (old.get(f) ++ hits.get(f)).reduceOption(SnapshotStore.or).map(f -> _))
     }
-    commit(Seq.empty, tableSchema, expectedParent = base, folded = Seq(lineageId),
+    commit(Seq.empty, v.schema, expectedParent = v.snapshotId, folded = Seq(lineageId),
       vectors = vectors)
   }
 
@@ -920,8 +955,9 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     // rewrite runs (streaming ingestion!) fails the compaction loudly
     // instead of being silently dropped from the replacing manifest while
     // its lineage id stays marked committed
-    val base = currentSnapshotId
-    val (df, _, _) = read()
+    val v = view()
+    val base = v.snapshotId
+    val (df, _, _) = planBoxes(v, None)
     // UUID-suffixed like append's units: a compaction that crashes before
     // its commit must not wedge every retry on ErrorIfExists
     val unitDir = s"$root/data/compact-${base + 1}-" +
@@ -958,13 +994,13 @@ final class SnapshotStore(spark: SparkSession, root: String, zRes: Int = 12,
     * Planned from the pinned schema like every read: an empty window is
     * zero rows of it, with no Spark job. */
   def appendedSince(sinceSnapshot: Long, toSnapshot: Long = -1L): DataFrame = {
-    val to = if (toSnapshot >= 0) toSnapshot else currentSnapshotId
-    val m = manifest(to)
+    val v = viewAt(if (toSnapshot >= 0) toSnapshot else currentSnapshotId)
+    val (to, m) = (v.snapshotId, v.manifest)
     require(!m.exists(e => e.seq > sinceSnapshot && e.lineageId.startsWith("compact-")),
       s"window ($sinceSnapshot, $to] crosses a compaction — increments are " +
         "append-only; re-baseline from the compacted snapshot")
     val ents = m.filter(e => e.seq > sinceSnapshot && e.seq <= to)
-    scan(tableSchema, ents.map(_.path)).drop("__z")
+    v.scan(ents.map(_.path)).drop("__z")
   }
 
   /** Remove data directories no snapshot references — debris from appends

@@ -1,6 +1,7 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.types.StructType
 
 /** Expression↔Column bridge for graft's custom codegen'd expressions
   * ([[graft.functions.VecDot]], [[graft.functions.ZRangeContains]]).
@@ -11,9 +12,12 @@ import org.apache.spark.sql.catalyst.expressions.Expression
   * the DataFrame's session — a library API built on it fails on any
   * session without [[graft.plans.GraftExtensions]] installed. This shim
   * lives in `org.apache.spark.sql` purely to re-export the two
-  * conversions (the established pattern for Spark-native libraries);
-  * it contains no logic. */
+  * conversions (the established pattern for Spark-native libraries),
+  * plus `asNullable`, the read schema a file relation gets from
+  * `DataSource` ([[graft.table.SnapshotView.scan]] builds its relation
+  * without one); it contains no logic. */
 object GraftColumnBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+  def asNullable(s: StructType): StructType = s.asNullable
 }

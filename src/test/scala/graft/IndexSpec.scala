@@ -1,13 +1,15 @@
 package graft
 
 import graft.data.Points
-import graft.geo.MBR
+import graft.geo.{GeoCols, MBR}
 import graft.index.{GlobalIndex, LocalRTree}
+import graft.table.SnapshotStore
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import scala.util.Random
 
-class IndexSpec extends AnyFunSuite {
+class IndexSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -132,5 +134,66 @@ class IndexSpec extends AnyFunSuite {
       GlobalIndex.build(pts, r = 10, numPartitions = 8, curve = "peano")
     }
     sClustered.unpersist(false)
+  }
+
+  /** The radius of the full sort the descent replaces: every live leaf by
+    * ascending maxDist, counts accumulated until they reach k. */
+  def sortRadius(gi: GlobalIndex, qLat: Double, qLon: Double, k: Int): Double = {
+    val slabs = gi.parts.flatMap(_.leaves).filter(_.count > 0)
+      .map(l => (l.mbr.maxDistSq(qLat, qLon), l.count)).sortBy(_._1)
+    var acc = 0L
+    slabs.find { case (_, c) => acc += c; acc >= k }
+      .fold(Double.MaxValue)(s => math.nextUp(math.sqrt(s._1)))
+  }
+
+  /** Descent radius == sort radius, bitwise, for random query points and
+    * k ∈ {1, 10, 25, 100, live count + 1}; returns the popped-node counts
+    * of the descents with k ≤ 100. */
+  def descentEqualsSort(name: String, gi: GlobalIndex, seed: Int): Seq[Int] = {
+    val rng = new Random(seed)
+    val live = gi.totalRows
+    (0 until 25).flatMap { _ =>
+      val (qLat, qLon) = (rng.nextDouble() * 200 - 100, rng.nextDouble() * 380 - 190)
+      Seq(1, 10, 25, 100, (live + 1).toInt).flatMap { k =>
+        val (rad, popped) = gi.knnSeedDescent(qLat, qLon, k)
+        val exp = sortRadius(gi, qLat, qLon, k)
+        assert(java.lang.Double.doubleToRawLongBits(rad) == java.lang.Double.doubleToRawLongBits(exp),
+          s"$name q=($qLat,$qLon) k=$k: descent $rad, sort $exp")
+        assert(gi.knnSeedRadius(qLat, qLon, k) == rad)
+        if (k > live) { assert(rad == Double.MaxValue); None } else Some(popped)
+      }
+    }
+  }
+
+  test("best-first descent radius equals the full sort's, bitwise, on built and stored indexes") {
+    descentEqualsSort("built", built._2, 1)
+    val st = new SnapshotStore(spark, tempDir("graft_idx").toString)
+    st.append(pts, "unit-all", numPartitions = 8)
+    descentEqualsSort("stored", GlobalIndex.fromStore(st), 2)
+    // and under deletes, which leave the leaf counts as written
+    st.deleteWhere(col("id") % 3 === 0, "del-0")
+    descentEqualsSort("stored+deletes", GlobalIndex.fromStore(st), 3)
+    // no live point: no radius bounds k of them
+    val empty = GlobalIndex(6, Array(LocalRTree.pack(0, Iterator.empty)))
+    assert(empty.knnSeedDescent(0, 0, 1) == (Double.MaxValue, 0))
+  }
+
+  test("serve-shaped 200k-point index: descent equals sort and pops far fewer nodes than leaves") {
+    // 200k hashed (id, lat, lon) points in 8 globe-spanning units of 4
+    // files each — every file's root spans the globe, so the file level
+    // alone prunes nothing and the descent must go below it
+    val rows = 200000L
+    val h = xxhash64(col("id"), lit(7L))
+    val points = spark.range(0, rows, 1, 4).select(col("id"),
+      GeoCols.geoFromPhashLat(h).as("lat"), GeoCols.geoFromPhashLon(h).as("lon"))
+    val st = new SnapshotStore(spark, tempDir("graft_idx200k").toString, bloomKey = Some("id"))
+    (0 until 8).foreach(u => st.append(points.filter(col("id") % 8 === u), s"unit$u", numPartitions = 4))
+    val gi = GlobalIndex.fromStore(st)
+    val leaves = gi.parts.map(_.leaves.count(_.count > 0)).sum
+    assert(gi.totalRows == rows && gi.parts.length == 32 && leaves > 30000, s"$leaves leaves")
+    val popped = descentEqualsSort("serve", gi, 4).sorted
+    val median = popped(popped.size / 2)
+    assert(popped.max < leaves / 10 && median < leaves / 50,
+      s"descent popped median $median, max ${popped.max} of $leaves leaves")
   }
 }
