@@ -101,7 +101,7 @@ object PlanDump {
       val radius = gi.knnSeedRadius(qla, qlo, k)
       val b = graft.geo.MBR(qla - radius, qlo - radius, qla + radius, qlo + radius)
       dump("stored-table kNN (persisted index summaries)",
-        s"GlobalIndex.fromStore is the index the store's snapshot view holds: built once per snapshot from the index files the root names, ZERO Spark jobs; a best-first descent of it gives the seed radius, which bounds a manifest-pruned box read (files outside it never open) probed by graft_z_in_ranges, and the query point enters d2 as param(...) leaves; ONE TakeOrderedAndProject scan yields the k rows, audited driver-side (knnStored's executed plan — its returned frame is the collected local relation).",
+        s"GlobalIndex.fromStore is the index the store's snapshot view holds: built once per snapshot from the index files the root names, ZERO Spark jobs; a best-first descent of it gives the seed radius, which bounds a manifest-pruned box read (files outside it never open) probed by graft_z_in_ranges, and the query point enters d2 as param(...) leaves; ONE TakeOrderedAndProject scan yields the k rows (knnStored's executed plan — its returned frame is the collected local relation).",
         store.read(Some(b))._1
           .withColumn("d2", graft.geo.GeoCols.d2(col("lat"), col("lon"), qla, qlo))
           .orderBy(col("d2"), col("id")).limit(k))
@@ -161,7 +161,7 @@ object PlanDump {
         graft.geo.MBR(qla - rad, qlo - rad, qla + rad, qlo + rad) }
       val (cand, ckept, ctot) = jstore.readBoxes(balls)
       dump("stored-table kNN JOIN (knnJoinStored candidate plan)",
-        s"Per-query radius bounds by best-first descent of the snapshot view's index (built once per snapshot, no Spark jobs); ONE multi-ball pruned read opened $ckept of $ctot files; the tiny (q_id, center, radius) set broadcasts and the per-query top-k runs as a window over candidates only — |Q|·k output rows, audited per query before trust (the OPERATOR'S OWN candidate-plan builder, GlobalIndex.knnJoinCandidatePlan — this evidence cannot drift from the executed plan).",
+        s"Per-query radius bounds by best-first descent of the snapshot view's index (built once per snapshot, no Spark jobs); ONE multi-ball pruned read opened $ckept of $ctot files; the tiny (q_id, center, radius) set broadcasts and the per-query top-k runs as a window over candidates only — |Q|·k output rows (the OPERATOR'S OWN candidate-plan builder, GlobalIndex.knnJoinCandidatePlan — this evidence cannot drift from the executed plan).",
         graft.index.GlobalIndex.knnJoinCandidatePlan(cand, bounds,
             Fixtures.knnJoinK)
           .select(col("q_id"), col("rank"), col("id")))

@@ -119,12 +119,6 @@ object CellId {
     }
   }
 
-  /** Guaranteed search radius after probing rings 0..k around the query's
-    * cell: any unprobed point is at least this far away (degree units).
-    * Planar degree-space metric, matching MBR.java:67-79. */
-  def ringGuaranteeDist(r: Int, k: Long): Double =
-    k * math.min(latStep(r), lonStep(r))
-
   // ---- Morton (Z-order) — internal clustering key ----
 
   /** Spread the low 32 bits of v so bit i lands at position 2i. */

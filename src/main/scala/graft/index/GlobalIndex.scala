@@ -1,7 +1,7 @@
 package graft.index
 
 import graft.geo.{CellId, GeoCols, MBR}
-import org.apache.spark.sql.{DataFrame, Dataset, Row}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -28,18 +28,22 @@ final case class GlobalIndex(resolution: Int, parts: Array[PartitionIndex]) {
   private lazy val top: PartitionIndex = LocalRTree.fromLeaves(-1, live.map(_.root))
 
   /** Branch-and-bound kNN seed: the smallest leaf max-distance within
-    * which the leaves hold >= k points. Every point of a leaf lies within
-    * its maxDist, so the radius provably contains >= k points — a
-    * driver-side walk of the broadcastable summary, no Spark job. */
+    * which the leaves hold >= k LIVE points. Every point of a leaf lies
+    * within its maxDist, and a file whose deletion vector marks d rows
+    * holds at least (rows popped from it − d) live ones among them, so the
+    * radius provably contains >= k live points — a driver-side walk of the
+    * broadcastable summary, no Spark job. */
   def knnSeedRadius(qLat: Double, qLon: Double, k: Int): Double =
     knnSeedDescent(qLat, qLon, k)._1
 
   /** [[knnSeedRadius]] by best-first descent — the reference's
     * priority-queue NN search (RStarTree.java:450-481): a queue keys
     * internal nodes by minDist and leaves by maxDist, and the descent stops
-    * once the popped leaves' counts reach k. A node's minDist is at most
-    * every key below it, so leaves pop in ascending maxDist order and the
-    * radius is the one sorting every leaf would give. Also returns the
+    * once the popped leaves hold k live points: Σ over files of
+    * max(0, rows popped from the file − rows deleted in it). A node's
+    * minDist is at most every key below it, so leaves pop in ascending
+    * maxDist order and the radius is the one sorting every leaf would
+    * give. With no deletes each leaf counts in full. Also returns the
     * number of nodes popped. */
   private[graft] def knnSeedDescent(qLat: Double, qLon: Double, k: Int): (Double, Int) = {
     // a node: (key, tree, level, index); tree -1 is `top`, whose leaves
@@ -53,19 +57,24 @@ final case class GlobalIndex(resolution: Int, parts: Array[PartitionIndex]) {
         tree, level, i))
     }
     if (live.nonEmpty) push(-1, top.levels.length - 1, 0)
+    val rowsPopped = new Array[Long](live.length)
+    def liveIn(tree: Int): Long = math.max(0L, rowsPopped(tree) - live(tree).deleted)
     var acc = 0L
     var popped = 0
     while (!queue.isEmpty) {
       val (key, tree, level, i) = queue.poll()
       popped += 1
       if (tree >= 0 && level == 0) {
-        acc += live(tree).leaves(i).count
+        // the deleted rows may all sit in the leaves popped first
+        val before = liveIn(tree)
+        rowsPopped(tree) += live(tree).leaves(i).count
+        acc += liveIn(tree) - before
         // nextUp: sqrt rounds to NEAREST, so an unpadded radius can sit half
         // an ulp BELOW the true bound — a point exactly at the slab's
         // maxDistSq then falls outside the ball box (missed candidate) and
         // rad*rad undershoots its d2 (measured: dk 39.21061000000006 vs rad²
-        // 39.21060992…, a spurious audit fallback that read every file). One
-        // ulp up guarantees rad ≥ √bound; the bound only widens, never wrong.
+        // 39.21060992…). One ulp up guarantees rad ≥ √bound; the bound only
+        // widens, never wrong.
         if (acc >= k) return (math.nextUp(math.sqrt(key)), popped)
       } else if (tree < 0 && level == 0) push(i, live(i).levels.length - 1, 0)
       else {
@@ -75,7 +84,7 @@ final case class GlobalIndex(resolution: Int, parts: Array[PartitionIndex]) {
           .foreach(push(tree, level - 1, _))
       }
     }
-    (Double.MaxValue, popped) // fewer than k points exist: caller scans everything
+    (Double.MaxValue, popped) // fewer than k live points: caller scans everything
   }
 }
 
@@ -129,25 +138,23 @@ object GlobalIndex {
     * distributed analog of the reference persisting its tree pages in
     * IndexFile.java:37-95 instead of rebuilding per process). Built once
     * per snapshot: the store's [[graft.table.SnapshotView]] holds it
-    * ([[fromFiles]]).
-    *
-    * Caveat for count-based bounds ([[GlobalIndex.knnSeedRadius]]): the
-    * slabs count rows as written, so deleted positions overcount live
-    * rows, and [[knnStored]] re-audits its radius against the live data
-    * before trusting it. */
+    * ([[fromFiles]]). */
   def fromStore(store: graft.table.SnapshotStore): GlobalIndex = store.view().index
 
-  /** The index over a snapshot's data `files` and their persisted leaves
+  /** The index over a snapshot's data `files`, their persisted leaves
     * (read from the index files its root names, one per manifest shard,
-    * keyed by normalized path). Each file becomes one PartitionIndex whose
-    * leaves are its per-cell slabs at stats resolution `res`; a file with
-    * no slabs (all-null coordinates) falls back to its manifest MBR as a
-    * single leaf — a coarser bound, never a wrong one. */
+    * keyed by normalized path) and their deleted-position counts (same
+    * keys; a file without a vector has none). Each file becomes one
+    * PartitionIndex whose leaves are its per-cell slabs at stats
+    * resolution `res`; a file with no slabs (all-null coordinates) falls
+    * back to its manifest MBR as a single leaf — a coarser bound, never a
+    * wrong one. */
   private[graft] def fromFiles(res: Int, files: Seq[graft.table.FileEntry],
-      leavesByFile: Map[String, Seq[(Long, Long, Double, Double, Double, Double)]]): GlobalIndex = {
+      leavesByFile: Map[String, Seq[(Long, Long, Double, Double, Double, Double)]],
+      deletedByFile: Map[String, Long]): GlobalIndex = {
     val parts = files.sortBy(_.path).zipWithIndex.map { case (e, i) =>
-      val leaves = leavesByFile.get(
-          graft.table.SnapshotStore.normalizePath(e.path)) match {
+      val path = graft.table.SnapshotStore.normalizePath(e.path)
+      val leaves = leavesByFile.get(path) match {
         case Some(ls) if ls.nonEmpty =>
           ls.sortBy(_._1).map { case (_, n, la0, la1, lo0, lo1) =>
             IndexNode(0, la0, lo0, la1, lo1, n)
@@ -155,7 +162,7 @@ object GlobalIndex {
         case _ =>
           Array(IndexNode(0, e.minLat, e.minLon, e.maxLat, e.maxLon, e.rows))
       }
-      LocalRTree.fromLeaves(i, leaves)
+      LocalRTree.fromLeaves(i, leaves).copy(deleted = deletedByFile.getOrElse(path, 0L))
     }.toArray
     GlobalIndex(res, parts)
   }
@@ -167,52 +174,34 @@ object GlobalIndex {
     * prune, RStarTree.java:426) → exact top-k. The index build cost is
     * amortized to WRITE time; the query pays only the pruned scan.
     *
-    * Exactness audit: index-file counts overcount live rows by the deleted
-    * positions, so the bound is re-verified against the candidates
-    * (count ≥ k and kth distance ≤ radius²); a failed audit falls back to
-    * the full-table scan — superset-then-refine, never a wrong answer. */
+    * Exact: the index credits each file only with the rows its deletion
+    * vector leaves live, so the ball holds >= k live rows and the box
+    * around it holds the k nearest. */
   def knnStored(store: graft.table.SnapshotStore,
                 qLat: Double, qLon: Double, k: Int): DataFrame =
     knnStoredPruned(store, qLat, qLon, k)._1
 
-  /** [[knnStored]] + the observed (files read, total files) of the read
-    * that actually produced the result, so specs can assert file skipping
-    * on the query path (a fallback reports the full read's counts, never
-    * the pruned read it abandoned). */
+  /** [[knnStored]] + the (files read, total files) of its one read, so
+    * specs can assert file skipping on the query path. */
   private[graft] def knnStoredPruned(store: graft.table.SnapshotStore,
                                      qLat: Double, qLon: Double,
                                      k: Int): (DataFrame, Int, Int) = {
-    // the index and every read come from ONE snapshot
+    // the index and the read come from ONE snapshot
     val v = store.view()
     val radius = v.index.knnSeedRadius(qLat, qLon, k)
     val (cand, kept, total) =
       if (radius == Double.MaxValue) store.readAt(v.snapshotId)
       else store.readAt(v.snapshotId, Some(MBR(qLat - radius, qLon - radius,
         qLat + radius, qLon + radius)))
-    val d2c = GeoCols.d2(col("lat"), col("lon"), qLat, qLon)
-    // ONE scan of the pruned files: collect the k candidate rows (k is
-    // small by contract) and audit them driver-side — re-running the
-    // top-k as a second job would double the query's cost
-    val topk = cand.withColumn("d2", d2c)
+    // ONE scan of the read files: collect the k rows (k is small by
+    // contract) into a local relation
+    val topk = cand.withColumn("d2", GeoCols.d2(col("lat"), col("lon"), qLat, qLon))
       .orderBy(col("d2"), col("id")).limit(k)
       .select(col("id"), col("lat"), col("lon"), col("d2"))
       .collect()
-    // an unbounded radius means `cand` was the FULL table — the collected
-    // top-k is exact even with fewer than k live rows (the audit's
-    // topk.length >= k would otherwise reject an already-exact answer and
-    // pay the full scan a second time)
-    val sound = topk.nonEmpty && (radius == Double.MaxValue ||
-      (topk.length >= k && topk.last.getDouble(3) <= radius * radius))
-    if (sound)
-      (graft.ops.OpUtil.localFrame(cand.sparkSession, KnnSchema, topk.zipWithIndex.toSeq.map { case (r, i) =>
-        Row((i + 1).toLong, r.getLong(0), r.getDouble(1), r.getDouble(2), r.getDouble(3)) }),
-        kept, total)
-    else {
-      // deleted positions overcount: the radius fell below provability; pay the
-      // full scan (superset-then-refine, never a wrong answer)
-      val (full, fullKept, fullTotal) = store.readAt(v.snapshotId)
-      (graft.ops.SpatialOps.knnSerial(full, qLat, qLon, k), fullKept, fullTotal)
-    }
+    (graft.ops.OpUtil.localFrame(cand.sparkSession, KnnSchema, topk.zipWithIndex.toSeq.map { case (r, i) =>
+      Row((i + 1).toLong, r.getLong(0), r.getDouble(1), r.getDouble(2), r.getDouble(3)) }),
+      kept, total)
   }
 
   /** Exact kNN JOIN over a STORED table, planned from the persisted index
@@ -225,24 +214,20 @@ object GlobalIndex {
     * contains them, per-query top-k window. Same output as
     * [[graft.ops.SpatialOps.knnJoinAgg]] (q_id, rank, id).
     *
-    * Exactness: each query's candidates are a superset of its radius box,
-    * and the seed radius provably bounds the kth distance — re-audited per
-    * query against the live rows (count ≥ k, kth distance ≤ radius²)
-    * because deleted positions make index-file counts an overcount; failed queries
-    * fall back to the dense join over the full table, never a wrong
-    * answer. */
+    * Exact: each query's candidates are a superset of its radius box, and
+    * the seed radius provably bounds the kth LIVE distance
+    * ([[knnSeedRadius]]). */
   def knnJoinStored(store: graft.table.SnapshotStore,
                     queries: Seq[(Int, Double, Double)], k: Int): DataFrame =
     knnJoinStoredPruned(store, queries, k)._1
 
-  /** The executed candidate plan of [[knnJoinStored]], pre-audit:
-    * broadcast nested-loop on the box containment predicate (the query
-    * side is tiny by contract; the candidate side is already pruned to the
-    * union of the balls — the |Q|-scale equi-join twin is
-    * SpatialOps.knnJoinPruned, this operator's point is the FILE skip),
-    * then the per-query top-k window. ONE definition shared with
-    * PlanDump's plan evidence, so docs/PLANS.md can never silently
-    * describe a plan the operator no longer executes.
+  /** The executed candidate plan of [[knnJoinStored]]: broadcast
+    * nested-loop on the box containment predicate (the query side is tiny
+    * by contract; the candidate side is already pruned to the union of the
+    * balls — the |Q|-scale equi-join twin is SpatialOps.knnJoinPruned, this
+    * operator's point is the FILE skip), then the per-query top-k window.
+    * ONE definition shared with PlanDump's plan evidence, so docs/PLANS.md
+    * can never silently describe a plan the operator no longer executes.
     * `bounds` = (q_id, qLat, qLon, radius). */
   private[graft] def knnJoinCandidatePlan(cand: DataFrame,
       bounds: Seq[(Int, Double, Double, Double)], k: Int): DataFrame = {
@@ -259,55 +244,26 @@ object GlobalIndex {
       .filter(col("rank") <= k)
   }
 
-  /** [[knnJoinStored]] + the observed (files read, total files) so specs
-    * can assert file skipping on the join path. */
+  /** [[knnJoinStored]] + the (files read, total files) of its one read so
+    * specs can assert file skipping on the join path. */
   private[graft] def knnJoinStoredPruned(store: graft.table.SnapshotStore,
                                          queries: Seq[(Int, Double, Double)],
                                          k: Int): (DataFrame, Int, Int) = {
     require(queries.nonEmpty, "knnJoinStored needs at least one query")
-    // the index and every read come from ONE snapshot
+    // the index and the read come from ONE snapshot
     val v = store.view()
     val bounds = queries.map { case (qid, qla, qlo) =>
       (qid, qla, qlo, v.index.knnSeedRadius(qla, qlo, k))
     }
-    if (bounds.exists(_._4 == Double.MaxValue)) {
-      // fewer than k rows in the summaries: no ball bounds anything —
-      // the dense join over the full table IS the plan
-      val (full, kept, total) = store.readAt(v.snapshotId)
-      return (graft.ops.SpatialOps.knnJoinAgg(full, queries, k), kept, total)
-    }
-    val boxes = bounds.map { case (_, qla, qlo, rad) =>
-      MBR(qla - rad, qlo - rad, qla + rad, qlo + rad)
-    }
-    val (cand, kept, total) = store.readBoxesAt(v.snapshotId, boxes)
-    val pruned = knnJoinCandidatePlan(cand, bounds, k)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val perQ = pruned.groupBy("q_id")
-      .agg(count(lit(1)).as("n"), max(col("d2")).as("dk"),
-        first(col("rad")).as("rad"))
-      .collect()
-      .map(r => r.getInt(0) -> (r.getLong(1), r.getDouble(2), r.getDouble(3)))
-      .toMap
-    val bad = queries.map(_._1).filter { qid =>
-      perQ.get(qid) match {
-        case None                => true // ball held zero live rows
-        case Some((n, dk, rad))  => n < k || dk > rad * rad
-      }
-    }.toSet
-    val exactPart = pruned.filter(!col("q_id").isin(bad.toSeq: _*))
-      .select(col("q_id"), col("rank"), col("id"))
-    // on fallback the reported counts must describe the EXECUTED plan, not
-    // the pruned read the audit abandoned (knnStoredPruned's contract): a
-    // prune assert against a store with deletes would otherwise pass
-    // while the query scanned every file
-    val (out, keptOut, totalOut) =
-      if (bad.isEmpty) (exactPart, kept, total)
-      else {
-        val (full, fKept, fTotal) = store.readAt(v.snapshotId)
-        (exactPart.unionAll(graft.ops.SpatialOps.knnJoinAgg(
-          full, queries.filter(qq => bad.contains(qq._1)), k)), fKept, fTotal)
-      }
-    (graft.ops.OpUtil.finish(out, pruned), keptOut, totalOut)
+    // fewer than k live rows in the summaries: no ball bounds anything, and
+    // each query's unbounded box takes every row of the full read
+    val (cand, kept, total) =
+      if (bounds.exists(_._4 == Double.MaxValue)) store.readAt(v.snapshotId)
+      else store.readBoxesAt(v.snapshotId, bounds.map { case (_, qla, qlo, rad) =>
+        MBR(qla - rad, qlo - rad, qla + rad, qlo + rad)
+      })
+    (knnJoinCandidatePlan(cand, bounds, k).select(col("q_id"), col("rank"), col("id")),
+      kept, total)
   }
 
   /** Index-seeded exact kNN: one driver-side bound from the summary, ONE

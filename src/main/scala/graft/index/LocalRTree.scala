@@ -12,10 +12,12 @@ final case class IndexNode(level: Int, minLat: Double, minLon: Double,
   * of node j at level l+1 are nodes [j·fanout, (j+1)·fanout) at level l —
   * the implicit-tree encoding a bottom-up pack guarantees. Serializable
   * and small (≈ count/fanout nodes), built once per partition and
-  * broadcast via [[GlobalIndex]].
+  * broadcast via [[GlobalIndex]]. Counts are rows as written; `deleted`
+  * is how many of them a stored file's deletion vector marks (0 for a
+  * built index).
   */
 final case class PartitionIndex(partitionId: Int, fanout: Int,
-                                levels: Array[Array[IndexNode]]) {
+                                levels: Array[Array[IndexNode]], deleted: Long = 0L) {
   def root: IndexNode = levels.last.head
   def leaves: Array[IndexNode] = levels.head
   def count: Long = if (levels.isEmpty) 0L else root.count

@@ -206,18 +206,6 @@ object SpatialOps {
       .select(col("rank"), col("id"), col("lat"), col("lon"), col("d2"))
   }
 
-  /** Default single-point kNN (op #10): index-seeded one-job path when a
-    * [[graft.index.GlobalIndex]] exists (one driver-side radius bound from
-    * broadcast summaries → one pruned Spark job), expanding-ring probe
-    * otherwise. */
-  def knn(points: DataFrame, index: Option[graft.index.GlobalIndex],
-          qLat: Double, qLon: Double, k: Int,
-          r: Int = AutoRes): DataFrame = index match {
-    case Some(gi) => graft.index.GlobalIndex.knnIndexed(points, gi, qLat, qLon, k,
-      if (r >= 0) r else resolveRes(points, Seq.empty, r))
-    case None     => knnRing(points, qLat, qLon, k, r)
-  }
-
   /** Radius sweep (Benchmark.java:126-154 as a query): counts of points
     * inside square boxes of growing half-width around a center — ONE scan,
     * conditional aggregates (the reference re-scans per radius × 100 reps).
@@ -279,6 +267,17 @@ object SpatialOps {
   private val BoxCellSchema = StructType(Seq(StructField("box_id", IntegerType, false),
     StructField("bcell", LongType, false)) ++
     Seq("minlat", "minlon", "maxlat", "maxlon").map(StructField(_, DoubleType, false)))
+
+  /** [[boxJoinSalted]]'s cell side: [[BoxCellSchema]] with the salt. */
+  private val SaltedCellSchema = StructType(BoxCellSchema.fields.take(2) ++
+    Seq(StructField("bsalt", IntegerType, false)) ++ BoxCellSchema.fields.drop(2))
+
+  /** [[zonalStats]]' polygon ids. */
+  private val PolyIdSchema = StructType(Seq(StructField("poly_id", IntegerType, false)))
+
+  /** [[knnJoinPruned]]'s broadcast side: a query with one probed cell. */
+  private val QueryCellSchema = StructType(StructField("q_id", IntegerType, false) +:
+    Seq("qlat", "qlon").map(StructField(_, DoubleType, false)) :+ StructField("qc", LongType, false))
 
   /** Multi-box spatial join (the de-facto join in Benchmark.java:101-118):
     * boxes → covering cells, broadcast hash join on the point's cell, exact
@@ -595,15 +594,13 @@ object SpatialOps {
     * SQL aggregate contract). */
   def zonalStats(points: DataFrame, polys: Seq[(Int, Poly)],
                  rOverride: Int = AutoRes): DataFrame = {
-    val spark = points.sparkSession
-    import spark.implicits._
     val r = resolveRes(points, polys.map(_._2.bbox), rOverride)
     val agged = polyHits(points, polys, r)
       .groupBy(col("poly_id"))
       .agg(count(lit(1)).as("cnt"), sum(col("id")).as("sum_id"),
         min(col("lat")).as("min_lat"), max(col("lat")).as("max_lat"),
         min(col("lon")).as("min_lon"), max(col("lon")).as("max_lon"))
-    polys.map(_._1).toDF("poly_id")
+    OpUtil.localFrame(points.sparkSession, PolyIdSchema, polys.map(p => Row(p._1)))
       .join(broadcast(agged), Seq("poly_id"), "left")
       .select(col("poly_id"), coalesce(col("cnt"), lit(0L)).as("cnt"),
         col("sum_id"), col("min_lat"), col("max_lat"),
@@ -625,8 +622,6 @@ object SpatialOps {
                     rOverride: Int = AutoRes, saltFactor: Int = 8,
                     hotThreshold: Double = 0.05,
                     hotCells: Option[(Int, Set[Long])] = None): DataFrame = {
-    val spark = points.sparkSession
-    import spark.implicits._
     validateSaltArgs(rOverride, saltFactor, hotCells)
     val r = hotCells.map(_._1)
       .getOrElse(resolveRes(points, boxes.map(_._2), rOverride))
@@ -638,12 +633,12 @@ object SpatialOps {
     // driver; total derived from the histogram, not a second count scan).
     val hot: Set[Long] = hotCells.map(_._2).getOrElse(hotCellsFromHistogram(
       pts.groupBy("cell").agg(count(lit(1)).as("cnt")), hotThreshold))
-    val cells = boxes.flatMap { case (bid, b) =>
+    val cells = OpUtil.localFrame(points.sparkSession, SaltedCellSchema, boxes.flatMap { case (bid, b) =>
       CellId.cover(b, r).flatMap { c =>
         val salts = if (hot.contains(c)) 0 until saltFactor else Seq(0)
-        salts.map(s => (bid, c, s, b.minLat, b.minLon, b.maxLat, b.maxLon))
+        salts.map(s => Row(bid, c, s, b.minLat, b.minLon, b.maxLat, b.maxLon))
       }
-    }.toDF("box_id", "bcell", "bsalt", "minlat", "minlon", "maxlat", "maxlon")
+    })
     val salted = pts.withColumn("salt",
       saltCol(col("id"), col("cell"), hot, saltFactor))
     salted.join(cells,
@@ -761,13 +756,11 @@ object SpatialOps {
     * [[knnJoinAgg]]. */
   def knnJoinPruned(points: DataFrame, queries: Seq[(Int, Double, Double)],
                     k: Int, rOverride: Int = AutoRes, rings: Int = 2): DataFrame = {
-    val spark = points.sparkSession
-    import spark.implicits._
     val r = resolveRes(points, Seq.empty, rOverride)
-    val qcells = queries.flatMap { case (qid, qla, qlo) =>
+    val qcells = OpUtil.localFrame(points.sparkSession, QueryCellSchema, queries.flatMap { case (qid, qla, qlo) =>
       (0L to rings.toLong).flatMap(CellId.ring(CellId.grid(qla, qlo, r), r, _))
-        .map(c => (qid, qla, qlo, c))
-    }.toDF("q_id", "qlat", "qlon", "qc")
+        .map(c => Row(qid, qla, qlo, c))
+    })
     val d2 = GeoCols.d2Cols(col("lat"), col("lon"), col("qlat"), col("qlon"))
     val w = Window.partitionBy(col("q_id")).orderBy(col("d2"), col("id"))
     // materialize the pruned top-k once (≤ |Q|·k rows, lineage kept so a

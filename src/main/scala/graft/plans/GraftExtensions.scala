@@ -1,18 +1,19 @@
 package graft.plans
 
-import graft.geo.CellId
-import org.apache.spark.sql.SparkSessionExtensions
+import graft.geo.GeoCols
+import org.apache.spark.sql.{Column, GraftColumnBridge, SparkSessionExtensions}
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo, Literal}
-import org.apache.spark.sql.catalyst.expressions._
-import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, ExpressionInfo, Literal}
+import org.apache.spark.sql.types.{DataType, DoubleType, IntegerType, LongType}
 
 /** SparkSessionExtensions registration: exposes the engine's core scalar
   * surface to plain SQL (`spark.sql("SELECT graft_cell(lat, lon, 6) ...")`)
   * so a SQL-only user of the reference can switch without the Scala API.
   *
-  * The geo functions BUILD trees of built-in expressions (the same shapes
-  * as [[graft.geo.GeoCols]]) — codegen, pushdown, and constant folding
+  * The geo functions ARE the [[graft.geo.GeoCols]] Columns over the
+  * argument expressions — one spelling, so SQL and the Column API agree
+  * on every row (the grid clamp at lat=90 / lon=180 included); they are
+  * built-in expression trees, so codegen, pushdown, and constant folding
   * apply unchanged (SURVEY.md §4.3: no custom Rule/Strategy needed).
   * `graft_dot` is the one custom Expression ([[graft.functions.VecDot]]):
   * built-ins can only express a dot product through interpreted HOF
@@ -30,27 +31,9 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
       s"resolution must be an integer literal, got $other")
   }
 
-  /** floor((lat+90)/step)*n + floor((lon+180)/step) as built-ins. */
-  private def cellExpr(lat: Expression, lon: Expression, r: Int): Expression = {
-    val y = Floor(Divide(Add(lat, Literal(90.0)), Literal(CellId.latStep(r))))
-    val x = Floor(Divide(Add(lon, Literal(180.0)), Literal(CellId.lonStep(r))))
-    Add(Multiply(y, Literal(CellId.n(r))), x)
-  }
-
-  private def d2Expr(lat: Expression, lon: Expression,
-                     qLat: Expression, qLon: Expression): Expression = {
-    val dy = Subtract(lat, qLat)
-    val dx = Subtract(lon, qLon)
-    Add(Multiply(dy, dy), Multiply(dx, dx))
-  }
-
-  private def latFromPhash(ph: Expression): Expression =
-    Subtract(Divide(Cast(Remainder(ShiftRightUnsigned(ph, Literal(32)),
-      Literal(180000L)), DoubleType), Literal(1000.0)), Literal(90.0))
-
-  private def lonFromPhash(ph: Expression): Expression =
-    Subtract(Divide(Cast(Remainder(BitwiseAnd(ph, Literal(0xFFFFFFFFL)),
-      Literal(360000L)), DoubleType), Literal(1000.0)), Literal(180.0))
+  /** A [[GeoCols]] builder over argument expressions, each cast to `t`. */
+  private def geo(args: Seq[Expression], t: DataType)(f: Seq[Column] => Column): Expression =
+    GraftColumnBridge.expression(f(args.map(a => GraftColumnBridge.column(Cast(a, t)))))
 
   /** The function registrations, exposed so they can also be installed on
     * an already-running session ([[GraftExtensions.install]]) — e.g. a
@@ -64,22 +47,27 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
         info("graft_cell", "graft_cell(lat, lon, res) - row-major grid cell id"),
         (args: Seq[Expression]) => {
           require(args.length == 3, "graft_cell(lat, lon, res)")
-          Cast(cellExpr(Cast(args(0), DoubleType), Cast(args(1), DoubleType),
-            resOf(args(2))), LongType)
+          val r = resOf(args(2))
+          geo(args.take(2), DoubleType)(c => GeoCols.cellCol(c(0), c(1), r))
         }),
       (FunctionIdentifier("graft_d2"),
         info("graft_d2", "graft_d2(lat, lon, qlat, qlon) - squared planar degree distance"),
         (args: Seq[Expression]) => {
           require(args.length == 4, "graft_d2(lat, lon, qlat, qlon)")
-          d2Expr(Cast(args(0), DoubleType), Cast(args(1), DoubleType),
-            Cast(args(2), DoubleType), Cast(args(3), DoubleType))
+          geo(args, DoubleType)(c => GeoCols.d2Cols(c(0), c(1), c(2), c(3)))
         }),
       (FunctionIdentifier("graft_lat"),
         info("graft_lat", "graft_lat(phash) - derived latitude from the 64-bit phash"),
-        (args: Seq[Expression]) => latFromPhash(Cast(args.head, LongType))),
+        (args: Seq[Expression]) => {
+          require(args.length == 1, "graft_lat(phash)")
+          geo(args, LongType)(c => GeoCols.geoFromPhashLat(c(0)))
+        }),
       (FunctionIdentifier("graft_lon"),
         info("graft_lon", "graft_lon(phash) - derived longitude from the 64-bit phash"),
-        (args: Seq[Expression]) => lonFromPhash(Cast(args.head, LongType))),
+        (args: Seq[Expression]) => {
+          require(args.length == 1, "graft_lon(phash)")
+          geo(args, LongType)(c => GeoCols.geoFromPhashLon(c(0)))
+        }),
       // range membership for stored-read coverings: O(log n) codegen'd
       // binary search over a driver-built bounds array — an n-term
       // BETWEEN disjunction is O(n) per row and measured seconds at a few

@@ -328,10 +328,7 @@ final class SnapshotStore(private[table] val spark: SparkSession, root: String, 
         .repartitionByRange(parts, col("__z"))
         .sortWithinPartitions(col("__z")),
       unitDir, lineageId, t0)
-    val t1 = System.nanoTime()
-    val snap = commitAppend(files, keyed.schema)
-    SnapshotStore.trace("append.commit", t1)
-    snap
+    commitAppend(files, keyed.schema)
   }
 
   /** One clustered-unit write: the direct parquet job with a
@@ -348,7 +345,6 @@ final class SnapshotStore(private[table] val spark: SparkSession, root: String, 
       UnitTaskStats.observer(clustered.schema,
         bloomKey.filter(clustered.columns.contains), histRes))
     val wallMs = (System.nanoTime() - t0) / 1000000
-    SnapshotStore.trace("data.write", t0)
     val dirPath = new org.apache.hadoop.fs.Path(unitDir)
     val fs = dirPath.getFileSystem(spark.sessionState.newHadoopConf())
     res.filter(_._2 > 0).map { case (name, rows, s) =>
@@ -1157,15 +1153,6 @@ object SnapshotStore {
     * pin a finer grid per store — the ctor parameter is the knob and the
     * value is validated against meta/table.json like every layout field. */
   val DefaultHistRes: Int = 6
-
-  /** Opt-in phase tracing for the write path (guide §1 instrumentation):
-    * SPARK_GRAFT_TRACE=1 prints per-phase wall times to stderr. Zero cost
-    * when off. */
-  private val Tracing: Boolean = sys.env.get("SPARK_GRAFT_TRACE").contains("1")
-
-  private[table] def trace(name: String, t0: Long): Unit =
-    if (Tracing)
-      System.err.println(f"[trace] $name%-18s ${(System.nanoTime() - t0) / 1e9}%.3f s")
 
   /** `file:`-URI and plain-path spellings of the same file must compare
     * equal: manifest paths are Hadoop URIs (`file:/x`), `input_file_name`

@@ -58,8 +58,11 @@ final class SnapshotView private[table] (store: SnapshotStore, val snapshotId: L
   lazy val indexLeaves: Map[String, Seq[(Long, Long, Double, Double, Double, Double)]] =
     root.shards.flatMap(sm => MetaJson.parseIndex(store.readMeta(sm.index))._2).toMap
 
-  /** The global index over the persisted leaves ([[GlobalIndex.fromFiles]]). */
-  lazy val index: GlobalIndex = GlobalIndex.fromFiles(store.statsRes, manifest, indexLeaves)
+  /** The global index over the persisted leaves, each file credited with
+    * the popcount of its deletion vector ([[GlobalIndex.fromFiles]]). */
+  lazy val index: GlobalIndex = GlobalIndex.fromFiles(store.statsRes, manifest, indexLeaves,
+    root.shards.flatMap(sm => vectors(sm).map { case (p, bits) =>
+      p -> bits.map(java.lang.Long.bitCount(_).toLong).sum }).toMap)
 
   /** Rows written minus the positions the deletion vectors mark. */
   lazy val totalRows: Long =

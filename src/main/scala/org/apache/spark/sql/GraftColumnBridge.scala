@@ -4,7 +4,8 @@ import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.types.StructType
 
 /** Expression↔Column bridge for graft's custom codegen'd expressions
-  * ([[graft.functions.VecDot]], [[graft.functions.ZRangeContains]]).
+  * ([[graft.functions.VecDot]], [[graft.functions.ZRangeContains]]) and
+  * for the SQL functions built from [[graft.geo.GeoCols]] Columns.
   *
   * Spark 4 moved expression-backed Column construction behind
   * `private[sql]` (`classic.ExpressionUtils`); the public alternative is
@@ -18,6 +19,9 @@ import org.apache.spark.sql.types.StructType
   * without one); it contains no logic. */
 object GraftColumnBridge {
   def column(e: Expression): Column = classic.ExpressionUtils.column(e)
-  def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
+  /** The Column's Catalyst tree, converted now: `ExpressionUtils`
+    * defers the conversion to the Dataset that plans the Column, and the
+    * SQL function builders ([[graft.plans.GraftExtensions]]) have none. */
+  def expression(c: Column): Expression = classic.ColumnNodeToExpressionConverter(c.node)
   def asNullable(s: StructType): StructType = s.asNullable
 }

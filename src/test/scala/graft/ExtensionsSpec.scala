@@ -43,6 +43,19 @@ class ExtensionsSpec extends AnyFunSuite {
       assert(r.getDouble(4) == ((ph >>> 32) % 180000L) / 1000.0 - 90.0)
       assert(r.getDouble(5) == ((ph & 0xFFFFFFFFL) % 360000L) / 1000.0 - 180.0)
     }
+    // the grid edges clamp into the edge cells, as CellId.grid and
+    // GeoCols.cellCol do (lat = 90, lon = 180 are legal inputs)
+    val edges = for (la <- Seq(-90.0, 0.0, 90.0); lo <- Seq(-180.0, 0.0, 180.0)) yield (la, lo)
+    for (r <- Seq(1, Fixtures.TileRes)) {
+      val got = spark.sql(s"""
+        SELECT lat, lon, graft_cell(lat, lon, $r) FROM VALUES
+        ${edges.map { case (la, lo) => s"(${la}D, ${lo}D)" }.mkString(", ")} AS t(lat, lon)""")
+        .collect().map(e => (e.getDouble(0), e.getDouble(1)) -> e.getLong(2)).toMap
+      assert(got == edges.map(e => e -> CellId.grid(e._1, e._2, r)).toMap, s"r=$r")
+    }
+    // every geo function checks its arity, like graft_cell and graft_d2
+    for (f <- Seq("graft_lat(1, 2)", "graft_lon()"))
+      assert(intercept[Exception](spark.sql(s"SELECT $f").collect()).getMessage.contains("phash"), f)
     // built-in-expression trees: the whole SQL projection stays codegen'd
     val plan = spark.sql(s"SELECT graft_cell(1.0, 2.0, 4) AS c").queryExecution
       .executedPlan.toString

@@ -137,13 +137,18 @@ class IndexSpec extends AnyFunSuite with TempDirs {
   }
 
   /** The radius of the full sort the descent replaces: every live leaf by
-    * ascending maxDist, counts accumulated until they reach k. */
+    * ascending maxDist, counts accumulated until they reach k — a file's
+    * rows counting only past its deleted ones. */
   def sortRadius(gi: GlobalIndex, qLat: Double, qLon: Double, k: Int): Double = {
-    val slabs = gi.parts.flatMap(_.leaves).filter(_.count > 0)
-      .map(l => (l.mbr.maxDistSq(qLat, qLon), l.count)).sortBy(_._1)
+    val slabs = gi.parts.indices.flatMap(p => gi.parts(p).leaves.filter(_.count > 0)
+      .map(l => (l.mbr.maxDistSq(qLat, qLon), l.count, p))).sortBy(_._1)
+    val seen = new Array[Long](gi.parts.length)
+    def live(p: Int) = math.max(0L, seen(p) - gi.parts(p).deleted)
     var acc = 0L
-    slabs.find { case (_, c) => acc += c; acc >= k }
-      .fold(Double.MaxValue)(s => math.nextUp(math.sqrt(s._1)))
+    slabs.find { case (_, c, p) =>
+      acc -= live(p); seen(p) += c; acc += live(p)
+      acc >= k
+    }.fold(Double.MaxValue)(s => math.nextUp(math.sqrt(s._1)))
   }
 
   /** Descent radius == sort radius, bitwise, for random query points and
@@ -170,12 +175,44 @@ class IndexSpec extends AnyFunSuite with TempDirs {
     val st = new SnapshotStore(spark, tempDir("graft_idx").toString)
     st.append(pts, "unit-all", numPartitions = 8)
     descentEqualsSort("stored", GlobalIndex.fromStore(st), 2)
-    // and under deletes, which leave the leaf counts as written
+    // and under deletes, which leave the leaf counts as written and
+    // credit each file with its deleted-position count
     st.deleteWhere(col("id") % 3 === 0, "del-0")
     descentEqualsSort("stored+deletes", GlobalIndex.fromStore(st), 3)
     // no live point: no radius bounds k of them
     val empty = GlobalIndex(6, Array(LocalRTree.pack(0, Iterator.empty)))
     assert(empty.knnSeedDescent(0, 0, 1) == (Double.MaxValue, 0))
+  }
+
+  test("seed radius holds >= k live points under adversarial per-file deletes (Spark-free)") {
+    val rng = new Random(13)
+    // 12 files of 40..400 random points, each packed in Z-ish (lat) order
+    val files = Array.fill(12)(Array.fill(40 + rng.nextInt(361))(
+      (rng.nextDouble() * 170 - 85, rng.nextDouble() * 350 - 175)).sortBy(_._1))
+    val packed = files.indices.map(f => LocalRTree.pack(f, files(f).iterator))
+    def d2(p: (Double, Double), qLat: Double, qLon: Double) =
+      (p._1 - qLat) * (p._1 - qLat) + (p._2 - qLon) * (p._2 - qLon)
+    var bounded = 0
+    for (_ <- 0 until 40; k <- Seq(1, 10, 25, 100)) {
+      val (qLat, qLon) = (rng.nextDouble() * 180 - 90, rng.nextDouble() * 360 - 180)
+      // each file loses its m rows nearest the query, m anywhere in [0, rows]
+      val liveRows = files.map { ps =>
+        ps.sortBy(d2(_, qLat, qLon)).drop(rng.nextInt(ps.length + 1))
+      }
+      val gi = GlobalIndex(6, packed.zip(files.zip(liveRows)).map { case (p, (ps, lv)) =>
+        p.copy(deleted = (ps.length - lv.length).toLong) }.toArray)
+      val rad = gi.knnSeedRadius(qLat, qLon, k)
+      val live = liveRows.flatten
+      if (live.length < k) assert(rad == Double.MaxValue, s"k=$k, ${live.length} live")
+      else {
+        val inBall = live.count(d2(_, qLat, qLon) <= rad * rad)
+        assert(rad < Double.MaxValue && inBall >= k, s"q=($qLat,$qLon) k=$k: radius $rad holds $inBall live points")
+        bounded += 1
+      }
+      // the descent and the full sort agree under deletes too
+      assert(rad == sortRadius(gi, qLat, qLon, k))
+    }
+    assert(bounded > 100, s"only $bounded bounded radii")
   }
 
   test("serve-shaped 200k-point index: descent equals sort and pops far fewer nodes than leaves") {

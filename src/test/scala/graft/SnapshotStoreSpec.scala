@@ -845,8 +845,8 @@ class SnapshotStoreSpec extends AnyFunSuite with TempDirs {
     val (df, kept, total) = GlobalIndex.knnJoinStoredPruned(st, qs, k)
     assert(kept < total, s"stored kNN join opened all $total files")
     assert(norm(df) == norm(SpatialOps.knnJoinAgg(pts, qs, k)))
-    // deleted positions overcount the index leaves: the per-query audit must keep
-    // the join exact (fall back only the queries whose bound broke)
+    // deleted positions leave the index leaves as written: the per-file
+    // deleted counts must keep every query's bound, and the join, exact
     st.deleteWhere(col("id") % 3 === 0, "del-0")
     val live = st.read()._1
     assert(norm(GlobalIndex.knnJoinStored(st, qs, k)) ==
@@ -870,8 +870,8 @@ class SnapshotStoreSpec extends AnyFunSuite with TempDirs {
       .select("rank", "id", "d2").collect()
       .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
     assert(norm(df) == norm(graft.ops.SpatialOps.knnSerial(pts, qLat, qLon, k)))
-    // deleted positions overcount the index leaves — the audit must keep the result
-    // exact (fall back when the bound is no longer provable)
+    // deleted positions leave the index leaves as written — the per-file
+    // deleted counts must keep the bound, and the result, exact
     st.deleteWhere(col("id") % 3 === 0, "del-0")
     val live = st.read()._1
     assert(norm(GlobalIndex.knnStored(st, qLat, qLon, k)) ==
@@ -881,6 +881,33 @@ class SnapshotStoreSpec extends AnyFunSuite with TempDirs {
     assert(GlobalIndex.fromStore(st).totalRows == live.count())
     assert(norm(GlobalIndex.knnStored(st, qLat, qLon, k)) ==
       norm(graft.ops.SpatialOps.knnSerial(live, qLat, qLon, k)))
+  }
+
+  test("stored kNN with the k nearest rows deleted: exact from the one pruned read it reports") {
+    import graft.index.GlobalIndex
+    val (qLat, qLon, k) = (graft.data.Fixtures.knnPoint._1,
+      graft.data.Fixtures.knnPoint._2, graft.data.Fixtures.knnK)
+    val st = new SnapshotStore(spark, tmp())
+    st.append(pts, "unit-all", numPartitions = 32)
+    val d2 = graft.geo.GeoCols.d2(col("lat"), col("lon"), qLat, qLon)
+    // every row at most the kth distance away: the k nearest, ties included
+    val dk = graft.ops.SpatialOps.knnSerial(pts, qLat, qLon, k).select(max("d2")).head().getDouble(0)
+    st.deleteWhere(d2 <= lit(dk), "del-nearest")
+    val live = st.read()._1
+    assert(live.count() == pts.count() - pts.filter(d2 <= lit(dk)).count())
+    def ranked(d: org.apache.spark.sql.DataFrame) = d
+      .select("rank", "id", "d2").collect()
+      .map(r => (r.getLong(0), r.getLong(1), r.getDouble(2))).toSeq
+    val (df, kept, total) = GlobalIndex.knnStoredPruned(st, qLat, qLon, k)
+    assert(ranked(df) == ranked(graft.ops.SpatialOps.knnSerial(live, qLat, qLon, k)))
+    // the counts are those of the box read the seed radius plans — no
+    // second, wider read stands behind the result
+    val rad = GlobalIndex.fromStore(st).knnSeedRadius(qLat, qLon, k)
+    assert(rad < Double.MaxValue)
+    val (_, boxKept, boxTotal) = st.readAt(st.currentSnapshotId,
+      Some(MBR(qLat - rad, qLon - rad, qLat + rad, qLon + rad)))
+    assert((kept, total) == (boxKept, boxTotal))
+    assert(kept < total, s"stored kNN opened all $total files")
   }
 
   test("equality delete derives its key from the table schema (no id/lat/lon assumption)") {
