@@ -15,7 +15,10 @@ import org.apache.spark.sql.functions._
   */
 final case class GlobalIndex(resolution: Int, parts: Array[PartitionIndex]) {
 
-  def totalRows: Long = parts.map(_.count).sum
+  /** Live rows: per partition, its count less its deleted positions —
+    * what a full [[knnSeedDescent]] credits, so k > totalRows exactly when
+    * the seed radius is `Double.MaxValue`. */
+  def totalRows: Long = parts.map(p => math.max(0L, p.count - p.deleted)).sum
 
   /** Partitions whose root MBR overlaps the box — the distributed subtree
     * prune (RStarTree.java:426). */

@@ -9,6 +9,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import java.nio.file.{Files, Paths, StandardCopyOption, StandardOpenOption}
 import scala.collection.immutable.HashSet
+import scala.util.control.NonFatal
 
 /** One file tracked by a snapshot, with its pruning stats and the
   * lineage unit that produced it — the manifest-entry analog of an Iceberg
@@ -43,7 +44,7 @@ final case class FileEntry(path: String, rows: Long, minZ: Long, maxZ: Long,
   * <root>/meta/snap-<n>-shard-<k>-<uid>.bloom.json    their Bloom bitsets (bloomKey)
   * <root>/meta/snap-<n>-dv-<uid>-<k>.json              a shard's deletion vectors,
   *                                                    written by delete n
-  * <root>/meta/current                                atomic pointer "n"
+  * <root>/meta/current                                hint: a committed id "n"
   * <root>/meta/table.json                             pinned layout (curve, zRes,
   *                                                    histRes, data schema)
   * }}}
@@ -56,8 +57,10 @@ final case class FileEntry(path: String, rows: Long, minZ: Long, maxZ: Long,
   * `__z` included); every later unit must match it, and every read plans
   * its parquet scans from it — never from a file footer.
   *
-  * Commits write a new root = parent's shards + new entries, then
-  * atomically swing `current` (write-temp + ATOMIC_MOVE). Readers plan
+  * A commit writes a new root = parent's shards + new entries under a
+  * commit-unique name, then publishes it as `snap-N` with one hard link,
+  * which fails if `snap-N` exists: the link is the commit. The current
+  * snapshot is the greatest root id ([[currentSnapshotId]]). Readers plan
   * from a snapshot: file pruning by Z-range against a query box's covering
   * cells — the distributed analog of the reference's subtree prune
   * (RStarTree.java:426) at file granularity. Per-append lineage ids +
@@ -171,8 +174,34 @@ final class SnapshotStore(private[table] val spark: SparkSession, root: String, 
     validateTableMeta(Some(schema))
   }
 
-  def currentSnapshotId: Long =
-    if (Files.exists(currentPtr)) readMeta(currentPtr.getFileName.toString).trim.toLong else 0L
+  private def rootPath(id: Long) = metaDir.resolve(s"snap-$id")
+
+  /** The greatest committed snapshot id. Roots are linked only as
+    * parent + 1 and expiry deletes the oldest, so the roots above any
+    * committed id form an unbroken run: start from the `current` hint and
+    * step forward while the next root exists. A hint that names no root
+    * (absent, or expired) falls back to the greatest root id listed. The
+    * steps are stats; the hint is the only file opened. */
+  def currentSnapshotId: Long = {
+    val hint = if (Files.exists(currentPtr)) readMeta(currentPtr.getFileName.toString).trim.toLong
+      else 0L
+    var id = if (hint > 0 && Files.exists(rootPath(hint))) hint
+      else listDir(metaDir).flatMap(p => snapRootId(p.getFileName.toString)).maxOption.getOrElse(0L)
+    while (Files.exists(rootPath(id + 1))) id += 1
+    id
+  }
+
+  /** Point the `current` hint at `id` (temp + ATOMIC_MOVE). Best effort:
+    * the linked root is the commit, and a stale or missing hint only
+    * costs readers a few more stats. A leftover temp is reclaimed by
+    * [[vacuum]]. */
+  private def writeHint(id: Long): Unit =
+    try {
+      val tmp = metaDir.resolve(s"snap-$id-hint-${java.util.UUID.randomUUID().toString.take(8)}")
+      Files.writeString(tmp, id.toString, StandardOpenOption.CREATE_NEW)
+      Files.move(tmp, currentPtr, StandardCopyOption.ATOMIC_MOVE,
+        StandardCopyOption.REPLACE_EXISTING)
+    } catch { case NonFatal(_) => () }
 
   /** The view of the last snapshot this store read or committed
     * ([[SnapshotView]]): one per store instance. */
@@ -257,7 +286,7 @@ final class SnapshotStore(private[table] val spark: SparkSession, root: String, 
     * reader guesses at its contents and no reference scan treats it as
     * "references nothing". */
   private[table] def readRoot(snapshotId: Long): ManifestRoot = {
-    val p = metaDir.resolve(s"snap-$snapshotId")
+    val p = rootPath(snapshotId)
     if (!Files.exists(p))
       throw new IllegalStateException(
         s"snapshot $snapshotId is expired or was never committed")
@@ -365,25 +394,13 @@ final class SnapshotStore(private[table] val spark: SparkSession, root: String, 
     * manifest, and a delete's shard rows replace the parent's by name —
     * so both still fail loudly for the caller to re-plan. */
   private def commitAppend(files: Seq[(FileEntry, UnitFileStats)], schema: StructType,
-                           retries: Int = 5): Long = {
-    val seen = currentSnapshotId
+                           retries: Int = 5): Long =
     try commit(files, schema)
     catch {
+      // the winner's root is current the instant it is linked: rebase at once
       case _: java.util.ConcurrentModificationException if retries > 0 =>
-        // wait for the winner's pointer swing before consuming a retry: a
-        // losing attempt fails while the winner is still mid-commit (its
-        // snap-N exists, pointer not yet swung), so an immediate re-entry
-        // would recompute the same `next`, hit the same tripwire, and burn
-        // every attempt inside the winner's commit tail. Bounded: a winner
-        // that CRASHED mid-commit never swings the pointer — its stale
-        // snap-N is reclaimed by the next commit's age-gated sweep, not by
-        // spinning here.
-        val deadline = System.currentTimeMillis() + 2000
-        while (currentSnapshotId == seen &&
-               System.currentTimeMillis() < deadline) Thread.sleep(10)
         commitAppend(files, schema, retries - 1)
     }
-  }
 
   private def normPath(p: String): String = SnapshotStore.normalizePath(p)
 
@@ -494,20 +511,26 @@ final class SnapshotStore(private[table] val spark: SparkSession, root: String, 
     * race only exercises it probabilistically). */
   private[graft] var afterParentCapture: () => Unit = () => ()
 
+  /** Test seam, production no-op: runs in EVERY commit after its files
+    * are written, just before the parent check and the link — where the
+    * stall spec parks a writer while another instance commits, expires
+    * and vacuums. */
+  private[graft] var beforeLink: () => Unit = () => ()
+
   /** Manifest-append commit: parent shards + new entries (with their
-    * write-task stats) → snap-(n+1), atomic pointer swing; `vectors`
+    * write-task stats) → snap-(n+1); `vectors`
     * replaces parent shard rows with their new deletion vectors; `folded`
     * joins the root's folded-lineage list; `schema` (the written files'
-    * columns) is pinned or validated against the table's pin first. Single-writer (the
-    * driver) — matching the reference's single-threaded writer;
-    * multi-writer needs a CAS on `current`, which real Iceberg's catalog
-    * provides at the seam.
+    * columns) is pinned or validated against the table's pin first.
     *
-    * Crash/abort safety: any snap-k with k > current and any current.tmp.*
-    * is UNREFERENCED (the pointer never reached it) — a leftover from a
-    * crash between manifest write and pointer swing, or from an aborted
-    * commit. Such orphans are swept before writing and on the tripwire
-    * path, so one failed commit can never wedge the table permanently.
+    * Linking the complete root as `snap-(n+1)` is the one commit point
+    * ([[writeManifestFile]]): the link fails when the name exists, so no
+    * writer replaces another's root, and a reader never sees a partial
+    * one. A commit whose parent is no longer current fails before it
+    * links, so an expired id is never linked again. Both failures are a
+    * ConcurrentModificationException, and the failed commit deletes every
+    * file it wrote. A crash leaves only unreferenced files named for an
+    * id, which [[vacuum]] reclaims once that id is decided.
     *
     * `expectedParent`: the snapshot the caller PLANNED against (compaction
     * reads the table, rewrites it, then commits — possibly seconds later).
@@ -522,60 +545,13 @@ final class SnapshotStore(private[table] val spark: SparkSession, root: String, 
                      vectors: Seq[(ShardMeta, Seq[(String, Array[Long])])] = Seq.empty): Long = {
     val parent = if (expectedParent >= 0) expectedParent else currentSnapshotId
     afterParentCapture()
-    def assertUnmoved(): Unit =
-      if (currentSnapshotId != parent)
-        throw new java.util.ConcurrentModificationException(
-          s"snapshot advanced past $parent during commit — retry from the new manifest")
-    assertUnmoved()
     val next = parent + 1
     // sequence number = the committing snapshot id (Iceberg semantics);
     // parent entries keep the seq of the commit that introduced them
     val stamped = files.map { case (e, st) => (e.copy(seq = next), st) }
-    sweepOrphans()
     writeTableMeta(schema)
-    // snap-N+1 (CREATE_NEW) and current.tmp.N+1 (CREATE_NEW) are the
-    // optimistic-concurrency tripwires: a concurrent committer that won
-    // the race leaves one of them in place and this commit FAILS instead
-    // of silently replacing a snapshot it never read (real Iceberg moves
-    // this CAS into the catalog; the seam is identical)
-    val (written, fresh) =
-      try writeManifestFile(next, parent, stamped, folded, replaceParent, vectors)
-      catch {
-        case e: java.nio.file.FileAlreadyExistsException =>
-          throw new java.util.ConcurrentModificationException(
-            s"snap-$next already exists — another writer won the race ($e)")
-      }
-    if (currentSnapshotId != parent) {
-      // undo our own (still unreferenced) manifest before failing so the
-      // next committer's ErrorIfExists write is not blocked forever
-      if (currentSnapshotId < next)
-        deleteSnapshotArtifacts(next)
-      throw new java.util.ConcurrentModificationException(
-        s"snapshot advanced past $parent during commit — retry from the new manifest")
-    }
-    // read-back verification: the manifest the pointer is about to
-    // reference must contain exactly the entries THIS commit wrote. A
-    // stalled writer whose stale snap dir was swept and recreated by a
-    // racer would otherwise swing the pointer onto the racer's manifest
-    // and silently lose its own entries while reporting success. This
-    // verifies WITHOUT a full manifest parse (commits must stay
-    // O(commit), not O(table)): the root's shard rows and folded lineage
-    // must be exactly what this commit wrote, and only the
-    // shards this commit CREATED are re-parsed — carried shards are
-    // immutable files a racer cannot have produced under our uid names
-    // (a replacing commit creates every shard it lists).
-    def tup(e: FileEntry) = (e.lineageId, e.path, e.rows, e.seq)
-    val got = readRoot(next)
-    if (got.shards != written.shards || got.folded != written.folded ||
-        fresh.exists { case (name, ents) =>
-          MetaJson.parseManifest(readMeta(name)).map(tup).sorted !=
-            ents.map(tup).sorted })
-      throw new java.util.ConcurrentModificationException(
-        s"snap-$next does not contain this commit's entries — replaced by another writer")
-    val tmp = metaDir.resolve(s"current.tmp.$next")
-    Files.writeString(tmp, next.toString, StandardOpenOption.CREATE_NEW)
-    Files.move(tmp, currentPtr, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
+    writeManifestFile(next, parent, stamped, folded, replaceParent, vectors)
+    writeHint(next)
     cache(next)
     next
   }
@@ -610,16 +586,17 @@ final class SnapshotStore(private[table] val spark: SparkSession, root: String, 
     * naming it and `deleted` counting its marked positions — the shard
     * file and its stats files stay the same files.
     *
-    * Shards and stats are written FIRST under commit-unique names; the
-    * root file write is the CREATE_NEW tripwire, and a failed commit
-    * deletes every file it wrote. Returns the root written and the shards
-    * this commit created, with their entries. */
+    * Shards, stats and the root are written FIRST under commit-unique
+    * names (the root as `snap-N-root-<uid>.json`); then, if `parent` is
+    * still current, the root is published with `Files.createLink(snap-N)`
+    * (link(2): atomic, and it fails when `snap-N` exists). Until the link
+    * succeeds any failure deletes every file the commit wrote; after it,
+    * the temporary root name is unlinked. */
   private def writeManifestFile(next: Long, parent: Long,
                                 stamped: Seq[(FileEntry, UnitFileStats)],
                                 folded: Seq[String],
                                 replaceParent: Boolean,
-                                vectors: Seq[(ShardMeta, Seq[(String, Array[Long])])])
-      : (ManifestRoot, Seq[(String, Seq[FileEntry])]) = {
+                                vectors: Seq[(ShardMeta, Seq[(String, Array[Long])])]): Unit = {
     val prev =
       if (replaceParent || parent == 0) ManifestRoot(Seq.empty, Seq.empty)
       else readRoot(parent)
@@ -631,7 +608,7 @@ final class SnapshotStore(private[table] val spark: SparkSession, root: String, 
       written += path
       name
     }
-    try {
+    val tmpRoot = try {
       val marked = vectors.zipWithIndex.map { case ((sm, vs), k) =>
         sm.path -> sm.copy(dv = Some(put(s"snap-$next-dv-$uid-$k.json", MetaJson.dvJson(vs))),
           deleted = vs.map(_._2.map(java.lang.Long.bitCount).sum.toLong).sum)
@@ -646,43 +623,55 @@ final class SnapshotStore(private[table] val spark: SparkSession, root: String, 
           val bloom = bloomKey.filter(_ => byFile.forall(_._2.bits.nonEmpty)).map(kc =>
             put(s"$name.bloom.json", MetaJson.bloomJson(kc, Bloom.K,
               byFile.map { case (f, st) => (f, st.bits) })))
-          (ShardMeta(put(s"$name.json", MetaJson.manifestJson(g)), g.size,
+          ShardMeta(put(s"$name.json", MetaJson.manifestJson(g)), g.size,
             g.map(_.minZ).min, g.map(_.maxZ).max,
             g.map(_.minLat).min, g.map(_.maxLat).max,
             g.map(_.minLon).min, g.map(_.maxLon).max,
-            lineages = g.map(_.lineageId).distinct, index, bloom), g)
+            lineages = g.map(_.lineageId).distinct, index, bloom)
         }.toSeq
-      val root = ManifestRoot(prev.shards.map(sm => marked.getOrElse(sm.path, sm)) ++
-        fresh.map(_._1), prev.folded ++ folded)
-      Files.writeString(metaDir.resolve(s"snap-$next"), MetaJson.manifestListJson(root),
-        StandardOpenOption.CREATE_NEW)
-      (root, fresh.map { case (sm, g) => sm.path -> g })
+      val tmp = metaDir.resolve(put(s"snap-$next-root-$uid.json", MetaJson.manifestListJson(
+        ManifestRoot(prev.shards.map(sm => marked.getOrElse(sm.path, sm)) ++ fresh,
+          prev.folded ++ folded))))
+      beforeLink()
+      if (currentSnapshotId != parent)
+        throw new java.util.ConcurrentModificationException(
+          s"snapshot advanced past $parent during commit — retry from the new manifest")
+      try Files.createLink(rootPath(next), tmp)
+      catch {
+        case e: java.nio.file.FileAlreadyExistsException =>
+          throw new java.util.ConcurrentModificationException(
+            s"snap-$next already exists — another writer won the race ($e)")
+      }
+      tmp
     } catch {
       case e: Throwable =>
-        // a failed root write (lost race / crash mid-commit) must not
-        // leave this commit's shards or stats files as permanent debris
+        // a lost race or a crash before the link must not leave this
+        // commit's shards, stats or root as permanent debris
         written.foreach(p => try Files.deleteIfExists(p)
           catch { case _: Throwable => () })
         throw e
     }
+    try Files.deleteIfExists(tmpRoot) catch { case NonFatal(_) => () }
   }
 
-  /** snap-<digits> root-name classifier shared by EVERY reclamation path
-    * (the commit-time sweeper, the reference-set scanner, vacuum): the
-    * rules for "what is a root" and "what is a shard" must have exactly
-    * one spelling, or a future widening applied to one copy would make the
-    * sweeper and the reference scanner disagree — the live-shard-deletion
-    * hazard these functions guard against. Guarded parse: debris like
-    * "snap-" or an overlong id yields None, never an exception. */
+  /** snap-<digits> root-name classifier shared by every path that looks
+    * for roots (the current-id fallback, the reference-set scanner,
+    * vacuum): the rules for "what is a root" and "what is a shard" must
+    * have exactly one spelling, or a future widening applied to one copy
+    * would make vacuum and the reference scanner disagree — the
+    * live-shard-deletion hazard these functions guard against. Guarded
+    * parse: debris like "snap-" or an overlong id yields None, never an
+    * exception. */
   private def snapRootId(name: String): Option[Long] = {
     val digits = name.drop(5)
     if (name.startsWith("snap-") && digits.nonEmpty && digits.length <= 18 &&
         digits.forall(_.isDigit)) Some(digits.toLong) else None
   }
 
-  /** Shard-file name twin of [[snapRootId]] — one compiled copy. It names
-    * shard, stats and deletion-vector files alike. */
-  private val shardNameRe = "^snap-([0-9]{1,18})-(?:shard|dv)-.*\\.json$".r
+  /** Every other file a commit of snapshot id N writes under meta/ is
+    * named `snap-N-…`: shard, stats and deletion-vector files, the
+    * temporary root and the hint temp. One compiled copy. */
+  private val idFileRe = "^snap-([0-9]{1,18})-.+$".r
 
   /** Shard and stats file names referenced by every existing snapshot
     * root except `excludeIds`. Under shard reuse a shard written at snap-k is
@@ -710,14 +699,9 @@ final class SnapshotStore(private[table] val spark: SparkSession, root: String, 
   }
 
   /** Delete a snapshot's manifest root AND the shard and stats files only
-    * IT references — shards carried
-    * forward into retained snapshots must survive, and the shard names
-    * are only recorded in roots, so the root must be read before it is
-    * removed. */
-  private def deleteSnapshotArtifacts(k: Long): Unit =
-    deleteSnapshotArtifacts(k, referencedShardPaths(Set(k)))
-
-  /** Batch form: `keep` is the (possibly precomputed) reference set of
+    * IT references — shards carried forward into retained snapshots must
+    * survive, and the shard names are only recorded in roots, so the root
+    * must be read before it is removed. `keep` is the reference set of
     * the roots that SURVIVE — None means it could not be established, in
     * which case no shard file is deleted (fail closed; [[vacuum]] will
     * reclaim the debris once the roots read cleanly again). */
@@ -733,42 +717,7 @@ final class SnapshotStore(private[table] val spark: SparkSession, root: String, 
         case _ => () // unknown reference set: leave every shard in place
       }
     } catch { case _: Throwable => () }
-    deleteRecursive(metaDir.resolve(s"snap-$k"))
-  }
-
-  /** Remove unreferenced commit leftovers: snap-k roots past the
-    * current pointer and stale current.tmp.* files. Nothing past the
-    * pointer is readable, BUT a fresh snap-(cur+1) may belong to a
-    * concurrent committer that has not swung the pointer yet — deleting it
-    * would reintroduce the silent lost-update the ErrorIfExists tripwire
-    * exists to catch. Only leftovers older than `orphanAgeMs` are swept:
-    * a live commit writes its manifest and swings the pointer within
-    * milliseconds, while crash debris is minutes old by the next commit. */
-  private val orphanAgeMs = 60000L
-
-  private def sweepOrphans(): Unit = {
-    val cur = currentSnapshotId
-    val cutoff = System.currentTimeMillis() - orphanAgeMs
-    def stale(p: java.nio.file.Path): Boolean =
-      try Files.getLastModifiedTime(p).toMillis < cutoff
-      catch { case _: Throwable => false }
-    listDir(metaDir).foreach { p =>
-      val name = p.getFileName.toString
-      val orphan =
-        name.startsWith("current.tmp.") ||
-          snapRootId(name).exists(_ > cur) ||
-          (name match { // shard files of an uncommitted (crashed) snapshot.
-            // Same-id debris — a crashed writer whose snapshot id a
-            // retrying racer later committed — needs the full
-            // reference-check sweep, which is [[vacuum]]'s job: live
-            // carried shards are old files too, so the id rule alone
-            // can't tell them apart, and parsing every root here would
-            // put an O(roots) JSON cost on EVERY commit.
-            case shardNameRe(d) => d.toLong > cur
-            case _              => false
-          })
-      if (orphan && stale(p)) deleteRecursive(p)
-    }
+    deleteRecursive(rootPath(k))
   }
 
   /** Directory listing with the stream CLOSED (Files.list leaks a
@@ -967,7 +916,7 @@ final class SnapshotStore(private[table] val spark: SparkSession, root: String, 
       unitDir, lineage, t0)
     // replacing commit: new root = compacted entries, with the BASE
     // snapshot's lineage ids in `folded` so resumableRun still skips them
-    // (read from `base`, not the live pointer — a racer's lineage must
+    // (read from `base`, not the live current id — a racer's lineage must
     // fail the commit, not get absorbed into `folded`)
     val baseLineage = lineageSet(base)
     beforeCommit()
@@ -1005,10 +954,16 @@ final class SnapshotStore(private[table] val spark: SparkSession, root: String, 
     * paths). Iceberg's remove-orphan-files analog. The reference set spans
     * ALL snapshots, not just the current one, so time-travel reads of
     * pre-compaction manifests stay valid; age-gating keeps an in-flight
-    * append's freshly written unit safe. Also reclaims manifest-shard
-    * JSONs no root references (crashed-commit debris the per-commit
-    * sweep's id rule cannot distinguish from live carried shards).
-    * Returns the dirs and shard files removed. A retained root that is
+    * append's freshly written unit safe.
+    *
+    * Also reclaims every `snap-N-…` file under meta/ that no root names,
+    * when N ≤ the current id, whatever its age: shard, stats and
+    * deletion-vector files of a commit that lost or crashed, temporary
+    * roots and hint temps. Snapshot N is decided and its root can never
+    * change, so no commit will name them; files of an id above current
+    * may belong to a commit in flight and stay.
+    *
+    * Returns the dirs and meta files removed. A retained root that is
     * not a regular file makes the reference set unknown: vacuum then
     * throws ([[readRoot]]) before deleting anything. */
   def vacuum(olderThanMs: Long = 3600000L): Seq[String] = {
@@ -1027,10 +982,11 @@ final class SnapshotStore(private[table] val spark: SparkSession, root: String, 
     // per snapshot, O(snapshots × table) driver JSON on a long streaming
     // history
     val shardDirs = scala.collection.mutable.HashMap.empty[String, Seq[String]]
-    val referenced = (1L to currentSnapshotId)
+    val cur = currentSnapshotId
+    val referenced = (1L to cur)
       // expired snapshots no longer pin their files — that is the point
       // of expireSnapshots; their dirs become reclaimable here
-      .filter(k => Files.exists(metaDir.resolve(s"snap-$k")))
+      .filter(k => Files.exists(rootPath(k)))
       .flatMap { k =>
         readRoot(k).shards.flatMap(sm => shardDirs.getOrElseUpdate(sm.path,
           MetaJson.parseManifest(readMeta(sm.path)).map(dirOf)))
@@ -1050,25 +1006,19 @@ final class SnapshotStore(private[table] val spark: SparkSession, root: String, 
            catch { case _: Throwable => false })
       }
       .map { d => deleteRecursive(d); d.toString }
-    // manifest-shard debris: shard JSONs no existing root references — a
-    // writer that crashed mid-commit whose snapshot id a retrying racer
-    // later committed (the commit-time sweep's id>cur rule can never
-    // reclaim those; the per-commit path deliberately skips this O(roots)
-    // reference check). Deleting requires a KNOWN reference set: an
-    // unreadable root returns None and nothing is touched (fail closed).
-    val removedShards = referencedShardPaths(Set.empty) match {
+    // meta/ debris: a known reference set is required — an unreadable
+    // root returns None and nothing is touched (fail closed)
+    val removedMeta = referencedShardPaths(Set.empty) match {
       case Some(refs) =>
         listDir(metaDir).filter { p =>
-          (p.getFileName.toString match {
-            case shardNameRe(_) => !refs.contains(p.getFileName.toString)
-            case _              => false
-          }) &&
-            (try Files.getLastModifiedTime(p).toMillis < cutoff
-             catch { case _: Throwable => false })
+          p.getFileName.toString match {
+            case idFileRe(d) => d.toLong <= cur && !refs.contains(p.getFileName.toString)
+            case _           => false
+          }
         }.map { p => deleteRecursive(p); p.toString }
       case None => Seq.empty
     }
-    removedDirs ++ removedShards
+    removedDirs ++ removedMeta
   }
 
   /** Retire history: delete manifests of snapshots older than the newest
@@ -1082,8 +1032,10 @@ final class SnapshotStore(private[table] val spark: SparkSession, root: String, 
   def expireSnapshots(keepLast: Int = 1): Seq[Long] = {
     require(keepLast >= 1, "must keep at least the current snapshot")
     val cur = currentSnapshotId
-    val expired = (1L to cur - keepLast).filter(k =>
-      Files.exists(metaDir.resolve(s"snap-$k")))
+    // readers resolve the current id from the hint: point it at a root
+    // this expiry keeps
+    writeHint(cur)
+    val expired = (1L to cur - keepLast).filter(k => Files.exists(rootPath(k)))
     // ONE reference-set computation for the whole batch, excluding every
     // to-be-expired id (they are all being dropped, so their references
     // must not pin shards) — per-snapshot recomputation made expiry

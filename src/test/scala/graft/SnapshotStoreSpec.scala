@@ -215,31 +215,35 @@ class SnapshotStoreSpec extends AnyFunSuite with TempDirs {
     assert(graft.index.GlobalIndex.fromStore(st).totalRows == 1)
   }
 
-  test("orphaned snap dir + stale tmp from a crashed commit do not wedge the table") {
+  test("commit debris wedges no append; vacuum reclaims it once its id is decided") {
     val root = tmp()
     val st = new SnapshotStore(spark, root)
     st.append(pts.limit(100), "u-0", numPartitions = 2)
-    // simulate a crash between manifest write and pointer swing: an
-    // unreferenced snap-2 directory and a stale current.tmp.* left behind
-    val orphan = java.nio.file.Paths.get(root, "meta", "snap-2")
-    Files.createDirectories(orphan)
-    Files.writeString(orphan.resolve("junk.parquet"), "not a manifest")
-    val staleTmp = java.nio.file.Paths.get(root, "meta", "current.tmp.2")
-    Files.writeString(staleTmp, "2")
-    // crash debris is old by the time the next commit runs; FRESH snap
-    // dirs are deliberately spared (they may belong to a concurrent
-    // committer racing toward the pointer swing)
+    // a writer that crashed before linking snap-2 left its temporary root,
+    // a shard and a hint temp; one racing toward snap-3 left a shard. All
+    // are old: no step of the protocol looks at a file's age
+    val metaP = java.nio.file.Paths.get(root, "meta")
+    val debris2 = Seq("snap-2-root-deadbeef.json", "snap-2-shard-0-deadbeef.json",
+      "snap-2-hint-deadbeef").map(metaP.resolve)
+    val debris3 = metaP.resolve("snap-3-shard-0-deadbeef.json")
     val old = java.nio.file.attribute.FileTime.fromMillis(
       System.currentTimeMillis() - 10 * 60 * 1000)
-    Seq(orphan, orphan.resolve("junk.parquet"), staleTmp)
-      .foreach(p => Files.setLastModifiedTime(p, old))
-    // old behavior: SaveMode.ErrorIfExists on snap-2 fails every future
-    // commit forever; the sweep must recover
-    val snap = st.append(pts.limit(50), "u-1", numPartitions = 2)
-    assert(snap == 2)
+    (debris2 :+ debris3).foreach { p =>
+      Files.writeString(p, graft.table.MetaJson.manifestJson(Seq.empty))
+      Files.setLastModifiedTime(p, old)
+    }
+    // nothing is named snap-2, so the next append links it
+    assert(st.append(pts.limit(50), "u-1", numPartitions = 2) == 2)
     assert(st.read()._1.count() == 150)
-    // an aborted tripwire commit likewise leaves nothing behind
-    assert(!Files.exists(java.nio.file.Paths.get(root, "meta", "current.tmp.2")))
+    // snapshot 2 is decided: its debris goes, whatever its age; id 3 may
+    // still be in flight, so its file stays until snap-3 is linked
+    val removed = st.vacuum(0L)
+    assert(debris2.forall(p => !Files.exists(p) && removed.contains(p.toString)), removed)
+    assert(Files.exists(debris3))
+    assert(st.append(pts.limit(10), "u-2", numPartitions = 1) == 3)
+    st.vacuum(0L)
+    assertMetaReachable(root)
+    assert(st.read()._1.count() == 160)
   }
 
   test("a snapshot root that is not a JSON file fails closed on read and vacuum") {
@@ -589,14 +593,14 @@ class SnapshotStoreSpec extends AnyFunSuite with TempDirs {
     assert(st.read()._1.count() == pts.count())
     // plant same-id shard debris: a writer that crashed mid-commit before
     // writing its root, whose snapshot id a retrying racer then committed
-    // (the commit-time sweep's `id > cur` rule alone never reclaims it —
-    // the reference-check sweep is vacuum's job, so commits stay O(commit))
+    // (reclaiming it takes the reference check, which is vacuum's job, so
+    // commits stay O(commit))
     val debris = metaP.resolve(s"snap-$cur-shard-9-deadbeef.json")
     Files.writeString(debris, graft.table.MetaJson.manifestJson(Seq.empty))
     Files.setLastModifiedTime(debris, java.nio.file.attribute.FileTime
       .fromMillis(System.currentTimeMillis() - 120000))
     st.append(pts.limit(10), "u-late", numPartitions = 1)
-    assert(Files.exists(debris), "commit-time sweep must not pay the reference check")
+    assert(Files.exists(debris), "a commit must not pay the reference check")
     val removed = st.vacuum(olderThanMs = 100000)
     assert(removed.exists(_.endsWith(s"snap-$cur-shard-9-deadbeef.json")),
       s"vacuum missed the shard debris: $removed")
@@ -874,6 +878,8 @@ class SnapshotStoreSpec extends AnyFunSuite with TempDirs {
     // deleted counts must keep the bound, and the result, exact
     st.deleteWhere(col("id") % 3 === 0, "del-0")
     val live = st.read()._1
+    // every row has coordinates, so the index counts every live row once
+    assert(GlobalIndex.fromStore(st).totalRows == st.totalRows)
     assert(norm(GlobalIndex.knnStored(st, qLat, qLon, k)) ==
       norm(graft.ops.SpatialOps.knnSerial(live, qLat, qLon, k)))
     // compaction rewrites the sidecars; the index follows the new layout
@@ -1066,19 +1072,69 @@ class SnapshotStoreSpec extends AnyFunSuite with TempDirs {
     assert(st.read()._1.count() == 170)
   }
 
-  test("fast-append retry is bounded: a perpetually advancing pointer fails loudly") {
+  test("a lagging, expired or missing current hint resolves to the greatest root") {
     val root = tmp()
     val st = new SnapshotStore(spark, root)
-    st.append(pts.limit(10), "u-0", numPartitions = 1)
-    val ptr = java.nio.file.Paths.get(root, "meta", "current")
-    // every attempt loses: the pointer advances inside its race window
-    st.afterParentCapture = () => {
-      val cur = Files.readString(ptr).trim.toLong
-      Files.writeString(ptr, (cur + 1).toString); ()
+    (0 until 4).foreach(u =>
+      st.append(pts.filter(col("id") % 5 === u), s"u-$u", numPartitions = 1))
+    val hint = java.nio.file.Paths.get(root, "meta", "current")
+    def resolved(): Seq[Long] =
+      Seq(st.currentSnapshotId, new SnapshotStore(spark, root).currentSnapshotId)
+    Files.writeString(hint, "2") // lags by 2
+    assert(resolved() == Seq(4L, 4L))
+    assert(st.expireSnapshots(keepLast = 2) == Seq(1L, 2L))
+    assert(Files.readString(hint).trim == "4", "expiry points the hint at a kept root")
+    Files.writeString(hint, "1") // names an expired root
+    assert(resolved() == Seq(4L, 4L))
+    Files.delete(hint)
+    assert(resolved() == Seq(4L, 4L))
+    assert(st.read()._1.count() == pts.filter(col("id") % 5 =!= 4).count())
+    // a commit resolves its parent the same way, and writes the hint again
+    assert(st.append(pts.filter(col("id") % 5 === 4), "u-4", numPartitions = 1) == 5)
+    assert(Files.readString(hint).trim == "5")
+    assert(st.read()._1.count() == pts.count())
+  }
+
+  test("a writer stalled before its link rebases while a racer commits and expires") {
+    val root = tmp()
+    val st = new SnapshotStore(spark, root)
+    st.append(pts.filter(col("id") % 4 === 0), "u-0", numPartitions = 1)
+    val racer = new SnapshotStore(spark, root)
+    val seen = scala.collection.mutable.ArrayBuffer(st.currentSnapshotId)
+    def sample(): Unit = seen ++= Seq(st.currentSnapshotId, racer.currentSnapshotId)
+    def backDate(dir: String): Unit = {
+      val old = java.nio.file.attribute.FileTime.fromMillis(
+        System.currentTimeMillis() - 10 * 60 * 1000)
+      val w = Files.walk(java.nio.file.Paths.get(root, dir))
+      try w.toArray.foreach(p => Files.setLastModifiedTime(p.asInstanceOf[java.nio.file.Path], old))
+      finally w.close()
     }
-    intercept[java.util.ConcurrentModificationException] {
-      st.append(pts.limit(10), "u-1", numPartitions = 1)
+    var stalls = 0
+    // the stall: every file of this commit is written (snap-2's shard,
+    // stats and temporary root), but snap-2 is not linked yet
+    st.beforeLink = () => {
+      stalls += 1
+      if (stalls == 1) {
+        backDate("meta"); backDate("data")
+        racer.append(pts.filter(col("id") % 4 === 1), "r-1", numPartitions = 1); sample()
+        racer.append(pts.filter(col("id") % 4 === 2), "r-2", numPartitions = 1); sample()
+        // the default vacuum: vacuum(0L) would also reclaim this append's
+        // own data dir, which no root names yet
+        racer.vacuum(); sample()
+        racer.expireSnapshots(1); sample()
+      }
     }
+    val id = st.append(pts.filter(col("id") % 4 === 3), "u-stalled", numPartitions = 1)
+    st.beforeLink = () => ()
+    sample()
+    assert(stalls == 2, s"$stalls attempts: the stalled one and its rebase")
+    assert(id == 4L && st.currentSnapshotId == 4L)
+    assert(seen == seen.sorted, s"the current id moved backwards: $seen")
+    assert(st.manifest(id).map(_.lineageId).toSet == Set("u-0", "r-1", "r-2", "u-stalled"))
+    assert(st.committedLineage == Set("u-0", "r-1", "r-2", "u-stalled"))
+    def ids(s: SnapshotStore) = s.read()._1.select("id").collect().map(_.getLong(0)).sorted.toSeq
+    val want = pts.select("id").collect().map(_.getLong(0)).sorted.toSeq
+    assert(ids(st) == want && ids(racer) == want)
   }
 
   test("time travel (readAt) and incremental consumption (appendedSince)") {
