@@ -58,9 +58,9 @@ object PlanDump {
         case e: Throwable =>
           sb ++= s"\n## $name\n\nSKIPPED: ${e.getMessage}\n"
       }
-    dump("boxJoin", "Broadcast hash join on the cell key; probe side never shuffles; exact refine as codegen'd filter.",
+    dump("boxJoin", "ONE fused scan, no join, no broadcast, no exchange: Generate explode(graft_shape_hits(lat, lon)) looks each row's cell up in a driver-built cell → boxes index (held by reference, so other boxes reuse the compiled stage) and runs MBR.contains on those candidates only.",
       SpatialOps.boxJoin(pts, Fixtures.boxes))
-    dump("pipJoin (literal polygons)", "ONE scan for every literal polygon — zero joins, zero exchanges: a per-partition kernel (MapPartitions) looks each row's cell up in a driver-built cell → polygons map and runs Poly.contains on those candidates only, so the generated code does not grow with the polygon count (one Column predicate per polygon passed the JIT's 8000-byte huge-method limit at three polygons).",
+    dump("pipJoin (literal polygons)", "ONE scan for every literal polygon — zero joins, zero exchanges, no typed Dataset step: boxJoin's graft_shape_hits kernel over a cell → polygons index runs Poly.contains on each row's candidates only, inside whole-stage codegen, so the generated code does not grow with the polygon count (one Column predicate per polygon passed the JIT's 8000-byte huge-method limit at three polygons).",
       SpatialOps.pipJoin(pts, Fixtures.polys))
     dump("mbrJoin (rect × rect)", "PBSM: generator (cell-cover explode) on each side, hash-partitioned EQUI-join on the cell id — no CartesianProduct/BroadcastNestedLoop anywhere — exact closed-box refine + reference-point dedup as codegen'd filters after the join.",
       SpatialOps.mbrJoin(
@@ -75,7 +75,7 @@ object PlanDump {
       SpatialOps.tileHistogram(pts))
     dump("knnSerial (TakeOrderedAndProject)", "Per-partition top-k + driver merge; no global sort.",
       pts.withColumn("d2", graft.geo.GeoCols.d2(col("lat"), col("lon"), 1.0, 2.0)).orderBy(col("d2"), col("id")).limit(25))
-    dump("knnJoinAgg", "Dense baseline as a per-partition primitive kernel: flat per-query bounded arrays reduce each partition to k candidates per query before the exchange — |Q|*k*partitions shuffled rows instead of |Q|*N — then one tiny window ranks the survivors exactly.",
+    dump("knnJoinAgg", "Dense baseline as ONE partial/final aggregate (graft_knn_topk): each partition keeps k (d2, id) candidates per query in flat primitive slots, the single exchange carries one buffer per partition, the final aggregate merges them exactly and inline emits (q_id, rank, id) — no Window, no sort, no typed Dataset step.",
       SpatialOps.knnJoinAgg(pts, Fixtures.knnQueries.take(3), 5))
     dump("rangeBox", "Covering prune is a 4-comparison rectangle in grid coords + the exact box predicate — one codegen'd Filter. The box and cell bounds are param(...) leaves the generated code reads by reference, so a query with another box reuses the compiled stage.",
       SpatialOps.rangeBox(pts, Fixtures.boxes.head._2))
@@ -129,7 +129,7 @@ object PlanDump {
       graft.ops.AnnOps.annLsh(s.read.parquet("/root/testdata/sf0.001/embeddings.parquet"), Seq(0, 1), 5))
     dump("rasterize (vector→raster)", "ONE distributed Range source over every polygon's bbox cell box, back to back — zero table scans, zero exchanges, no Union at any polygon count: a per-partition kernel (MapPartitions) finds each candidate's polygon by binary search over driver-built offsets and keeps the cell when Poly.contains holds at its center. Raster cost scales with geometry area, not data size.",
       SpatialOps.rasterize(s, Fixtures.polys))
-    dump("zonalStats", "The pipJoin kernel (one scan, per-partition cell filter + Poly.contains refine) + partial+final hash aggregate on its poly id — the exchange carries |polys|x|partitions| rows regardless of data size; the tiny literal polygon list left-joins back so empty zones keep their cnt=0 row.",
+    dump("zonalStats", "The pipJoin kernel (one scan, graft_shape_hits cell filter + Poly.contains refine) + partial+final hash aggregate on its poly id — the exchange carries |polys|x|partitions| rows regardless of data size; the tiny literal polygon list left-joins back so empty zones keep their cnt=0 row.",
       SpatialOps.zonalStats(pts, Fixtures.polys))
     try {
       val hroot = tempDir("pd_hilb")
@@ -151,7 +151,7 @@ object PlanDump {
       jstore.append(pts, "unit-0", numPartitions = 32)
       val (jdf, jkept, jtot) = jstore.readBoxes(Fixtures.boxes.map(_._2))
       dump("stored-table boxJoin (readBoxes multi-geometry prune)",
-        s"ONE planned read for the whole box set: manifest prune opened $jkept of $jtot data files (files disjoint from EVERY box never open; with a sharded manifest the non-overlapping SHARDS are not even parsed); files whose Z span meets no range of the fine merged covering (cap 4096) never open either, and inside survivors that covering is the codegen'd graft_z_in_ranges binary-search probe. The unchanged boxJoin broadcast-hash-join refines exactly on top.",
+        s"ONE planned read for the whole box set: manifest prune opened $jkept of $jtot data files (files disjoint from EVERY box never open; with a sharded manifest the non-overlapping SHARDS are not even parsed); files whose Z span meets no range of the fine merged covering (cap 4096) never open either, and inside survivors that covering is the codegen'd graft_z_in_ranges binary-search probe. boxJoin's graft_shape_hits explode refines exactly in the same codegen stage.",
         SpatialOps.boxJoin(jdf, Fixtures.boxes,
           SpatialOps.resolveRes(jstore, Fixtures.boxes.map(_._2))))
       val gi2 = graft.index.GlobalIndex.fromStore(jstore)

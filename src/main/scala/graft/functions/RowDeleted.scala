@@ -30,13 +30,20 @@ case class RowDeleted(left: Expression, right: Expression, vectors: RowDeleted.V
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("dvs", vectors, classOf[RowDeleted.Vectors].getName)
+    val seen = ctx.addMutableState("UTF8String", "dvSeen", forceInline = true)
     val last = ctx.addMutableState("UTF8String", "dvPath", forceInline = true)
     val bits = ctx.addMutableState("long[]", "dvBits", forceInline = true)
+    // a scan hands every row of one file the same path object, so the
+    // per-row test is a reference compare; the bytes are compared (and
+    // the vector looked up) only when the object changes
     nullSafeCodeGen(ctx, ev, (path, pos) =>
       s"""
-         |if ($last == null || !$last.equals($path)) {
-         |  $last = $path.clone();
-         |  $bits = $ref.of($last);
+         |if ($path != $seen) {
+         |  if ($last == null || !$last.equals($path)) {
+         |    $last = $path.clone();
+         |    $bits = $ref.of($last);
+         |  }
+         |  $seen = $path;
          |}
          |${ev.value} = $bits != null && ($pos >>> 6) < $bits.length &&
          |  ($bits[(int) ($pos >>> 6)] & (1L << $pos)) != 0;

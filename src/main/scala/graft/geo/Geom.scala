@@ -1,5 +1,12 @@
 package graft.geo
 
+/** A region a point can lie in: a box or a polygon. The spatial joins
+  * ([[graft.functions.ShapeHits]]) hold either kind in one index and
+  * refine a candidate with its own exact test. */
+sealed trait Shape extends Serializable {
+  def contains(lat: Double, lon: Double): Boolean
+}
+
 /** Planar geometry in raw WGS84 degree space.
   *
   * Semantics mirror the reference's MBR algebra exactly
@@ -9,7 +16,8 @@ package graft.geo
   * OSMParser.java:65. Pure Scala, no Spark dependency: used by the
   * per-partition local index, driver-side planning, and test oracles.
   */
-final case class MBR(minLat: Double, minLon: Double, maxLat: Double, maxLon: Double) {
+final case class MBR(minLat: Double, minLon: Double, maxLat: Double, maxLon: Double)
+  extends Shape {
 
   /** MBR.java:27-33 */
   def area: Double = (maxLat - minLat) * (maxLon - minLon)
@@ -68,7 +76,7 @@ object MBR {
   * first vertex). The reference only has boxes; polygons generalize the
   * range predicate per the north rule (point-in-polygon joins).
   */
-final case class Poly(ring: IndexedSeq[(Double, Double)]) {
+final case class Poly(ring: IndexedSeq[(Double, Double)]) extends Shape {
   require(ring.length >= 3, "polygon needs >= 3 vertices")
 
   lazy val bbox: MBR =

@@ -1,7 +1,8 @@
 package graft.ops
 
 import graft.data.Fixtures
-import graft.geo.{CellId, GeoCols, MBR, Poly}
+import graft.functions.{KnnTopK, ShapeHits}
+import graft.geo.{CellId, GeoCols, MBR, Poly, Shape}
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -34,7 +35,7 @@ object SpatialOps {
   val TargetRowsPerCell: Long = 64L
 
   /** Upper bound on the total covering-cell count a single query's
-    * geometry may enumerate/broadcast (and one polygon's [[polyHits]] map). */
+    * geometry may enumerate/broadcast (and one shape's [[shapeHits]] map). */
   val MaxCoverCells: Long = 4096L
 
   /** Plan-time row estimate with ZERO scans or actions: Catalyst's
@@ -263,14 +264,11 @@ object SpatialOps {
     sweep(local, Window.partitionBy()) // survivors are few → single task is fine
   }
 
-  /** [[boxJoin]]'s broadcast side: a box's covering cells with its bounds. */
-  private val BoxCellSchema = StructType(Seq(StructField("box_id", IntegerType, false),
-    StructField("bcell", LongType, false)) ++
+  /** [[boxJoinSalted]]'s cell side: a box's covering cells, salted, with
+    * its bounds. */
+  private val SaltedCellSchema = StructType(Seq(StructField("box_id", IntegerType, false),
+    StructField("bcell", LongType, false), StructField("bsalt", IntegerType, false)) ++
     Seq("minlat", "minlon", "maxlat", "maxlon").map(StructField(_, DoubleType, false)))
-
-  /** [[boxJoinSalted]]'s cell side: [[BoxCellSchema]] with the salt. */
-  private val SaltedCellSchema = StructType(BoxCellSchema.fields.take(2) ++
-    Seq(StructField("bsalt", IntegerType, false)) ++ BoxCellSchema.fields.drop(2))
 
   /** [[zonalStats]]' polygon ids. */
   private val PolyIdSchema = StructType(Seq(StructField("poly_id", IntegerType, false)))
@@ -280,24 +278,28 @@ object SpatialOps {
     Seq("qlat", "qlon").map(StructField(_, DoubleType, false)) :+ StructField("qc", LongType, false))
 
   /** Multi-box spatial join (the de-facto join in Benchmark.java:101-118):
-    * boxes → covering cells, broadcast hash join on the point's cell, exact
-    * refine. Each point has exactly one cell and covering cells are
-    * distinct, so no post-join dedup is needed. Scale path: the probe side
-    * never shuffles (broadcast), and the cell conjunct prunes files on a
-    * stored cell-clustered table. */
+    * `(box_id, id)` for every point inside a box, by the [[shapeHits]]
+    * filter-and-refine kernel — one fused scan, no join operator, no
+    * broadcast, no exchange. A point has one cell and its candidate boxes
+    * are distinct, so no dedup is needed; rows with a null lat/lon match
+    * nothing. */
   def boxJoin(points: DataFrame, boxes: Seq[(Int, MBR)],
               rOverride: Int = AutoRes): DataFrame = {
-    val spark = points.sparkSession
     val r = resolveRes(points, boxes.map(_._2), rOverride)
-    val cells = OpUtil.localFrame(spark, BoxCellSchema, boxes.flatMap { case (bid, b) =>
-      CellId.cover(b, r).map(c => Row(bid, c, b.minLat, b.minLon, b.maxLat, b.maxLon))
-    })
-    withCell(points, r)
-      .join(broadcast(cells), col("cell") === col("bcell"))
-      .filter(col("lat") >= col("minlat") && col("lat") <= col("maxlat") &&
-              col("lon") >= col("minlon") && col("lon") <= col("maxlon"))
-      .select(col("box_id"), col("id"))
+    points.select(shapeHits(boxes, r).as("box_id"), col("id"))
   }
+
+  /** `explode` of [[ShapeHits]] over `shapes` at resolution r: one row per
+    * shape the point (lat, lon) lies in. Filter: the point's grid cell
+    * against a driver-built map from covering cell ([[CellId.cover]] /
+    * [[CellId.coverPoly]]) to shapes; a shape covering more than
+    * [[MaxCoverCells]] cells is tested at every row. Refine: the shape's
+    * own `contains` on the candidates only. The index rides by reference,
+    * so joins over other shapes reuse the compiled stage, and the generated
+    * code does not grow with the shape count (one Column predicate per
+    * polygon passed HotSpot's 8000-byte JIT limit at three polygons). */
+  private def shapeHits(shapes: Seq[(Int, Shape)], r: Int): Column =
+    explode(ShapeHits.of(col("lat"), col("lon"), ShapeHits.index(shapes, r, MaxCoverCells)))
 
   /** MBR-intersection join — the R-tree SPATIAL JOIN, with RECTANGLE sets
     * on BOTH sides: the reference's `MBR.overlaps` test (MBR.java:47, the
@@ -497,49 +499,14 @@ object SpatialOps {
   }
 
   /** Point-in-polygon join (north-rule op): `(poly_id, id)` for every
-    * point inside a polygon, by the [[polyHits]] filter-and-refine kernel.
-    * Polygons are plan literals → zero shuffles, zero broadcast state and
-    * ONE scan of the corpus regardless of polygon count. */
+    * point inside a polygon ([[Poly.contains]], bit-identical to the oracle
+    * SQL), by the [[shapeHits]] kernel [[boxJoin]] runs: one fused scan
+    * at any polygon count, no join, no exchange. Rows with a null lat/lon
+    * match nothing; a null id is kept. */
   def pipJoin(points: DataFrame, polys: Seq[(Int, Poly)],
               rOverride: Int = AutoRes): DataFrame = {
     val r = resolveRes(points, polys.map(_._2.bbox), rOverride)
-    polyHits(points, polys, r).select(col("poly_id"), col("id"))
-  }
-
-  /** Polygon-hit kernel of [[pipJoin]] and [[zonalStats]]: one
-    * `(poly_id, id, lat, lon)` row per polygon a point lies in. Filter: a
-    * driver-built map from covering cell ([[CellId.coverPoly]]) to polygons;
-    * a polygon covering more than [[MaxCoverCells]] cells is tested at every
-    * row. Refine: [[Poly.contains]] (bit-identical to the oracle SQL) on the
-    * candidates only. Per-polygon Column predicates grew the generated
-    * method past HotSpot's 8000-byte JIT limit at three polygons. Rows with
-    * a null lat/lon match nothing. */
-  private def polyHits(points: DataFrame, polys: Seq[(Int, Poly)], r: Int): DataFrame = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    val pids = polys.map(_._1).toArray
-    val shapes = polys.map(_._2).toArray
-    val covers = shapes.map(CellId.coverPoly(_, r))
-    val (always, mapped) = shapes.indices.partition(covers(_).size > MaxCoverCells)
-    val byCell = mapped.flatMap(i => covers(i).map(_ -> i)).groupMap(_._1)(_._2)
-    // cells sorted for binary search; each candidate list in polygon order
-    val cells = byCell.keys.toArray.sorted
-    val cands = cells.map(c => (byCell(c) ++ always).sorted.toArray)
-    val rest = always.toArray
-    points.filter(col("lat").isNotNull && col("lon").isNotNull)
-      .select(col("id").cast("long"), col("lat").cast("double"), col("lon").cast("double"))
-      .as[(java.lang.Long, Double, Double)]
-      .mapPartitions { it =>
-        val n = CellId.n(r)
-        it.flatMap { case (id, la, lo) =>
-          val k = java.util.Arrays.binarySearch(cells,
-            CellId.cellY(la, r) * n + CellId.cellX(lo, r))
-          (if (k >= 0) cands(k) else rest).iterator
-            .filter(shapes(_).contains(la, lo))
-            .map(i => (pids(i), id, la, lo))
-        }
-      }
-      .toDF("poly_id", "id", "lat", "lon")
+    points.select(shapeHits(polys, r).as("poly_id"), col("id").cast("long").as("id"))
   }
 
   /** Polygon rasterization (vector→raster — the inverse of [[tileAssign]],
@@ -586,7 +553,7 @@ object SpatialOps {
 
   /** Zonal statistics (raster↔vector analytics): per-polygon aggregates of
     * the points inside — count, exact integer id-sum, and the bounding
-    * range of matched coordinates. The [[polyHits]] kernel finds the points
+    * range of matched coordinates. The [[shapeHits]] kernel finds the points
     * and each polygon's rows collapse map-side into one partial-aggregate
     * row, so the shuffle carries ONE row per polygon per partition. The
     * literal polygon list left-joins back: exactly one output row per
@@ -595,7 +562,8 @@ object SpatialOps {
   def zonalStats(points: DataFrame, polys: Seq[(Int, Poly)],
                  rOverride: Int = AutoRes): DataFrame = {
     val r = resolveRes(points, polys.map(_._2.bbox), rOverride)
-    val agged = polyHits(points, polys, r)
+    val agged = points.select(shapeHits(polys, r).as("poly_id"), col("id").cast("long").as("id"),
+        col("lat").cast("double").as("lat"), col("lon").cast("double").as("lon"))
       .groupBy(col("poly_id"))
       .agg(count(lit(1)).as("cnt"), sum(col("id")).as("sum_id"),
         min(col("lat")).as("min_lat"), max(col("lat")).as("max_lat"),
@@ -672,78 +640,21 @@ object SpatialOps {
   }
 
   /** Dense kNN join (the documented baseline): every |Q|·N distance is
-    * computed, reduced to k candidates per query per partition BEFORE the
-    * exchange, exact global top-k after — the shuffle carries at most
-    * |Q|·k·partitions rows.
-    *
-    * Kernel form (r6 optimization, measured): the round-4 bounded-heap Aggregator
-    * formulation materialized the |Q|·N crossJoin and pushed every pair
-    * through the Dataset encoder into a typed ObjectHashAggregate —
-    * 4.2 s for 7.2M pairs at sf0.1. This per-partition primitive loop
-    * computes the same distances over decoded (id, lat, lon) rows into
-    * flat per-query bounded arrays (the partial top-k), then ranks the
-    * ≤ |Q|·k·partitions survivors with one tiny window — identical
-    * output (same (d2, id) ordering; spec-pinned vs the window plan). */
+    * computed, `(q_id, rank, id)` for each query's k nearest points by
+    * (d², id). One aggregate ([[KnnTopK]]): each partition keeps per query
+    * its k best candidates in flat primitive slots (the partial result,
+    * ≤ |Q|·k rows' worth), the final aggregate merges them exactly, and
+    * `inline` emits the ranked rows — the shuffle carries one buffer per
+    * partition; no Window, no sort. Rows with a null lat, lon or id (and
+    * rows at NaN distance) are no one's neighbour. */
   def knnJoinAgg(points: DataFrame, queries: Seq[(Int, Double, Double)],
                  k: Int): DataFrame = {
-    val spark = points.sparkSession
-    import spark.implicits._
-    val qIds = queries.map(_._1).toArray
-    val qLat = queries.map(_._2).toArray
-    val qLon = queries.map(_._3).toArray
-    val partials = points.select(col("id"), col("lat"), col("lon"))
-      .as[(Long, Double, Double)]
-      .mapPartitions { it =>
-        val nq = qIds.length
-        // per-query k slots, flat: candidate replaces the cached worst
-        // only when strictly better by (d2, id) — O(1) reject, O(k)
-        // worst-rescan only on accept (accepts are O(k·log N) per query)
-        val d2s = Array.fill(nq * k)(Double.MaxValue)
-        val ids = Array.fill(nq * k)(Long.MaxValue)
-        val size = new Array[Int](nq)
-        val worst = new Array[Int](nq)
-        def recomputeWorst(q: Int): Unit = {
-          var w = q * k
-          var i = w + 1
-          while (i < q * k + k) {
-            if (d2s(i) > d2s(w) || (d2s(i) == d2s(w) && ids(i) > ids(w))) w = i
-            i += 1
-          }
-          worst(q) = w
-        }
-        it.foreach { case (id, la, lo) =>
-          var q = 0
-          while (q < nq) {
-            val dla = la - qLat(q)
-            val dlo = lo - qLon(q)
-            val d2 = dla * dla + dlo * dlo
-            if (size(q) < k) {
-              val slot = q * k + size(q)
-              d2s(slot) = d2; ids(slot) = id
-              size(q) += 1
-              if (size(q) == k) recomputeWorst(q)
-            } else {
-              val w = worst(q)
-              if (d2 < d2s(w) || (d2 == d2s(w) && id < ids(w))) {
-                d2s(w) = d2; ids(w) = id
-                recomputeWorst(q)
-              }
-            }
-            q += 1
-          }
-        }
-        (0 until nq).iterator.flatMap { q =>
-          (0 until size(q)).iterator.map { i =>
-            (qIds(q), d2s(q * k + i), ids(q * k + i))
-          }
-        }
-      }
-      .toDF("q_id", "d2", "id")
-    val w = Window.partitionBy(col("q_id")).orderBy(col("d2"), col("id"))
-    partials
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .select(col("q_id"), col("rank"), col("id"))
+    val qs = new KnnTopK.Queries(queries.map(_._1).toArray,
+      queries.map(_._2).toArray, queries.map(_._3).toArray)
+    points.select(col("lat").cast("double").as("lat"), col("lon").cast("double").as("lon"),
+        col("id").cast("long").as("id"))
+      .agg(KnnTopK.of(col("lat"), col("lon"), col("id"), qs, k).as("top"))
+      .select(inline(col("top")))
   }
 
   /** Ring-pruned kNN join (the scale path for large query sets): instead

@@ -599,7 +599,14 @@ final class SnapshotStore(private[table] val spark: SparkSession, root: String, 
                                 vectors: Seq[(ShardMeta, Seq[(String, Array[Long])])]): Unit = {
     val prev =
       if (replaceParent || parent == 0) ManifestRoot(Seq.empty, Seq.empty)
-      else readRoot(parent)
+      else try readRoot(parent) catch {
+        // another instance committed past the parent and expired it: the
+        // same lost race as the parent check below
+        case e @ (_: IllegalStateException | _: java.nio.file.NoSuchFileException)
+            if !Files.exists(rootPath(parent)) && currentSnapshotId != parent =>
+          throw new java.util.ConcurrentModificationException(
+            s"snapshot $parent was expired during commit — retry from the new manifest", e)
+      }
     val uid = java.util.UUID.randomUUID().toString.take(8)
     val written = scala.collection.mutable.ArrayBuffer.empty[java.nio.file.Path]
     def put(name: String, json: String): String = {

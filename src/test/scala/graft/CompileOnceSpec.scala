@@ -67,4 +67,22 @@ class CompileOnceSpec extends AnyFunSuite {
       assert(fresh.forall(_._2 == 0), fresh)
     } finally graft.ops.OpUtil.deleteTree(java.nio.file.Paths.get(root))
   }
+
+  test("a spatial join over other shapes, queries or resolution compiles no new class") {
+    val h = xxhash64(col("id"), lit(3L))
+    val pts = spark.range(0, 20000, 1, 2).select(col("id"),
+      GeoCols.geoFromPhashLat(h).as("lat"), GeoCols.geoFromPhashLon(h).as("lon"))
+    // call i: 3 + i boxes, 4 + i polygons, 5 + 3i queries, resolution 4 + i
+    def boxes(i: Int) = (0 until 3 + i).map { j =>
+      val (la, lo) = (-50.0 + 13.0 * j + i, -160.0 + 41.0 * j - i)
+      j -> MBR(la, lo, la + 4.0 + j, lo + 6.0 + i)
+    }
+    def queries(i: Int) = (0 until 5 + 3 * i).map(q => (q, 70.0 - 9.0 * q - i, 17.0 * q - 150.0 + i))
+    val kinds: Seq[(String, Int => Any)] = Seq(
+      "boxJoin" -> (i => SpatialOps.boxJoin(pts, boxes(i), 4 + i).count()),
+      "pipJoin" -> (i => SpatialOps.pipJoin(pts, SpatialOpsSpec.stars(4 + i, seed = i), 4 + i).count()),
+      "knnJoinAgg" -> (i => SpatialOps.knnJoinAgg(pts, queries(i), 5 + i).collect()))
+    val fresh = kinds.map { case (name, q) => q(0); name -> compiles(q(1)) }
+    assert(fresh.forall(_._2 == 0), fresh)
+  }
 }

@@ -65,10 +65,18 @@ class PlanSpec extends AnyFunSuite with TempDirs {
     assert(st.read()._1.count() == pts.filter(!dead).count())
   }
 
-  test("boxJoin broadcasts the box side (no shuffle on the probe side)") {
+  /** The plan decodes no row into JVM objects: no typed-Dataset step. */
+  def noEncoderRoundTrip(name: String, p: String): Unit =
+    for (op <- Seq("DeserializeToObject", "MapPartitions", "SerializeFromObject"))
+      assert(!p.contains(op), s"$name plans a $op:\n$p")
+
+  test("boxJoin is one fused scan: no join, no broadcast, no exchange, one source read") {
     val p = plan(SpatialOps.boxJoin(Points(spark, dir), Fixtures.boxes))
-    assert(p.contains("BroadcastHashJoin") || p.contains("BroadcastNestedLoopJoin"), p.take(500))
-    assert(!p.contains("SortMergeJoin"), "box join must not sort-merge")
+    assert(!p.toLowerCase.contains("join"), s"boxJoin plans a join:\n$p")
+    for (op <- Seq("Broadcast", "Exchange")) assert(!p.contains(op), s"boxJoin plans a $op:\n$p")
+    assert(p.split("Scan parquet").length - 1 == 1, s"boxJoin must scan the corpus once:\n$p")
+    assert(p.contains("Generate explode(graft_shape_hits("), p)
+    noEncoderRoundTrip("boxJoin", p)
   }
 
   test("pipJoin is one fused scan: no join, no exchange, single source read") {
@@ -79,6 +87,17 @@ class PlanSpec extends AnyFunSuite with TempDirs {
     // polygon; the fused explode form must read it exactly once
     assert(p.split("Scan parquet").length - 1 == 1,
       s"PIP must scan the corpus once, not per polygon: ${p.take(400)}")
+    noEncoderRoundTrip("pipJoin", p)
+  }
+
+  test("knnJoinAgg is one partial/final aggregate: no Window, no Sort") {
+    val p = plan(SpatialOps.knnJoinAgg(Points(spark, dir), Fixtures.knnQueries, Fixtures.knnJoinK))
+    for (op <- Seq("Window", "Sort", "Join")) assert(!p.contains(op), s"knnJoinAgg plans a $op:\n$p")
+    assert(p.contains("partial_graft_knn_topk("), p)
+    // the one exchange carries one partial buffer per partition
+    assert(p.split("Exchange").length - 1 == 1, p)
+    assert(p.split("Scan parquet").length - 1 == 1, p)
+    noEncoderRoundTrip("knnJoinAgg", p)
   }
 
   test("rasterize is one Range source: no Union, no Exchange") {

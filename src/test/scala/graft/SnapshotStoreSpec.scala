@@ -58,6 +58,25 @@ class SnapshotStoreSpec extends AnyFunSuite with TempDirs {
     assert(st.committedLineage.contains("del-0") && st.committedLineage.contains("del-1"))
   }
 
+  test("one scan task crossing several files drops exactly each file's deleted rows") {
+    val st = new SnapshotStore(spark, tmp())
+    st.append(pts, "unit-0", numPartitions = 4)
+    val dead = col("id") % 7 === 0 || col("id") % 11 === 3
+    st.deleteWhere(dead, "del-0")
+    def norm(df: org.apache.spark.sql.DataFrame) = df.select("id", "lat", "lon")
+      .collect().map(r => (r.getLong(0), r.getDouble(1), r.getDouble(2))).sorted.toSeq
+    // one split for the whole table: every file is read by the one task
+    spark.conf.set("spark.sql.files.minPartitionNum", "1")
+    try {
+      val df = st.read()._1
+      val files = df.inputFiles
+      assert(files.length >= 2, files.toSeq)
+      for (f <- files) assert(spark.read.parquet(f).filter(dead).count() > 0, s"no delete hit $f")
+      assert(df.rdd.getNumPartitions == 1)
+      assert(norm(df) == norm(pts.filter(!dead)))
+    } finally spark.conf.unset("spark.sql.files.minPartitionNum")
+  }
+
   test("randomized delete sequence + compact == in-memory multiset difference") {
     val root = tmp()
     val st = new SnapshotStore(spark, root)
@@ -1068,6 +1087,27 @@ class SnapshotStoreSpec extends AnyFunSuite with TempDirs {
     // fires: loser attempt 1 (plants racer) + racer's own commit + loser retry
     assert(fires == 3, s"retry never re-entered commit (fires=$fires)")
     assert(snap == 3L && st.currentSnapshotId == 3L)
+    assert(st.committedLineage == Set("u-base", "u-racer", "u-slow"))
+    assert(st.read()._1.count() == 170)
+  }
+
+  test("an append whose parent is expired before it reads the parent root rebases") {
+    val root = tmp()
+    val st = new SnapshotStore(spark, root)
+    st.append(pts.limit(100), "u-base", numPartitions = 1)
+    val racer = new SnapshotStore(spark, root)
+    var fires = 0
+    // after the parent capture, another instance commits past the parent
+    // and expires it, so the append's read of the parent root finds nothing
+    st.afterParentCapture = () => {
+      fires += 1
+      if (fires == 1) {
+        racer.append(pts.limit(40), "u-racer", numPartitions = 1)
+        assert(racer.expireSnapshots(keepLast = 1) == Seq(1L)); ()
+      }
+    }
+    assert(st.append(pts.limit(30), "u-slow", numPartitions = 1) == 3L)
+    assert(fires == 2, s"the append did not retry (fires=$fires)")
     assert(st.committedLineage == Set("u-base", "u-racer", "u-slow"))
     assert(st.read()._1.count() == 170)
   }

@@ -614,6 +614,35 @@ class SpatialOpsSpec extends AnyFunSuite {
     }
   }
 
+  test("null coordinates match nothing: boxJoin, pipJoin, zonalStats, knnJoinAgg") {
+    import graft.geo.Poly
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
+    // each null-coordinate row sits, by its other coordinate, inside the
+    // box and polygon around (0, 10) and at the query point, so reading a
+    // null as 0.0 would match it; the null-id row is at the query point too
+    val nulls = Seq(Row(9000001L, null, 10.0), Row(9000002L, 0.0, null),
+      Row(9000003L, null, null), Row(null, 0.0, 10.0))
+    val schema = StructType(Seq(StructField("id", LongType),
+      StructField("lat", DoubleType), StructField("lon", DoubleType)))
+    val all = pts.unionByName(spark.createDataFrame(
+      spark.sparkContext.parallelize(nulls, 2), schema))
+    val box = Seq(7 -> MBR(-1.0, -1.0, 1.0, 11.0))
+    val poly = Seq(8 -> Poly(Vector((-1.0, -1.0), (-1.0, 11.0), (1.0, 11.0), (1.0, -1.0))))
+    val queries = Seq((0, 0.0, 10.0), (1, 0.0, 0.0))
+    def pairs(df: DataFrame) = df.collect().map(r =>
+      (r.getInt(0), if (r.isNullAt(1)) None else Some(r.getLong(1)))).toSeq.sorted
+    def ranked(df: DataFrame) = df.collect()
+      .map(r => (r.getInt(0), r.getLong(1), r.getLong(2))).toSeq.sorted
+    val nullIdHit = Seq((8, None))
+    assert(pairs(SpatialOps.boxJoin(all, box)) == (pairs(SpatialOps.boxJoin(pts, box)) :+ (7, None)).sorted)
+    assert(pairs(SpatialOps.pipJoin(all, poly)) == (pairs(SpatialOps.pipJoin(pts, poly)) ++ nullIdHit).sorted)
+    val zonal = SpatialOps.zonalStats(all, poly).collect().map(_.getLong(1)).toSeq
+    assert(zonal == SpatialOps.zonalStats(pts, poly).collect().map(_.getLong(1) + 1).toSeq)
+    val knn = ranked(SpatialOps.knnJoinAgg(all, queries, 5))
+    assert(knn == ranked(knnJoin(pts, queries, 5)) && knn.size == 10)
+  }
+
   test("rect-res outlier guard sees the FULL side (r6: no sample-prefix blind spot)") {
     import spark.implicits._
     // 70k tiny rects followed by ONE world-spanning outlier in the LAST
