@@ -79,7 +79,7 @@ object PlanDump {
       SpatialOps.knnJoinAgg(pts, Fixtures.knnQueries.take(3), 5))
     dump("rangeBox", "Covering prune is a 4-comparison rectangle in grid coords + the exact box predicate — one codegen'd Filter. The box and cell bounds are param(...) leaves the generated code reads by reference, so a query with another box reuses the compiled stage.",
       SpatialOps.rangeBox(pts, Fixtures.boxes.head._2))
-    dump("boxJoinSalted (write-time hot cells)", "With precomputed hot cells the salted plan is scan → salt projection → broadcast join: ZERO stats scans on the query path.",
+    dump("boxJoinSalted (write-time hot cells)", "boxJoinSalted is boxJoin at the hint's resolution: the fused graft_shape_hits scan has no shuffle, so there is no hot reducer to salt — the hint only picks r, and no stats scan runs on the query path.",
       SpatialOps.boxJoinSalted(pts, Fixtures.boxes, hotCells = Some((Fixtures.JoinRes,
         Set(Fixtures.boxes.head._2).map(b => graft.geo.CellId.grid(b.minLat, b.minLon, Fixtures.JoinRes))))))
     val images = Synth.table(s, 32).toDF()
@@ -154,17 +154,11 @@ object PlanDump {
         s"ONE planned read for the whole box set: manifest prune opened $jkept of $jtot data files (files disjoint from EVERY box never open; with a sharded manifest the non-overlapping SHARDS are not even parsed); files whose Z span meets no range of the fine merged covering (cap 4096) never open either, and inside survivors that covering is the codegen'd graft_z_in_ranges binary-search probe. boxJoin's graft_shape_hits explode refines exactly in the same codegen stage.",
         SpatialOps.boxJoin(jdf, Fixtures.boxes,
           SpatialOps.resolveRes(jstore, Fixtures.boxes.map(_._2))))
-      val gi2 = graft.index.GlobalIndex.fromStore(jstore)
-      val bounds = Fixtures.knnQueries.map { case (qid, qla, qlo) =>
-        (qid, qla, qlo, gi2.knnSeedRadius(qla, qlo, Fixtures.knnJoinK)) }
-      val balls = bounds.map { case (_, qla, qlo, rad) =>
-        graft.geo.MBR(qla - rad, qlo - rad, qla + rad, qlo + rad) }
-      val (cand, ckept, ctot) = jstore.readBoxes(balls)
-      dump("stored-table kNN JOIN (knnJoinStored candidate plan)",
-        s"Per-query radius bounds by best-first descent of the snapshot view's index (built once per snapshot, no Spark jobs); ONE multi-ball pruned read opened $ckept of $ctot files; the tiny (q_id, center, radius) set broadcasts and the per-query top-k runs as a window over candidates only — |Q|·k output rows (the OPERATOR'S OWN candidate-plan builder, GlobalIndex.knnJoinCandidatePlan — this evidence cannot drift from the executed plan).",
-        graft.index.GlobalIndex.knnJoinCandidatePlan(cand, bounds,
-            Fixtures.knnJoinK)
-          .select(col("q_id"), col("rank"), col("id")))
+      val (kdf, ckept, ctot) = graft.index.GlobalIndex.knnJoinStoredPruned(jstore,
+        Fixtures.knnQueries, Fixtures.knnJoinK)
+      dump("stored-table kNN JOIN (knnJoinStored)",
+        s"Per-query radius bounds by best-first descent of the snapshot view's index (built once per snapshot, no Spark jobs); ONE multi-ball pruned read opened $ckept of $ctot files; explode(graft_shape_hits) over one ball box per query offers each candidate only to the queries whose box holds it, and ONE partial/final graft_knn_topk aggregate ranks them (the knnJoinAgg kernel: one buffer per partition, exact merge, no join, no Window, no sort) — the operator's own frame.",
+        kdf)
     } catch { case e: Throwable =>
       sb ++= s"\n## stored-table JOINs\n\nSKIPPED: ${e.getMessage}\n" }
     Files.writeString(Paths.get("docs", "PLANS.md"), sb.toString)

@@ -8,34 +8,40 @@ import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggreg
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, IntegerType, LongType, StructField, StructType}
 
-/** Exact per-query k nearest points of a dense kNN join, as one Spark
+/** Exact per-query k nearest points of a kNN join, as one Spark
   * aggregate: each partition keeps, per query, its k best `(d², id)`
   * candidates (the partial result, ≤ |Q|·k per partition); the final
   * aggregate merges the partials by the same order and emits
-  * `array<struct<q_id int, rank long, id long>>` for `inline`. The top k
-  * of the union of per-partition top ks is the global top k, so the merge
-  * is exact — the partial/final split of a distributed kNN join, with no
-  * Window, no sort and no exchange by query.
+  * `array<struct<q_id int, rank long, id long, d2 double>>` for `inline`.
+  * The top k of the union of per-partition top ks is the global top k, so
+  * the merge is exact — the partial/final split of a distributed kNN join,
+  * with no Window, no sort and no exchange by query.
+  *
+  * Without `q` a row is offered to every query (the dense join). With `q`,
+  * the position of one query in `queries` (a row per candidate query, as
+  * `explode` of [[ShapeHits]] over one box per query gives), the row is
+  * offered to that query only (the pruned joins).
   *
   * Order: d² = (lat − qlat)² + (lon − qlon)² ascending, then id — the
-  * (d², id) order of the window formulation. A row with a null lat, lon
-  * or id, or at NaN distance, is no one's neighbour. Inputs are read from
-  * the row's primitive slots when they are plain columns (the usual
+  * (d², id) order of the window formulation. A row with a null lat, lon,
+  * id or q, or at NaN distance, is no one's neighbour. Inputs are read
+  * from the row's primitive slots when they are plain columns (the usual
   * case), so no value is boxed. */
-case class KnnTopK(lat: Expression, lon: Expression, id: Expression,
+case class KnnTopK(lat: Expression, lon: Expression, id: Expression, q: Option[Expression],
                    queries: KnnTopK.Queries, k: Int,
                    mutableAggBufferOffset: Int = 0, inputAggBufferOffset: Int = 0)
   extends TypedImperativeAggregate[KnnTopK.Slots] {
 
   require(k >= 1, s"k must be >= 1, got $k")
 
-  override def children: Seq[Expression] = Seq(lat, lon, id)
+  override def children: Seq[Expression] = Seq(lat, lon, id) ++ q
 
   override def checkInputDataTypes(): TypeCheckResult =
-    if (lat.dataType == DoubleType && lon.dataType == DoubleType && id.dataType == LongType)
+    if (lat.dataType == DoubleType && lon.dataType == DoubleType && id.dataType == LongType &&
+        q.forall(_.dataType == IntegerType))
       TypeCheckResult.TypeCheckSuccess
     else TypeCheckResult.TypeCheckFailure(
-      s"$prettyName takes (double, double, bigint), got ${children.map(_.dataType)}")
+      s"$prettyName takes (double, double, bigint[, int]), got ${children.map(_.dataType)}")
 
   override def nullable: Boolean = false
 
@@ -44,7 +50,8 @@ case class KnnTopK(lat: Expression, lon: Expression, id: Expression,
   override def prettyName: String = "graft_knn_topk"
 
   // what plans print, partial and final alike: no buffer offsets
-  override protected def flatArguments: Iterator[Any] = Iterator(lat, lon, id, queries, s"k=$k")
+  override protected def flatArguments: Iterator[Any] =
+    Iterator(lat, lon, id) ++ q ++ Iterator(queries, s"k=$k")
 
   override def createAggregationBuffer(): KnnTopK.Slots = new KnnTopK.Slots(queries, k)
 
@@ -57,12 +64,17 @@ case class KnnTopK(lat: Expression, lon: Expression, id: Expression,
   override def update(buf: KnnTopK.Slots, row: InternalRow): KnnTopK.Slots = {
     val o = ordinals
     if (o != null) {
-      if (!row.isNullAt(o(0)) && !row.isNullAt(o(1)) && !row.isNullAt(o(2)))
-        buf.offerPoint(row.getDouble(o(0)), row.getDouble(o(1)), row.getLong(o(2)))
+      if (!row.isNullAt(o(0)) && !row.isNullAt(o(1)) && !row.isNullAt(o(2))) {
+        if (o.length == 3) buf.offerPoint(row.getDouble(o(0)), row.getDouble(o(1)), row.getLong(o(2)))
+        else if (!row.isNullAt(o(3)))
+          buf.offerTo(row.getInt(o(3)), row.getDouble(o(0)), row.getDouble(o(1)), row.getLong(o(2)))
+      }
     } else {
-      val (la, lo, i) = (lat.eval(row), lon.eval(row), id.eval(row))
-      if (la != null && lo != null && i != null)
-        buf.offerPoint(la.asInstanceOf[Double], lo.asInstanceOf[Double], i.asInstanceOf[Long])
+      val v = children.map(_.eval(row))
+      if (!v.contains(null)) {
+        val (la, lo, i) = (v(0).asInstanceOf[Double], v(1).asInstanceOf[Double], v(2).asInstanceOf[Long])
+        if (q.isEmpty) buf.offerPoint(la, lo, i) else buf.offerTo(v(3).asInstanceOf[Int], la, lo, i)
+      }
     }
     buf
   }
@@ -84,7 +96,7 @@ case class KnnTopK(lat: Expression, lon: Expression, id: Expression,
   override def withNewInputAggBufferOffset(o: Int): KnnTopK = copy(inputAggBufferOffset = o)
 
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]): KnnTopK =
-    copy(lat = c(0), lon = c(1), id = c(2))
+    copy(lat = c(0), lon = c(1), id = c(2), q = q.map(_ => c(3)))
 }
 
 object KnnTopK {
@@ -92,7 +104,8 @@ object KnnTopK {
   val ResultType: ArrayType = ArrayType(StructType(Seq(
     StructField("q_id", IntegerType, nullable = false),
     StructField("rank", LongType, nullable = false),
-    StructField("id", LongType, nullable = false))), containsNull = false)
+    StructField("id", LongType, nullable = false),
+    StructField("d2", DoubleType, nullable = false))), containsNull = false)
 
   /** The query points, by position: id, lat, lon. */
   final class Queries(val ids: Array[Int], val lat: Array[Double], val lon: Array[Double])
@@ -120,6 +133,13 @@ object KnnTopK {
         offer(q, dla * dla + dlo * dlo, id)
         q += 1
       }
+    }
+
+    /** Offers the point to query `q` alone. */
+    def offerTo(q: Int, la: Double, lo: Double, id: Long): Unit = {
+      val dla = la - qs.lat(q)
+      val dlo = lo - qs.lon(q)
+      offer(q, dla * dla + dlo * dlo, id)
     }
 
     def offer(q: Int, d2: Double, id: Long): Unit =
@@ -157,7 +177,7 @@ object KnnTopK {
       }
     }
 
-    /** (q_id, rank, id) rows, per query in (d², id) order. */
+    /** (q_id, rank, id, d²) rows, per query in (d², id) order. */
     def ranked: ArrayData = {
       val out = new Array[Any](size.sum)
       var n = 0
@@ -168,7 +188,7 @@ object KnnTopK {
         }
         var r = 0
         while (r < order.length) {
-          out(n) = InternalRow(qs.ids(q), (r + 1).toLong, ids(order(r)))
+          out(n) = InternalRow(qs.ids(q), (r + 1).toLong, ids(order(r)), d2s(order(r)))
           n += 1
           r += 1
         }
@@ -205,10 +225,13 @@ object KnnTopK {
     }
   }
 
-  /** `array<struct<q_id, rank, id>>` of the k nearest of `queries` among
-    * the points (`lat`, `lon`, `id`): double, double, bigint columns. */
-  def of(lat: Column, lon: Column, id: Column, queries: Queries, k: Int): Column = {
+  /** `array<struct<q_id, rank, id, d2>>` of the k nearest of `queries`
+    * among the points (`lat`, `lon`, `id`): double, double, bigint columns;
+    * `q`, an int column, names the one query each row is offered to. */
+  def of(lat: Column, lon: Column, id: Column, queries: Queries, k: Int,
+         q: Option[Column] = None): Column = {
     def e(c: Column) = GraftColumnBridge.expression(c)
-    GraftColumnBridge.column(KnnTopK(e(lat), e(lon), e(id), queries, k).toAggregateExpression())
+    GraftColumnBridge.column(
+      KnnTopK(e(lat), e(lon), e(id), q.map(e), queries, k).toAggregateExpression())
   }
 }

@@ -2,7 +2,7 @@ package graft.index
 
 import graft.geo.{CellId, GeoCols, MBR}
 import org.apache.spark.sql.{DataFrame, Row}
-import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{DoubleType, LongType, StructField, StructType}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -93,13 +93,11 @@ final case class GlobalIndex(resolution: Int, parts: Array[PartitionIndex]) {
 
 object GlobalIndex {
 
-  /** Schemas of the driver-built frames below: primitive columns, not
-    * nullable — what `toDF` derives for the tuples, without deriving an
-    * encoder per call. */
+  /** Schema of [[knnStoredPruned]]'s driver-built frame: primitive
+    * columns, not nullable — what `toDF` derives for the tuples, without
+    * deriving an encoder per call. */
   private val KnnSchema = StructType(Seq("rank", "id").map(StructField(_, LongType, false)) ++
     Seq("lat", "lon", "d2").map(StructField(_, DoubleType, false)))
-  private val BoundsSchema = StructType(StructField("q_id", IntegerType, false) +:
-    Seq("qlat", "qlon", "rad").map(StructField(_, DoubleType, false)))
 
   /** Cluster the point DataFrame by Z-order cell (ONE shuffle — the same
     * single exchange the reference's bulkLoad sort is, RStarTree.java:177,
@@ -208,65 +206,43 @@ object GlobalIndex {
   }
 
   /** Exact kNN JOIN over a STORED table, planned from the persisted index
-    * summaries (round-4 verdict ask #5 — [[knnStored]] generalized to a
-    * query SET): one driver-side radius bound PER QUERY from the zero-scan
-    * [[fromStore]] index → ONE multi-box manifest-pruned read over the
-    * union of the query balls ([[graft.table.SnapshotStore.readBoxes]] —
-    * files disjoint from every ball never open) → broadcast the tiny
-    * (q_id, center, radius) set, join candidates to the queries whose box
-    * contains them, per-query top-k window. Same output as
-    * [[graft.ops.SpatialOps.knnJoinAgg]] (q_id, rank, id).
+    * summaries ([[knnStored]] generalized to a query SET): one driver-side
+    * radius bound PER QUERY from the zero-scan [[fromStore]] index → ONE
+    * multi-box manifest-pruned read over the union of the query balls
+    * ([[graft.table.SnapshotStore.readBoxes]] — files disjoint from every
+    * ball never open) → one [[graft.ops.SpatialOps.knnTopK]] aggregate, in
+    * which a point is offered only to the queries whose ball box holds it.
+    * Same output as [[graft.ops.SpatialOps.knnJoinAgg]] (q_id, rank, id);
+    * each task holds |Q|·k slots, as there.
     *
-    * Exact: each query's candidates are a superset of its radius box, and
-    * the seed radius provably bounds the kth LIVE distance
-    * ([[knnSeedRadius]]). */
+    * Exact: each query's candidates are its radius box, and the seed
+    * radius provably bounds the kth LIVE distance ([[knnSeedRadius]]). Rows
+    * with a null lat, lon or id are no one's neighbour; k < 1 is refused. */
   def knnJoinStored(store: graft.table.SnapshotStore,
                     queries: Seq[(Int, Double, Double)], k: Int): DataFrame =
     knnJoinStoredPruned(store, queries, k)._1
-
-  /** The executed candidate plan of [[knnJoinStored]]: broadcast
-    * nested-loop on the box containment predicate (the query side is tiny
-    * by contract; the candidate side is already pruned to the union of the
-    * balls — the |Q|-scale equi-join twin is SpatialOps.knnJoinPruned, this
-    * operator's point is the FILE skip), then the per-query top-k window.
-    * ONE definition shared with PlanDump's plan evidence, so docs/PLANS.md
-    * can never silently describe a plan the operator no longer executes.
-    * `bounds` = (q_id, qLat, qLon, radius). */
-  private[graft] def knnJoinCandidatePlan(cand: DataFrame,
-      bounds: Seq[(Int, Double, Double, Double)], k: Int): DataFrame = {
-    val q = graft.ops.OpUtil.localFrame(cand.sparkSession, BoundsSchema, bounds.map(Row.fromTuple))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("d2"), col("id"))
-    cand.join(broadcast(q),
-        col("lat") >= col("qlat") - col("rad") &&
-        col("lat") <= col("qlat") + col("rad") &&
-        col("lon") >= col("qlon") - col("rad") &&
-        col("lon") <= col("qlon") + col("rad"))
-      .withColumn("d2", GeoCols.d2Cols(col("lat"), col("lon"),
-        col("qlat"), col("qlon")))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-  }
 
   /** [[knnJoinStored]] + the (files read, total files) of its one read so
     * specs can assert file skipping on the join path. */
   private[graft] def knnJoinStoredPruned(store: graft.table.SnapshotStore,
                                          queries: Seq[(Int, Double, Double)],
                                          k: Int): (DataFrame, Int, Int) = {
+    require(k >= 1, s"k must be >= 1, got $k")
     require(queries.nonEmpty, "knnJoinStored needs at least one query")
     // the index and the read come from ONE snapshot
     val v = store.view()
-    val bounds = queries.map { case (qid, qla, qlo) =>
-      (qid, qla, qlo, v.index.knnSeedRadius(qla, qlo, k))
+    val rads = queries.map { case (_, qla, qlo) => v.index.knnSeedRadius(qla, qlo, k) }
+    val balls = queries.zip(rads).map { case ((_, qla, qlo), rad) =>
+      MBR(qla - rad, qlo - rad, qla + rad, qlo + rad)
     }
     // fewer than k live rows in the summaries: no ball bounds anything, and
     // each query's unbounded box takes every row of the full read
     val (cand, kept, total) =
-      if (bounds.exists(_._4 == Double.MaxValue)) store.readAt(v.snapshotId)
-      else store.readBoxesAt(v.snapshotId, bounds.map { case (_, qla, qlo, rad) =>
-        MBR(qla - rad, qlo - rad, qla + rad, qlo + rad)
-      })
-    (knnJoinCandidatePlan(cand, bounds, k).select(col("q_id"), col("rank"), col("id")),
-      kept, total)
+      if (rads.contains(Double.MaxValue)) store.readAt(v.snapshotId)
+      else store.readBoxesAt(v.snapshotId, balls)
+    val r = graft.ops.SpatialOps.resolveRes(store, balls)
+    (graft.ops.SpatialOps.knnTopK(cand, queries, k, Some((balls, r)))
+      .select(col("q_id"), col("rank"), col("id")), kept, total)
   }
 
   /** Index-seeded exact kNN: one driver-side bound from the summary, ONE

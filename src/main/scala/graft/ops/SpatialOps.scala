@@ -6,7 +6,7 @@ import graft.geo.{CellId, GeoCols, MBR, Poly, Shape}
 import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType, StructField, StructType}
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
 /** Spatial operators over a point DataFrame with columns (id, lat, lon).
   *
@@ -264,18 +264,8 @@ object SpatialOps {
     sweep(local, Window.partitionBy()) // survivors are few → single task is fine
   }
 
-  /** [[boxJoinSalted]]'s cell side: a box's covering cells, salted, with
-    * its bounds. */
-  private val SaltedCellSchema = StructType(Seq(StructField("box_id", IntegerType, false),
-    StructField("bcell", LongType, false), StructField("bsalt", IntegerType, false)) ++
-    Seq("minlat", "minlon", "maxlat", "maxlon").map(StructField(_, DoubleType, false)))
-
   /** [[zonalStats]]' polygon ids. */
   private val PolyIdSchema = StructType(Seq(StructField("poly_id", IntegerType, false)))
-
-  /** [[knnJoinPruned]]'s broadcast side: a query with one probed cell. */
-  private val QueryCellSchema = StructType(StructField("q_id", IntegerType, false) +:
-    Seq("qlat", "qlon").map(StructField(_, DoubleType, false)) :+ StructField("qc", LongType, false))
 
   /** Multi-box spatial join (the de-facto join in Benchmark.java:101-118):
     * `(box_id, id)` for every point inside a box, by the [[shapeHits]]
@@ -361,8 +351,8 @@ object SpatialOps {
       col("a_cell") === refCell
   }
 
-  /** Skew-aware MBR-intersection join — [[boxJoinSalted]]'s treatment for
-    * the rect×rect family, where BOTH sides are row-borne so the hot-cell
+  /** Skew-aware MBR-intersection join — hot-cell salting of the rect×rect
+    * shuffle join, where BOTH sides are row-borne so the hot-cell
     * replication must itself be a plan (a conditional `explode`, not a
     * driver-side Seq). Side a's hot-cell cover rows get a deterministic
     * salt (xxhash64(a_id) — reproducible), side b's hot-cell cover rows
@@ -575,50 +565,21 @@ object SpatialOps {
         col("min_lon"), col("max_lon"))
   }
 
-  /** Skew-aware box join for shuffle-partitioned execution: when the small
-    * side does NOT fit in a broadcast (huge box/polygon sets), the join
-    * shuffles both sides on the cell key and hot cells (a Zipf point cloud,
-    * or the planted-hotspot image table) overload single reducers. This
-    * variant measures the cell histogram, picks cells holding more than
-    * `hotThreshold` of the rows, and salts them: the point side gets a
-    * deterministic salt in [0, saltFactor) (xxhash64(id) — reproducible),
-    * the box side replicates hot-cell entries across all salts. Cold cells
-    * keep salt 0 — no blowup. Output is identical to [[boxJoin]] (proven in
-    * spec); AQE's skew-join split handles residual imbalance.
-    */
+  /** [[boxJoin]] with the salted joins' argument checks: boxJoin has no
+    * shuffle, so no reducer holds a hot cell and there is nothing to salt.
+    * It runs at the hint's r, or else `rOverride` (its rows do not depend
+    * on r); `saltFactor` is only checked and `hotThreshold` unused. */
   def boxJoinSalted(points: DataFrame, boxes: Seq[(Int, MBR)],
                     rOverride: Int = AutoRes, saltFactor: Int = 8,
                     hotThreshold: Double = 0.05,
                     hotCells: Option[(Int, Set[Long])] = None): DataFrame = {
     validateSaltArgs(rOverride, saltFactor, hotCells)
-    val r = hotCells.map(_._1)
-      .getOrElse(resolveRes(points, boxes.map(_._2), rOverride))
-    val pts = withCell(points, r)
-    // Hot-cell stats belong at WRITE time (SnapshotStore manifests /
-    // tileHistogram persisted with the table — see hotCellsFromHistogram);
-    // callers pass them in and the join plan adds ZERO extra scans. The
-    // fallback computes them here with ONE aggregate pass (histogram →
-    // driver; total derived from the histogram, not a second count scan).
-    val hot: Set[Long] = hotCells.map(_._2).getOrElse(hotCellsFromHistogram(
-      pts.groupBy("cell").agg(count(lit(1)).as("cnt")), hotThreshold))
-    val cells = OpUtil.localFrame(points.sparkSession, SaltedCellSchema, boxes.flatMap { case (bid, b) =>
-      CellId.cover(b, r).flatMap { c =>
-        val salts = if (hot.contains(c)) 0 until saltFactor else Seq(0)
-        salts.map(s => Row(bid, c, s, b.minLat, b.minLon, b.maxLat, b.maxLon))
-      }
-    })
-    val salted = pts.withColumn("salt",
-      saltCol(col("id"), col("cell"), hot, saltFactor))
-    salted.join(cells,
-        col("cell") === col("bcell") && col("salt") === col("bsalt"))
-      .filter(col("lat") >= col("minlat") && col("lat") <= col("maxlat") &&
-              col("lon") >= col("minlon") && col("lon") <= col("maxlon"))
-      .select(col("box_id"), col("id"))
+    boxJoin(points, boxes, hotCells.map(_._1).getOrElse(rOverride))
   }
 
   /** Derive the salted-join hot-cell set from a per-cell histogram (a
-    * persisted [[tileHistogram]] output, or a cover histogram built in the
-    * hint-free salted-join paths). Schema contract: `cell` must be LongType
+    * [[tileHistogram]] output): the query-time twin of
+    * [[graft.table.SnapshotStore.hotCells]]. Schema contract: `cell` must be LongType
     * and `cnt` any numeric type (explicitly cast to long for the total, so
     * a double-counted histogram degrades to truncation, never a cast
     * error). The threshold filter runs IN SPARK — only the ≤ 1/hotThreshold
@@ -646,65 +607,60 @@ object SpatialOps {
     * ≤ |Q|·k rows' worth), the final aggregate merges them exactly, and
     * `inline` emits the ranked rows — the shuffle carries one buffer per
     * partition; no Window, no sort. Rows with a null lat, lon or id (and
-    * rows at NaN distance) are no one's neighbour. */
+    * rows at NaN distance) are no one's neighbour; k < 1 is refused. */
   def knnJoinAgg(points: DataFrame, queries: Seq[(Int, Double, Double)],
-                 k: Int): DataFrame = {
+                 k: Int): DataFrame =
+    knnTopK(points, queries, k, None).drop("d2")
+
+  /** `(q_id, rank, id, d2)`: each query's k nearest points by (d², id), by
+    * one [[KnnTopK]] aggregate. With `boxes` = (one box per query, in
+    * query order; a resolution), a point is offered only to the queries
+    * whose box holds it: `explode` of [[ShapeHits]] over the boxes, with
+    * query positions as ids, names them (the [[boxJoin]] kernel, so the
+    * box test is [[MBR.contains]]). Without, it is offered to every query.
+    * Each task holds |Q|·k slots either way. */
+  private[graft] def knnTopK(points: DataFrame, queries: Seq[(Int, Double, Double)], k: Int,
+                             boxes: Option[(Seq[MBR], Int)]): DataFrame = {
     val qs = new KnnTopK.Queries(queries.map(_._1).toArray,
       queries.map(_._2).toArray, queries.map(_._3).toArray)
-    points.select(col("lat").cast("double").as("lat"), col("lon").cast("double").as("lon"),
-        col("id").cast("long").as("id"))
-      .agg(KnnTopK.of(col("lat"), col("lon"), col("id"), qs, k).as("top"))
+    val q = boxes.map { case (bs, r) => shapeHits(bs.zipWithIndex.map(_.swap), r).as("q") }
+    points.select(q.toSeq ++ Seq(col("lat").cast("double").as("lat"),
+        col("lon").cast("double").as("lon"), col("id").cast("long").as("id")): _*)
+      .agg(KnnTopK.of(col("lat"), col("lon"), col("id"), qs, k, q.map(_ => col("q"))).as("top"))
       .select(inline(col("top")))
   }
 
   /** Ring-pruned kNN join (the scale path for large query sets): instead
-    * of |Q|·N candidate pairs, each query joins only points whose cell
-    * falls within `rings` Chebyshev rings of the query's cell, then takes
-    * per-query top-k. EXACT when every query finds >= k candidates whose
-    * kth distance is below the probed-region guarantee — the operator
-    * verifies that invariant and answers the few queries that fail it
-    * (none, on non-degenerate data at sane `rings`) with the dense
-    * [[knnJoinAgg]]. */
+    * of |Q|·N candidate pairs, each query ranks only the points inside the
+    * box `(rings + 1)·max(latStep, lonStep)` around it, which holds every
+    * cell within `rings` Chebyshev rings of the query's cell — one
+    * [[knnTopK]] aggregate, collected once (≤ |Q|·k rows). EXACT when a
+    * query has >= k candidates whose kth distance is below the ring
+    * guarantee (rings·minStep: a point outside the rings is no nearer), as
+    * the collected rows are checked; the few queries that fail it
+    * (none, on non-degenerate data at sane `rings`) are answered by the
+    * dense [[knnJoinAgg]]. Each task holds |Q|·k slots, as in
+    * [[knnJoinAgg]]. Rows with a null lat, lon or id are no one's
+    * neighbour; k < 1 is refused. */
   def knnJoinPruned(points: DataFrame, queries: Seq[(Int, Double, Double)],
                     k: Int, rOverride: Int = AutoRes, rings: Int = 2): DataFrame = {
+    require(k >= 1, s"k must be >= 1, got $k")
     val r = resolveRes(points, Seq.empty, rOverride)
-    val qcells = OpUtil.localFrame(points.sparkSession, QueryCellSchema, queries.flatMap { case (qid, qla, qlo) =>
-      (0L to rings.toLong).flatMap(CellId.ring(CellId.grid(qla, qlo, r), r, _))
-        .map(c => Row(qid, qla, qlo, c))
-    })
-    val d2 = GeoCols.d2Cols(col("lat"), col("lon"), col("qlat"), col("qlon"))
-    val w = Window.partitionBy(col("q_id")).orderBy(col("d2"), col("id"))
-    // materialize the pruned top-k once (≤ |Q|·k rows, lineage kept so a
-    // lost block recomputes): the exactness audit and the final output
-    // both read it without re-running the join
-    val pruned = withCell(points, r)
-      .join(broadcast(qcells), col("cell") === col("qc"))
-      .withColumn("d2", d2)
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= k)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // exactness check against the FULL query list (not just queries that
-    // found candidates): a query whose ring cells are empty never appears
-    // in `pruned` at all and must fall back to the dense join too
+    val h = (rings + 1) * math.max(CellId.latStep(r), CellId.lonStep(r))
+    val top = knnTopK(points, queries, k, Some((queries.map { case (_, qla, qlo) =>
+      MBR(qla - h, qlo - h, qla + h, qlo + h) }, r)))
+    val rows = top.collect()
+    // each query is checked, not just those with candidates: a query whose
+    // box holds no point has no row and must fall back too
     val guarantee = rings * math.min(CellId.latStep(r), CellId.lonStep(r))
-    val perQ = pruned.groupBy("q_id")
-      .agg(count(lit(1)).as("n"), max(col("d2")).as("dk"))
-      .collect().map(row => row.getInt(0) -> (row.getLong(1), row.getDouble(2))).toMap
-    val bad = queries.map(_._1).filter { qid =>
-      perQ.get(qid) match {
-        case None           => true // zero candidates in the probed rings
-        case Some((n, dk))  => n < k || dk >= guarantee * guarantee
-      }
-    }.toSet
-    val exactPart = pruned.filter(!col("q_id").isin(bad.toSeq: _*))
-      .select(col("q_id"), col("rank"), col("id"))
-    val out =
-      if (bad.isEmpty) exactPart
-      else exactPart.unionAll(
-        knnJoinAgg(points, queries.filter(q => bad.contains(q._1)), k))
-    // materialize the ≤|Q|·k output, then release the pruned cache —
-    // repeated invocations in a long session must not accrue storage
-    OpUtil.finish(out, pruned)
+    val byQ = rows.groupBy(_.getInt(0))
+    val bad = queries.filter { case (qid, _, _) =>
+      byQ.get(qid).forall(rs => rs.length < k || rs.map(_.getDouble(3)).max >= guarantee * guarantee)
+    }
+    val badIds = bad.map(_._1).toSet
+    val exact = OpUtil.localFrame(points.sparkSession, top.schema,
+      rows.filterNot(row => badIds.contains(row.getInt(0))).toSeq).drop("d2")
+    if (bad.isEmpty) exact else exact.unionAll(knnJoinAgg(points, bad, k))
   }
 
   /** ε-distance join: all (probe, point) pairs within planar distance

@@ -473,8 +473,9 @@ final class SnapshotStore(private[table] val spark: SparkSession, root: String, 
   def indexLeaves(): Map[String, Seq[(Long, Long, Double, Double, Double, Double)]] =
     view().indexLeaves
 
-  /** Write-time hot-cell set at resolution `r` — the zero-query-time-scan
-    * input to [[graft.ops.SpatialOps.boxJoinSalted]]. Counts are the
+  /** Write-time hot-cell set at resolution `r` — a skew hint for the
+    * salted joins that takes no query-time scan (a hint keyed at r also
+    * pins [[graft.ops.SpatialOps.boxJoinSalted]]'s resolution). Counts are the
     * persisted index leaves' counts (kept at `histRes`) summed per cell
     * over the current snapshot's files: rolled up through parent cells
     * for coarser r, expanded to descendants for finer r. Both directions yield a

@@ -60,6 +60,10 @@ class CompileOnceSpec extends AnyFunSuite {
         "knnStored" -> { i =>
           GlobalIndex.knnStored(st, 30.0 - 50.0 * i, 100.0 - 150.0 * i, 10 + 15 * i).collect()
         },
+        "knnJoinStored" -> { i =>
+          val qs = (0 until 4 + 3 * i).map(q => (q, 60.0 - 11.0 * q - i, 23.0 * q - 140.0 + i))
+          GlobalIndex.knnJoinStored(st, qs, 5 + i).collect()
+        },
         "lookupByKey" -> { i =>
           st.lookupByKey((0 until 5).map(j => 100L + 997L * j + 31L * i) :+ (-1L - i))._1.collect()
         })
@@ -81,7 +85,8 @@ class CompileOnceSpec extends AnyFunSuite {
     val kinds: Seq[(String, Int => Any)] = Seq(
       "boxJoin" -> (i => SpatialOps.boxJoin(pts, boxes(i), 4 + i).count()),
       "pipJoin" -> (i => SpatialOps.pipJoin(pts, SpatialOpsSpec.stars(4 + i, seed = i), 4 + i).count()),
-      "knnJoinAgg" -> (i => SpatialOps.knnJoinAgg(pts, queries(i), 5 + i).collect()))
+      "knnJoinAgg" -> (i => SpatialOps.knnJoinAgg(pts, queries(i), 5 + i).collect()),
+      "knnJoinPruned" -> (i => SpatialOps.knnJoinPruned(pts, queries(i), 5 + i).collect()))
     val fresh = kinds.map { case (name, q) => q(0); name -> compiles(q(1)) }
     assert(fresh.forall(_._2 == 0), fresh)
   }

@@ -100,6 +100,68 @@ class PlanSpec extends AnyFunSuite with TempDirs {
     noEncoderRoundTrip("knnJoinAgg", p)
   }
 
+  /** The executed plans of the SQL queries `op` runs (in finishing
+    * order), and the Spark jobs it starts, each tagged with its SQL
+    * execution id. */
+  def observed(op: => Any): (Seq[String], Seq[String]) = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.QueryExecution
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val ql = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.add(qe.executedPlan.toString)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val sl = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        jobs.add(String.valueOf(e.properties.getProperty("spark.sql.execution.id")))
+    }
+    val sc = spark.sparkContext
+    org.apache.spark.SpecBus.drain(sc)
+    spark.listenerManager.register(ql)
+    sc.addSparkListener(sl)
+    try { op; org.apache.spark.SpecBus.drain(sc) }
+    finally { sc.removeSparkListener(sl); spark.listenerManager.unregister(ql) }
+    import scala.jdk.CollectionConverters._
+    (plans.asScala.toSeq, jobs.asScala.toSeq)
+  }
+
+  test("knnJoinPruned runs one aggregate action; no fixture query falls back") {
+    val pts = Points(spark, dir)
+    val (qs, k) = (Fixtures.knnQueries, Fixtures.knnJoinK)
+    // its frame is the collected rows: no fallback aggregate unions in
+    val (plans, jobs) = observed {
+      val df = SpatialOps.knnJoinPruned(pts, qs, k)
+      assert(plan(df).startsWith("LocalTableScan"), plan(df))
+    }
+    // one SQL execution (no audit action, no cache, no count), running the
+    // jobs of one knnJoinAgg action: AQE runs the map stage before the
+    // final aggregate as its own job
+    val (_, aggJobs) = observed(SpatialOps.knnJoinAgg(pts, qs, k).collect())
+    assert(plans.size == 1 && jobs.distinct.size == 1 && jobs.size == aggJobs.size,
+      s"knnJoinPruned ran jobs $jobs of ${plans.size} queries; one aggregate runs $aggJobs")
+  }
+
+  test("knnJoinPruned and knnJoinStored are one graft_knn_topk aggregate: no Window, Sort or Join") {
+    import graft.index.GlobalIndex
+    import graft.table.SnapshotStore
+    val pts = Points(spark, dir)
+    val (qs, k) = (Fixtures.knnQueries, Fixtures.knnJoinK)
+    val (pruned, _) = observed(SpatialOps.knnJoinPruned(pts, qs, k))
+    val st = new SnapshotStore(spark, tempDir("graft_planspec_knn").toString)
+    st.append(pts, "unit-all", numPartitions = 8)
+    val stored = GlobalIndex.knnJoinStored(st, qs, k)
+    stored.collect()
+    for ((name, p) <- Seq("knnJoinPruned" -> pruned.head, "knnJoinStored" -> plan(stored))) {
+      for (op <- Seq("Window", "Sort", "Join")) assert(!p.contains(op), s"$name plans a $op:\n$p")
+      assert(p.contains("partial_graft_knn_topk("), s"$name:\n$p")
+      assert(p.contains("explode(graft_shape_hits("), s"$name:\n$p")
+      noEncoderRoundTrip(name, p)
+    }
+  }
+
   test("rasterize is one Range source: no Union, no Exchange") {
     for ((name, polys) <- Seq("fixtures" -> Fixtures.polys,
                               "stars(16)" -> SpatialOpsSpec.stars(16, seed = 5))) {

@@ -11,7 +11,7 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Operator ≡ brute-force oracle equivalence on sf0.001 (the latent oracle
   * the reference computes but never asserts — Benchmark.java:107-117 times
   * serial vs indexed and discards both result lists; we assert them). */
-class SpatialOpsSpec extends AnyFunSuite {
+class SpatialOpsSpec extends AnyFunSuite with TempDirs {
 
   lazy val spark: SparkSession = SparkSession.builder()
     .master("local[4]")
@@ -641,6 +641,22 @@ class SpatialOpsSpec extends AnyFunSuite {
     assert(zonal == SpatialOps.zonalStats(pts, poly).collect().map(_.getLong(1) + 1).toSeq)
     val knn = ranked(SpatialOps.knnJoinAgg(all, queries, 5))
     assert(knn == ranked(knnJoin(pts, queries, 5)) && knn.size == 10)
+    assert(ranked(SpatialOps.knnJoinPruned(all, queries, 5)) == knn)
+    // the stored join over a table holding the same rows
+    val st = new graft.table.SnapshotStore(spark, tempDir("graft_null_knn").toString)
+    st.append(all, "unit-all", numPartitions = 4)
+    assert(ranked(graft.index.GlobalIndex.knnJoinStored(st, queries, 5)) == knn)
+  }
+
+  test("k < 1 is refused by every kNN join") {
+    val st = new graft.table.SnapshotStore(spark, tempDir("graft_knn_k0").toString)
+    st.append(pts, "unit-all", numPartitions = 2)
+    for (k <- Seq(0, -1)) {
+      intercept[IllegalArgumentException](SpatialOps.knnJoinAgg(pts, Fixtures.knnQueries, k))
+      intercept[IllegalArgumentException](SpatialOps.knnJoinPruned(pts, Fixtures.knnQueries, k))
+      intercept[IllegalArgumentException](
+        graft.index.GlobalIndex.knnJoinStored(st, Fixtures.knnQueries, k))
+    }
   }
 
   test("rect-res outlier guard sees the FULL side (r6: no sample-prefix blind spot)") {
